@@ -25,8 +25,8 @@ if _REPO not in sys.path:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: the full extraction pipeline (wrap -> salted
-    repartition -> mapInPandas parse -> spans+metrics) on sf0.001."""
+    """Flagship query: the full extraction pipeline (wrap -> per-doc hash
+    repartition -> mapInArrow parse -> spans+metrics) on sf0.001."""
     from pdf_extractor_spark.ops.extraction_queries import extract_wrapped
     from pdf_extractor_spark.shipping import ensure_shipped
 

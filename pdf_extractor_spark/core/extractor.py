@@ -2,8 +2,11 @@
 
 One document in (ordered input spans), one ordered output span sequence +
 metrics out. This module is shared verbatim by the local test oracle and the
-Spark ``mapInPandas`` kernel (SURVEY.md §7.0), which is what makes the
+Spark ``mapInArrow`` kernel (SURVEY.md §7.0), which is what makes the
 span-sequence-equality contract (BASELINE.json:input_hint) cheap to test.
+One kernel serves both span encodings: the ingest contract (string payloads,
+pdf as base64) and the internal staging table (binary payloads, see
+``stage_span`` and spark/staging.py).
 
 Dispatch by ``kind`` mirrors the reference's extension -> category routing
 (``app/config.py:9-15``, ``dashboard.py:235-239``):
@@ -85,26 +88,64 @@ def _offset_sort_key(s) -> tuple[bool, int]:
     return (s[3] is None, s[3] if s[3] is not None else 0)
 
 
+def stage_span(kind: str, text: str | None) -> bytes | None:
+    """Ingest text -> staged binary payload for ONE span (pure, per-span).
+
+    The one-time conversion a multi-pass pipeline runs when writing the
+    internal staging table, and the decode ``extract_document`` applies to
+    ingest pdf spans: pdf base64 is strictly decoded (``validate=True``), so
+    every later pass over a staging table reads raw bytes and never pays the
+    4/3 base64 inflation again. ``None`` payload is the tombstone for base64
+    that failed strict decode; ``extract_document`` turns it into a parse
+    failure. Non-pdf text is carried as its UTF-8 bytes.
+    """
+    text = text or ""
+    if kind == KIND_PDF:
+        try:
+            return base64.b64decode(text.encode("ascii"), validate=True)
+        except (ValueError, UnicodeEncodeError):
+            return None
+    return text.encode("utf-8")
+
+
+def _decode(kind: str, payload: str | bytes | None) -> str | bytes | None:
+    """A span payload's Python type names its encoding: ``str`` is the
+    ingest contract (pdf base64, strictly decoded by ``stage_span``);
+    ``bytes``/``None`` is the staged form (pdf raw bytes with ``None`` the
+    strict-decode tombstone, every other kind UTF-8). Returns pdf bytes (or
+    ``None``) for pdf spans, text for every other kind."""
+    if kind == KIND_PDF:
+        return stage_span(kind, payload) if isinstance(payload, str) else payload
+    if isinstance(payload, str):
+        return payload
+    return (payload or b"").decode("utf-8")
+
+
 def extract_document(
-    spans: list[tuple[str, str, str, int]] | list[dict],
+    spans: list[tuple[str, str | bytes | None, str, int]] | list[dict],
     passwords: tuple[bytes, ...] = (),
 ) -> ExtractResult:
     """Rebuild one document's ordered output span sequence.
 
-    Input spans are (kind, text, media_ref, offset); processed in offset
-    order. Output offsets are reassigned densely 0..n-1 — computed inside the
+    Input spans are (kind, payload, media_ref, offset) in either encoding
+    (see ``_decode``; dict spans carry the payload as ``text`` or
+    ``payload``); processed in offset order. A staged document extracts
+    byte-identically to its ingest form (``tests/test_staging.py``).
+    Output offsets are reassigned densely 0..n-1 — computed inside the
     kernel, never from partition order (SURVEY.md §7.4 determinism note).
     ``passwords`` are candidate user/owner passwords for encrypted pdf spans
     (tried after the empty password); non-matching documents still
     quarantine as parse failures.
     """
     t0 = time.monotonic()
-    norm: list[tuple[str, str, str, int]] = []
+    norm: list[tuple[str, str | bytes | None, str, int]] = []
     for s in spans:
         if isinstance(s, dict):
-            norm.append((s["kind"], s["text"] or "", s["media_ref"] or "", s["offset"]))
+            payload = s["text"] if "text" in s else s["payload"]
+            kind, media_ref, off = s["kind"], s["media_ref"], s["offset"]
         else:
-            norm.append((s[0], s[1] or "", s[2] or "", s[3]))
+            kind, payload, media_ref, off = s[0], s[1], s[2], s[3]
+        norm.append((kind, _decode(kind, payload), media_ref or "", off))
     # a null offset (a JSONL line whose span is missing the key is schema-
     # valid and NOT _corrupt-flagged) must quarantine as a span failure,
     # never TypeError the sort and abort the whole batch; damaged spans
@@ -119,126 +160,26 @@ def extract_document(
     def emit(kind: str, text: str, media_ref: str = "") -> None:
         out.append((kind, text, media_ref, len(out)))
 
-    for kind, text, media_ref, off in norm:
+    for kind, body, media_ref, off in norm:
         if off is None:  # damaged input: position unknowable
             failures += 1
             emit(KIND_TEXT, "")
         elif kind == KIND_MEDIA:
             emit(KIND_MEDIA, "", media_ref)
         elif kind == KIND_TEXT:
-            emit(KIND_TEXT, clean_text(text))
+            emit(KIND_TEXT, clean_text(body))
         elif kind == KIND_HTML:
-            emit(KIND_TEXT, clean_text(extract_main_text(text)))
+            emit(KIND_TEXT, clean_text(extract_main_text(body)))
         elif kind == KIND_DATA:
             # delimited/JSON rows -> the F4 table framing, then clean_text
             # — the data corpus category (app/config.py:9-15) as a span path
-            emit(KIND_TEXT, clean_text(render_data(text)))
-        elif kind == KIND_PDF:
+            emit(KIND_TEXT, clean_text(render_data(body)))
+        elif kind == KIND_PDF and body is not None:
             try:
-                pdf_bytes = base64.b64decode(text.encode("ascii"), validate=True)
                 # media_ref prefix = the INPUT span offset: stable per doc,
                 # known to the generator oracle, no doc_id needed in-kernel
                 page_spans, n_pages, n_empty = extract_pdf_spans(
-                    pdf_bytes, ref_prefix=str(off), passwords=passwords
-                )
-            except (PdfParseError, ValueError, UnicodeEncodeError):
-                # binascii.Error (bad base64) subclasses ValueError
-                failures += 1
-                emit(KIND_TEXT, "")
-            else:
-                pages += n_pages
-                empty_with_images += n_empty
-                for pspans in page_spans:
-                    for k, t, ref in pspans:
-                        emit(k, t, ref)
-        else:  # unknown kind: the unsupported-file error path (helper.py:160-171)
-            failures += 1
-            emit(KIND_TEXT, "")
-
-    return ExtractResult(
-        spans=out,
-        pages_parsed=pages,
-        spans_emitted=len(out),
-        parse_failures=failures,
-        duration_ms=int((time.monotonic() - t0) * 1000),
-        scores=_compute_scores(len(norm), failures, out, empty_with_images),
-    )
-
-
-def stage_span(kind: str, text: str | None) -> bytes | None:
-    """Ingest text -> staged binary payload for ONE span (pure, per-span).
-
-    The one-time conversion a multi-pass pipeline runs when writing the
-    internal staging table: pdf base64 is strictly decoded here (exactly the
-    ``extract_document`` decode — same ``validate=True`` semantics), so every
-    later pass reads raw bytes and never pays the 4/3 base64 inflation again.
-    ``None`` payload is the tombstone for base64 that failed strict decode;
-    ``extract_document_staged`` turns it into the same parse-failure the
-    direct path produces. Non-pdf text is carried as its UTF-8 bytes.
-    """
-    text = text or ""
-    if kind == KIND_PDF:
-        try:
-            return base64.b64decode(text.encode("ascii"), validate=True)
-        except (ValueError, UnicodeEncodeError):
-            return None
-    return text.encode("utf-8")
-
-
-def extract_document_staged(
-    spans: list[tuple[str, bytes | None, str, int]] | list[dict],
-    passwords: tuple[bytes, ...] = (),
-) -> ExtractResult:
-    """``extract_document`` over STAGED spans (kind, payload, media_ref, offset).
-
-    Differs from the ingest-contract path only in payload encoding: pdf
-    payloads are raw bytes (base64 already stripped at staging time by
-    ``stage_span``; ``None`` = failed strict decode -> parse failure), text/
-    html payloads are UTF-8 bytes. Output is byte-identical to
-    ``extract_document`` on the un-staged document (differentially tested,
-    ``tests/test_staging.py``) — the staging table is an internal
-    optimization, never a semantic change.
-    """
-    t0 = time.monotonic()
-    norm: list[tuple[str, bytes | None, str, int]] = []
-    for s in spans:
-        if isinstance(s, dict):
-            norm.append((s["kind"], s["payload"], s["media_ref"] or "", s["offset"]))
-        else:
-            norm.append((s[0], s[1], s[2] or "", s[3]))
-    norm.sort(key=_offset_sort_key)  # same null-offset quarantine as direct
-
-    out: list[tuple[str, str, str, int]] = []
-    pages = 0
-    failures = 0
-    empty_with_images = 0
-
-    def emit(kind: str, text: str, media_ref: str = "") -> None:
-        out.append((kind, text, media_ref, len(out)))
-
-    for kind, payload, media_ref, off in norm:
-        if off is None:  # damaged input: position unknowable
-            failures += 1
-            emit(KIND_TEXT, "")
-        elif kind == KIND_MEDIA:
-            emit(KIND_MEDIA, "", media_ref)
-        elif kind == KIND_TEXT:
-            emit(KIND_TEXT, clean_text((payload or b"").decode("utf-8")))
-        elif kind == KIND_HTML:
-            emit(KIND_TEXT, clean_text(extract_main_text((payload or b"").decode("utf-8"))))
-        elif kind == KIND_DATA:
-            emit(
-                KIND_TEXT,
-                clean_text(render_data((payload or b"").decode("utf-8"))),
-            )
-        elif kind == KIND_PDF:
-            if payload is None:  # staged tombstone: strict base64 decode failed
-                failures += 1
-                emit(KIND_TEXT, "")
-                continue
-            try:
-                page_spans, n_pages, n_empty = extract_pdf_spans(
-                    payload, ref_prefix=str(off), passwords=passwords
+                    body, ref_prefix=str(off), passwords=passwords
                 )
             except (PdfParseError, ValueError):
                 failures += 1
@@ -249,7 +190,9 @@ def extract_document_staged(
                 for pspans in page_spans:
                     for k, t, ref in pspans:
                         emit(k, t, ref)
-        else:  # unknown kind: unsupported-file error path, as in the direct path
+        else:
+            # bad base64 (a None pdf payload) or an unknown kind: the
+            # unsupported-file error path (helper.py:160-171)
             failures += 1
             emit(KIND_TEXT, "")
 

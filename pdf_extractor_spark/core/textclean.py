@@ -57,7 +57,13 @@ def render_delimited(text: str) -> str:
         )
     except csv.Error:
         delim = ","
-    rows = [list(r) for r in csv.reader(io.StringIO(text), delimiter=delim)]
+    # newline="" as the csv module requires: csv splits records itself, so
+    # an unquoted bare '\r' (old-Mac line ends) is a record break, not a
+    # "new-line character seen in unquoted field" error
+    rows = [
+        list(r)
+        for r in csv.reader(io.StringIO(text, newline=""), delimiter=delim)
+    ]
     return frame_table("Table", rows)
 
 

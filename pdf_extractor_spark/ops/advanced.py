@@ -155,8 +155,9 @@ N_SALTS = 16
 def q_salted_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 heaviest users via explicit two-phase salted aggregation.
 
-    The skew pattern from the extraction pipeline (pipeline.py:with_size_salt)
-    as a standalone relational op: phase 1 aggregates on (user_id, salt) so a
+    Key salting as a standalone relational op (the extraction pipeline
+    needs none: it has no key, so hash(doc_id) already scatters, see
+    pipeline.balance_partitions): phase 1 aggregates on (user_id, salt) so a
     hot key's rows split across N_SALTS reducers; phase 2 merges the ≤N_SALTS
     partials per key — its shuffle carries at most keys*salts rows, never raw
     events. Results are identical to a direct groupBy (the oracle is the

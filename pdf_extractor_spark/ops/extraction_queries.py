@@ -4,7 +4,7 @@ The driver's testdata ``documents`` table is flat text, so these queries
 wrap each row into the engine's interleaved span shape *deterministically*
 (messy-whitespace text span / boilerplate-wrapped HTML span / media span /
 an invalid-kind span every 17th doc), push it through the actual
-``mapInPandas`` extraction pipeline (pipeline.py), and compare against a
+``mapInArrow`` extraction pipeline (pipeline.py), and compare against a
 DuckDB oracle that predicts the cleaned output in closed form. That makes
 the hot path — Arrow batch plumbing, kind routing, clean_text, DOM
 boilerplate strip, failure accounting, span ordering — all value-hash
@@ -505,15 +505,16 @@ def _passworded_corpus_oracle_sql() -> str:
 def q_extract_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME flagship extraction, but through the internal binary-payload
     staging table (spark/staging.py): ingest -> ``stage_documents`` (one
-    strict base64 decode, payload becomes BINARY) -> salted balance ->
-    binary Arrow kernel. Oracled against the SAME closed-form SQL as
+    strict base64 decode, payload becomes BINARY) -> ``extract_documents``,
+    whose kernel skips the decode for binary payloads. Oracled against the
+    SAME closed-form SQL as
     ``extract_clean`` — staging is an optimization, not a semantic change,
     so the driver's value-hash must agree bit-for-bit with the direct path's
     oracle. Covers the text / html / media / unknown-kind staged branches."""
-    from ..spark.staging import extract_documents_staged, stage_documents
+    from ..spark.staging import stage_documents
 
     staged = stage_documents(wrap_documents(spark, sf_dir))
-    ext = extract_documents_staged(staged, n_parts=64, num_partitions=32)
+    ext = extract_documents(staged, n_parts=64, num_partitions=32)
     return ext.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.element_at("spans", 1)["text"].alias("extracted_text"),
@@ -534,14 +535,14 @@ def q_extract_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_staged_pdf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PDF layout parse through the staging table: pdf base64 decoded
     ONCE at staging, raw bytes shuffled/Arrow-transferred (3/4 the volume),
-    parsed by the binary kernel. Same generator-derived oracle as
+    parsed from bytes. Same generator-derived oracle as
     ``extract_pdf_corpus`` — media spans, needs-OCR counts and failure
     accounting must survive staging unchanged."""
     from ..corpus import corpus_df
-    from ..spark.staging import extract_documents_staged, stage_documents
+    from ..spark.staging import stage_documents
 
     docs = corpus_df(spark, n_docs=40, seed=42)
-    ext = extract_documents_staged(stage_documents(docs), n_parts=16, num_partitions=8)
+    ext = extract_documents(stage_documents(docs), n_parts=16, num_partitions=8)
     return _corpus_projection(ext)
 
 

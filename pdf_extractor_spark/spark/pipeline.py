@@ -3,12 +3,14 @@
 Replaces the reference's sequential driver loop (``dashboard.py:588`` — one
 file at a time, no file-level parallelism) with a declarative plan:
 
-    documents --(size-annotated per-doc hash scatter)--> mapInPandas(extract)
+    documents --(per-doc hash scatter)--> mapInArrow(extract)
               --> extracted spans + per-doc metrics --> committed parquet +
               lineage rows (see lineage.py)
 
 All per-document logic lives in ``core/`` (pure Python) and runs inside
 vectorized Arrow batches — never per-row Python UDFs (BASELINE.json:input_hint).
+The same stage takes ingest documents and the binary staging table
+(spark/staging.py): the kernel reads the span payload's type.
 
 Scale notes (100 TB / 1000 executors):
 - ``part_id`` is a *logical* processing-partition id, a pure function of
@@ -25,9 +27,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,10 +71,6 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-# byte-size bucket edges: normal / large / giant (log-ish spacing)
-_BUCKET_EDGES = [16_384, 131_072]
-GIANT_BUCKET = len(_BUCKET_EDGES)
-
 
 def assign_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     """Stable logical partition id: pmod(xxhash64(doc_id), n_parts).
@@ -86,50 +81,12 @@ def assign_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
 
 
-def with_size_salt(
-    df: DataFrame,
-    salts_per_bucket: tuple[int, ...] = (1, 4, 16),
-    payload_field: str = "text",
-) -> DataFrame:
-    """Add n_bytes / size_bucket / salt columns for skew-aware repartitioning.
-
-    Giant docs get more salts so they scatter; tiny docs share partitions.
-    ``aggregate`` over the span array is JVM-side (no Python), so sizing is
-    free relative to the parse stage. ``payload_field`` names the span's
-    payload member (``text`` on the ingest contract, ``payload`` binary on
-    the internal staging table — ``octet_length`` covers both types).
-    """
-    n_bytes = F.aggregate(
-        "spans",
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.coalesce(F.octet_length(s[payload_field]), F.lit(0))
-        + F.coalesce(F.octet_length(s["media_ref"]), F.lit(0)),
-    )
-    df = df.withColumn("n_bytes", n_bytes)
-    bucket = F.lit(0)
-    for i, edge in enumerate(_BUCKET_EDGES):
-        bucket = F.when(F.col("n_bytes") >= edge, i + 1).otherwise(bucket)
-    df = df.withColumn("size_bucket", bucket.cast("int"))
-    salt_counts = F.array(*[F.lit(s) for s in salts_per_bucket])
-    df = df.withColumn(
-        "salt",
-        F.pmod(
-            F.xxhash64("doc_id", F.lit(7)),
-            F.element_at(salt_counts, F.col("size_bucket") + 1),
-        ).cast("int"),
-    )
-    return df
-
-
-def balance_partitions(
-    df: DataFrame, num_partitions: int, payload_field: str = "text"
-) -> DataFrame:
+def balance_partitions(df: DataFrame, num_partitions: int) -> DataFrame:
     """Skew-aware physical repartition before the parse stage: uniform
     per-document hash scatter, ``repartition(n, doc_id)``.
 
-    Through round 3 this was ``repartitionByRange(n, size_bucket, salt,
-    doc_id)`` — and the round-4 adversarial A/B (tools/bench_skew.py, the
+    Through round 3 this was a range repartition over (byte-size class,
+    salt, doc_id) — and the round-4 adversarial A/B (tools/bench_skew.py, the
     ``skewed`` corpus profile: 1% contiguous 500-1000-page giants carrying
     ~90% of the parse bytes) proved that shape actively HARMFUL: range
     boundaries come from row-count-proportional sampling, so a 1%-of-rows
@@ -145,17 +102,12 @@ def balance_partitions(
     (range sampling, round-robin over input order) concentrates clustered
     giants. Salting-by-key remains the right tool for skewed JOIN/AGG keys
     (see ops/dedup.py, ops/training.py) — but here there is no key, and
-    hash(doc_id) IS the salt. ``with_size_salt`` still annotates sizes: the
-    bucket columns feed the balance diagnostics and the structural tests
-    (no partition > 35% of bytes), and cost nothing next to the parse.
+    hash(doc_id) IS the salt.
     """
-    df = with_size_salt(df, payload_field=payload_field)
     return df.repartition(num_partitions, F.col("doc_id"))
 
 
-def _make_extract_batches_arrow(
-    kernel_name: str, passwords: tuple[bytes, ...] = ()
-):
+def _make_extract_batches_arrow(passwords: tuple[bytes, ...] = ()):
     """Columnar Arrow kernel wrapper factory (mapInArrow).
 
     A "_password" input column (see ``extract_documents`` password_col)
@@ -163,31 +115,27 @@ def _make_extract_batches_arrow(
     manifest workflow that avoids paying every candidate's V5 key
     derivation on every locked doc.
 
-    One builder serves both input encodings — ``kernel_name`` selects the
-    per-document kernel: ``"extract_document"`` (ingest spans, string
-    payload) or ``"extract_document_staged"`` (staging-table spans, binary
-    payload; see spark/staging.py). The entire input/output plumbing is
-    shared so a schema or metrics change can never silently diverge
-    between the two paths (the byte-identical differential contract in
+    Serves both input encodings: the span payload field is read by
+    position, so ingest spans arrive as ``str`` and staging-table spans
+    (spark/staging.py) as ``bytes``, and ``extract_document`` picks the
+    decode from that type (the byte-identical differential contract in
     tests/test_staging.py).
 
     Never materializes a Python dict per span: input spans are read as four
     flat primitive lists via ``ListArray.flatten()`` + field extraction, and
     output spans are rebuilt columnar with ``StructArray.from_arrays`` +
     ``ListArray.from_arrays``. Only the per-document kernel call remains
-    row-wise — that's the extraction itself. Wall-clock parity with the
-    pandas path on this box (both ~900 docs/s at local[8] on the heavy
-    corpus; the parse kernel dominates), but allocates no per-span dicts and
-    no pandas frames, which matters for worker memory at 50-page-PDF batch
-    sizes. Both paths produce byte-identical output (differentially tested).
+    row-wise — that's the extraction itself. It measured at wall-clock
+    parity with the retired pandas wrapper (both ~900 docs/s at
+    local[8] on the heavy corpus of a 32-CPU host; the parse kernel
+    dominates), but allocates no per-span dicts and no pandas frames, which
+    matters for worker memory at 50-page-PDF batch sizes.
     """
 
     def _gen(batches):
         import pyarrow as pa
 
-        from pdf_extractor_spark.core import extractor
-
-        kernel = getattr(extractor, kernel_name)
+        from pdf_extractor_spark.core.extractor import extract_document
 
         def extract_fn(spans, doc_pw=None):
             cands = (
@@ -195,9 +143,7 @@ def _make_extract_batches_arrow(
                 if doc_pw is None
                 else (doc_pw.encode("utf-8"), *passwords)
             )
-            if cands:
-                return kernel(spans, passwords=cands)
-            return kernel(spans)
+            return extract_document(spans, passwords=cands)
 
         span_type = pa.struct(
             [
@@ -314,62 +260,11 @@ def _extract_record_batches(pa, extract_fn, span_type, batches):
         )
 
 
-_extract_batches_arrow = _make_extract_batches_arrow("extract_document")
-
-
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], passwords: tuple[bytes, ...] = ()
-) -> Iterator[pd.DataFrame]:
-    # imported inside the worker so the Python workers only need core/
-    from pdf_extractor_spark.core.extractor import extract_document
-
-    for pdf_batch in batches:
-        out: dict[str, list] = {
-            "doc_id": [],
-            "spans": [],
-            "pages_parsed": [],
-            "spans_emitted": [],
-            "parse_failures": [],
-            "duration_ms": [],
-            "scores": [],
-            "part_id": [],
-        }
-        has_part = "part_id" in pdf_batch.columns
-        has_pw = "_password" in pdf_batch.columns
-        for i in range(len(pdf_batch)):
-            doc_id = pdf_batch["doc_id"].iat[i]
-            spans = pdf_batch["spans"].iat[i]
-            doc_pw = pdf_batch["_password"].iat[i] if has_pw else None
-            cands = (
-                passwords
-                if doc_pw is None
-                else (doc_pw.encode("utf-8"), *passwords)
-            )
-            res = extract_document(
-                list(spans) if spans is not None else [], passwords=cands
-            )
-            out["doc_id"].append(doc_id)
-            out["spans"].append(
-                [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for k, t, m, o in res.spans
-                ]
-            )
-            out["pages_parsed"].append(res.pages_parsed)
-            out["spans_emitted"].append(res.spans_emitted)
-            out["parse_failures"].append(res.parse_failures)
-            out["duration_ms"].append(res.duration_ms)
-            out["scores"].append(res.scores)
-            out["part_id"].append(int(pdf_batch["part_id"].iat[i]) if has_part else -1)
-        yield pd.DataFrame(out)
-
-
 def extract_documents(
     df: DataFrame,
     n_parts: int = 256,
     num_partitions: int | None = None,
     balance: bool = True,
-    use_arrow: bool = True,
     passwords: tuple[bytes, ...] = (),
     password_col: str | None = None,
 ) -> DataFrame:
@@ -377,7 +272,9 @@ def extract_documents(
 
     The whole reference extraction loop (dashboard.py:588 + processor page
     loops) as one declarative stage. Lazy — call .write / lineage.commit to
-    execute.
+    execute. ``df`` is either an ingest frame (``DOCUMENTS_SCHEMA``) or a
+    staging table (``staging.STAGED_SCHEMA``, binary payloads); both
+    extract to byte-identical output.
 
     ``passwords`` are GLOBAL candidate passwords for encrypted pdf spans;
     ``password_col`` names an input column carrying a PER-DOCUMENT
@@ -396,17 +293,6 @@ def extract_documents(
     df = assign_part_id(df, n_parts)
     if balance:
         df = balance_partitions(df, num_partitions or max(n_parts // 2, 32))
-    if use_arrow:
-        kernel = (
-            _extract_batches_arrow
-            if not passwords and password_col is None
-            else _make_extract_batches_arrow("extract_document", passwords)
-        )
-        return df.mapInArrow(kernel, schema=EXTRACTED_SCHEMA)
-    if passwords or password_col is not None:
-        pw = tuple(passwords)
-        return df.mapInPandas(
-            lambda it: _extract_batches(it, passwords=pw),
-            schema=EXTRACTED_SCHEMA,
-        )
-    return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    return df.mapInArrow(
+        _make_extract_batches_arrow(passwords), schema=EXTRACTED_SCHEMA
+    )

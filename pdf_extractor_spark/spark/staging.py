@@ -22,10 +22,10 @@ So the engine stages internally as::
   that fails strict decode is staged as NULL, the tombstone the parse stage
   turns into the contract's parse-failure). Text/html payloads become their
   UTF-8 bytes (free: parquet stores string pages as UTF-8 already).
-- ``extract_documents_staged`` is the binary-input twin of
-  ``pipeline.extract_documents`` — same salted size-bucket balancing
-  (``octet_length`` on binary), same Arrow kernel shape, byte-identical
-  output (differential-tested in ``tests/test_staging.py``).
+- ``pipeline.extract_documents`` reads the staged frame directly: its
+  Arrow wrapper hands the ``bytes`` payloads to ``extract_document``,
+  which skips the base64 decode for them, so the output is byte-identical
+  to the ingest path (differential-tested in ``tests/test_staging.py``).
 
 Scale math (why this is the right 100-TB shape): a PDF-heavy corpus staged
 this way shrinks the *on-disk* table ~25% (base64 also defeats parquet's
@@ -44,13 +44,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-from .pipeline import (
-    EXTRACTED_SCHEMA,
-    _make_extract_batches_arrow,
-    assign_part_id,
-    balance_partitions,
 )
 
 STAGED_SPAN_STRUCT = StructType(
@@ -165,40 +158,6 @@ def stage_documents(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "spans").mapInArrow(
         _stage_batches_arrow, schema=STAGED_SCHEMA
     )
-
-
-# Binary twin of ``pipeline._extract_batches_arrow``: identical columnar
-# span plumbing from the shared factory, but the payload field is raw bytes
-# through ``extract_document_staged`` — no base64 in the kernel, ~25% fewer
-# bytes through the Arrow boundary on PDF spans.
-_extract_staged_batches_arrow = _make_extract_batches_arrow(
-    "extract_document_staged"
-)
-
-
-def extract_documents_staged(
-    df: DataFrame,
-    n_parts: int = 256,
-    num_partitions: int | None = None,
-    balance: bool = True,
-    passwords: tuple[bytes, ...] = (),
-) -> DataFrame:
-    """staged(doc_id, spans<binary>) -> extracted(...) — same output schema
-    and byte-identical values as ``pipeline.extract_documents`` on the
-    un-staged input; the shuffle ahead of the kernel moves binary payloads
-    (3/4 the bytes of their base64 form)."""
-    df = df.select("doc_id", "spans")
-    df = assign_part_id(df, n_parts)
-    if balance:
-        df = balance_partitions(
-            df, num_partitions or max(n_parts // 2, 32), payload_field="payload"
-        )
-    kernel = (
-        _extract_staged_batches_arrow
-        if not passwords
-        else _make_extract_batches_arrow("extract_document_staged", passwords)
-    )
-    return df.mapInArrow(kernel, schema=EXTRACTED_SCHEMA)
 
 
 def read_staged(spark: SparkSession, path: str) -> DataFrame:

@@ -5,7 +5,7 @@ anywhere), but a 10^12-doc corpus is never static — new documents land
 continuously. This module runs the SAME extraction kernel incrementally:
 
     readStream (file source over documents parquet)
-      -> foreachBatch: salted repartition + mapInPandas extract
+      -> foreachBatch: per-doc hash repartition + mapInArrow extract
                        + CommitLog chunk commit (lineage rows included)
 
 ``foreachBatch`` rather than a streaming sink because the commit contract

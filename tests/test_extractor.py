@@ -77,12 +77,9 @@ def test_null_offset_quarantines_span_not_crash():
     """A span with a null offset (a JSONL line missing the key is
     schema-valid and unflagged) must count as a span failure — never
     TypeError the offset sort and abort the batch (review finding). Damaged
-    spans order deterministically after all real offsets, in input order;
-    the staged kernel mirrors the rule exactly."""
-    from pdf_extractor_spark.core.extractor import (
-        extract_document_staged,
-        stage_span,
-    )
+    spans order deterministically after all real offsets, in input order,
+    on both span encodings."""
+    from pdf_extractor_spark.core.extractor import stage_span
 
     spans = [
         ("text", "beta", "", None),
@@ -93,7 +90,7 @@ def test_null_offset_quarantines_span_not_crash():
     assert res.parse_failures == 2
     assert [s[1] for s in res.spans] == ["alpha", "", ""]
     assert [s[3] for s in res.spans] == [0, 1, 2]  # dense, deterministic
-    staged = extract_document_staged(
+    staged = extract_document(
         [(k, stage_span(k, t), m, o) for k, t, m, o in spans]
     )
     assert staged.spans == res.spans
@@ -180,11 +177,7 @@ def test_data_kind_renders_table_framing():
     app/config.py:9-15): delimited content renders through the SAME F4
     table framing the PDF grid path uses — sniffed delimiter, list-repr
     rows, clean_text — and never aborts on malformed content."""
-    from pdf_extractor_spark.core.extractor import (
-        extract_document,
-        extract_document_staged,
-        stage_span,
-    )
+    from pdf_extractor_spark.core.extractor import extract_document, stage_span
 
     for delim in (",", ";", "\t", "|"):
         text = f"id{delim}lang\n1{delim}en\n2{delim}fr"
@@ -196,10 +189,8 @@ def test_data_kind_renders_table_framing():
             "",
             0,
         ), delim
-        # staged path is byte-identical
-        staged = extract_document_staged(
-            [("data", stage_span("data", text), "", 0)]
-        )
+        # the staged encoding is byte-identical
+        staged = extract_document([("data", stage_span("data", text), "", 0)])
         assert staged.spans == r.spans
 
     # no sniffable delimiter -> ',' fallback, single-column rows
@@ -210,6 +201,17 @@ def test_data_kind_renders_table_framing():
     # empty data span: empty table, not a failure, not a crash
     r = extract_document([("data", "", "", 0)])
     assert r.parse_failures == 0 and r.spans[0][1] == "Table:"
+
+    # an unquoted bare '\r' is a record break (old-Mac line ends), never a
+    # csv "new-line character seen in unquoted field" error
+    for text, want in (
+        ("a,b\r0,1", "Table:\n\n['a', 'b']\n\n['0', '1']"),
+        ("\r0", "Table:\n\n[]\n\n['0']"),
+        ("id,lang\r1,en\r2,fr\r", "Table:\n\n['id', 'lang']\n\n['1', 'en']\n\n['2', 'fr']"),
+    ):
+        r = extract_document([("data", text, "", 0)])
+        assert r.parse_failures == 0
+        assert r.spans[0][1] == want, text
 
     # interleaving preserved around media spans
     r = extract_document(

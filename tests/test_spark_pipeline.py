@@ -9,10 +9,7 @@ import pytest
 from pdf_extractor_spark.core.extractor import extract_document
 from pdf_extractor_spark.corpus import corpus_df, gen_documents
 from pdf_extractor_spark.spark import lineage as L
-from pdf_extractor_spark.spark.pipeline import (
-    extract_documents,
-    with_size_salt,
-)
+from pdf_extractor_spark.spark.pipeline import extract_documents
 
 N_DOCS = 150
 
@@ -52,28 +49,29 @@ def test_result_independent_of_parallelism(spark):
     assert a == b
 
 
-def test_size_salt_columns(spark):
-    df = with_size_salt(corpus_df(spark, 200))
-    rows = df.select("doc_id", "n_bytes", "size_bucket", "salt").collect()
-    assert all(r["n_bytes"] >= 0 for r in rows)
-    buckets = {r["size_bucket"] for r in rows}
-    assert buckets <= {0, 1, 2}
-    # giant docs (bucket 2) must use the widest salt range when present
-    for r in rows:
-        if r["size_bucket"] == 0:
-            assert r["salt"] == 0
-        elif r["size_bucket"] == 1:
-            assert 0 <= r["salt"] < 4
-        else:
-            assert 0 <= r["salt"] < 16
+def _with_n_bytes(df):
+    """Per-doc payload + media_ref bytes, computed on the input."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(
+        "n_bytes",
+        F.aggregate(
+            "spans",
+            F.lit(0).cast("long"),
+            lambda acc, s: acc
+            + F.coalesce(F.octet_length(s["text"]), F.lit(0))
+            + F.coalesce(F.octet_length(s["media_ref"]), F.lit(0)),
+        ),
+    )
 
 
 def test_partition_balance_bytes(spark):
-    """With salting, no physical partition hoards the byte volume."""
+    """After the per-doc hash scatter, no physical partition hoards the
+    byte volume."""
     from pyspark.sql import functions as F
     from pdf_extractor_spark.spark.pipeline import balance_partitions
 
-    df = balance_partitions(corpus_df(spark, 400, seed=7), 16)
+    df = balance_partitions(_with_n_bytes(corpus_df(spark, 400, seed=7)), 16)
     per_part = (
         df.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -94,7 +92,9 @@ def test_partition_balance_bytes_skewed(spark):
     from pyspark.sql import functions as F
     from pdf_extractor_spark.spark.pipeline import balance_partitions
 
-    df = balance_partitions(corpus_df(spark, 1000, profile="skewed"), 32)
+    df = balance_partitions(
+        _with_n_bytes(corpus_df(spark, 1000, profile="skewed")), 32
+    )
     per_part = (
         df.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -364,23 +364,6 @@ def test_lineage_schema(spark, tmp_path):
     lin = log.read_lineage(spark)
     assert set(lin.columns) == set(L.LINEAGE_COLS)
     assert lin.filter("status not in ('success','error','skip')").count() == 0
-
-
-def test_arrow_and_pandas_paths_identical(spark):
-    """mapInArrow and mapInPandas kernels must emit byte-identical output."""
-    docs = corpus_df(spark, 80, seed=3)
-    def snap(use_arrow):
-        return {
-            r["doc_id"]: (
-                [tuple(s) for s in r["spans"]],
-                r["pages_parsed"], r["spans_emitted"], r["parse_failures"],
-                sorted(r["scores"].items()),
-            )
-            for r in extract_documents(
-                docs, n_parts=16, num_partitions=4, use_arrow=use_arrow
-            ).collect()
-        }
-    assert snap(True) == snap(False)
 
 
 def test_preview_point_lookup(spark, tmp_path):
@@ -822,9 +805,9 @@ def test_per_doc_password_column_both_paths(spark):
     """``password_col`` (round 4): a (doc_id, password) manifest left-joined
     onto the encrypted corpus unlocks exactly the passworded docs — per-doc
     candidates beat a global list at scale because each locked doc pays ONE
-    V5 key derivation. Arrow and pandas kernels must agree with the
-    closed-form unlocked expectation; docs outside the manifest (null
-    password) still decrypt via the empty-password path."""
+    V5 key derivation. The Arrow kernel must agree with the closed-form
+    unlocked expectation; docs outside the manifest (null password) still
+    decrypt via the empty-password path."""
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.corpus import (
@@ -847,19 +830,14 @@ def test_per_doc_password_column_both_paths(spark):
         )
     }
     assert sum(exp.values()) == 0  # every doc unlocks under the manifest
-    for use_arrow in (True, False):
-        ext = extract_documents(
-            joined,
-            n_parts=8,
-            num_partitions=4,
-            password_col="password",
-            use_arrow=use_arrow,
-        )
-        got = {
-            r["doc_id"]: r["parse_failures"]
-            for r in ext.select("doc_id", "parse_failures").collect()
-        }
-        assert got == exp, use_arrow
+    ext = extract_documents(
+        joined, n_parts=8, num_partitions=4, password_col="password"
+    )
+    got = {
+        r["doc_id"]: r["parse_failures"]
+        for r in ext.select("doc_id", "parse_failures").collect()
+    }
+    assert got == exp
 
 
 def test_reextract_parts_keeps_password_column(spark, tmp_path):

@@ -1,23 +1,17 @@
-"""Binary-payload staging table (spark/staging.py): the staged path must be
-byte-identical to the direct ingest-contract path — staging is an internal
-optimization for multi-pass pipelines, never a semantic change."""
+"""Binary-payload staging table (spark/staging.py): extracting a staged
+document must be byte-identical to extracting its ingest-contract form —
+staging is an internal optimization for multi-pass pipelines, never a
+semantic change."""
 
 import base64
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pdf_extractor_spark.core.extractor import (
-    extract_document,
-    extract_document_staged,
-    stage_span,
-)
+from pdf_extractor_spark.core.extractor import extract_document, stage_span
 from pdf_extractor_spark.corpus import corpus_df
 from pdf_extractor_spark.spark.pipeline import DOCUMENTS_SCHEMA, extract_documents
-from pdf_extractor_spark.spark.staging import (
-    extract_documents_staged,
-    stage_documents,
-)
+from pdf_extractor_spark.spark.staging import stage_documents
 
 
 def _stage_local(spans):
@@ -57,10 +51,10 @@ _SPAN = st.tuples(
 @settings(max_examples=150, deadline=None)
 @given(st.lists(_SPAN, max_size=8))
 def test_core_staged_equivalence(spans):
-    """extract_document(s) == extract_document_staged(stage(s)) for every
+    """extract_document(s) == extract_document(stage(s)) for every
     kind x payload shape, including every base64-failure class."""
     _assert_same_result(
-        extract_document(list(spans)), extract_document_staged(_stage_local(spans))
+        extract_document(list(spans)), extract_document(_stage_local(spans))
     )
 
 
@@ -95,7 +89,7 @@ def test_staged_differential_mixed_corpus(spark):
     docs = corpus_df(spark, 80, seed=11)
     direct = _collect_extracted(extract_documents(docs, n_parts=16, num_partitions=4))
     staged = _collect_extracted(
-        extract_documents_staged(stage_documents(docs), n_parts=16, num_partitions=4)
+        extract_documents(stage_documents(docs), n_parts=16, num_partitions=4)
     )
     assert direct == staged
     assert len(direct) == 80
@@ -106,7 +100,7 @@ def test_staged_differential_encrypted_corpus(spark):
     docs = corpus_df(spark, 24, seed=7, profile="encrypted")
     direct = _collect_extracted(extract_documents(docs, n_parts=8, num_partitions=4))
     staged = _collect_extracted(
-        extract_documents_staged(stage_documents(docs), n_parts=8, num_partitions=4)
+        extract_documents(stage_documents(docs), n_parts=8, num_partitions=4)
     )
     assert direct == staged
     assert sum(v[3] for v in direct.values()) > 0  # passworded docs did fail
@@ -134,7 +128,7 @@ def test_staged_differential_failure_classes(spark):
     docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
     direct = _collect_extracted(extract_documents(docs, n_parts=8, num_partitions=2))
     staged = _collect_extracted(
-        extract_documents_staged(stage_documents(docs), n_parts=8, num_partitions=2)
+        extract_documents(stage_documents(docs), n_parts=8, num_partitions=2)
     )
     assert direct == staged
     assert all(v[3] == 1 for v in direct.values())  # every doc: 1 pdf failure
@@ -179,7 +173,7 @@ def test_staging_preserves_null_spans(spark):
     }
     staged = {
         r["doc_id"]: r
-        for r in extract_documents_staged(
+        for r in extract_documents(
             stage_documents(docs), n_parts=4, num_partitions=2
         ).collect()
     }

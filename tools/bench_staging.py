@@ -38,10 +38,7 @@ def main() -> int:
     from pdf_extractor_spark.corpus import corpus_parquet
     from pdf_extractor_spark.spark.pipeline import extract_documents
     from pdf_extractor_spark.spark.session import get_spark
-    from pdf_extractor_spark.spark.staging import (
-        extract_documents_staged,
-        stage_documents,
-    )
+    from pdf_extractor_spark.spark.staging import stage_documents
 
     spark = get_spark(
         app_name="bench-staging", master=f"local[{cpus}]", shuffle_partitions=cpus * 8
@@ -58,27 +55,21 @@ def main() -> int:
 
         sizes = {"ingest_bytes": _dir_size(ingest_path), "staged_bytes": _dir_size(staged_path)}
 
-        def run_direct():
+        def run_pass(path):
             df = extract_documents(
-                spark.read.parquet(ingest_path), n_parts=cpus * 8, num_partitions=cpus * 8
-            )
-            return df.selectExpr("sum(spans_emitted)").collect()[0][0]
-
-        def run_staged():
-            df = extract_documents_staged(
-                spark.read.parquet(staged_path), n_parts=cpus * 8, num_partitions=cpus * 8
+                spark.read.parquet(path), n_parts=cpus * 8, num_partitions=cpus * 8
             )
             return df.selectExpr("sum(spans_emitted)").collect()[0][0]
 
         # warm both paths once (codegen, scan setup), then best-of-N interleaved
-        assert run_direct() == run_staged()
+        assert run_pass(ingest_path) == run_pass(staged_path)
         direct_best = staged_best = float("inf")
         for _ in range(rounds):
             t = time.perf_counter()
-            run_direct()
+            run_pass(ingest_path)
             direct_best = min(direct_best, time.perf_counter() - t)
             t = time.perf_counter()
-            run_staged()
+            run_pass(staged_path)
             staged_best = min(staged_best, time.perf_counter() - t)
 
         saved_per_pass = direct_best - staged_best

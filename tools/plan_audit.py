@@ -130,7 +130,7 @@ def _query_df(spark, sf_dir: str, name: str):
 
 
 def _extract_stage_df(spark, sf_dir: str):
-    """The raw extraction stage (scan -> salt -> repartition -> mapInArrow),
+    """The raw extraction stage (scan -> repartition(doc_id) -> mapInArrow),
     without the oracle query's final projection/sort."""
     from pdf_extractor_spark.ops.extraction_queries import wrap_documents
     from pdf_extractor_spark.spark.pipeline import extract_documents
@@ -139,16 +139,14 @@ def _extract_stage_df(spark, sf_dir: str):
 
 
 def _staged_extract_stage_df(spark, sf_dir: str):
-    """The staged-binary extraction stage (scan -> stage kernel -> salt ->
-    repartition -> binary parse kernel), without the oracle projection."""
+    """The staged-binary extraction stage (scan -> stage kernel ->
+    repartition(doc_id) -> parse kernel), without the oracle projection."""
     from pdf_extractor_spark.ops.extraction_queries import wrap_documents
-    from pdf_extractor_spark.spark.staging import (
-        extract_documents_staged,
-        stage_documents,
-    )
+    from pdf_extractor_spark.spark.pipeline import extract_documents
+    from pdf_extractor_spark.spark.staging import stage_documents
 
     staged = stage_documents(wrap_documents(spark, sf_dir))
-    return extract_documents_staged(staged, n_parts=64, num_partitions=32)
+    return extract_documents(staged, n_parts=64, num_partitions=32)
 
 
 def _snapshot_scan_df(spark, sf_dir: str):
@@ -1444,10 +1442,12 @@ AUDITS: list[tuple] = [
             # r3 rangepartitioning — row-proportional range sampling
             # funnels a byte-heavy 1% giant tail into one partition; see
             # balance_partitions + tools/bench_skew.py). Anything more
-            # means the pipeline shuffles data it shouldn't.
+            # means the pipeline shuffles data it shouldn't. No sizing
+            # columns ride the exchange: nothing reads them after it.
             lambda p: exchange_count(p, 1),
             lambda p: contains(p, "hashpartitioning(doc_id"),
             lambda p: absent(p, "rangepartitioning"),
+            lambda p: absent(p, "n_bytes"),
             lambda p: contains(p, "MapInArrow"),
             lambda p: never_reads(p, "n_chars"),
         ],
@@ -1464,6 +1464,7 @@ AUDITS: list[tuple] = [
             lambda p: exchange_count(p, 1),
             lambda p: contains(p, "hashpartitioning(doc_id"),
             lambda p: absent(p, "rangepartitioning"),
+            lambda p: absent(p, "n_bytes"),
             lambda p: contains(p, "MapInArrow", 2),
             lambda p: never_reads(p, "n_chars"),
         ],
