@@ -28,6 +28,7 @@ empty text span so downstream counts stay consistent.
 from __future__ import annotations
 
 import base64
+import csv
 import time
 from dataclasses import dataclass, field
 
@@ -173,7 +174,13 @@ def extract_document(
         elif kind == KIND_DATA:
             # delimited/JSON rows -> the F4 table framing, then clean_text
             # — the data corpus category (app/config.py:9-15) as a span path
-            emit(KIND_TEXT, clean_text(render_data(body)))
+            try:
+                rendered = render_data(body)
+            except csv.Error:  # e.g. a field over csv.field_size_limit()
+                failures += 1
+                emit(KIND_TEXT, "")
+            else:
+                emit(KIND_TEXT, clean_text(rendered))
         elif kind == KIND_PDF and body is not None:
             try:
                 # media_ref prefix = the INPUT span offset: stable per doc,

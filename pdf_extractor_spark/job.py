@@ -32,9 +32,14 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", required=True, help="commit-log root directory")
     p.add_argument("--n-parts", type=int, default=256)
     p.add_argument("--parts-per-chunk", type=int, default=None,
-                   help="part_ids per committed chunk in batch mode (default 64)")
+                   help="part_ids per committed chunk in batch mode (default "
+                        "64); the parse stage runs one task per part, so this "
+                        "is a chunk's parse parallelism: set it to at least "
+                        "2x the executor cores")
     p.add_argument("--num-partitions", type=int, default=None,
-                   help="physical partitions for the parse stage")
+                   help="cap on the parse stage's tasks: whole parts are "
+                        "grouped into at most this many tasks (default: one "
+                        "task per part)")
     p.add_argument("--master", default=None)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--compact", action="store_true",

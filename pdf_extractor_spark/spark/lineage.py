@@ -71,7 +71,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract_documents
+from .pipeline import balance_partitions, extract_documents
 
 LINEAGE_COLS = [
     "part_id",
@@ -889,12 +889,13 @@ def compact_chunks(
     Long-running ingestion accretes one chunk per incremental run; at scale
     that is the classic small-file problem (every read opens
     chunks x parts files, and the scan planner pays per file). Compaction
-    writes the union once, keyed so each part_id lands in exactly one task
-    (``repartition(n, part_id)``) and therefore exactly one file per
-    partition directory, then publishes a marker with ``replaces`` — the
-    same atomic tmp+rename commit as a data chunk, so a crash mid-compaction
-    leaves the original chunks visible and the half-written directory
-    invisible. Time travel to pre-compaction snapshots still resolves (the
+    writes the union once through the extraction stage's part-keyed
+    exchange (``balance_partitions``: whole parts per task, at most 32
+    tasks), so each part_id lands in exactly one task and therefore exactly
+    one file per partition directory, then publishes a marker with
+    ``replaces`` — the same atomic tmp+rename commit as a data chunk, so a
+    crash mid-compaction leaves the original chunks visible and the
+    half-written directory invisible. Time travel to pre-compaction snapshots still resolves (the
     shadowing marker is > as_of) until ``expire_replaced`` reclaims them.
 
     Returns the new chunk id, or None if there is nothing to compact.
@@ -918,9 +919,8 @@ def compact_chunks(
         else log.read_table(spark, schema, markers=snapshot)
     )
     data_path = os.path.join(log.data_dir, _chunk_dirname(new_id))
-    n_tasks = max(1, min(len(part_ids), 32))
     (
-        data.repartition(n_tasks, "part_id")
+        balance_partitions(data, part_ids, num_partitions=32)
         .write.partitionBy("part_id")
         .mode("append")  # reserved empty dir; see _write_chunk note
         .parquet(data_path)
@@ -1069,6 +1069,7 @@ def reextract_parts(
         raise ValueError(
             f"parts never committed: {sorted(missing)} — append them via run_extraction"
         )
+    parts = sorted(set(parts))
     from .pipeline import assign_part_id
 
     # keep the joined manifest password column through the projection
@@ -1078,7 +1079,7 @@ def reextract_parts(
         () if password_col is None else (password_col,)
     )
     docs = assign_part_id(documents.select(*keep_cols), n_parts).filter(
-        F.col("part_id").isin(list(parts))
+        F.col("part_id").isin(parts)
     )
     extracted = extract_documents(
         docs,
@@ -1086,10 +1087,11 @@ def reextract_parts(
         num_partitions=num_partitions,
         passwords=passwords,
         password_col=password_col,
+        parts=parts,
     )
     chunk_id = log.reserve_chunk_id()
     metrics = _write_chunk(
-        spark, log, extracted, chunk_id, sorted(parts), n_parts, overwrite=True
+        spark, log, extracted, chunk_id, parts, n_parts, overwrite=True
     )
     return RunReport(1, len(parts), metrics["docs"], 0)
 
@@ -1109,7 +1111,10 @@ def run_extraction(
 
     Each chunk = one Spark job writing spans + lineage parquet, then an atomic
     commit marker. ``fail_after_chunks`` injects a crash for the
-    kill-and-resume test.
+    kill-and-resume test. A chunk's parse stage runs one Python task per
+    part (``pipeline.balance_partitions``), so ``parts_per_chunk`` is the
+    chunk's parse parallelism: set it to at least 2x the executor cores.
+    ``num_partitions`` only caps the task count below that.
 
     Safe under CONCURRENT writers on the same table root: chunk ids are
     mkdir-reserved (never shared), the committed set is re-read before each
@@ -1172,6 +1177,7 @@ def run_extraction(
                 num_partitions=num_partitions,
                 passwords=passwords,
                 password_col=password_col,
+                parts=chunk_parts,
             )
             chunk_id = log.reserve_chunk_id()
             try:

@@ -3,7 +3,7 @@
 Replaces the reference's sequential driver loop (``dashboard.py:588`` — one
 file at a time, no file-level parallelism) with a declarative plan:
 
-    documents --(per-doc hash scatter)--> mapInArrow(extract)
+    documents --(part-keyed exchange: one task per part)--> mapInArrow(extract)
               --> extracted spans + per-doc metrics --> committed parquet +
               lineage rows (see lineage.py)
 
@@ -16,13 +16,21 @@ Scale notes (100 TB / 1000 executors):
 - ``part_id`` is a *logical* processing-partition id, a pure function of
   doc_id — stable across cluster sizes and reruns, so resume anti-joins are
   meaningful regardless of physical partitioning.
-- Physical balance is separate: a uniform per-document hash scatter spreads
-  the ~1% giant-PDF tail across executors instead of serializing one
-  straggler task (SURVEY.md §4 item 1; see ``balance_partitions`` for why
-  the earlier size-salted RANGE repartition was measurably wrong on true
-  byte skew). There is no join here, so AQE skew-join can't help.
-- The extraction stage has NO shuffle other than the single explicit
-  repartition; parquet scan prunes to (doc_id, spans, part-key columns) only.
+- The parse exchange routes each row to the task that owns its part
+  (``balance_partitions``): a chunk of k parts runs exactly k Python tasks
+  and commits one parquet file per part. Python tasks are few and large
+  because each costs a fixed ~165 ms of worker CPU whatever its size (see
+  ``balance_partitions``), so ``parts_per_chunk`` is a chunk's parse
+  parallelism — set it to at least 2x the executor cores — and
+  ``num_partitions`` only caps the task count.
+- Skew: ``part_id`` is itself a per-document hash, so the exchange is still
+  a uniform per-document scatter that spreads the ~1% giant-PDF tail across
+  tasks instead of serializing one straggler (SURVEY.md §4 item 1; see
+  ``balance_partitions`` for why the earlier size-salted RANGE repartition
+  was measurably wrong on true byte skew). There is no join here, so AQE
+  skew-join can't help.
+- The extraction stage has NO shuffle other than that single explicit
+  exchange; parquet scan prunes to (doc_id, spans, part-key columns) only.
 """
 
 from __future__ import annotations
@@ -81,30 +89,49 @@ def assign_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
 
 
-def balance_partitions(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Skew-aware physical repartition before the parse stage: uniform
-    per-document hash scatter, ``repartition(n, doc_id)``.
+def balance_partitions(
+    df: DataFrame, parts, num_partitions: int | None = None
+) -> DataFrame:
+    """Physical exchange before the parse stage: one task per logical part.
 
-    Through round 3 this was a range repartition over (byte-size class,
-    salt, doc_id) — and the round-4 adversarial A/B (tools/bench_skew.py, the
-    ``skewed`` corpus profile: 1% contiguous 500-1000-page giants carrying
-    ~90% of the parse bytes) proved that shape actively HARMFUL: range
-    boundaries come from row-count-proportional sampling, so a 1%-of-rows
-    giant class occupies <1 partition's worth of key space and the sampler
-    funnels every giant into the SAME partition regardless of salt
-    (measured: balanced 15.6 s vs raw-scan 10.1 s at local[8]; max
-    per-partition parse time 13.5 s — worse than no repartition at all).
+    ``df`` carries ``part_id`` (``assign_part_id``); ``parts`` lists the
+    part ids being extracted. Each row goes to its part's dense position in
+    that list (``array_position(array(parts), part_id) - 1``) through
+    ``repartitionById``, so the stage runs exactly ``len(parts)`` Python
+    tasks, each holding one whole part and writing one parquet file per
+    committed part directory — no task without a part, no part split
+    across tasks.
+    ``num_partitions`` is a CAP: below ``len(parts)`` it groups whole parts
+    by ``slot % num_partitions``; it never creates more tasks than parts.
 
-    For a map-only parse stage the doc-granularity optimum is uniform
-    per-doc scatter: expected max-giants-per-partition is the balls-in-bins
-    maximum (~3 when giants ≈ partitions), so the straggler is a small
-    constant multiple of one giant's cost, while any row-weighted scheme
-    (range sampling, round-robin over input order) concentrates clustered
-    giants. Salting-by-key remains the right tool for skewed JOIN/AGG keys
-    (see ops/dedup.py, ops/training.py) — but here there is no key, and
-    hash(doc_id) IS the salt.
+    Why few, large tasks: every Python task has a fixed cost of ~165 ms of
+    worker CPU on a 4-CPU host whatever its row count, empty partitions
+    included. 99% of it is ``importlib.invalidate_caches()`` in pyspark's
+    per-task ``setup_spark_files``, which on CPython 3.11 re-reads the
+    ~1,300-entry pyspark.zip directory once for each of the ~16
+    zipimporters a worker caches. Halving the parse tasks to one per part
+    roughly doubled heavy-corpus docs/s (BENCH/BASELINE.md).
+
+    Skew: this is still a uniform per-document hash scatter, because
+    ``part_id`` IS ``pmod(xxhash64(doc_id), n_parts)`` — the bin is now a
+    part. For a map-only parse stage the doc-granularity optimum is
+    exactly that: expected max-giants-per-bin is the balls-in-bins maximum
+    (~3 when giants ≈ bins), so the straggler is a small constant multiple
+    of one giant's cost, while any row-weighted scheme (the round-3 range
+    repartition over (size class, salt, doc_id): range boundaries come from
+    row-proportional sampling, so a 1%-of-rows giant class funnelled into
+    ONE partition; tools/bench_skew.py measured it worse than no exchange)
+    concentrates clustered giants. Salting-by-key remains the right tool
+    for skewed JOIN/AGG keys (see ops/dedup.py, ops/training.py) — here
+    there is no key, and hash(doc_id) IS the salt.
     """
-    return df.repartition(num_partitions, F.col("doc_id"))
+    parts = list(parts)
+    k = max(1, min(num_partitions or len(parts), len(parts)))
+    if parts == list(range(len(parts))):
+        slot = F.col("part_id")  # the dense position of part p is p
+    else:
+        slot = F.array_position(F.array(*map(F.lit, parts)), F.col("part_id")) - 1
+    return df.repartitionById(k, slot.cast("int"))
 
 
 def _make_extract_batches_arrow(passwords: tuple[bytes, ...] = ()):
@@ -267,6 +294,7 @@ def extract_documents(
     balance: bool = True,
     passwords: tuple[bytes, ...] = (),
     password_col: str | None = None,
+    parts: list[int] | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted(doc_id, spans, metrics..., part_id).
 
@@ -283,6 +311,10 @@ def extract_documents(
     that scales: the V5/R6 key derivation is a deliberate ~0.3 s work
     factor, so trying a global list of N candidates on every locked doc
     costs N derivations where the manifest pays one.
+
+    ``parts`` lists the part ids ``df`` holds (default ``range(n_parts)``):
+    the parse stage runs one Python task per part, or fewer when
+    ``num_partitions`` caps it (see ``balance_partitions``).
     """
     if password_col is not None:
         df = df.select(
@@ -292,7 +324,9 @@ def extract_documents(
         df = df.select("doc_id", "spans")
     df = assign_part_id(df, n_parts)
     if balance:
-        df = balance_partitions(df, num_partitions or max(n_parts // 2, 32))
+        df = balance_partitions(
+            df, range(n_parts) if parts is None else parts, num_partitions
+        )
     return df.mapInArrow(
         _make_extract_batches_arrow(passwords), schema=EXTRACTED_SCHEMA
     )

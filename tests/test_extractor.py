@@ -213,6 +213,14 @@ def test_data_kind_renders_table_framing():
         assert r.parse_failures == 0
         assert r.spans[0][1] == want, text
 
+    # a csv field over csv.field_size_limit() (128 KiB) quarantines like a
+    # pdf parse error — one failure, empty text span — never raises
+    big = "a,b\n" + "x" * 140000 + ",1"
+    r = extract_document([("data", big, None, 0), ("media", "", "m://x", 1)])
+    assert r.parse_failures == 1
+    assert r.spans == [("text", "", "", 0), ("media", "", "m://x", 1)]
+    assert extract_document([("data", stage_span("data", big), None, 0)]).spans == r.spans[:1]
+
     # interleaving preserved around media spans
     r = extract_document(
         [("data", "a,b\n1,2", "", 0), ("media", "", "m://x", 1)]

@@ -66,12 +66,14 @@ def _with_n_bytes(df):
 
 
 def test_partition_balance_bytes(spark):
-    """After the per-doc hash scatter, no physical partition hoards the
-    byte volume."""
+    """After the part-keyed exchange (one bin per hash-assigned part), no
+    physical partition hoards the byte volume."""
     from pyspark.sql import functions as F
-    from pdf_extractor_spark.spark.pipeline import balance_partitions
+    from pdf_extractor_spark.spark.pipeline import assign_part_id, balance_partitions
 
-    df = balance_partitions(_with_n_bytes(corpus_df(spark, 400, seed=7)), 16)
+    df = balance_partitions(
+        assign_part_id(_with_n_bytes(corpus_df(spark, 400, seed=7)), 16), range(16)
+    )
     per_part = (
         df.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
@@ -88,12 +90,14 @@ def test_partition_balance_bytes_skewed(spark):
     """Same bound on the ADVERSARIAL profile (VERDICT r03 #2): a contiguous
     1% head of 500-1000-page giants carrying ~90% of the bytes. The r3
     range-based repartition failed this (every giant in ONE partition, ~90%
-    of bytes); per-doc hash scatter must hold the bound."""
+    of bytes); the part-keyed exchange (part_id is a per-doc hash) must
+    hold the bound."""
     from pyspark.sql import functions as F
-    from pdf_extractor_spark.spark.pipeline import balance_partitions
+    from pdf_extractor_spark.spark.pipeline import assign_part_id, balance_partitions
 
     df = balance_partitions(
-        _with_n_bytes(corpus_df(spark, 1000, profile="skewed")), 32
+        assign_part_id(_with_n_bytes(corpus_df(spark, 1000, profile="skewed")), 32),
+        range(32),
     )
     per_part = (
         df.withColumn("pid", F.spark_partition_id())
@@ -104,6 +108,43 @@ def test_partition_balance_bytes_skewed(spark):
     sizes = [r["part_bytes"] for r in per_part]
     assert len(sizes) > 1
     assert max(sizes) / sum(sizes) < 0.35
+
+
+def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
+    """The parse exchange is part-aligned: after an interrupted and resumed
+    run every committed part directory holds exactly one parquet file, and
+    re-extracting a non-contiguous part list runs one Python task per part
+    (each Python task has a large fixed cost, so no task is spent on less
+    than a whole part)."""
+    import glob
+
+    from pdf_extractor_spark.spark import pipeline
+
+    docs = corpus_df(spark, 60)
+    log = L.CommitLog(str(tmp_path / "commitlog"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=3, fail_after_chunks=1)
+    L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=3)
+    part_dirs = glob.glob(os.path.join(log.data_dir, "chunk=*", "part_id=*"))
+    assert len(part_dirs) == 8
+    for d in part_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+    tasks = spark.sparkContext.accumulator(0)
+    make = pipeline._make_extract_batches_arrow
+
+    def counting(*a, **k):
+        gen = make(*a, **k)
+
+        def _gen(batches):
+            tasks.add(1)
+            yield from gen(batches)
+
+        return _gen
+
+    monkeypatch.setattr(pipeline, "_make_extract_batches_arrow", counting)
+    L.reextract_parts(spark, docs, log, [1, 5, 6])
+    assert tasks.value == 3
 
 
 def test_kill_and_resume(spark, tmp_path):
@@ -197,9 +238,10 @@ def test_snapshot_time_travel(spark, tmp_path):
 def test_compaction_and_expiry(spark, tmp_path):
     """rewrite_data_files + expire_snapshots analogues: compaction rewrites
     the visible chunks into one replacement chunk behind the same atomic
-    marker; the table contents are identical, the file count collapses,
-    pre-compaction time travel still resolves until expiry reclaims it,
-    and resume treats every compacted part as committed."""
+    marker; the table contents are identical, every part collapses to one
+    file in that chunk, pre-compaction time travel still resolves until
+    expiry reclaims it, and resume treats every compacted part as
+    committed."""
     root = str(tmp_path / "clog")
     docs = corpus_df(spark, 60, seed=13)
     log = L.CommitLog(root)
@@ -224,11 +266,12 @@ def test_compaction_and_expiry(spark, tmp_path):
 
     new_id = L.compact_chunks(spark, log)
     assert new_id == 4
-    # contents identical, one visible chunk, fewer files
+    # contents identical, one visible chunk, one file per part (the
+    # part-aligned extraction already wrote one file per part, so the
+    # four chunks' 8 files become one chunk's 8 files)
     assert span_map() == before
     assert [c["chunk_id"] for c in log.visible_chunks()] == [new_id]
-    files_after = n_data_files(f"chunk={new_id:06d}")
-    assert files_after <= 8 and files_after < files_before
+    assert n_data_files(f"chunk={new_id:06d}") == 8 == files_before
     # lineage equivalence (per-part totals survive the rewrite)
     assert log.read_lineage(spark).groupBy().sum("docs_done").collect()[0][0] == lineage_docs
     # time travel BEFORE the compaction still resolves to the originals

@@ -6,8 +6,9 @@ contiguous head of 500-1000-page PDFs — the realistic crawl-dump layout where
 one long-document source arrives clustered in input order — followed by 99%
 single-page PDFs. The giant head is ~90% of the parse work and lands in the
 first parquet file, so the natural scan partitioning serializes it onto one
-or two tasks; `balance_partitions`' per-document hash scatter
-(`repartition(n, doc_id)`) must spread it across the parse tasks.
+or two tasks; `balance_partitions`' part-keyed exchange (one task per
+hash-assigned part, so still a per-document hash scatter) must spread it
+across the parse tasks.
 
 Protocol mirrors bench.py's noise discipline: the arms run INTERLEAVED
 (U,B,U,B,...) and each arm reports its best-of-N wall, so a co-tenant burst

@@ -4,7 +4,7 @@ Correctness says *what* each query returns (tools/check_oracle.py); this
 audits *how*: filters must reach the parquet scan (PushedFilters), unused
 columns must be pruned (ReadSchema), small dims must broadcast (never
 sort-merge), anti-joins must stay broadcast, the extraction stage must have
-exactly one exchange (the explicit skew repartition), and map-only operators
+exactly one exchange (the explicit part-keyed repartition), and map-only operators
 must not shuffle at all. These are the properties that decide whether a plan
 survives a 1000-executor / 100 TB scale-up, so they are pinned as tests
 (tests/test_plans.py) and recorded as evidence in BENCH/PLANS.md.
@@ -130,7 +130,7 @@ def _query_df(spark, sf_dir: str, name: str):
 
 
 def _extract_stage_df(spark, sf_dir: str):
-    """The raw extraction stage (scan -> repartition(doc_id) -> mapInArrow),
+    """The raw extraction stage (scan -> part-keyed exchange -> mapInArrow),
     without the oracle query's final projection/sort."""
     from pdf_extractor_spark.ops.extraction_queries import wrap_documents
     from pdf_extractor_spark.spark.pipeline import extract_documents
@@ -140,7 +140,7 @@ def _extract_stage_df(spark, sf_dir: str):
 
 def _staged_extract_stage_df(spark, sf_dir: str):
     """The staged-binary extraction stage (scan -> stage kernel ->
-    repartition(doc_id) -> parse kernel), without the oracle projection."""
+    part-keyed exchange -> parse kernel), without the oracle projection."""
     from pdf_extractor_spark.ops.extraction_queries import wrap_documents
     from pdf_extractor_spark.spark.pipeline import extract_documents
     from pdf_extractor_spark.spark.staging import stage_documents
@@ -1438,14 +1438,17 @@ AUDITS: list[tuple] = [
         "extract_stage",
         _extract_stage_df,
         [
-            # ONE exchange: the explicit per-doc hash scatter (never the
-            # r3 rangepartitioning — row-proportional range sampling
+            # ONE exchange: the part-keyed scatter (repartitionById on the
+            # part's slot; part_id is itself a per-doc hash), never a
+            # second per-doc hash exchange and never the r3
+            # rangepartitioning — row-proportional range sampling
             # funnels a byte-heavy 1% giant tail into one partition; see
-            # balance_partitions + tools/bench_skew.py). Anything more
+            # balance_partitions + tools/bench_skew.py. Anything more
             # means the pipeline shuffles data it shouldn't. No sizing
             # columns ride the exchange: nothing reads them after it.
             lambda p: exchange_count(p, 1),
-            lambda p: contains(p, "hashpartitioning(doc_id"),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: absent(p, "hashpartitioning(doc_id"),
             lambda p: absent(p, "rangepartitioning"),
             lambda p: absent(p, "n_bytes"),
             lambda p: contains(p, "MapInArrow"),
@@ -1458,11 +1461,12 @@ AUDITS: list[tuple] = [
         _staged_extract_stage_df,
         [
             # staged multi-pass path: stage kernel pipelines straight out of
-            # the scan (narrow), then the SAME single skew exchange — now
-            # moving binary payloads (3/4 the base64 bytes) — then the parse
-            # kernel. Still exactly one Exchange; two MapInArrow nodes.
+            # the scan (narrow), then the SAME single part-keyed exchange —
+            # now moving binary payloads (3/4 the base64 bytes) — then the
+            # parse kernel. Still exactly one Exchange; two MapInArrow nodes.
             lambda p: exchange_count(p, 1),
-            lambda p: contains(p, "hashpartitioning(doc_id"),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: absent(p, "hashpartitioning(doc_id"),
             lambda p: absent(p, "rangepartitioning"),
             lambda p: absent(p, "n_bytes"),
             lambda p: contains(p, "MapInArrow", 2),
@@ -1477,11 +1481,12 @@ AUDITS: list[tuple] = [
             # per-doc password manifest (round 4): the (doc_id, password)
             # side joins BROADCAST onto the corpus before the parse stage —
             # never a sort-merge shuffle of the document payloads on
-            # doc_id — and the stage keeps its one hash-scatter exchange +
+            # doc_id — and the stage keeps its one part-keyed exchange +
             # Arrow kernel shape with the password column riding through
             lambda p: contains(p, "BroadcastHashJoin"),
             lambda p: absent(p, "SortMergeJoin"),
-            lambda p: contains(p, "hashpartitioning(doc_id"),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: absent(p, "hashpartitioning(doc_id"),
             # the single rangepartitioning is the query's FINAL
             # orderBy(doc_id) presentation sort (oracle row order), never
             # the parse-stage scatter (the r3 skew lesson)
@@ -1569,12 +1574,13 @@ AUDITS: list[tuple] = [
         [
             # the data-span wrap builds csv from doc_id/lang/source only:
             # the text column must be PRUNED at the scan. Same parse-stage
-            # shape as extract_clean: one per-doc hash scatter into the
+            # shape as extract_clean: one part-keyed exchange into the
             # Arrow kernel, range partitioning only in the final
             # presentation sort
             lambda p: n_scans_at_most(p, 1),
             lambda p: never_reads(p, "text"),
-            lambda p: contains(p, "hashpartitioning(doc_id"),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: absent(p, "hashpartitioning(doc_id"),
             lambda p: occurs_at_most(p, "rangepartitioning", 1),
             lambda p: contains(p, "MapInArrow"),
             lambda p: absent(p, "MapInPandas"),
