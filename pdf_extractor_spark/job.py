@@ -37,9 +37,10 @@ def main(argv: list[str] | None = None) -> int:
                         "is a chunk's parse parallelism: set it to at least "
                         "2x the executor cores")
     p.add_argument("--num-partitions", type=int, default=None,
-                   help="cap on the parse stage's tasks: whole parts are "
-                        "grouped into at most this many tasks (default: one "
-                        "task per part)")
+                   help="parse-stage tasks per chunk (default: one per part, "
+                        "or the core count if a chunk has fewer parts); below "
+                        "the chunk's part count whole parts are grouped, above "
+                        "it each part is split over several tasks")
     p.add_argument("--master", default=None)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--compact", action="store_true",

@@ -920,7 +920,7 @@ def compact_chunks(
     )
     data_path = os.path.join(log.data_dir, _chunk_dirname(new_id))
     (
-        balance_partitions(data, part_ids, num_partitions=32)
+        balance_partitions(data, part_ids, num_partitions=min(len(part_ids), 32))
         .write.partitionBy("part_id")
         .mode("append")  # reserved empty dir; see _write_chunk note
         .parquet(data_path)
@@ -1070,19 +1070,14 @@ def reextract_parts(
             f"parts never committed: {sorted(missing)} — append them via run_extraction"
         )
     parts = sorted(set(parts))
-    from .pipeline import assign_part_id
-
     # keep the joined manifest password column through the projection
     # (mirrors resume_filter's keep_cols) — dropping it broke
     # --refresh-parts --password-manifest with an unresolved column
     keep_cols = ("doc_id", "spans") + (
         () if password_col is None else (password_col,)
     )
-    docs = assign_part_id(documents.select(*keep_cols), n_parts).filter(
-        F.col("part_id").isin(parts)
-    )
     extracted = extract_documents(
-        docs,
+        documents.select(*keep_cols),
         n_parts=n_parts,
         num_partitions=num_partitions,
         passwords=passwords,
@@ -1114,7 +1109,7 @@ def run_extraction(
     kill-and-resume test. A chunk's parse stage runs one Python task per
     part (``pipeline.balance_partitions``), so ``parts_per_chunk`` is the
     chunk's parse parallelism: set it to at least 2x the executor cores.
-    ``num_partitions`` only caps the task count below that.
+    ``num_partitions`` overrides the task count.
 
     Safe under CONCURRENT writers on the same table root: chunk ids are
     mkdir-reserved (never shared), the committed set is re-read before each
@@ -1170,9 +1165,8 @@ def run_extraction(
                 break
             chunk_parts = pending[:parts_per_chunk]
             pending = pending[parts_per_chunk:]
-            chunk_docs = docs.filter(F.col("part_id").isin(chunk_parts))
             extracted = extract_documents(
-                chunk_docs,
+                docs,
                 n_parts=n_parts,
                 num_partitions=num_partitions,
                 passwords=passwords,

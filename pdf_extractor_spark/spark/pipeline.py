@@ -17,12 +17,15 @@ Scale notes (100 TB / 1000 executors):
   doc_id — stable across cluster sizes and reruns, so resume anti-joins are
   meaningful regardless of physical partitioning.
 - The parse exchange routes each row to the task that owns its part
-  (``balance_partitions``): a chunk of k parts runs exactly k Python tasks
-  and commits one parquet file per part. Python tasks are few and large
-  because each costs a fixed ~165 ms of worker CPU whatever its size (see
-  ``balance_partitions``), so ``parts_per_chunk`` is a chunk's parse
-  parallelism — set it to at least 2x the executor cores — and
-  ``num_partitions`` only caps the task count.
+  (``balance_partitions``): a chunk of k parts, k at least the core count,
+  runs exactly k Python tasks and commits one parquet file per part.
+  Python tasks are few and large because each costs a fixed ~165 ms of
+  worker CPU whatever its size (see ``balance_partitions``), so
+  ``parts_per_chunk`` is a chunk's parse parallelism — set it to at least
+  2x the executor cores. A chunk with fewer parts than cores splits each
+  part over several tasks instead of leaving cores idle; an explicit
+  ``num_partitions`` sets the task count (whole parts grouped below
+  ``len(parts)``, parts split above it).
 - Skew: ``part_id`` is itself a per-document hash, so the exchange is still
   a uniform per-document scatter that spreads the ~1% giant-PDF tail across
   tasks instead of serializing one straggler (SURVEY.md §4 item 1; see
@@ -92,17 +95,20 @@ def assign_part_id(df: DataFrame, n_parts: int) -> DataFrame:
 def balance_partitions(
     df: DataFrame, parts, num_partitions: int | None = None
 ) -> DataFrame:
-    """Physical exchange before the parse stage: one task per logical part.
+    """Physical exchange before the parse stage: whole parts per task.
 
     ``df`` carries ``part_id`` (``assign_part_id``); ``parts`` lists the
     part ids being extracted. Each row goes to its part's dense position in
     that list (``array_position(array(parts), part_id) - 1``) through
-    ``repartitionById``, so the stage runs exactly ``len(parts)`` Python
-    tasks, each holding one whole part and writing one parquet file per
-    committed part directory — no task without a part, no part split
-    across tasks.
-    ``num_partitions`` is a CAP: below ``len(parts)`` it groups whole parts
-    by ``slot % num_partitions``; it never creates more tasks than parts.
+    ``repartitionById``. ``num_partitions`` is the parse task count, by
+    default ``max(len(parts), defaultParallelism)``:
+
+    - equal to ``len(parts)``: one task per part, so each task holds one
+      whole part and writes one parquet file in its part directory;
+    - below it: whole parts grouped by ``slot % num_partitions``;
+    - above it (fewer parts than cores, e.g. a one-part refresh): each part
+      is split into ``ceil(num_partitions / len(parts))`` sub-slots by a
+      second doc_id hash, so no task mixes parts and the cores stay busy.
 
     Why few, large tasks: every Python task has a fixed cost of ~165 ms of
     worker CPU on a 4-CPU host whatever its row count, empty partitions
@@ -126,12 +132,17 @@ def balance_partitions(
     there is no key, and hash(doc_id) IS the salt.
     """
     parts = list(parts)
-    k = max(1, min(num_partitions or len(parts), len(parts)))
-    if parts == list(range(len(parts))):
+    k = max(1, len(parts))
+    n = num_partitions or max(k, df.sparkSession.sparkContext.defaultParallelism)
+    if parts == list(range(k)):
         slot = F.col("part_id")  # the dense position of part p is p
     else:
         slot = F.array_position(F.array(*map(F.lit, parts)), F.col("part_id")) - 1
-    return df.repartitionById(k, slot.cast("int"))
+    if n <= k:
+        return df.repartitionById(n, slot.cast("int"))
+    split = -(-n // k)
+    sub = F.pmod(F.hash("doc_id"), F.lit(split))
+    return df.repartitionById(k * split, (slot * split + sub).cast("int"))
 
 
 def _make_extract_batches_arrow(passwords: tuple[bytes, ...] = ()):
@@ -312,9 +323,11 @@ def extract_documents(
     factor, so trying a global list of N candidates on every locked doc
     costs N derivations where the manifest pays one.
 
-    ``parts`` lists the part ids ``df`` holds (default ``range(n_parts)``):
-    the parse stage runs one Python task per part, or fewer when
-    ``num_partitions`` caps it (see ``balance_partitions``).
+    ``parts`` lists the part ids to extract (default ``range(n_parts)``);
+    rows of other parts are dropped here, so the exchange never sees a part
+    it has no slot for. The parse stage runs one Python task per part
+    unless ``num_partitions`` or the core count says otherwise (see
+    ``balance_partitions``).
     """
     if password_col is not None:
         df = df.select(
@@ -323,10 +336,12 @@ def extract_documents(
     else:
         df = df.select("doc_id", "spans")
     df = assign_part_id(df, n_parts)
+    if parts is None:
+        parts = range(n_parts)
+    else:
+        df = df.filter(F.col("part_id").isin(list(parts)))
     if balance:
-        df = balance_partitions(
-            df, range(n_parts) if parts is None else parts, num_partitions
-        )
+        df = balance_partitions(df, parts, num_partitions)
     return df.mapInArrow(
         _make_extract_batches_arrow(passwords), schema=EXTRACTED_SCHEMA
     )

@@ -111,20 +111,24 @@ def test_partition_balance_bytes_skewed(spark):
 
 
 def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
-    """The parse exchange is part-aligned: after an interrupted and resumed
-    run every committed part directory holds exactly one parquet file, and
-    re-extracting a non-contiguous part list runs one Python task per part
-    (each Python task has a large fixed cost, so no task is spent on less
-    than a whole part)."""
+    """The parse exchange is part-aligned: with at least as many parts per
+    chunk as cores, an interrupted and resumed run leaves exactly one
+    parquet file in every committed part directory, and re-extracting a
+    non-contiguous part list runs one Python task per part (each Python
+    task has a large fixed cost, so no task is spent on less than a whole
+    part). A refresh of fewer parts than cores splits its parts over the
+    cores instead of parsing them in one task."""
     import glob
 
     from pdf_extractor_spark.spark import pipeline
 
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 4  # the session fixture's local[4]
     docs = corpus_df(spark, 60)
     log = L.CommitLog(str(tmp_path / "commitlog"))
     with pytest.raises(RuntimeError, match="injected failure"):
-        L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=3, fail_after_chunks=1)
-    L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=3)
+        L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=4, fail_after_chunks=1)
+    L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=4)
     part_dirs = glob.glob(os.path.join(log.data_dir, "chunk=*", "part_id=*"))
     assert len(part_dirs) == 8
     for d in part_dirs:
@@ -143,8 +147,16 @@ def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
         return _gen
 
     monkeypatch.setattr(pipeline, "_make_extract_batches_arrow", counting)
-    L.reextract_parts(spark, docs, log, [1, 5, 6])
-    assert tasks.value == 3
+    L.reextract_parts(spark, docs, log, [1, 2, 5, 6, 7])
+    assert tasks.value == 5
+    refresh_id = max(c["chunk_id"] for c in log.visible_chunks())
+    refresh_dirs = glob.glob(os.path.join(log.data_dir, f"chunk={refresh_id:06d}", "part_id=*"))
+    assert len(refresh_dirs) == 5
+    for d in refresh_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+    L.reextract_parts(spark, docs, log, [5])
+    assert tasks.value == 5 + cores
 
 
 def test_kill_and_resume(spark, tmp_path):
@@ -238,14 +250,16 @@ def test_snapshot_time_travel(spark, tmp_path):
 def test_compaction_and_expiry(spark, tmp_path):
     """rewrite_data_files + expire_snapshots analogues: compaction rewrites
     the visible chunks into one replacement chunk behind the same atomic
-    marker; the table contents are identical, every part collapses to one
-    file in that chunk, pre-compaction time travel still resolves until
-    expiry reclaims it, and resume treats every compacted part as
-    committed."""
+    marker; the table contents are identical, parts spread over several
+    files collapse to one file each, pre-compaction time travel still
+    resolves until expiry reclaims it, and resume treats every compacted
+    part as committed."""
     root = str(tmp_path / "clog")
     docs = corpus_df(spark, 60, seed=13)
     log = L.CommitLog(root)
-    L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=2)  # 4 chunks
+    # 4 chunks; 8 parse tasks for a chunk's 2 parts split each part over
+    # several tasks, so most parts start out in more than one file
+    L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=2, num_partitions=8)
 
     def span_map():
         return {
@@ -266,12 +280,11 @@ def test_compaction_and_expiry(spark, tmp_path):
 
     new_id = L.compact_chunks(spark, log)
     assert new_id == 4
-    # contents identical, one visible chunk, one file per part (the
-    # part-aligned extraction already wrote one file per part, so the
-    # four chunks' 8 files become one chunk's 8 files)
+    # contents identical, one visible chunk, the files collapse to one per part
     assert span_map() == before
     assert [c["chunk_id"] for c in log.visible_chunks()] == [new_id]
-    assert n_data_files(f"chunk={new_id:06d}") == 8 == files_before
+    assert files_before > 8
+    assert n_data_files(f"chunk={new_id:06d}") == 8
     # lineage equivalence (per-part totals survive the rewrite)
     assert log.read_lineage(spark).groupBy().sum("docs_done").collect()[0][0] == lineage_docs
     # time travel BEFORE the compaction still resolves to the originals
