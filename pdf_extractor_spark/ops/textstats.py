@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..shipping import pin_launch_archives
 from .dedup import SHINGLE_K, shingles
 from .portable import h64, h64_sql, tokens, tokens_sql
 
@@ -1284,6 +1285,8 @@ def bpe_cost_batches(rules: list[str]):
 
         import pyarrow as pa
 
+        pin_launch_archives()
+
         ws = re.compile(r"[ \t\n\v\f\r]+")
         memo: dict[str, int] = {}
         MEMO_CAP = 1_000_000
@@ -1331,6 +1334,8 @@ def bpe_pieces_batches(rules: list[str]):
         import re
 
         import pyarrow as pa
+
+        pin_launch_archives()
 
         ws = re.compile(r"[ \t\n\v\f\r]+")
         memo: dict[str, list[str]] = {}

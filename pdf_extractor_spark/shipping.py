@@ -7,14 +7,17 @@ root (workers inherit cwd -> '' on sys.path); a caller importing
 ``__spark_entry__`` from anywhere else would crash every kernel query with
 ModuleNotFoundError. ``ensure_shipped(spark)`` zips the package once per
 process and registers it with ``sc.addPyFile`` once per SparkSession — the
-runtime equivalent of ``spark-submit --py-files``.
+runtime equivalent of ``spark-submit --py-files``. ``pin_launch_archives()``
+keeps the worker's launch archives from being re-read on every task.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 _PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
 _shipped_apps: set[str] = set()
@@ -50,3 +53,25 @@ def ensure_shipped(spark) -> None:
         return
     sc.addPyFile(_build_zip())
     _shipped_apps.add(app)
+
+
+def pin_launch_archives() -> None:
+    """Stop re-reading the worker's launch archives on every Python task.
+
+    pyspark's per-task ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, and on CPython < 3.13 every cached
+    ``zipimporter`` re-reads its archive's whole central directory there.
+    A worker caches ~16 of them, on pyspark.zip (~1,300 entries), py4j
+    and the spark-core jar (~5,400 entries): ~0.2 s of CPU per task on a
+    4-CPU host. Spark fixes the archives on the worker's launch
+    ``PYTHONPATH`` when it starts the worker, so this makes their
+    importers' ``invalidate_caches`` a no-op. ``addPyFile`` archives
+    (under the SparkFiles root, not on that path) and directory finders
+    are still invalidated. Called at the top of the worker wrappers; the
+    pin lasts for the life of a reused worker. CPython 3.13 made the
+    re-read lazy, so this can go once the runtime is on 3.13 or later.
+    """
+    launch = set(os.environ.get("PYTHONPATH", "").split(os.pathsep)) - {""}
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter) and finder.archive in launch:
+            finder.invalidate_caches = lambda: None

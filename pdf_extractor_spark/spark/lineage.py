@@ -1059,7 +1059,8 @@ def reextract_parts(
     disappear atomically at the commit flip — no rewrite of old chunks, no
     reader ever sees a mix of old and new rows for one partition, and time
     travel to a pre-overwrite snapshot still reads the original extraction.
-    Unlisted partitions are untouched.
+    Unlisted partitions are untouched; an empty ``parts`` list commits
+    nothing and launches no job.
     """
     n_parts = log.n_parts()
     if n_parts is None:
@@ -1070,6 +1071,8 @@ def reextract_parts(
             f"parts never committed: {sorted(missing)} — append them via run_extraction"
         )
     parts = sorted(set(parts))
+    if not parts:
+        return RunReport(0, 0, 0, 0)
     # keep the joined manifest password column through the projection
     # (mirrors resume_filter's keep_cols) — dropping it broke
     # --refresh-parts --password-manifest with an unresolved column

@@ -19,11 +19,13 @@ Scale notes (100 TB / 1000 executors):
 - The parse exchange routes each row to the task that owns its part
   (``balance_partitions``): a chunk of k parts, k at least the core count,
   runs exactly k Python tasks and commits one parquet file per part.
-  Python tasks are few and large because each costs a fixed ~165 ms of
-  worker CPU whatever its size (see ``balance_partitions``), so
-  ``parts_per_chunk`` is a chunk's parse parallelism — set it to at least
-  2x the executor cores. A chunk with fewer parts than cores splits each
-  part over several tasks instead of leaving cores idle; an explicit
+  Python tasks are few and large because each still has a fixed cost
+  whatever its size (~0.07 core-s once the worker wrappers pin the
+  launch archives, see ``balance_partitions``) and one file per part
+  keeps the commit and every derived scan small, so ``parts_per_chunk``
+  is a chunk's parse parallelism — set it to at least 2x the executor
+  cores. A chunk with fewer parts than cores splits each part over
+  several tasks instead of leaving cores idle; an explicit
   ``num_partitions`` sets the task count (whole parts grouped below
   ``len(parts)``, parts split above it).
 - Skew: ``part_id`` is itself a per-document hash, so the exchange is still
@@ -110,13 +112,17 @@ def balance_partitions(
       is split into ``ceil(num_partitions / len(parts))`` sub-slots by a
       second doc_id hash, so no task mixes parts and the cores stay busy.
 
-    Why few, large tasks: every Python task has a fixed cost of ~165 ms of
-    worker CPU on a 4-CPU host whatever its row count, empty partitions
-    included. 99% of it is ``importlib.invalidate_caches()`` in pyspark's
-    per-task ``setup_spark_files``, which on CPython 3.11 re-reads the
-    ~1,300-entry pyspark.zip directory once for each of the ~16
-    zipimporters a worker caches. Halving the parse tasks to one per part
-    roughly doubled heavy-corpus docs/s (BENCH/BASELINE.md).
+    Why few, large tasks: every Python task has a fixed cost whatever its
+    row count, empty partitions included. On a 4-CPU host a one-row task
+    cost ~0.28 core-s, most of it ``importlib.invalidate_caches()`` in
+    pyspark's per-task ``setup_spark_files``, which on CPython 3.11
+    re-reads the launch archives (pyspark.zip, py4j, the spark-core jar)
+    once for each of the ~16 zipimporters a worker caches. The worker
+    wrappers pin those archives (``shipping.pin_launch_archives``), which
+    cuts a task to ~0.07 core-s after a worker's first task. One task per
+    part halved the parse tasks and roughly doubled heavy-corpus docs/s;
+    the pin added ~1.5x on top (BENCH/BASELINE.md). One file per part
+    also keeps the commit and the derived scans small.
 
     Skew: this is still a uniform per-document hash scatter, because
     ``part_id`` IS ``pmod(xxhash64(doc_id), n_parts)`` — the bin is now a
@@ -174,6 +180,9 @@ def _make_extract_batches_arrow(passwords: tuple[bytes, ...] = ()):
         import pyarrow as pa
 
         from pdf_extractor_spark.core.extractor import extract_document
+        from pdf_extractor_spark.shipping import pin_launch_archives
+
+        pin_launch_archives()
 
         def extract_fn(spans, doc_pw=None):
             cands = (

@@ -412,6 +412,13 @@ def test_reextract_parts_overwrite(spark, tmp_path):
     with pytest.raises(ValueError, match="never committed"):
         L.reextract_parts(spark, v2, log, [2, 99])
 
+    # an empty refresh list commits nothing and reserves no chunk id
+    n_chunks = len(log.committed_chunks())
+    dirs = sorted(os.listdir(os.path.join(root, "data")))
+    assert L.reextract_parts(spark, v2, log, []) == L.RunReport(0, 0, 0, 0)
+    assert len(log.committed_chunks()) == n_chunks
+    assert sorted(os.listdir(os.path.join(root, "data"))) == dirs
+
 
 def test_lineage_schema(spark, tmp_path):
     root = str(tmp_path / "cl2")
