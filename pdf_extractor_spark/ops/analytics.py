@@ -164,7 +164,7 @@ def q_resume_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join of the input against a committed-partition set.
 
     The committed set here is the deterministic stand-in ``doc_id % 7 == 0``
-    (in production it comes from the lineage table,
+    (in production it comes from the commit markers,
     spark/lineage.py:resume_filter). The done-side is tiny -> broadcast, so
     the anti-join never shuffles the big side.
     """

@@ -265,7 +265,6 @@ def run_curate(
         spark,
         src_log,
         out_log,
-        CURATED_SCHEMA,
         "curate",
         _incremental,
         rebuild=rebuild,

@@ -36,14 +36,12 @@ runs.
 from __future__ import annotations
 
 import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .lineage import CommitLog, RunReport, _chunk_dirname
+from .lineage import CommitLog, RunReport, _chunk_dirname, write_observed
 
 
 def latest_metric(markers: list[dict], key: str):
@@ -82,10 +80,8 @@ def derived_cursor(out_log: CommitLog) -> int | None:
 
 
 def commit_derived_chunk(
-    spark: SparkSession,
     out_log: CommitLog,
     df: DataFrame,
-    schema: StructType,
     stage: str,
     part_ids: list[int] | None,
     metrics: dict,
@@ -93,16 +89,16 @@ def commit_derived_chunk(
     overwrite: bool = False,
     validate=None,
 ) -> tuple[int, int, list[int]]:
-    """Stage one derived chunk (append-mode write into the mkdir-reserved
-    dir, exactly like lineage._write_chunk) and flip its marker.
-    ``validate`` runs under the commit lock (see CommitLog.commit_chunk)."""
+    """Stage one derived chunk (an observed append-mode write into the
+    mkdir-reserved dir, exactly like lineage._write_chunk) and flip its
+    marker. The doc count and touched parts come from the write's own
+    Observation, so no job runs after the write. ``validate`` runs under
+    the commit lock (see CommitLog.commit_chunk)."""
     chunk_id = out_log.reserve_chunk_id()
-    data_path = os.path.join(out_log.data_dir, _chunk_dirname(chunk_id))
-    df.write.partitionBy("part_id").mode("append").parquet(data_path)
-    written = spark.read.schema(schema).parquet(data_path)
-    rollup = written.groupBy("part_id").agg(F.count("*").alias("n")).collect()
-    n_docs = int(sum(r["n"] for r in rollup))
-    touched = sorted(r["part_id"] for r in rollup)
+    observed = write_observed(
+        df, os.path.join(out_log.data_dir, _chunk_dirname(chunk_id))
+    )
+    n_docs, touched = observed["docs"], observed["part_ids"]
     out_log.commit_chunk(
         chunk_id,
         part_ids if part_ids is not None else touched,
@@ -119,7 +115,6 @@ def run_derived_stage(
     spark: SparkSession,
     src_log: CommitLog,
     out_log: CommitLog,
-    schema: StructType,
     stage: str,
     compute: Callable[[DataFrame], DataFrame],
     rebuild: bool = False,
@@ -176,7 +171,6 @@ def run_derived_stage(
             spark,
             src_log,
             out_log,
-            schema,
             stage,
             compute,
             rebuild=rebuild,
@@ -194,7 +188,6 @@ def _run_derived_stage(
     spark: SparkSession,
     src_log: CommitLog,
     out_log: CommitLog,
-    schema: StructType,
     stage: str,
     compute: Callable[[DataFrame], DataFrame],
     rebuild: bool = False,
@@ -235,10 +228,8 @@ def _run_derived_stage(
             else sorted({p for c in src_chunks for p in c["part_ids"]})
         )
         _, n_docs, _ = commit_derived_chunk(
-            spark,
             out_log,
             out,
-            schema,
             stage,
             all_parts,
             {**(extra_metrics or {}), "src_snapshot": latest, "rebuild": True},
@@ -307,10 +298,8 @@ def _run_derived_stage(
             )
 
     _, n_docs, touched = commit_derived_chunk(
-        spark,
         out_log,
         out,
-        schema,
         stage,
         None,
         {**(extra_metrics or {}), "src_snapshot": latest},
@@ -319,26 +308,3 @@ def _run_derived_stage(
     )
     return RunReport(1, len(touched), n_docs, 0)
 
-
-def run_derived_job(
-    spark: SparkSession,
-    src_root: str,
-    out_root: str,
-    schema: StructType,
-    stage: str,
-    compute,
-    rebuild: bool = False,
-    rebuild_compute=None,
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_derived_stage(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        schema,
-        stage,
-        compute,
-        rebuild=rebuild,
-        rebuild_compute=rebuild_compute,
-    )
-    return report, time.monotonic() - t0

@@ -3,15 +3,18 @@
 The sandbox has no Iceberg runtime jar, so snapshot semantics are emulated
 with parquet + an atomic JSON commit log behind one writer interface, exactly
 as scoped in SURVEY.md §7.4. On a real cluster this class is swapped for
-``df.writeTo(table).append()`` + an Iceberg lineage table; the resume logic
-(left-anti join on committed part_ids) is identical either way.
+``df.writeTo(table).append()``; the resume logic (left-anti join on
+committed part_ids) is identical either way.
 
 Layout of a CommitLog directory:
 
     <root>/data/chunk=<k>/part_id=<p>/*.parquet   extracted spans
-    <root>/lineage/chunk=<k>/*.parquet            per-part_id metrics rows
     <root>/commits/commit-<k>.json          atomic marker (tmp + rename):
                                             the chunk is visible iff present
+
+A marker's metrics come from an ``Observation`` on the chunk's own write
+(the analogue of an Iceberg snapshot summary's added-records counts), and
+``read_lineage`` is a per-part rollup of the visible data.
 
 Both path levels are key=value (Hive) form on purpose: ``chunk`` and
 ``part_id`` are DISCOVERED PARTITION COLUMNS, so every read is ONE parquet
@@ -65,10 +68,11 @@ import fcntl
 import json
 import os
 import re
+import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import balance_partitions, extract_documents
@@ -83,12 +87,6 @@ LINEAGE_COLS = [
     "duration_ms",
     "committed_at",
 ]
-
-LINEAGE_SCHEMA = (
-    "part_id int, status string, docs_done bigint, pages_parsed bigint, "
-    "spans_emitted bigint, parse_failures bigint, duration_ms bigint, "
-    "committed_at timestamp"
-)
 
 
 @dataclass
@@ -118,7 +116,7 @@ class TableContractError(ValueError):
 
 
 def _chunk_dirname(cid: int) -> str:
-    """Chunk subdirectory under data/ and lineage/, in key=value form so
+    """Chunk subdirectory under data/, in key=value form so
     ``chunk`` resolves as a partition column (see module docstring)."""
     return f"chunk={cid:06d}"
 
@@ -133,24 +131,22 @@ class CommitLog:
     def __init__(self, root: str):
         self.root = root
         self.data_dir = os.path.join(root, "data")
-        self.lineage_dir = os.path.join(root, "lineage")
         self.commits_dir = os.path.join(root, "commits")
-        for d in (self.data_dir, self.lineage_dir, self.commits_dir):
+        for d in (self.data_dir, self.commits_dir):
             os.makedirs(d, exist_ok=True)
         # layout-format guard: a table written before the chunk=K (Hive)
         # layout holds chunk-K dirs, which partition discovery cannot see —
         # opening it would read as EMPTY with committed markers present
         # (and gc would never sweep its orphans). Fail loudly instead of
         # silently returning nothing; the fix is a one-time offline rename.
-        for base in (self.data_dir, self.lineage_dir):
-            legacy = [n for n in os.listdir(base) if _LEGACY_CHUNK_RE.match(n)]
-            if legacy:
-                raise TableContractError(
-                    f"{base} holds pre-Hive-layout chunk dirs "
-                    f"(e.g. {legacy[0]!r}); run "
-                    f"CommitLog.migrate_layout({self.root!r}) once, with no "
-                    f"live writers, to rename chunk-K -> chunk=K"
-                )
+        legacy = [n for n in os.listdir(self.data_dir) if _LEGACY_CHUNK_RE.match(n)]
+        if legacy:
+            raise TableContractError(
+                f"{self.data_dir} holds pre-Hive-layout chunk dirs "
+                f"(e.g. {legacy[0]!r}); run "
+                f"CommitLog.migrate_layout({self.root!r}) once, with no "
+                f"live writers, to rename chunk-K -> chunk=K"
+            )
         # published markers are immutable (retention deletes DATA, never
         # markers), so parsed markers cache per-instance forever; the dir
         # listing stays the source of truth for WHICH markers exist, so a
@@ -164,25 +160,21 @@ class CommitLog:
     @staticmethod
     def migrate_layout(root: str) -> list[str]:
         """One-time offline upgrade of a pre-Hive-layout table: rename every
-        ``data|lineage/chunk-K`` directory to ``chunk=K``. Markers, ids,
-        and part_id subdirs are layout-independent and untouched; each
-        rename is atomic, and a crash mid-migration is resumed by running
-        it again (already-renamed dirs are skipped). MUST NOT run while any
-        writer is live (old-code writers would recreate legacy dirs).
-        Returns the renamed paths."""
+        ``data/chunk-K`` directory to ``chunk=K``. Markers, ids, and
+        part_id subdirs are layout-independent and untouched; each rename
+        is atomic, and a crash mid-migration is resumed by running it again
+        (already-renamed dirs are skipped). MUST NOT run while any writer is
+        live (old-code writers would recreate legacy dirs). Returns the
+        renamed paths."""
+        base = os.path.join(root, "data")
         renamed = []
-        for sub in ("data", "lineage"):
-            base = os.path.join(root, sub)
-            if not os.path.isdir(base):
+        for name in sorted(os.listdir(base)) if os.path.isdir(base) else []:
+            m = _LEGACY_CHUNK_RE.match(name)
+            if not m:
                 continue
-            for name in sorted(os.listdir(base)):
-                m = _LEGACY_CHUNK_RE.match(name)
-                if not m:
-                    continue
-                src = os.path.join(base, name)
-                dst = os.path.join(base, _chunk_dirname(int(m.group(1))))
-                os.rename(src, dst)  # same dir: atomic, fails if dst exists
-                renamed.append(dst)
+            dst = os.path.join(base, _chunk_dirname(int(m.group(1))))
+            os.rename(os.path.join(base, name), dst)  # atomic, fails if dst exists
+            renamed.append(dst)
         return renamed
 
     # ------------------------------------------------------------- commit side
@@ -235,7 +227,7 @@ class CommitLog:
         ]
 
     def expire_replaced(self) -> list[int]:
-        """Physically delete the data + lineage directories of chunks that a
+        """Physically delete the data directories of chunks that a
         committed compaction marker has replaced — the
         ``expire_snapshots`` + delete-orphan-files maintenance analogue.
         Current reads are untouched (they already resolve to the
@@ -253,7 +245,7 @@ class CommitLog:
         ``dashboard.py:777-829``; §2.1 maps that to ``expire_snapshots``
         retention on staging tables).
 
-        Reclaims the data + lineage directories of chunks that are BOTH
+        Reclaims the data directories of chunks that are BOTH
         (a) unreachable from the *current* view — compaction-replaced, or
         (with ``shadowed=True``) appends whose every part_id is shadowed by
         a later overwrite marker — and (b) committed before ``older_than``
@@ -263,8 +255,6 @@ class CommitLog:
         are kept for audit; time travel and incremental scans over reclaimed
         history stop resolving. Returns the reclaimed chunk ids.
         """
-        import shutil
-
         committed = self.committed_chunks()
         visible = self.visible_chunks(chunks=committed)
         visible_ids = {c["chunk_id"] for c in visible}
@@ -277,13 +267,9 @@ class CommitLog:
             )
             if reachable or c["committed_at"] >= older_than:
                 continue
-            removed = False
-            for base in (self.data_dir, self.lineage_dir):
-                d = os.path.join(base, _chunk_dirname(cid))
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-                    removed = True
-            if removed:
+            d = os.path.join(self.data_dir, _chunk_dirname(cid))
+            if os.path.isdir(d):
+                shutil.rmtree(d)
                 gone.append(cid)
         return gone
 
@@ -317,7 +303,7 @@ class CommitLog:
         from ever being handed out again — ids are never reused even after
         GC, exactly like Iceberg's never-reused snapshot ids, so a stale
         artifact stamped with a dead chunk's id (a crashed side-output
-        staging dir, an orphaned lineage dir) can never be adopted by a
+        staging dir, a stale OCR-queue dir) can never be adopted by a
         later unrelated chunk."""
         # the marker scan runs OUTSIDE the lock (streaming reserves once
         # per micro-batch; holding the global commit lock across O(chunks)
@@ -364,7 +350,7 @@ class CommitLog:
                 fcntl.flock(lf.fileno(), fcntl.LOCK_UN)
 
     def gc_orphans(self, grace_s: float = 3600.0) -> list[str]:
-        """Delete data/lineage chunk directories that have NO commit marker
+        """Delete data chunk directories that have NO commit marker
         and were last modified more than ``grace_s`` ago — crashed or
         conflict-losing writers' staged output (the
         ``remove_orphan_files`` analogue, including its grace period: a
@@ -391,22 +377,19 @@ class CommitLog:
         visible (the re-check spares the chunk) or its commit happens
         after our rmtree and fails loudly on ``commit_chunk``'s
         ``expect_data`` existence check — never a silent loss."""
-        import shutil
-
         marked = {c["chunk_id"] for c in self.committed_chunks()}
         doomed: list[tuple[int, str]] = []
         cutoff = time.time() - grace_s
-        for base in (self.data_dir, self.lineage_dir):
-            for name in sorted(os.listdir(base)):
-                if not name.startswith("chunk="):
-                    continue
-                try:
-                    cid = int(name.split("=")[1])
-                except (IndexError, ValueError):
-                    continue
-                path = os.path.join(base, name)
-                if cid not in marked and os.path.getmtime(path) < cutoff:
-                    doomed.append((cid, path))
+        for name in sorted(os.listdir(self.data_dir)):
+            if not name.startswith("chunk="):
+                continue
+            try:
+                cid = int(name.split("=")[1])
+            except (IndexError, ValueError):
+                continue
+            path = os.path.join(self.data_dir, name)
+            if cid not in marked and os.path.getmtime(path) < cutoff:
+                doomed.append((cid, path))
         removed: list[str] = []
         if doomed:
             with self._commit_lock():
@@ -660,12 +643,11 @@ class CommitLog:
     def _scan_chunks(
         self,
         spark: SparkSession,
-        base_dir: str,
-        schema: str,
+        schema,
         whole: list[int],
         partial: list[tuple[int, list[int]]],
     ):
-        """ONE parquet scan over ``base_dir`` resolving a snapshot's chunk
+        """ONE parquet scan over ``data/`` resolving a snapshot's chunk
         set declaratively: fully-owned chunks via ``chunk IN (...)``,
         partially-shadowed chunks (rare — created only by a later
         overwrite) via ``chunk = K AND part_id IN (owned)``. Both ``chunk``
@@ -675,23 +657,24 @@ class CommitLog:
         scanned-and-dropped — and plan build stays flat in chunk count
         (the per-chunk unionByName it replaced built plans superlinearly:
         7.5 / 38 / 156 s at 200 / 1000 / 2000 chunks,
-        tools/bench_commitlog.py)."""
-        if not whole and not partial:
-            return spark.createDataFrame([], schema)
+        tools/bench_commitlog.py). The frame keeps the ``chunk`` column;
+        row readers drop it."""
         # explicit schema: a committed chunk whose parts got zero docs
         # holds only _SUCCESS, and schema inference over an all-empty
         # table would raise. `chunk` is appended by partition discovery;
         # when NO data file exists anywhere it cannot be discovered, and
         # there is nothing to read either way.
-        df = spark.read.schema(schema).parquet(base_dir)
-        if "chunk" not in df.columns:
-            return spark.createDataFrame([], schema)
+        df = spark.read.schema(schema).parquet(self.data_dir) if whole or partial else None
+        if df is None or "chunk" not in df.columns:
+            return spark.createDataFrame([], schema).withColumn(
+                "chunk", F.lit(None).cast("int")
+            )
         cond = F.col("chunk").isin(whole) if whole else F.lit(False)
         for cid, owned in partial:
             cond = cond | (
                 (F.col("chunk") == cid) & F.col("part_id").isin(owned)
             )
-        return df.where(cond).drop("chunk")
+        return df.where(cond)
 
     def _visible_split(
         self,
@@ -734,9 +717,7 @@ class CommitLog:
         from .pipeline import EXTRACTED_SCHEMA
 
         whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(
-            spark, self.data_dir, EXTRACTED_SCHEMA, whole, partial
-        )
+        return self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial).drop("chunk")
 
     def read_table(
         self,
@@ -750,7 +731,7 @@ class CommitLog:
         commit-marker visibility protocol with their own row shape.
         ``read_extracted`` is exactly this with EXTRACTED_SCHEMA."""
         whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(spark, self.data_dir, schema, whole, partial)
+        return self._scan_chunks(spark, schema, whole, partial).drop("chunk")
 
     def read_incremental(
         self,
@@ -795,9 +776,8 @@ class CommitLog:
         # each marker's data is read whole here (an overwrite's parts ARE
         # its current content), so the scan needs no part_id conditions
         return self._scan_chunks(
-            spark, self.data_dir,
-            EXTRACTED_SCHEMA if schema is None else schema, ids, [],
-        )
+            spark, EXTRACTED_SCHEMA if schema is None else schema, ids, []
+        ).drop("chunk")
 
     def incremental_window(
         self,
@@ -836,9 +816,27 @@ class CommitLog:
         as_of: int | None = None,
         markers: list[dict] | None = None,
     ) -> DataFrame:
+        """Per-(chunk, part_id) metrics of the visible extracted rows, in
+        ``LINEAGE_COLS``: sums of the per-doc metric columns, ``status``
+        ``error`` when any doc failed, and ``committed_at`` from the
+        chunk's marker. A column-pruned rollup of the data itself, so it
+        follows the same snapshot visibility as :meth:`read_extracted`."""
+        from .pipeline import EXTRACTED_SCHEMA
+
+        markers = self.committed_chunks(as_of) if markers is None else markers
         whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(
-            spark, self.lineage_dir, LINEAGE_SCHEMA, whole, partial
+        stamps = spark.createDataFrame(
+            [(c["chunk_id"], c["committed_at"]) for c in markers], "chunk int, ts double"
+        )
+        sums = ("pages_parsed", "spans_emitted", "parse_failures", "duration_ms")
+        return (
+            self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial)
+            .groupBy("chunk", "part_id")
+            .agg(F.count("*").alias("docs_done"), *(F.sum(c).alias(c) for c in sums))
+            .join(F.broadcast(stamps), "chunk")
+            .withColumn("status", F.when(F.col("parse_failures") > 0, "error").otherwise("success"))
+            .withColumn("committed_at", F.timestamp_seconds("ts"))
+            .select(LINEAGE_COLS)
         )
 
 
@@ -869,6 +867,36 @@ def resume_filter(
     return docs.join(F.broadcast(done_df), "part_id", "left_anti")
 
 
+def observed_rollup(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a chunk commit's rollup attached as an ``Observation``:
+    ``docs``, the sorted ``part_ids`` touched and, for extraction rows,
+    ``pages`` and ``failures`` (0 when no row lands). Spark merges it from
+    the consuming action's result stage once per partition, so the rollup
+    costs no job and a retried or speculative task never double-counts."""
+    obs = Observation()
+    aggs = [
+        F.count(F.lit(1)).alias("docs"),
+        F.array_sort(F.collect_set("part_id")).alias("part_ids"),
+    ]
+    if "pages_parsed" in df.columns:  # derived tables carry only the count
+        aggs += [
+            F.coalesce(F.sum(c), F.lit(0)).alias(k)
+            for k, c in (("pages", "pages_parsed"), ("failures", "parse_failures"))
+        ]
+    return df.observe(obs, *aggs), obs
+
+
+def write_observed(df: DataFrame, path: str) -> dict:
+    """Write ``df`` into a chunk directory as ``part_id=P/`` parquet (the
+    Iceberg partition-spec analogue: lookups prune whole directories) and
+    return its :func:`observed_rollup`. mode=append, NOT overwrite: the
+    chunk directory was mkdir-RESERVED, and overwrite would delete it first,
+    momentarily releasing the reservation to a racing writer."""
+    observed, obs = observed_rollup(df)
+    observed.write.partitionBy("part_id").mode("append").parquet(path)
+    return obs.get
+
+
 def compact_chunks(
     spark: SparkSession, log: CommitLog, min_chunks: int = 2, schema=None
 ) -> int | None:
@@ -878,13 +906,12 @@ def compact_chunks(
     ``schema`` compacts a DERIVED table (signals/curate/neardup/pack/
     materialize — the same small-file accretion, one chunk per
     incremental window): the data is read under the stage's row shape
-    and the lineage rewrite is skipped (derived chunks carry no lineage
-    rows). The stage CURSOR survives: markers are kept by
-    replaces/expiry, ``latest_metric`` skips the compaction marker's
-    null ``src_snapshot``/``scope``/``cost``, and ``incremental_window``
-    excludes ``replaces`` markers — so a post-compaction incremental run
-    neither re-consumes history nor skips the next source window
-    (pinned in tests/test_signals.py).
+    and the marker records only the doc count. The stage CURSOR
+    survives: markers are kept by replaces/expiry, ``latest_metric``
+    skips the compaction marker's null ``src_snapshot``/``scope``/``cost``,
+    and ``incremental_window`` excludes ``replaces`` markers — so a
+    post-compaction incremental run neither re-consumes history nor skips
+    the next source window (pinned in tests/test_signals.py).
 
     Long-running ingestion accretes one chunk per incremental run; at scale
     that is the classic small-file problem (every read opens
@@ -895,12 +922,21 @@ def compact_chunks(
     one file per partition directory, then publishes a marker with
     ``replaces`` — the same atomic tmp+rename commit as a data chunk, so a
     crash mid-compaction leaves the original chunks visible and the
-    half-written directory invisible. Time travel to pre-compaction snapshots still resolves (the
-    shadowing marker is > as_of) until ``expire_replaced`` reclaims them.
+    half-written directory invisible. The marker's docs/pages/failures are
+    observed on the rewrite itself, so they count the rows the new chunk
+    holds (parts a later overwrite shadowed are not in it). Time travel to
+    pre-compaction snapshots still resolves (the shadowing marker is >
+    as_of) until ``expire_replaced`` reclaims them.
+
+    The marker publishes in chunk-id order: if a writer that reserved a
+    later id committed first, or one that reserved an id between the
+    snapshot and this chunk is still writing, the compaction raises
+    :class:`CommitConflict` and deletes its unmarked rewrite — snapshot ids
+    stay monotonic in commit order, and the caller simply retries.
 
     Returns the new chunk id, or None if there is nothing to compact.
     """
-    # pin the snapshot ONCE: data/lineage reads and the commit's conflict
+    # pin the snapshot ONCE: the data read and the commit's conflict
     # window all reference this exact marker list — a re-list between here
     # and the commit would fold concurrently-appended chunks into the
     # compaction output without replacing them (permanent duplicates)
@@ -919,33 +955,41 @@ def compact_chunks(
         else log.read_table(spark, schema, markers=snapshot)
     )
     data_path = os.path.join(log.data_dir, _chunk_dirname(new_id))
-    (
-        balance_partitions(data, part_ids, num_partitions=min(len(part_ids), 32))
-        .write.partitionBy("part_id")
-        .mode("append")  # reserved empty dir; see _write_chunk note
-        .parquet(data_path)
+    observed = write_observed(
+        balance_partitions(data, part_ids, num_partitions=min(len(part_ids), 32)),
+        data_path,
     )
-    if os.path.isdir(log.lineage_dir):  # derived tables have none
-        lineage = log.read_lineage(spark, markers=snapshot)
-        lineage_path = os.path.join(log.lineage_dir, _chunk_dirname(new_id))
-        lineage.coalesce(1).write.mode("overwrite").parquet(lineage_path)
-
-    metrics: dict = {"docs": 0, "pages": 0, "failures": 0}
-    for c in victims:
-        for k in metrics:
-            metrics[k] += (c.get("metrics") or {}).get(k, 0) or 0
+    metrics = {k: v for k, v in observed.items() if k != "part_ids"}
     metrics["compacted_from"] = len(victims)
-    # no_new_overwrites_since: an overwrite landing after the snapshot would
-    # be silently undone by our rewritten pre-overwrite rows — abort instead
-    log.commit_chunk(
-        new_id,
-        part_ids,
-        metrics,
-        n_parts=log.n_parts(),
-        replaces=victim_ids,
-        no_new_overwrites_since=snapshot_ids,
-        expect_data=True,
-    )
+    top = max(snapshot_ids, default=-1)
+
+    def in_id_order(committed: list[dict]) -> None:
+        done = {c["chunk_id"] for c in committed}
+        staged = {int(n.split("=")[1]) for n in os.listdir(log.data_dir)}
+        if max(done) > new_id or any(top < j < new_id for j in staged - done):
+            raise CommitConflict(
+                f"a concurrent writer's chunk sits between {top} and {new_id} "
+                f"in id order; compaction chunk {new_id} not published"
+            )
+
+    try:
+        # no_new_overwrites_since: an overwrite landing after the snapshot
+        # would be silently undone by our rewritten pre-overwrite rows
+        log.commit_chunk(
+            new_id,
+            part_ids,
+            metrics,
+            n_parts=log.n_parts(),
+            replaces=victim_ids,
+            no_new_overwrites_since=snapshot_ids,
+            validate=in_id_order,
+            expect_data=True,
+        )
+    except CommitConflict:
+        # the unmarked rewrite is ours alone: drop it now rather than
+        # leave it for gc_orphans (its id is burned by the highwater)
+        shutil.rmtree(data_path, ignore_errors=True)
+        raise
     return new_id
 
 
@@ -961,71 +1005,36 @@ def _write_chunk(
     extra_metrics: dict | None = None,
     side_output=None,
 ) -> dict:
-    """Write one chunk's data + lineage parquet, then flip the marker.
-    Shared by the append path (run_extraction), the partition-overwrite
-    path (reextract_parts) and the streaming micro-batch path (which passes
+    """Write one chunk's data parquet, then flip the marker. Shared by the
+    append path (run_extraction), the partition-overwrite path
+    (reextract_parts) and the streaming micro-batch path (which passes
     ``extra_metrics={'epoch': ...}`` and an optional ``side_output``
-    callback). ``side_output`` runs on the written-back chunk BEFORE the
-    marker flips (its work is staged alongside the chunk data); if it
-    returns a callable, that publish step runs AFTER the marker commits —
-    the two-phase contract side outputs need so their visible artifacts
-    imply a committed chunk (see streaming/ingest._ocr_queue_router).
-    Returns the chunk's metrics row."""
+    callback). The marker's docs/pages/failures — and, for a streaming
+    batch (``chunk_parts=None``), the parts it touched — are the write's
+    own observed rollup (:func:`observed_rollup`): the parse and write run
+    as one job and nothing is read back. ``side_output`` runs on the
+    written-back chunk BEFORE the marker flips (its work is staged
+    alongside the chunk data); if it returns a callable, that publish
+    step runs AFTER the marker commits — the two-phase contract side
+    outputs need so their visible artifacts imply a committed chunk (see
+    streaming/ingest._ocr_queue_router). Returns the chunk's metrics."""
     data_path = os.path.join(log.data_dir, _chunk_dirname(chunk_id))
-    lineage_path = os.path.join(log.lineage_dir, _chunk_dirname(chunk_id))
-    # partition the committed data by part_id: point lookups and resume
-    # reads prune whole directories (the Iceberg partition-spec analogue;
-    # preview.py's part_id filter becomes a PartitionFilter, not a scan).
-    # mode=append, NOT overwrite: the chunk directory was mkdir-RESERVED
-    # (empty, owned by this writer) and overwrite would delete it first,
-    # momentarily releasing the reservation to a racing writer.
-    extracted.write.partitionBy("part_id").mode("append").parquet(data_path)
+    observed = write_observed(extracted, data_path)
+    side_publish = None
+    if side_output is not None:
+        # read the written files back (no recompute of the UDF). Explicit
+        # schema: a chunk whose parts received zero docs writes only
+        # _SUCCESS, and a schema-inferring read would raise
+        from .pipeline import EXTRACTED_SCHEMA
 
-    # lineage rollup from the just-written data (no recompute of the UDF).
-    # Explicit schema: a chunk whose parts received zero docs writes only
-    # _SUCCESS, and a schema-inferring read would raise UNABLE_TO_INFER_
-    # SCHEMA — unresumably, since the rerun rebuilds the same empty chunk
-    # (empty part_ids must still commit; see run_extraction).
-    from .pipeline import EXTRACTED_SCHEMA
-
-    written = spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path)
-    side_publish = side_output(written) if side_output is not None else None
-    lineage = (
-        written.groupBy("part_id")
-        .agg(
-            F.count("*").alias("docs_done"),
-            F.sum("pages_parsed").alias("pages_parsed"),
-            F.sum("spans_emitted").alias("spans_emitted"),
-            F.sum("parse_failures").alias("parse_failures"),
-            F.sum("duration_ms").alias("duration_ms"),
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("parse_failures") > 0, F.lit("error")).otherwise(
-                F.lit("success")
-            ),
-        )
-        .withColumn("committed_at", F.current_timestamp())
-        .select(LINEAGE_COLS)
-    )
-    lineage.write.mode("overwrite").parquet(lineage_path)
-
-    # chunk metrics + touched-part list are pure rollups of the per-part
-    # lineage rows just written — read those few rows back instead of
-    # re-scanning the full chunk data two more times (one extra full scan
-    # per committed chunk for the agg, another for streaming's distinct)
-    lin_rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).collect()
-    metrics = {
-        "docs": sum(r["docs_done"] for r in lin_rows),
-        "pages": sum(r["pages_parsed"] or 0 for r in lin_rows),
-        "failures": sum(r["parse_failures"] or 0 for r in lin_rows),
-    }
+        side_publish = side_output(spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path))
+    metrics = {k: observed[k] for k in ("docs", "pages", "failures")}
     if extra_metrics:
         metrics.update(extra_metrics)
     if chunk_parts is None:
         # streaming micro-batches don't know their parts a priori — the
         # marker records the parts the batch actually touched
-        chunk_parts = sorted(r["part_id"] for r in lin_rows)
+        chunk_parts = observed["part_ids"]
     log.commit_chunk(
         chunk_id,
         chunk_parts,
@@ -1107,8 +1116,8 @@ def run_extraction(
 ) -> RunReport:
     """Resumable driver: process uncommitted part_ids in chunk-sized jobs.
 
-    Each chunk = one Spark job writing spans + lineage parquet, then an atomic
-    commit marker. ``fail_after_chunks`` injects a crash for the
+    Each chunk = one Spark job parsing and writing its spans parquet (after
+    the exchange's map stage), then an atomic commit marker. ``fail_after_chunks`` injects a crash for the
     kill-and-resume test. A chunk's parse stage runs one Python task per
     part (``pipeline.balance_partitions``), so ``parts_per_chunk`` is the
     chunk's parse parallelism: set it to at least 2x the executor cores.

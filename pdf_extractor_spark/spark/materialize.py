@@ -243,7 +243,6 @@ def run_materialize(
         spark,
         pack_log,
         out_log,
-        MATERIALIZED_SCHEMA,
         "materialize",
         _compute,
         rebuild=rebuild,

@@ -282,7 +282,6 @@ def run_neardup(
         spark,
         src_log,
         out_log,
-        NEARDUP_SCHEMA,
         "neardup",
         _incremental,
         rebuild=rebuild,

@@ -289,7 +289,6 @@ def run_pack(
         spark,
         src_log,
         out_log,
-        PACKED_SCHEMA,
         "pack",
         _cost_compute,
         rebuild=rebuild,

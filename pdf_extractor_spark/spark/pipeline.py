@@ -5,7 +5,7 @@ file at a time, no file-level parallelism) with a declarative plan:
 
     documents --(part-keyed exchange: one task per part)--> mapInArrow(extract)
               --> extracted spans + per-doc metrics --> committed parquet +
-              lineage rows (see lineage.py)
+              an observed per-chunk rollup (see lineage.py)
 
 All per-document logic lives in ``core/`` (pure Python) and runs inside
 vectorized Arrow batches — never per-row Python UDFs (BASELINE.json:input_hint).

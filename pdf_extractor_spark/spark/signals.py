@@ -178,7 +178,6 @@ def run_signals(
         spark,
         src_log,
         out_log,
-        SIGNALS_SCHEMA,
         "signals",
         compute_signals,
         rebuild=rebuild,

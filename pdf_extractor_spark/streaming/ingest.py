@@ -6,18 +6,19 @@ continuously. This module runs the SAME extraction kernel incrementally:
 
     readStream (file source over documents parquet)
       -> foreachBatch: part-keyed exchange + mapInArrow extract
-                       + CommitLog chunk commit (lineage rows included)
+                       + CommitLog chunk commit (marker metrics and touched
+                         parts observed during the data write)
 
 ``foreachBatch`` rather than a streaming sink because the commit contract
-(atomic marker after data+lineage parquet, spark/lineage.py) must hold for
+(atomic marker after the data parquet, spark/lineage.py) must hold for
 streaming exactly as for batch — a killed stream resumes from the Spark
 checkpoint AND the commit log, and replayed micro-batches are idempotent:
 an already-committed epoch is skipped by epoch_id, so end-to-end this is
 exactly-once into the commit log.
 
-Event-time windowed metrics over the lineage stream (micro-batch counts
-per window) come free from the batch lineage table; a watermarked example
-lives in ``windowed_lineage_counts``.
+Event-time windowed metrics over the commits (micro-batch counts per
+window) come from ``CommitLog.read_lineage``, the per-part rollup of the
+committed data; a watermarked example lives in ``windowed_lineage_counts``.
 """
 
 from __future__ import annotations
@@ -341,7 +342,7 @@ def make_batch_processor(
             log,
             extracted,
             chunk_id,
-            chunk_parts=None,  # derived from the written data
+            chunk_parts=None,  # observed on the write
             n_parts=n_parts,
             extra_metrics={"epoch": eid, "stream": stream_ns},
             side_output=side,

@@ -320,13 +320,12 @@ def test_legacy_layout_fails_loudly_and_migrates(tmp_path, spark):
     assert len(want) == 6
 
     # downgrade the table to the legacy layout
-    for base in (log.data_dir, log.lineage_dir):
-        for name in os.listdir(base):
-            if name.startswith("chunk="):
-                os.rename(
-                    os.path.join(base, name),
-                    os.path.join(base, name.replace("chunk=", "chunk-")),
-                )
+    for name in os.listdir(log.data_dir):
+        if name.startswith("chunk="):
+            os.rename(
+                os.path.join(log.data_dir, name),
+                os.path.join(log.data_dir, name.replace("chunk=", "chunk-")),
+            )
 
     with pytest.raises(L.TableContractError, match="migrate_layout"):
         L.CommitLog(root)
@@ -624,7 +623,6 @@ def test_signals_cursor_collision_loses_deterministically(spark, tmp_path):
         run_signals,
     )
     from pdf_extractor_spark.spark.derived import commit_derived_chunk
-    from pdf_extractor_spark.spark.signals import SIGNALS_SCHEMA
     from tests.helpers import write_docs
 
     texts = {i: f"golf hotel w{i}" for i in range(12)}
@@ -646,9 +644,9 @@ def test_signals_cursor_collision_loses_deterministically(spark, tmp_path):
             rival = L.CommitLog(out_root)
             cid = real_reserve(rival)
             commit_derived_chunk(
-                spark, rival,
+                rival,
                 compute_signals(src.read_extracted(spark)),
-                SIGNALS_SCHEMA, "signals", None,
+                "signals", None,
                 {"src_snapshot": latest}, src.n_parts(),
             )
         return real_reserve(self)

@@ -519,8 +519,8 @@ def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):
         ("C", "dC", 2, "en", "keep", None, None, 0),
     ]
     commit_derived_chunk(
-        spark, cur, spark.createDataFrame(cur_rows, CURATED_SCHEMA),
-        CURATED_SCHEMA, "curate", None, {"src_snapshot": cid}, 2,
+        cur, spark.createDataFrame(cur_rows, CURATED_SCHEMA),
+        "curate", None, {"src_snapshot": cid}, 2,
     )
 
     nd = L.CommitLog(str(tmp_path / "nd"))
@@ -530,8 +530,8 @@ def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):
         ("C", None, None, None, None, "B", 700_000_000, 0),
     ]
     commit_derived_chunk(
-        spark, nd, spark.createDataFrame(nd_rows, NEARDUP_SCHEMA),
-        NEARDUP_SCHEMA, "neardup", None, {"src_snapshot": cid}, 2,
+        nd, spark.createDataFrame(nd_rows, NEARDUP_SCHEMA),
+        "neardup", None, {"src_snapshot": cid}, 2,
     )
 
     kept = {

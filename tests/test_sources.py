@@ -316,10 +316,9 @@ def test_migrate_layout_cli_runs_without_input(tmp_path):
 
     root = tmp_path / "t"
     (root / "data" / "chunk-000000").mkdir(parents=True)
-    (root / "lineage" / "chunk-1000000").mkdir(parents=True)  # 7-digit legacy
+    (root / "data" / "chunk-1000000").mkdir(parents=True)  # 7-digit legacy
     assert main(["--output", str(root), "--migrate-layout"]) == 0
-    assert sorted(os.listdir(root / "data")) == ["chunk=000000"]
-    assert sorted(os.listdir(root / "lineage")) == ["chunk=1000000"]
+    assert sorted(os.listdir(root / "data")) == ["chunk=000000", "chunk=1000000"]
     assert main(["--output", str(root), "--migrate-layout"]) == 0  # idempotent
 
 

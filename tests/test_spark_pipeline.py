@@ -419,6 +419,12 @@ def test_reextract_parts_overwrite(spark, tmp_path):
     assert len(log.committed_chunks()) == n_chunks
     assert sorted(os.listdir(os.path.join(root, "data"))) == dirs
 
+    # compaction over the shadowed history: its marker counts the rows the
+    # compacted chunk holds, not the overwritten parts' stale rows too
+    new_id = L.compact_chunks(spark, log)
+    marker = next(c for c in log.committed_chunks() if c["chunk_id"] == new_id)
+    assert marker["metrics"]["docs"] == log.read_extracted(spark).count() == 60
+
 
 def test_lineage_schema(spark, tmp_path):
     root = str(tmp_path / "cl2")

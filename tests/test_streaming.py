@@ -136,8 +136,9 @@ def test_streaming_idempotent_epoch_replay(spark, tmp_path):
 
 
 def test_windowed_lineage_counts_streaming_mode(spark, tmp_path):
-    """The watermarked branch: feed lineage rows as a STREAM and check the
-    windowed rollup totals match the batch rollup on the same rows."""
+    """The watermarked branch: feed lineage rows (a parquet copy of
+    read_lineage) as a STREAM and check the windowed rollup totals match
+    the batch rollup on the same rows."""
     from pdf_extractor_spark.corpus import gen_documents
     from pdf_extractor_spark.streaming.ingest import windowed_lineage_counts
 
@@ -152,14 +153,11 @@ def test_windowed_lineage_counts_streaming_mode(spark, tmp_path):
     )
     q.awaitTermination(300)
 
-    lineage_dirs = sorted(
-        str(p) for p in (tmp_path / "log" / "lineage").iterdir()
-    )
-    batch_lineage = spark.read.parquet(*lineage_dirs)
-    stream_lineage = (
-        spark.readStream.schema(batch_lineage.schema).parquet(
-            str(tmp_path / "log" / "lineage")
-        )
+    lineage_copy = str(tmp_path / "lineage")
+    log.read_lineage(spark).write.parquet(lineage_copy)
+    batch_lineage = spark.read.parquet(lineage_copy)
+    stream_lineage = spark.readStream.schema(batch_lineage.schema).parquet(
+        lineage_copy
     )
     assert stream_lineage.isStreaming
     windowed = windowed_lineage_counts(stream_lineage)  # watermark branch

@@ -138,6 +138,15 @@ def _extract_stage_df(spark, sf_dir: str):
     return extract_documents(wrap_documents(spark, sf_dir), n_parts=64, num_partitions=32)
 
 
+def _observed_extract_stage_df(spark, sf_dir: str):
+    """The extraction stage as a chunk commit writes it: the commit's
+    rollup rides the write as an Observation (CollectMetrics), not a
+    read-back of the written files."""
+    from pdf_extractor_spark.spark.lineage import observed_rollup
+
+    return observed_rollup(_extract_stage_df(spark, sf_dir))[0]
+
+
 def _staged_extract_stage_df(spark, sf_dir: str):
     """The staged-binary extraction stage (scan -> stage kernel ->
     part-keyed exchange -> parse kernel), without the oracle projection."""
@@ -1453,6 +1462,22 @@ AUDITS: list[tuple] = [
             lambda p: absent(p, "n_bytes"),
             lambda p: contains(p, "MapInArrow"),
             lambda p: never_reads(p, "n_chars"),
+        ],
+        False,
+    ),
+    (
+        "observed_extract_stage",
+        _observed_extract_stage_df,
+        [
+            # one-pass chunk commit: the docs/pages/failures/part_ids
+            # rollup is CollectMetrics above the parse kernel, so the
+            # commit adds no exchange, no aggregate and no second scan
+            lambda p: contains(p, "CollectMetrics"),
+            lambda p: exchange_count(p, 1),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: contains(p, "Scan parquet"),
+            lambda p: n_scans_at_most(p, 1),
+            lambda p: absent(p, "HashAggregate"),
         ],
         False,
     ),
