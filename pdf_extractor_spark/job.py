@@ -780,8 +780,8 @@ def main(argv: list[str] | None = None) -> int:
             f"parts={report.parts_processed} parts_skipped={report.parts_skipped} "
             f"docs={report.docs_processed} wall_s={dt:.2f} docs_per_s={docs_s:.1f}"
         )
-        lin = log.read_lineage(spark)
-        lin.groupBy("status").count().show()
+        status = sorted(log.part_status().items())
+        print("PART_STATUS " + " ".join(f"{k}={v}" for k, v in status))
         return 0
     finally:
         if not _borrowed:

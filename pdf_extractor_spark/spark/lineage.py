@@ -49,7 +49,7 @@ each other's chunks. Three mechanisms, all filesystem-atomic:
   3. append validation — under a commit-side flock, an ``exclusive_parts``
      publish re-reads the committed set and raises ``CommitConflict`` if
      another writer already committed any of its part_ids; the loser's
-     staged directory is simply never marked (``gc_orphans`` reclaims it).
+     staged directory is never marked, and the publish deletes it.
 
 On a real cluster all three collapse into the Iceberg catalog's atomic
 snapshot swap + retry; the flock is the sandbox stand-in for that CAS.
@@ -63,6 +63,7 @@ that already landed (see streaming/ingest.py). ``commit_chunk``'s
 from __future__ import annotations
 
 import bisect
+import collections
 import contextlib
 import fcntl
 import json
@@ -101,9 +102,9 @@ class CommitConflict(RuntimeError):
     """Another writer committed first: a marker with this chunk id already
     exists, or (``exclusive_parts``) one of this chunk's part_ids was
     committed by a concurrent append. The caller's staged data directory is
-    left unmarked — invisible to every reader — and is reclaimed by
-    ``gc_orphans``. RETRYABLE: losing a race is normal under concurrent
-    writers, and run_extraction re-queues the parts."""
+    never marked — invisible to every reader — and ``commit_chunk(...,
+    expect_data=True)`` deletes it. RETRYABLE: losing a race is normal
+    under concurrent writers, and run_extraction re-queues the parts."""
 
 
 class TableContractError(ValueError):
@@ -113,6 +114,10 @@ class TableContractError(ValueError):
     deliberately does not subclass it (a guard raising CommitConflict here
     would spin run_extraction's retry loop forever, leaking one orphan
     chunk directory per attempt)."""
+
+
+# an unmarked chunk dir older than this is an orphan, not a live writer's
+ORPHAN_GRACE_S = 3600.0
 
 
 def _chunk_dirname(cid: int) -> str:
@@ -349,7 +354,17 @@ class CommitLog:
             finally:
                 fcntl.flock(lf.fileno(), fcntl.LOCK_UN)
 
-    def gc_orphans(self, grace_s: float = 3600.0) -> list[str]:
+    def _chunk_dirs(self) -> list[tuple[int, str, float]]:
+        """(id, path, mtime) of every ``chunk=K`` dir under data/."""
+        out = []
+        for n in sorted(os.listdir(self.data_dir)):
+            if re.fullmatch(r"chunk=\d+", n):
+                with contextlib.suppress(OSError):  # vanished since the listing
+                    p = os.path.join(self.data_dir, n)
+                    out.append((int(n[6:]), p, os.path.getmtime(p)))
+        return out
+
+    def gc_orphans(self, grace_s: float = ORPHAN_GRACE_S) -> list[str]:
         """Delete data chunk directories that have NO commit marker
         and were last modified more than ``grace_s`` ago — crashed or
         conflict-losing writers' staged output (the
@@ -380,15 +395,8 @@ class CommitLog:
         marked = {c["chunk_id"] for c in self.committed_chunks()}
         doomed: list[tuple[int, str]] = []
         cutoff = time.time() - grace_s
-        for name in sorted(os.listdir(self.data_dir)):
-            if not name.startswith("chunk="):
-                continue
-            try:
-                cid = int(name.split("=")[1])
-            except (IndexError, ValueError):
-                continue
-            path = os.path.join(self.data_dir, name)
-            if cid not in marked and os.path.getmtime(path) < cutoff:
+        for cid, path, mtime in self._chunk_dirs():
+            if cid not in marked and mtime < cutoff:
                 doomed.append((cid, path))
         removed: list[str] = []
         if doomed:
@@ -542,8 +550,9 @@ class CommitLog:
         ``gc_orphans`` grace period can have its reserved dir reclaimed
         (the GC deletes under this same lock, so the check is race-free);
         publishing anyway would create a committed marker over no data,
-        which reads silently as zero rows forever. Returns True iff this
-        call published."""
+        which reads silently as zero rows forever. With ``expect_data``, a
+        publish that loses (:class:`CommitConflict`) also deletes that
+        reserved directory. Returns True iff this call published."""
         marker = {
             "chunk_id": chunk_id,
             "part_ids": sorted(part_ids),
@@ -633,6 +642,11 @@ class CommitLog:
                 # seed the immutable-marker cache: this writer's next
                 # commit re-lists but never re-opens its own markers
                 self._marker_cache[os.path.basename(path)] = marker
+        except CommitConflict:
+            if expect_data and not os.path.exists(path):
+                d = os.path.join(self.data_dir, _chunk_dirname(chunk_id))
+                shutil.rmtree(d, ignore_errors=True)
+            raise
         finally:
             if os.path.exists(tmp):
                 os.unlink(tmp)
@@ -646,6 +660,7 @@ class CommitLog:
         schema,
         whole: list[int],
         partial: list[tuple[int, list[int]]],
+        keep_chunk: bool = False,
     ):
         """ONE parquet scan over ``data/`` resolving a snapshot's chunk
         set declaratively: fully-owned chunks via ``chunk IN (...)``,
@@ -657,8 +672,8 @@ class CommitLog:
         scanned-and-dropped — and plan build stays flat in chunk count
         (the per-chunk unionByName it replaced built plans superlinearly:
         7.5 / 38 / 156 s at 200 / 1000 / 2000 chunks,
-        tools/bench_commitlog.py). The frame keeps the ``chunk`` column;
-        row readers drop it."""
+        tools/bench_commitlog.py). ``keep_chunk`` keeps the ``chunk``
+        column (read_lineage groups by it)."""
         # explicit schema: a committed chunk whose parts got zero docs
         # holds only _SUCCESS, and schema inference over an all-empty
         # table would raise. `chunk` is appended by partition discovery;
@@ -666,15 +681,15 @@ class CommitLog:
         # there is nothing to read either way.
         df = spark.read.schema(schema).parquet(self.data_dir) if whole or partial else None
         if df is None or "chunk" not in df.columns:
-            return spark.createDataFrame([], schema).withColumn(
-                "chunk", F.lit(None).cast("int")
-            )
+            df = spark.createDataFrame([], schema)
+            return df.withColumn("chunk", F.lit(None).cast("int")) if keep_chunk else df
         cond = F.col("chunk").isin(whole) if whole else F.lit(False)
         for cid, owned in partial:
             cond = cond | (
                 (F.col("chunk") == cid) & F.col("part_id").isin(owned)
             )
-        return df.where(cond)
+        df = df.where(cond)
+        return df if keep_chunk else df.drop("chunk")
 
     def _visible_split(
         self,
@@ -717,7 +732,7 @@ class CommitLog:
         from .pipeline import EXTRACTED_SCHEMA
 
         whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial).drop("chunk")
+        return self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial)
 
     def read_table(
         self,
@@ -731,7 +746,7 @@ class CommitLog:
         commit-marker visibility protocol with their own row shape.
         ``read_extracted`` is exactly this with EXTRACTED_SCHEMA."""
         whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(spark, schema, whole, partial).drop("chunk")
+        return self._scan_chunks(spark, schema, whole, partial)
 
     def read_incremental(
         self,
@@ -777,7 +792,7 @@ class CommitLog:
         # its current content), so the scan needs no part_id conditions
         return self._scan_chunks(
             spark, EXTRACTED_SCHEMA if schema is None else schema, ids, []
-        ).drop("chunk")
+        )
 
     def incremental_window(
         self,
@@ -810,6 +825,20 @@ class CommitLog:
             out.append(c)
         return out
 
+    def part_status(self) -> dict[str, int]:
+        """Visible (chunk, part) pairs by status from the markers alone, no
+        data scan: ``error`` if the marker's ``error_parts`` lists the part.
+        Markers older than ``error_parts`` know it only without failures."""
+        visible = self.visible_chunks()
+        shadow = self._shadow_index(visible)
+        out: collections.Counter = collections.Counter()
+        for c in visible:
+            m = c.get("metrics") or {}
+            bad = m.get("error_parts", None if m.get("failures") else [])
+            for p in self._owned_parts(c, visible, shadow):
+                out["unknown" if bad is None else "error" if p in bad else "success"] += 1
+        return dict(out)
+
     def read_lineage(
         self,
         spark: SparkSession,
@@ -820,7 +849,9 @@ class CommitLog:
         ``LINEAGE_COLS``: sums of the per-doc metric columns, ``status``
         ``error`` when any doc failed, and ``committed_at`` from the
         chunk's marker. A column-pruned rollup of the data itself, so it
-        follows the same snapshot visibility as :meth:`read_extracted`."""
+        follows the same snapshot visibility as :meth:`read_extracted`.
+        After a compaction each compacted part is ONE row stamped with the
+        compaction's time; the replaced commits' record stays in markers."""
         from .pipeline import EXTRACTED_SCHEMA
 
         markers = self.committed_chunks(as_of) if markers is None else markers
@@ -830,7 +861,7 @@ class CommitLog:
         )
         sums = ("pages_parsed", "spans_emitted", "parse_failures", "duration_ms")
         return (
-            self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial)
+            self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial, keep_chunk=True)
             .groupBy("chunk", "part_id")
             .agg(F.count("*").alias("docs_done"), *(F.sum(c).alias(c) for c in sums))
             .join(F.broadcast(stamps), "chunk")
@@ -870,7 +901,8 @@ def resume_filter(
 def observed_rollup(df: DataFrame) -> tuple[DataFrame, Observation]:
     """``df`` with a chunk commit's rollup attached as an ``Observation``:
     ``docs``, the sorted ``part_ids`` touched and, for extraction rows,
-    ``pages`` and ``failures`` (0 when no row lands). Spark merges it from
+    ``pages`` and ``failures`` (0 when no row lands) and the sorted
+    ``error_parts`` holding a doc that failed. Spark merges it from
     the consuming action's result stage once per partition, so the rollup
     costs no job and a retried or speculative task never double-counts."""
     obs = Observation()
@@ -883,6 +915,8 @@ def observed_rollup(df: DataFrame) -> tuple[DataFrame, Observation]:
             F.coalesce(F.sum(c), F.lit(0)).alias(k)
             for k, c in (("pages", "pages_parsed"), ("failures", "parse_failures"))
         ]
+        failed = F.when(F.col("parse_failures") > 0, F.col("part_id"))
+        aggs.append(F.array_sort(F.collect_set(failed)).alias("error_parts"))
     return df.observe(obs, *aggs), obs
 
 
@@ -895,6 +929,10 @@ def write_observed(df: DataFrame, path: str) -> dict:
     observed, obs = observed_rollup(df)
     observed.write.partitionBy("part_id").mode("append").parquet(path)
     return obs.get
+
+
+class _Behind(Exception):
+    """A compaction marker would not be the newest snapshot yet."""
 
 
 def compact_chunks(
@@ -928,11 +966,13 @@ def compact_chunks(
     pre-compaction snapshots still resolves (the shadowing marker is >
     as_of) until ``expire_replaced`` reclaims them.
 
-    The marker publishes in chunk-id order: if a writer that reserved a
-    later id committed first, or one that reserved an id between the
-    snapshot and this chunk is still writing, the compaction raises
-    :class:`CommitConflict` and deletes its unmarked rewrite — snapshot ids
-    stay monotonic in commit order, and the caller simply retries.
+    The marker is the newest snapshot by construction (ids stay monotonic
+    in commit order, and the compaction never aborts for it): if a later
+    reservation commits first, the rewrite is renamed onto a fresh id, and
+    the publish waits for chunks reserved below it that are still being
+    written (unmarked, younger than ``ORPHAN_GRACE_S``; older ones are
+    orphans). A real conflict (a concurrent compaction or overwrite)
+    deletes the rewrite and raises :class:`CommitConflict`.
 
     Returns the new chunk id, or None if there is nothing to compact.
     """
@@ -961,36 +1001,35 @@ def compact_chunks(
     )
     metrics = {k: v for k, v in observed.items() if k != "part_ids"}
     metrics["compacted_from"] = len(victims)
-    top = max(snapshot_ids, default=-1)
 
-    def in_id_order(committed: list[dict]) -> None:
-        done = {c["chunk_id"] for c in committed}
-        staged = {int(n.split("=")[1]) for n in os.listdir(log.data_dir)}
-        if max(done) > new_id or any(top < j < new_id for j in staged - done):
-            raise CommitConflict(
-                f"a concurrent writer's chunk sits between {top} and {new_id} "
-                f"in id order; compaction chunk {new_id} not published"
+    def newest(committed: list[dict]) -> None:
+        top = max((c["chunk_id"] for c in committed), default=-1)
+        live = time.time() - ORPHAN_GRACE_S
+        if top > new_id or any(top < k < new_id and t >= live for k, _, t in log._chunk_dirs()):
+            raise _Behind()
+
+    while True:
+        if log.next_chunk_id() > new_id:  # a later reservation committed first
+            new_id = log.reserve_chunk_id()
+            moved = os.path.join(log.data_dir, _chunk_dirname(new_id))
+            os.replace(data_path, moved)  # onto the empty reserved dir
+            data_path = moved
+        try:
+            # no_new_overwrites_since: an overwrite landing after the
+            # snapshot would be silently undone by our pre-overwrite rows
+            log.commit_chunk(
+                new_id,
+                part_ids,
+                metrics,
+                n_parts=log.n_parts(),
+                replaces=victim_ids,
+                no_new_overwrites_since=snapshot_ids,
+                validate=newest,
+                expect_data=True,
             )
-
-    try:
-        # no_new_overwrites_since: an overwrite landing after the snapshot
-        # would be silently undone by our rewritten pre-overwrite rows
-        log.commit_chunk(
-            new_id,
-            part_ids,
-            metrics,
-            n_parts=log.n_parts(),
-            replaces=victim_ids,
-            no_new_overwrites_since=snapshot_ids,
-            validate=in_id_order,
-            expect_data=True,
-        )
-    except CommitConflict:
-        # the unmarked rewrite is ours alone: drop it now rather than
-        # leave it for gc_orphans (its id is burned by the highwater)
-        shutil.rmtree(data_path, ignore_errors=True)
-        raise
-    return new_id
+            return new_id
+        except _Behind:
+            time.sleep(0.05)
 
 
 def _write_chunk(
@@ -1028,7 +1067,7 @@ def _write_chunk(
         from .pipeline import EXTRACTED_SCHEMA
 
         side_publish = side_output(spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path))
-    metrics = {k: observed[k] for k in ("docs", "pages", "failures")}
+    metrics = {k: observed[k] for k in ("docs", "pages", "failures", "error_parts")}
     if extra_metrics:
         metrics.update(extra_metrics)
     if chunk_parts is None:
@@ -1129,7 +1168,7 @@ def run_extraction(
     and the marker publish itself validates part exclusivity under the
     commit lock — if a rival lands a part between our re-read and our
     publish, ``CommitConflict`` makes THIS chunk the loser: its staged data
-    stays unmarked (invisible; ``gc_orphans`` reclaims it) and its parts
+    is never marked (invisible) and is deleted, and its parts
     are retried against the refreshed committed set, converging with zero
     duplicate rows. Two drivers pointed at the same root therefore split
     the partition space dynamically instead of corrupting the table.
@@ -1194,7 +1233,7 @@ def run_extraction(
                 )
             except CommitConflict:
                 # rival writer landed one of these parts mid-chunk: our data
-                # stays unmarked; retry the parts against the refreshed set
+                # was never marked; retry the parts against the refreshed set
                 pending = chunk_parts + pending
                 continue
             report.chunks_committed += 1

@@ -387,7 +387,8 @@ def start_extraction_stream(
 
 def windowed_lineage_counts(lineage: DataFrame) -> DataFrame:
     """Tumbling event-time window over lineage commits (the A8 shape as a
-    streaming-style windowed agg; watermark applies when fed a stream)."""
+    streaming-style windowed agg; watermark applies when fed a stream).
+    Compacted history counts in the compaction's window (read_lineage)."""
     src = lineage
     if lineage.isStreaming:
         src = lineage.withWatermark("committed_at", "10 minutes")

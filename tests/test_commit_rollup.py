@@ -35,6 +35,9 @@ def _read_back(spark, log, chunk_id):
             F.coalesce(F.sum("pages_parsed"), F.lit(0)).alias("pages"),
             F.coalesce(F.sum("parse_failures"), F.lit(0)).alias("failures"),
             F.array_sort(F.collect_set("part_id")).alias("part_ids"),
+            F.array_sort(
+                F.collect_set(F.when(F.col("parse_failures") > 0, F.col("part_id")))
+            ).alias("error_parts"),
         )
         .collect()[0]
     )
@@ -48,7 +51,7 @@ def _assert_rollups_match(spark, log, observed):
         back = _read_back(spark, log, cid)
         seen = observed[L._chunk_dirname(cid)]
         assert seen == back, (cid, seen, back)
-        got = {k: marker["metrics"][k] for k in ("docs", "pages", "failures")}
+        got = {k: marker["metrics"][k] for k in ("docs", "pages", "failures", "error_parts")}
         assert got == {k: back[k] for k in got}, (cid, marker, back)
         if "epoch" in marker["metrics"]:  # streaming: parts are observed
             assert marker["part_ids"] == back["part_ids"], (cid, marker)
@@ -92,7 +95,31 @@ def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
     _assert_rollups_match(spark, slog, observed)
     empty = slog.committed_chunks()[-1]
     assert empty["part_ids"] == []
-    assert empty["metrics"] == {"docs": 0, "pages": 0, "failures": 0, "epoch": 1, "stream": "stream"}
+    assert empty["metrics"] == {
+        "docs": 0, "pages": 0, "failures": 0, "error_parts": [], "epoch": 1, "stream": "stream"
+    }
+
+
+def test_part_status_from_markers_matches_lineage(spark, tmp_path):
+    """The job's end-of-run tally reads only markers, yet agrees with the
+    data's per-(chunk, part) status across a refresh; a marker without
+    ``error_parts`` resolves from its failure count or reads ``unknown``."""
+    docs = corpus_df(spark, 28, seed=3, profile="encrypted")  # 4 fail
+    log = L.CommitLog(str(tmp_path / "t"))
+    L.run_extraction(spark, docs, log, n_parts=4, parts_per_chunk=2)
+    L.reextract_parts(spark, docs, log, [1])
+
+    def from_data():
+        rows = log.read_lineage(spark).groupBy("status").count().collect()
+        return {r["status"]: r["count"] for r in rows}
+
+    assert log.part_status() == from_data()
+    assert log.part_status()["error"] >= 1
+
+    old = L.CommitLog(str(tmp_path / "old"))
+    old.commit_chunk(0, [0, 1], {"docs": 5, "pages": 5, "failures": 0})
+    old.commit_chunk(1, [2], {"docs": 3, "pages": 2, "failures": 1})
+    assert old.part_status() == {"success": 2, "unknown": 1}
 
 
 _RETRY_SCRIPT = """

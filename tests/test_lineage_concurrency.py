@@ -417,6 +417,54 @@ def test_chaos_append_compact_expire_concurrently(spark, tmp_path):
     )
 
 
+def test_compaction_publishes_newest_beside_orphan_and_stream(spark, tmp_path):
+    """A compaction must neither abort nor wait on an orphan: a crashed
+    writer's unmarked dir above the newest commit (older than the orphan
+    grace) and a non-numeric ``chunk=`` entry are ignored, and a stream
+    that keeps reserving and committing ids during the rewrite is
+    overtaken — the compaction lands as the newest snapshot, so ids stay
+    monotonic in commit order."""
+    root = str(tmp_path / "t")
+    docs = corpus_df(spark, 24)
+    log = L.CommitLog(root)
+    L.run_extraction(spark, docs, log, n_parts=4, parts_per_chunk=1)
+    orphan = log.reserve_chunk_id()
+    old = time.time() - 2 * L.ORPHAN_GRACE_S
+    os.utime(os.path.join(log.data_dir, f"chunk={orphan:06d}"), (old, old))
+    os.mkdir(os.path.join(log.data_dir, "chunk=junk"))
+    stop = threading.Event()
+    errors: list[BaseException] = []
+    streamed: list[int] = []
+
+    def stream():
+        mylog = L.CommitLog(root)
+        try:
+            while not stop.is_set():
+                cid = mylog.reserve_chunk_id()
+                time.sleep(0.15)  # the micro-batch's write
+                mylog.commit_chunk(cid, [0], {"docs": 0}, n_parts=4, expect_data=True)
+                streamed.append(cid)
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=stream)
+    t.start()
+    try:
+        while len(streamed) < 2:  # the stream is running before the rewrite
+            time.sleep(0.05)
+        new_id = L.compact_chunks(spark, log)
+        landed = len(streamed)
+    finally:
+        stop.set()
+        t.join()
+    assert not errors, errors
+    assert len(streamed) > landed  # the stream kept committing afterwards
+    ids = [s["snapshot_id"] for s in log.snapshots()]
+    assert ids == sorted(ids) and new_id in ids and new_id > orphan
+    assert log.read_extracted(spark).count() == 24
+    assert os.path.isdir(os.path.join(log.data_dir, f"chunk={orphan:06d}"))
+
+
 def test_shadow_index_matches_bruteforce_owned_parts():
     """Randomized differential test: the suffix-union shadow index +
     bisect must resolve owned parts identically to the O(C^2) definition

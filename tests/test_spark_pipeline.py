@@ -287,6 +287,15 @@ def test_compaction_and_expiry(spark, tmp_path):
     assert n_data_files(f"chunk={new_id:06d}") == 8
     # lineage equivalence (per-part totals survive the rewrite)
     assert log.read_lineage(spark).groupBy().sum("docs_done").collect()[0][0] == lineage_docs
+    # ...but not per-commit history: each compacted part reads back as one
+    # row stamped with the compaction's commit time (the replaced chunks'
+    # times stay in their markers)
+    from pyspark.sql import functions as F
+
+    stamps = log.read_lineage(spark).select(F.col("committed_at").cast("double")).collect()
+    assert len(stamps) == 8
+    assert all(abs(r[0] - log.snapshots()[-1]["committed_at"]) < 1e-5 for r in stamps)
+    assert len({s["committed_at"] for s in log.snapshots()}) == 5
     # time travel BEFORE the compaction still resolves to the originals
     assert {
         r["doc_id"] for r in log.read_extracted(spark, as_of=0).collect()
