@@ -1141,7 +1141,7 @@ def _packed_oracle_sql() -> str:
 
 
 def q_packed_bpe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BPE-COSTED context-packing STAGE (`job.py --pack --cost bpe`)
+    """The BPE-COSTED context-packing STAGE (`job.py pack --cost bpe`)
     end to end: extraction -> commit log -> pack pass whose per-doc cost
     is the TOKENIZER piece count (merge rules derived from the table's
     first window and frozen in its commit marker; map-only Arrow costing
@@ -1416,7 +1416,7 @@ FROM ranked ORDER BY doc_id
 
 def q_kept_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end of the pipeline: extraction ⋉ keep-verdicts (read_kept, the
-    publish-as-view path --export-zip --kept-from ships) — exactly the
+    publish-as-view path export --kept-from ships) — exactly the
     gate-passing dedup winners, each with its extracted text intact. A
     verdict row that leaks a loser, drops a keeper, or a semi-join that
     duplicates rows all flip the hash."""
@@ -1482,7 +1482,7 @@ def _neardup_corpus_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neardup_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Committed extraction of the near-clone corpus, one curate pass, then
     the KEPT-SCOPED near-dup re-decision (run_neardup(kept_from=...), the
-    job.py --neardup --over-kept --rebuild surface). Same idempotence/
+    job.py neardup --over-kept --rebuild surface). Same idempotence/
     keying contract as _curate_fixture; the rebuild leg is guarded by an
     empty-table check because a rebuild always publishes a fresh overwrite
     chunk (re-running it would still be CORRECT — the overwrite shadows —

@@ -24,7 +24,7 @@ PRUNING-DEPENDENT, which is why the fixture pins six line classes):
 - DuckDB ``ignore_errors=true`` keeps every such row with the offending
   field null-ized and has no flag column.
 
-Two gates follow. The INGEST paths (job.py batch, watch mode) apply the
+Two gates follow. The INGEST paths (job.py extract/refresh/watch) apply the
 POLICY gate ``doc_id IS NOT NULL AND _corrupt IS NULL``: structurally
 broken and type-mangled lines quarantine, schema-valid metadata-only docs
 ingest as zero-span documents. The ORACLE view (``jsonl_ingest``) gates

@@ -915,8 +915,7 @@ SOURCE_CAP = 20
 def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quota enforcement: keep at most 20 documents per source,
     ranked by length then id — the curation step that stops one crawl
-    domain from dominating the training mix (the batch twin of the
-    streaming per-key quota in streaming/quota.py).
+    domain from dominating the training mix.
 
     Scale shape: one window partitioned by source (parallel across
     sources), ranking on columns that never require reading `text`. A

@@ -252,7 +252,7 @@ def run_curate(
             f"gate config changed (table: {prior}, run: {g.as_metrics()}); "
             "mixing verdicts decided under different gates would make the "
             "kept set config-order-dependent — run with rebuild=True "
-            "(job.py --curate --rebuild) to re-verdict everything"
+            "(job.py curate --rebuild) to re-verdict everything"
         )
 
     def _incremental(delta: DataFrame) -> DataFrame:
@@ -306,7 +306,7 @@ def read_kept(
     (whose partner B is kept) stays excluded. Residual near-dups among
     survivors that shared a rejected partner are KEPT — collapsing those is
     the kept-scoped rerun (``run_neardup(kept_from=...)``, CLI
-    ``--neardup --over-kept <curate-root> --rebuild``): its flags name only
+    ``neardup --over-kept <curate-root> --rebuild``): its flags name only
     kept partners, so passing THAT table here drops every residual. Both exclusion
     inputs are doc_id-narrow: one semi join (flag validity) plus one anti
     join (the exclusion)."""

@@ -159,7 +159,7 @@ def run_derived_stage(
     (neardup's shingle/candidate tables, pack's sharded prefix-sum frame)
     are fully consumed by the commit write, so they are released HERE,
     scoped to the frames THIS call staged — on the job path (``job.py
-    --neardup/--pack``, a long-lived session chaining incremental runs)
+    neardup``/``pack``, a long-lived session chaining incremental runs)
     nothing else ever releases them, and leaking one pinned
     InMemoryRelation per window grows executor storage without bound.
     """
@@ -254,7 +254,7 @@ def _run_derived_stage(
         raise ValueError(
             "source window contains a partition overwrite; an append-shaped "
             "delta would strand the untouched docs of the overwritten parts "
-            f"— run with rebuild=True (job.py --{stage} --rebuild)"
+            f"— run with rebuild=True (job.py {stage} --rebuild)"
         )
     # a compaction + expire_replaced while this stage lagged deletes the
     # window chunks' DATA while their markers survive — the chunk-pruned
@@ -273,7 +273,7 @@ def _run_derived_stage(
             f"source chunks {reclaimed} in the incremental window have no "
             "data on disk (compacted and expired while this stage lagged); "
             "the delta cannot be reconstructed incrementally — run with "
-            f"rebuild=True (job.py --{stage} --rebuild)"
+            f"rebuild=True (job.py {stage} --rebuild)"
         )
     delta = src_log.read_incremental(
         spark,

@@ -1123,7 +1123,7 @@ def reextract_parts(
         return RunReport(0, 0, 0, 0)
     # keep the joined manifest password column through the projection
     # (mirrors resume_filter's keep_cols) — dropping it broke
-    # --refresh-parts --password-manifest with an unresolved column
+    # refresh --password-manifest with an unresolved column
     keep_cols = ("doc_id", "spans") + (
         () if password_col is None else (password_col,)
     )
@@ -1173,6 +1173,11 @@ def run_extraction(
     duplicate rows. Two drivers pointed at the same root therefore split
     the partition space dynamically instead of corrupting the table.
     """
+    if n_parts < 1 or parts_per_chunk < 1:
+        # parts_per_chunk=0 slices an empty chunk forever
+        raise ValueError(
+            f"n_parts={n_parts} and parts_per_chunk={parts_per_chunk} must be >= 1"
+        )
     existing = log.n_parts()
     if existing is not None and existing != n_parts:
         # resuming with a different n_parts re-hashes every doc to a new

@@ -15,7 +15,7 @@ PACK table, consumed through the shared incremental cursor
 (``run_derived_stage(src_schema=PACKED_SCHEMA)``), so each pack window's
 placements materialize exactly once and a pack REBUILD (an overwrite
 chunk) trips the generic append-window guard — rerun with
-``--materialize --rebuild``.
+``job.py materialize --rebuild``.
 
 **Document text is read AS OF each window's pack_epoch.** A placement's
 token offsets were computed against the extraction snapshot its pack

@@ -241,7 +241,7 @@ def run_neardup(
         raise ValueError(
             "kept-scoped near-dup is a re-decision over a FILTERED corpus "
             "the accumulated band index does not describe — always run it "
-            "with rebuild=True (job.py --neardup --over-kept ... --rebuild)"
+            "with rebuild=True (job.py neardup --over-kept ... --rebuild)"
         )
     prior = table_scope(out_log)
     if prior is not None and prior != scope and not rebuild:

@@ -247,7 +247,7 @@ def run_pack(
         raise ValueError(
             "kept-scoped packing re-decides placement over a corpus another "
             "table's verdicts define — always run it with rebuild=True "
-            "(job.py --pack --kept-from ... --rebuild)"
+            "(job.py pack --kept-from ... --rebuild)"
         )
     prior = _table_scope(out_log)
     if prior is not None and prior != scope and not rebuild:

@@ -57,12 +57,4 @@ def get_spark(
         # wide lineage collects and driver-side zip export).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    spark = builder.getOrCreate()
-    backend = os.environ.get("SPARK_GRAFT_STATE_STORE")
-    if backend:
-        # unbounded-key stateful streaming wants rocksdb; see
-        # streaming/statestore.py for the production rationale
-        from ..streaming.statestore import configure_state_store
-
-        configure_state_store(spark, backend)
-    return spark
+    return builder.getOrCreate()

@@ -15,10 +15,6 @@ streaming exactly as for batch — a killed stream resumes from the Spark
 checkpoint AND the commit log, and replayed micro-batches are idempotent:
 an already-committed epoch is skipped by epoch_id, so end-to-end this is
 exactly-once into the commit log.
-
-Event-time windowed metrics over the commits (micro-batch counts per
-window) come from ``CommitLog.read_lineage``, the per-part rollup of the
-committed data; a watermarked example lives in ``windowed_lineage_counts``.
 """
 
 from __future__ import annotations
@@ -67,7 +63,7 @@ def stream_documents(
 def queue_root_for(table_root: str) -> str:
     """Where a stage-1 table's OCR queue lives — the ONE definition shared
     by the producer (the router below) and the stage-2 consumer
-    (streaming/ocr_stage.py, ``job.py --ocr-stage``), so the two can never
+    (streaming/ocr_stage.py, ``job.py ocr``), so the two can never
     silently point at different directories."""
     return os.path.join(table_root.rstrip("/"), "ocr_queue")
 
@@ -382,21 +378,4 @@ def start_extraction_stream(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def windowed_lineage_counts(lineage: DataFrame) -> DataFrame:
-    """Tumbling event-time window over lineage commits (the A8 shape as a
-    streaming-style windowed agg; watermark applies when fed a stream).
-    Compacted history counts in the compaction's window (read_lineage)."""
-    src = lineage
-    if lineage.isStreaming:
-        src = lineage.withWatermark("committed_at", "10 minutes")
-    return (
-        src.groupBy(F.window("committed_at", "1 minute").alias("w"))
-        .agg(
-            F.sum("docs_done").alias("docs_done"),
-            F.sum("parse_failures").alias("parse_failures"),
-        )
-        .select(F.col("w.start").alias("window_start"), "docs_done", "parse_failures")
     )

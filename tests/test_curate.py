@@ -432,10 +432,9 @@ def test_curate_incremental_matches_python_reference(spark, tmp_path, seed):
 
 
 def test_curate_job_and_cli_guards(spark, tmp_path):
-    """run_curate_job (the --curate body) end-to-end against a committed
-    root, plus the argparse guards for the new flag (all of which fire
-    BEFORE JVM startup — main() owns and stops its own session, so the
-    in-process test must not reach get_spark)."""
+    """run_curate_job (the `curate` body) end-to-end against a committed
+    root, then the same stage through main() — which borrows the test
+    session rather than stopping it."""
     from pdf_extractor_spark.job import main
     from pdf_extractor_spark.spark.curate import run_curate_job
 
@@ -452,19 +451,8 @@ def test_curate_job_and_cli_guards(spark, tmp_path):
     assert got["1"]["verdict"] == "keep"
     assert (got["2"]["reason"], got["3"]["reason"]) == ("duplicate", "too_short")
 
-    with pytest.raises(SystemExit):
-        main(["--curate", "--signals", "--input", src_root, "--output", out_root])
-    with pytest.raises(SystemExit):
-        main(["--curate", "--input", "synthetic:10", "--output", out_root])
-    # --compact now COMPOSES with stage modes (round 5: it compacts the
-    # stage OUTPUT table) — a single-chunk table is a clean no-op rerun
-    assert main(["--curate", "--compact", "--input", src_root,
-                 "--output", out_root]) == 0
-    with pytest.raises(SystemExit):  # extraction-mode flags still refuse
-        main(["--curate", "--export-zip", str(tmp_path / "z.zip"),
-              "--input", src_root, "--output", out_root])
-    with pytest.raises(SystemExit):
-        main(["--rebuild", "--input", src_root, "--output", out_root])
-    with pytest.raises(SystemExit):  # --kept-from needs --export-zip
-        main(["--kept-from", out_root, "--input", src_root,
-              "--output", src_root])
+    # the stage and its compaction through the CLI dispatch (the refusals
+    # live in tests/test_job_cli.py); a rerun and a single-chunk compaction
+    # are clean no-ops
+    assert main(["curate", "--input", src_root, "--output", out_root]) == 0
+    assert main(["maintain", out_root, "--compact"]) == 0

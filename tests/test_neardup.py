@@ -267,7 +267,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
                  for r in read_kept(spark, src, cur, neardup_log=nd).collect()}
     assert kept_full == {"5", "9"}
 
-    # the kept-scoped re-decision (job.py --neardup --over-kept --rebuild)
+    # the kept-scoped re-decision (job.py neardup --over-kept --rebuild)
     rep = run_neardup_job(spark, str(tmp_path / "src"), str(tmp_path / "ndk"),
                           rebuild=True, kept_from=str(tmp_path / "cur"))[0]
     assert rep.docs_processed == 2  # only the kept corpus
@@ -446,10 +446,9 @@ def test_neardup_incremental_matches_python_reference(spark, tmp_path, seed):
 
 
 def test_neardup_job_and_cli_guards(spark, tmp_path):
-    """run_neardup_job (the --neardup body) end-to-end against a committed
-    root, plus the argparse guards (which fire BEFORE JVM startup — main()
-    owns its own session, so the in-process test must not reach
-    get_spark)."""
+    """run_neardup_job (the `neardup` body) end-to-end against a committed
+    root, then the same stage through main() — which borrows the test
+    session rather than stopping it."""
     from pdf_extractor_spark.job import main
     from pdf_extractor_spark.spark.neardup import run_neardup_job
 
@@ -463,24 +462,11 @@ def test_neardup_job_and_cli_guards(spark, tmp_path):
     got = _rows(spark, L.CommitLog(out_root))
     assert got["2"]["dup_of"] == "1" and got["1"]["dup_of"] is None
 
-    with pytest.raises(SystemExit):  # --over-kept is a --neardup flag
-        main(["--signals", "--over-kept", src_root, "--input", src_root,
-              "--output", out_root])
-    with pytest.raises(SystemExit):  # kept scope is rebuild-only
-        main(["--neardup", "--over-kept", src_root, "--input", src_root,
-              "--output", out_root])
-    with pytest.raises(SystemExit):
-        main(["--neardup", "--signals", "--input", src_root,
-              "--output", out_root])
-    with pytest.raises(SystemExit):
-        main(["--neardup", "--input", "synthetic:10", "--output", out_root])
-    # --compact now composes with stage modes (round 5: compacts the
-    # stage OUTPUT table); a single-chunk table is a clean no-op rerun
-    assert main(["--neardup", "--compact", "--input", src_root,
-                 "--output", out_root]) == 0
-    with pytest.raises(SystemExit):  # curate-only gate flag
-        main(["--neardup", "--min-logit-micros", "5", "--input", src_root,
-              "--output", out_root])
+    # the stage and its compaction through the CLI dispatch (the refusals
+    # live in tests/test_job_cli.py); a rerun and a single-chunk compaction
+    # are clean no-ops
+    assert main(["neardup", "--input", src_root, "--output", out_root]) == 0
+    assert main(["maintain", out_root, "--compact"]) == 0
 
 
 def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):

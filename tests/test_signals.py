@@ -334,3 +334,37 @@ def test_signals_table_compaction_preserves_rows_and_cursor(spark, tmp_path):
     # of the compacted history — the failure the kept markers prevent)
     r = run_signals(spark, src, out)
     assert r.chunks_committed == 0 and r.docs_processed == 0
+
+
+def test_maintain_compact_reclaims_derived_table(spark, tmp_path):
+    """`job.py maintain ROOT --compact` on a derived table: the schema comes
+    from the markers' stage, the replaced chunk dirs are reclaimed (as for
+    an extraction table), rows are unchanged, and the next incremental
+    run consumes only the new source window."""
+    import os
+
+    from pdf_extractor_spark.job import main
+
+    texts = {i: f"gamma delta v{i} " * (i % 3 + 1) for i in range(12)}
+    docs = wrap_documents(spark, write_docs(tmp_path, texts))
+    src = L.CommitLog(str(tmp_path / "src"))
+    out = L.CommitLog(str(tmp_path / "out"))
+    for _ in range(2):  # two source waves -> two signals windows
+        with pytest.raises(RuntimeError, match="injected failure"):
+            L.run_extraction(spark, docs, src, n_parts=6, parts_per_chunk=2,
+                             fail_after_chunks=1)
+        assert run_signals(spark, src, out).chunks_committed == 1
+    replaced = [c["chunk_id"] for c in out.visible_chunks()]
+    assert len(replaced) == 2
+    before = sorted(tuple(r) for r in read_signals(spark, out).collect())
+
+    assert main(["maintain", out.root, "--compact"]) == 0
+    on_disk = os.listdir(out.data_dir)
+    assert not any(L._chunk_dirname(c) in on_disk for c in replaced)
+    assert sorted(tuple(r) for r in read_signals(spark, out).collect()) == before
+
+    L.run_extraction(spark, docs, src, n_parts=6, parts_per_chunk=2)
+    r = run_signals(spark, src, out)
+    assert r.chunks_committed == 1 and len(before) + r.docs_processed == 12
+    rows = read_signals(spark, out).collect()
+    assert len({r["doc_id"] for r in rows}) == len(rows) == 12

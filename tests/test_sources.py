@@ -308,102 +308,16 @@ def test_detect_input_format_refuses_mixed_dirs(tmp_path):
 
 
 def test_migrate_layout_cli_runs_without_input(tmp_path):
-    """The documented one-time migration invocation: no --input, runs
-    alone, idempotent."""
+    """The documented one-time migration invocation: `maintain ROOT
+    --migrate-layout` takes no --input, runs alone, idempotent."""
     import os
 
     from pdf_extractor_spark.job import main
 
     root = tmp_path / "t"
+    (root / "commits").mkdir(parents=True)
     (root / "data" / "chunk-000000").mkdir(parents=True)
     (root / "data" / "chunk-1000000").mkdir(parents=True)  # 7-digit legacy
-    assert main(["--output", str(root), "--migrate-layout"]) == 0
+    assert main(["maintain", str(root), "--migrate-layout"]) == 0
     assert sorted(os.listdir(root / "data")) == ["chunk=000000", "chunk=1000000"]
-    assert main(["--output", str(root), "--migrate-layout"]) == 0  # idempotent
-
-
-def test_migrate_layout_refuses_mode_flags(tmp_path):
-    """--migrate-layout runs alone: combining it with a derived-stage mode
-    (or --rebuild) must fail loudly instead of silently skipping the mode
-    — exit 0 with the mode ignored reads as 'the rebuild ran'."""
-    import pytest
-
-    from pdf_extractor_spark.job import main
-
-    root = tmp_path / "t"
-    (root / "data").mkdir(parents=True)
-    for extra in (["--curate", "--rebuild", "--input", "x"],
-                  ["--signals", "--input", "x"],
-                  ["--neardup", "--input", "x"]):
-        with pytest.raises(SystemExit) as e:
-            main(["--output", str(root), "--migrate-layout", *extra])
-        assert e.value.code == 2  # argparse error, not a silent no-op
-
-
-def test_watch_rejects_password_manifest(tmp_path):
-    """--password-manifest is batch-only (the manifest joins onto a static
-    input); with --watch it was a silent no-op — the round-5 ADVICE fix
-    makes the inapplicable combination fail loudly like the others."""
-    import pytest
-
-    from pdf_extractor_spark.job import main
-
-    with pytest.raises(SystemExit) as e:
-        main(["--input", str(tmp_path / "drop"), "--output",
-              str(tmp_path / "out"), "--watch",
-              "--password-manifest", str(tmp_path / "pw.csv")])
-    assert e.value.code == 2
-
-
-def test_password_manifest_header_validated(tmp_path):
-    """spark.read.csv with an explicit schema names columns by POSITION —
-    a manifest with swapped/renamed header columns must p.error, not be
-    silently misread (round-5 ADVICE fix: the old check compared the
-    schema's own names and could never fire). Validated PRE-JVM like the
-    table roots, so the guard fires before any session exists (and this
-    test can never stop the shared fixture session)."""
-    import pytest
-
-    from pdf_extractor_spark.job import main
-
-    bad = tmp_path / "pw.csv"
-    bad.write_text("password,doc_id\nhunter2,d1\n")
-    with pytest.raises(SystemExit) as e:
-        main(["--input", str(tmp_path / "docs"),
-              "--output", str(tmp_path / "out"),
-              "--password-manifest", str(bad)])
-    assert e.value.code == 2
-
-    with pytest.raises(SystemExit) as e2:  # missing manifest: same fate
-        main(["--input", str(tmp_path / "docs"),
-              "--output", str(tmp_path / "out"),
-              "--password-manifest", str(tmp_path / "nope.csv")])
-    assert e2.value.code == 2
-
-
-def test_materialize_and_cost_flag_guards(tmp_path):
-    """--materialize needs --pack-table; --pack-table and --cost are
-    scoped to their stages — inapplicable combinations fail loudly
-    (argparse exit 2), never silently no-op."""
-    import pytest
-
-    from pdf_extractor_spark.job import main
-
-    out = str(tmp_path / "out")
-    cases = [
-        # --materialize without the placement table
-        ["--input", "x", "--output", out, "--materialize"],
-        # --pack-table outside --materialize
-        ["--input", "x", "--output", out, "--pack-table", "p"],
-        # --cost outside --pack
-        ["--input", "x", "--output", out, "--cost", "bpe"],
-        ["--input", "x", "--output", out, "--materialize",
-         "--pack-table", "p", "--cost", "bpe"],
-        # stage exclusivity includes --materialize
-        ["--input", "x", "--output", out, "--materialize",
-         "--pack-table", "p", "--signals"],
-    ]
-    for argv in cases:
-        with pytest.raises(SystemExit) as e:
-            main(argv)
-        assert e.value.code == 2, argv
+    assert main(["maintain", str(root), "--migrate-layout"]) == 0  # idempotent

@@ -1,13 +1,10 @@
 """Streaming ingestion: incremental file drops -> same span output as batch,
-idempotent commits, windowed lineage rollup."""
+idempotent commits, per-part lineage rollup."""
 
 from pdf_extractor_spark.core.extractor import extract_document
 from pdf_extractor_spark.corpus import gen_documents
 from pdf_extractor_spark.spark.lineage import CommitLog
-from pdf_extractor_spark.streaming.ingest import (
-    start_extraction_stream,
-    windowed_lineage_counts,
-)
+from pdf_extractor_spark.streaming.ingest import start_extraction_stream
 
 
 def _write_drop(spark, rows, path):
@@ -91,9 +88,9 @@ def test_streaming_matches_batch_oracle(spark, tmp_path):
     assert len(log.committed_chunks()) == 3
     assert log.read_extracted(spark).count() == 70
 
-    # windowed lineage rollup accounts for every doc
-    win = windowed_lineage_counts(log.read_lineage(spark)).collect()
-    assert sum(r["docs_done"] for r in win) == 70
+    # the per-part lineage rollup accounts for every doc
+    lineage = log.read_lineage(spark).collect()
+    assert sum(r["docs_done"] for r in lineage) == 70
 
 
 def test_streaming_idempotent_epoch_replay(spark, tmp_path):
@@ -133,57 +130,6 @@ def test_streaming_idempotent_epoch_replay(spark, tmp_path):
     )
     other(batch_df, 0)
     assert len(log.committed_chunks()) == 2
-
-
-def test_windowed_lineage_counts_streaming_mode(spark, tmp_path):
-    """The watermarked branch: feed lineage rows (a parquet copy of
-    read_lineage) as a STREAM and check the windowed rollup totals match
-    the batch rollup on the same rows."""
-    from pdf_extractor_spark.corpus import gen_documents
-    from pdf_extractor_spark.streaming.ingest import windowed_lineage_counts
-
-    rows = gen_documents(40, seed=13)
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    _write_drop(spark, rows, str(landing / "drop-0.parquet"))
-    log = CommitLog(str(tmp_path / "log"))
-    q = start_extraction_stream(
-        spark, str(landing), log, checkpoint_dir=str(tmp_path / "ckpt"),
-        n_parts=8, num_partitions=2,
-    )
-    q.awaitTermination(300)
-
-    lineage_copy = str(tmp_path / "lineage")
-    log.read_lineage(spark).write.parquet(lineage_copy)
-    batch_lineage = spark.read.parquet(lineage_copy)
-    stream_lineage = spark.readStream.schema(batch_lineage.schema).parquet(
-        lineage_copy
-    )
-    assert stream_lineage.isStreaming
-    windowed = windowed_lineage_counts(stream_lineage)  # watermark branch
-    sq = (
-        windowed.writeStream.format("memory").queryName("lin_win")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination(300)
-    # append mode emits only windows the watermark has closed; re-read what
-    # arrived and compare against the batch rollup for those same windows
-    got = {
-        r["window_start"]: (r["docs_done"], r["parse_failures"])
-        for r in spark.sql("select * from lin_win").collect()
-    }
-    want_all = {
-        r["window_start"]: (r["docs_done"], r["parse_failures"])
-        for r in windowed_lineage_counts(batch_lineage).collect()
-    }
-    assert set(got) <= set(want_all)
-    for w, v in got.items():
-        assert v == want_all[w]
-    # batch totals must account for every doc regardless
-    assert sum(v[0] for v in want_all.values()) == 40
 
 
 def test_streaming_needs_ocr_routing(spark, tmp_path):
