@@ -5,12 +5,17 @@ each family (dedup, similarity, text stats, multimodal, relational) on
 ``local[--cpus]`` (default: the host's nproc) and prints ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "docs_per_sec": ...}
+     "queries": {...}, "headline_v2": {...}, "sf": ..., "cpus": ...,
+     "wall_sec": ..., "scaling": {...}, "scaling_skewed": {...}}
 
-Use ``--two-level`` to additionally run the extraction pipeline at
-local[8] and local[32] on identical input and report throughput scaling
-efficiency (the sandbox proxy for the north_rule's N -> 4N executor
-criterion).
+It then runs the extraction pipeline at two or three parallelism levels on
+identical input and reports throughput scaling efficiency (the sandbox
+proxy for the north_rule's N -> 4N executor criterion), once per corpus
+profile: ``scaling`` on uniform heavy PDFs and ``scaling_skewed`` on the
+adversarial skewed profile (a 1% head of 500-1000 page PDFs carrying ~90%
+of the parse bytes). The default levels are the light pair, the largest
+(N, 4N) with 4N <= nproc; ``--two-level`` sweeps local[2], local[8] and
+local[32] instead.
 """
 
 from __future__ import annotations
@@ -69,31 +74,6 @@ BENCH_QUERIES_V2 = [
 ]
 
 
-def _make_spark(cpus: int, app: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 4, 32)))
-        .config("spark.sql.adaptive.enabled", "true")
-        # without this, AQE skips every plan under a persist(): the staged
-        # dedup/kmeans subtrees ran all their post-shuffle stages at the
-        # full static partition count (measured 17.2 -> 3.9 s on
-        # dedup_verified_pairs, 15.4 -> 3.1 s on kmeans_train at sf0.1)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        # doc tables carry kilobytes of payload per row but cost milliseconds
-        # of python parse per row: split scans far below the 128 MB default
-        # or a handful of map tasks serialize the whole parse stage
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def run_queries(
     spark, sf_dir: str, passes: int = 2, names: list[str] | None = None,
     warmup: bool = True,
@@ -133,17 +113,25 @@ def run_queries(
     return timings
 
 
-def extraction_throughput(cpus: int, n_docs: int, seed: int = 42) -> float:
-    """docs/s of the heavy-PDF extraction pipeline at `cpus` threads.
+def extraction_throughput(
+    cpus: int, n_docs: int, seed: int = 42, profile: str = "heavy"
+) -> float:
+    """docs/s of the extraction pipeline at `cpus` threads on a `profile`
+    corpus.
 
     Heavy profile (one 6-14 page PDF per doc) so parse compute dominates
-    fixed overhead; warmup run first (JIT + python-worker spawn), then the
+    fixed overhead; skewed for the straggler shape the part-keyed scatter
+    has to spread. Warmup run first (JIT + python-worker spawn), then the
     best of two timed runs — a peak-capability measurement, not cold-start.
     """
     from pdf_extractor_spark.corpus import corpus_parquet
+    from pdf_extractor_spark.spark.session import get_spark
 
-    corpus_dir = corpus_parquet(n_docs, seed=seed, profile="heavy")  # cached on disk
-    spark = _make_spark(cpus, f"bench-extract-{cpus}")
+    corpus_dir = corpus_parquet(n_docs, seed=seed, profile=profile)  # cached on disk
+    spark = get_spark(
+        f"bench-extract-{cpus}", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus * 4, 32), arrow_max_records=256,
+    )
     try:
         from pdf_extractor_spark.spark.pipeline import extract_documents
 
@@ -163,18 +151,21 @@ def extraction_throughput(cpus: int, n_docs: int, seed: int = 42) -> float:
         spark.stop()
 
 
-def scaling_report(n_docs: int, levels=(2, 8, 32), rounds: int = 2) -> dict:
+def scaling_report(
+    n_docs: int, levels=(2, 8, 32), rounds: int = 2, profile: str = "heavy"
+) -> dict:
     """N -> 4N scaling evidence (sandbox proxy for the two-cluster-size rule).
 
     Interleaves sessions across levels over `rounds` passes and keeps the
     per-level best: this sandbox is a shared host with large cross-session
     noise, and the question is peak capability at each parallelism, not the
-    luck of one scheduling window. Headline pair is (2, 8): the pure-
-    multiprocessing ceiling of this box already drops to ~0.7 efficiency at
+    luck of one scheduling window. The default run measures the light pair
+    (``light_pair``) so no level oversubscribes the host: on a 32-CPU box
+    the pure-multiprocessing ceiling already drops to ~0.7 efficiency at
     8 -> 32 cores (memory bandwidth / all-core clocks — measured with a
-    Spark-free process pool, see BENCH/BASELINE.md), so wider pairs measure
-    the silicon, not the pipeline. A real cluster adds bandwidth with every
-    executor; a single box does not.
+    Spark-free process pool, see BENCH/BASELINE.md), so a pair that fills
+    the box measures the silicon, not the pipeline. A real cluster adds
+    bandwidth with every executor; a single box does not.
     """
     best: dict[int, float] = {lvl: 0.0 for lvl in levels}
     pairs = [(a, b) for a, b in zip(levels, levels[1:]) if b == 4 * a]
@@ -190,7 +181,8 @@ def scaling_report(n_docs: int, levels=(2, 8, 32), rounds: int = 2) -> dict:
     extra_budget = 2
     while True:
         for lvl in levels:  # identical input at every level — non-negotiable
-            best[lvl] = max(best[lvl], extraction_throughput(lvl, n_docs))
+            best[lvl] = max(
+                best[lvl], extraction_throughput(lvl, n_docs, profile=profile))
         done += 1
         if done < rounds:
             continue
@@ -224,17 +216,23 @@ def main() -> int:
     ap.add_argument("--two-level", action="store_true",
                     help="full scaling sweep: local[2]/[8]/[32], two rounds")
     ap.add_argument("--no-scaling", action="store_true",
-                    help="skip the default light (N, 4N) scaling pair")
+                    help="skip the default light (N, 4N) scaling pair (both profiles)")
     ap.add_argument("--scale-docs", type=int, default=16000,
                     help="heavy-profile corpus size for the scaling measurement "
                          "(~110 core-seconds of parse: large enough that fixed "
-                         "overhead does not pollute the efficiency ratio)")
+                         "overhead does not pollute the efficiency ratio); "
+                         "the skewed profile runs min(this, 4000) docs")
     args = ap.parse_args()
 
     sf = args.sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     t_total0 = time.monotonic()
 
-    spark = _make_spark(args.cpus, "pdf-extractor-spark-bench")
+    from pdf_extractor_spark.spark.session import get_spark
+
+    spark = get_spark(
+        "pdf-extractor-spark-bench", master=f"local[{args.cpus}]",
+        shuffle_partitions=max(args.cpus * 4, 32), arrow_max_records=256,
+    )
     try:
         timings = run_queries(spark, args.sf_dir)
         timings_v2 = run_queries(spark, args.sf_dir, names=BENCH_QUERIES_V2,
@@ -256,19 +254,21 @@ def main() -> int:
         "wall_sec": round(time.monotonic() - t_total0, 3),
     }
 
-    if args.two_level:
-        result["scaling"] = scaling_report(args.scale_docs, levels=(2, 8, 32), rounds=2)
-    elif not args.no_scaling and (pair := light_pair(nproc)):
-        # light headline pair every run: the largest (N, 4N) that fits the
-        # host (on a 32-CPU host 8 -> 32 also measures the box's memory
-        # bandwidth, see scaling_report); capped corpus keeps each
-        # small-level leg under ~1.5 min. TWO interleaved rounds, best
-        # per level: a single pass measured 0.77 on a loaded co-tenant
-        # window where the interleaved-best of two measured 0.92 minutes
-        # later — one round has no noise protection and the efficiency
-        # ratio is the north-rule gate.
-        result["scaling"] = scaling_report(min(args.scale_docs, 8000), levels=pair, rounds=2)
-        result["scaling"]["pair"] = list(pair)
+    levels = (2, 8, 32) if args.two_level else (
+        None if args.no_scaling else light_pair(nproc))
+    if levels:
+        # the light pair caps its heavy corpus so each small-level leg stays
+        # under ~1.5 min. TWO interleaved rounds, best per level: a single
+        # pass measured 0.77 on a loaded co-tenant window where the
+        # interleaved-best of two measured 0.92 minutes later — one round
+        # has no noise protection and the efficiency ratio is the
+        # north-rule gate.
+        heavy_docs = args.scale_docs if args.two_level else min(args.scale_docs, 8000)
+        result["scaling"] = scaling_report(heavy_docs, levels=levels)
+        if not args.two_level:
+            result["scaling"]["pair"] = list(levels)
+        result["scaling_skewed"] = scaling_report(
+            min(args.scale_docs, 4000), levels=levels, profile="skewed")
 
     print(json.dumps(result))
     return 0

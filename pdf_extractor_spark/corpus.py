@@ -458,7 +458,7 @@ def corpus_parquet(
     )
     if profile == "skewed":
         # one file per input slice IN DOC ORDER: the unbalanced scan then has
-        # plenty of natural splits, and the A/B in tools/bench_skew.py
+        # plenty of natural splits, and the Skew A/B in BENCH/BASELINE.md
         # measures the skew (the giant head clustered into a few files), not
         # a lack of scan parallelism
         n_files = 32

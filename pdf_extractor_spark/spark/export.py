@@ -129,6 +129,31 @@ def _neardup_filter(
     return df.join(flagged.select("doc_id"), "doc_id", "left_anti")
 
 
+def _markdown_frame(
+    spark: SparkSession,
+    root: str,
+    as_of: int | None,
+    ocr_text_dir: str | None,
+    kept_from: str | None,
+    drop_neardups_from: str | None,
+) -> DataFrame:
+    """The committed documents an export renders: read at ``as_of``, kept
+    and near-dup filtered, then OCR text merged (filters first, so no text
+    is recovered for a dropped doc)."""
+    df: DataFrame = CommitLog(root).read_extracted(spark, as_of=as_of)
+    kept = _kept_ids(spark, kept_from) if kept_from is not None else None
+    if kept is not None:
+        df = _kept_filter(df, kept)
+    if drop_neardups_from is not None:
+        df = _neardup_filter(spark, df, drop_neardups_from, kept=kept)
+    if ocr_text_dir is not None:
+        from ..streaming.ocr_stage import OCR_TEXT_SCHEMA, merge_ocr_text
+
+        ocr = spark.read.schema(OCR_TEXT_SCHEMA).parquet(ocr_text_dir)
+        df = merge_ocr_text(df, ocr)
+    return df
+
+
 def export_markdown_zip(
     spark: SparkSession,
     root: str,
@@ -149,18 +174,9 @@ def export_markdown_zip(
     under the media links. Returns the number of documents written.
     Streams partition-by-partition; never collects the table.
     """
-    log = CommitLog(root)
-    df: DataFrame = log.read_extracted(spark, as_of=as_of)
-    kept = _kept_ids(spark, kept_from) if kept_from is not None else None
-    if kept is not None:
-        df = _kept_filter(df, kept)
-    if drop_neardups_from is not None:
-        df = _neardup_filter(spark, df, drop_neardups_from, kept=kept)
-    if ocr_text_dir is not None:
-        from ..streaming.ocr_stage import OCR_TEXT_SCHEMA, merge_ocr_text
-
-        ocr = spark.read.schema(OCR_TEXT_SCHEMA).parquet(ocr_text_dir)
-        df = merge_ocr_text(df, ocr)
+    df = _markdown_frame(
+        spark, root, as_of, ocr_text_dir, kept_from, drop_neardups_from
+    )
     md = df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         markdown_expr("spans").alias("markdown"),
@@ -250,18 +266,9 @@ def export_markdown_zip_sharded(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    log = CommitLog(root)
-    df: DataFrame = log.read_extracted(spark, as_of=as_of)
-    kept = _kept_ids(spark, kept_from) if kept_from is not None else None
-    if kept is not None:
-        df = _kept_filter(df, kept)
-    if drop_neardups_from is not None:
-        df = _neardup_filter(spark, df, drop_neardups_from, kept=kept)
-    if ocr_text_dir is not None:
-        from ..streaming.ocr_stage import OCR_TEXT_SCHEMA, merge_ocr_text
-
-        ocr = spark.read.schema(OCR_TEXT_SCHEMA).parquet(ocr_text_dir)
-        df = merge_ocr_text(df, ocr)
+    df = _markdown_frame(
+        spark, root, as_of, ocr_text_dir, kept_from, drop_neardups_from
+    )
     md = (
         df.select(
             F.col("doc_id").cast("string").alias("doc_id"),

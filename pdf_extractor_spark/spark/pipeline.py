@@ -132,10 +132,10 @@ def balance_partitions(
     of one giant's cost, while any row-weighted scheme (the round-3 range
     repartition over (size class, salt, doc_id): range boundaries come from
     row-proportional sampling, so a 1%-of-rows giant class funnelled into
-    ONE partition; tools/bench_skew.py measured it worse than no exchange)
-    concentrates clustered giants. Salting-by-key remains the right tool
-    for skewed JOIN/AGG keys (see ops/dedup.py, ops/training.py) — here
-    there is no key, and hash(doc_id) IS the salt.
+    ONE partition; BENCH/BASELINE.md's "Skew A/B" section measured it worse
+    than no exchange) concentrates clustered giants. Salting-by-key remains
+    the right tool for skewed JOIN/AGG keys (see ops/dedup.py,
+    ops/training.py) — here there is no key, and hash(doc_id) IS the salt.
     """
     parts = list(parts)
     k = max(1, len(parts))
@@ -311,7 +311,6 @@ def extract_documents(
     df: DataFrame,
     n_parts: int = 256,
     num_partitions: int | None = None,
-    balance: bool = True,
     passwords: tuple[bytes, ...] = (),
     password_col: str | None = None,
     parts: list[int] | None = None,
@@ -349,8 +348,7 @@ def extract_documents(
         parts = range(n_parts)
     else:
         df = df.filter(F.col("part_id").isin(list(parts)))
-    if balance:
-        df = balance_partitions(df, parts, num_partitions)
+    df = balance_partitions(df, parts, num_partitions)
     return df.mapInArrow(
         _make_extract_batches_arrow(passwords), schema=EXTRACTED_SCHEMA
     )

@@ -36,7 +36,7 @@ per pass. Measured numbers live in BENCH/BASELINE.md §"Binary staging".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -158,8 +158,3 @@ def stage_documents(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "spans").mapInArrow(
         _stage_batches_arrow, schema=STAGED_SCHEMA
     )
-
-
-def read_staged(spark: SparkSession, path: str) -> DataFrame:
-    """Read a materialized staging table (parquet / Iceberg path)."""
-    return spark.read.schema(STAGED_SCHEMA).parquet(path)

@@ -1,11 +1,13 @@
 """The job CLI (pdf_extractor_spark/job.py): every refusal exits 2 before
-the JVM starts, and every documented invocation parses."""
+the JVM starts, every documented invocation parses, and every script the
+docs name exists."""
 
 from __future__ import annotations
 
 import os
 import re
 import shlex
+from pathlib import Path
 
 import pytest
 
@@ -109,3 +111,24 @@ def test_documented_invocations_parse():
         argv = shlex.split(re.sub(r"<[^>]*>", "X", cmd))
         stages.add(parser.parse_args(argv).stage)
     assert stages >= {"extract", "refresh", "watch", "ocr", "signals", "export", "maintain"}
+
+
+def test_documented_scripts_exist():
+    """Every bench.py / tools/<name>.py / perfbench/<name>.py path the docs
+    or a non-test module name exists — a retired script leaves no pointer
+    behind. History files (BENCH/, ROADMAP.md, CHANGES.md) are exempt."""
+    root = Path(ROOT)
+    sources = [root / "README.md", root / "CLAUDE.md",
+               root / ".claude/skills/verify/SKILL.md"]
+    sources += root.glob("*.py")
+    for pkg in ("pdf_extractor_spark", "tools", "perfbench"):
+        sources += (root / pkg).rglob("*.py")
+    script = re.compile(r"(?<![\w/.-])((?:tools|perfbench)/\w+\.py|bench\.py)\b")
+    named = {
+        (str(src.relative_to(root)), m)
+        for src in sources
+        for m in script.findall(src.read_text())
+    }
+    assert len(named) >= 10
+    missing = sorted((src, m) for src, m in named if not (root / m).exists())
+    assert not missing, missing

@@ -101,16 +101,9 @@ def main() -> None:
 
     spark = None
     if not args.no_spark:
-        from pyspark.sql import SparkSession
+        from pdf_extractor_spark.spark.session import get_spark
 
-        spark = (
-            SparkSession.builder.master("local[4]")
-            .appName("bench-commitlog")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .getOrCreate()
-        )
+        spark = get_spark("bench-commitlog", master="local[4]", shuffle_partitions=8)
         spark.sparkContext.setLogLevel("ERROR")
 
     for c in [int(x) for x in args.chunks.split(",")]:

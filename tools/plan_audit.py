@@ -1452,7 +1452,7 @@ AUDITS: list[tuple] = [
             # second per-doc hash exchange and never the r3
             # rangepartitioning — row-proportional range sampling
             # funnels a byte-heavy 1% giant tail into one partition; see
-            # balance_partitions + tools/bench_skew.py. Anything more
+            # balance_partitions + BENCH/BASELINE.md "Skew A/B". Anything more
             # means the pipeline shuffles data it shouldn't. No sizing
             # columns ride the exchange: nothing reads them after it.
             lambda p: exchange_count(p, 1),
