@@ -16,6 +16,12 @@ adversarial skewed profile (a 1% head of 500-1000 page PDFs carrying ~90%
 of the parse bytes). The default levels are the light pair, the largest
 (N, 4N) with 4N <= nproc; ``--two-level`` sweeps local[2], local[8] and
 local[32] instead.
+
+``wall_sec`` at the top level is the headline part only: session start,
+both headline query sets and session stop. It has meant that since round
+1, so cross-round diffs stay valid. Each scaling report carries its own
+``wall_sec`` for its whole interleaved sweep, so the process wall is the
+sum of the three.
 """
 
 from __future__ import annotations
@@ -167,6 +173,7 @@ def scaling_report(
     the box measures the silicon, not the pipeline. A real cluster adds
     bandwidth with every executor; a single box does not.
     """
+    t0 = time.monotonic()
     best: dict[int, float] = {lvl: 0.0 for lvl in levels}
     pairs = [(a, b) for a, b in zip(levels, levels[1:]) if b == 4 * a]
 
@@ -195,6 +202,7 @@ def scaling_report(
             break
         extra_budget -= 1
     out = {"docs": n_docs, "rounds_run": done,
+           "wall_sec": round(time.monotonic() - t0, 3),
            "levels": {f"local[{k}]": round(v, 1) for k, v in best.items()}}
     out.update(_effs())
     return out

@@ -7,11 +7,11 @@
 Stages: ``extract`` (resumable; rerunning with the same --output continues
 from the last committed chunk), ``refresh`` (re-extract named parts in
 place), ``watch`` (incremental drain of a drop directory — the reference's
-watch-uploads loop as a CLI), ``ocr`` (the stage-2 OCR consumer), the
-derived stages ``signals``/``curate``/``neardup``/``pack``/``materialize``,
-``export ROOT PATH`` and ``maintain ROOT``. Each subcommand declares only
-the flags it reads, so a flag that would be a no-op in a stage is an
-argparse error (exit 2) before the JVM starts.
+watch-uploads loop as a CLI), the derived stages ``ocr``/``signals``/
+``curate``/``neardup``/``pack``/``materialize``, ``export ROOT PATH`` and
+``maintain ROOT``. Each subcommand declares only the flags it reads, so a
+flag that would be a no-op in a stage is an argparse error (exit 2) before
+the JVM starts.
 """
 
 from __future__ import annotations
@@ -80,10 +80,6 @@ def build_parser() -> argparse.ArgumentParser:
                             "first, then --passwords)")
     n_parts = parent()
     n_parts.add_argument("--n-parts", type=_positive_int, default=256)
-    checkpoint = parent()
-    checkpoint.add_argument("--checkpoint", default=None,
-                            help="stream checkpoint dir (default: "
-                                 "<output>/_checkpoint)")
     derived = parent()
     derived.add_argument("--rebuild", action="store_true",
                          help="full recompute committed as one overwrite chunk "
@@ -116,13 +112,13 @@ def build_parser() -> argparse.ArgumentParser:
     sp = stage("watch", "drain a drop directory of documents files "
                "incrementally (availableNow): each micro-batch commits one "
                "chunk, re-running resumes from the stream checkpoint",
-               _watch, io, ingest, n_parts, checkpoint)
-    sp.add_argument("--route-needs-ocr", action="store_true",
-                    help="route scanned docs (text-free pages with images) "
-                         "into a crash-safe ocr_queue/ side output")
-    stage("ocr", "stage-2 OCR consumer: --input is a stage-1 table root whose "
-          "ocr_queue/ feeds an exactly-once ocr_text table (the OCR engine is "
-          "a deterministic stub)", _ocr, io, checkpoint, tables=("input",))
+               _watch, io, ingest, n_parts)
+    sp.add_argument("--checkpoint", default=None,
+                    help="stream checkpoint dir (default: <output>/_checkpoint)")
+    stage("ocr", "OCR pass over a committed extraction table: the pdf:// "
+          "refs of scanned pages (text-free pages with images) through the "
+          "OCR engine (a deterministic stub)", _run_derived, io, derived,
+          tables=("input",))
     stage("signals", "derived quality-signals pass over a committed "
           "extraction table (incremental, exactly-once)", _run_derived, io,
           derived, tables=("input",))
@@ -162,15 +158,16 @@ def build_parser() -> argparse.ArgumentParser:
                     help="the pack placement table built over --input")
     sp = stage("export", "export every committed document as <doc_id>.md in "
                "deterministic zip archive(s)", _export, kept,
-               tables=("root", "kept_from", "drop_neardups_from"))
+               tables=("root", "kept_from", "drop_neardups_from",
+                       "with_ocr_text"))
     sp.add_argument("root", metavar="ROOT", help="committed extraction table")
     sp.add_argument("path", metavar="PATH", help="zip file, or with --shards "
                     "a directory of shard-NNNNN.zip")
     sp.add_argument("--shards", type=_positive_int, default=None, metavar="N",
                     help="write N archives from the executors; a doc's shard "
                          "is pmod(xxhash64(doc_id), N)")
-    sp.add_argument("--with-ocr-text", default=None, metavar="DIR",
-                    help="fold this ocr_text table's recovered text into the "
+    sp.add_argument("--with-ocr-text", default=None, metavar="OCR_ROOT",
+                    help="fold this OCR table's recovered text into the "
                          "spans before rendering")
     sp = stage("maintain", "one maintenance action on a table root",
                _maintain, tables=("root",))
@@ -313,8 +310,7 @@ def _watch(args) -> int:
         start_extraction_stream(
             spark, args.input, log, checkpoint_dir=ckpt, n_parts=args.n_parts,
             num_partitions=args.num_partitions or 32,
-            route_needs_ocr=args.route_needs_ocr, fmt=_input_format(args),
-            passwords=args.passwords,
+            fmt=_input_format(args), passwords=args.passwords,
         ).awaitTermination()
         # attribute only THIS stream's chunks (metrics.stream carries the
         # checkpoint realpath): a concurrent writer appending to the same
@@ -334,40 +330,6 @@ def _watch(args) -> int:
             parts_skipped=0,
         )
         _report_extraction("STREAM_DONE", report, time.monotonic() - t0, log)
-    return 0
-
-
-def _ocr(args) -> int:
-    from pdf_extractor_spark.spark.lineage import CommitLog
-    from pdf_extractor_spark.streaming.ingest import maintain_ocr_queue, queue_root_for
-    from pdf_extractor_spark.streaming.ocr_stage import OCR_TEXT_DIRNAME, start_ocr_stage
-
-    queue_root = queue_root_for(args.input)
-    out_dir = os.path.join(args.output, OCR_TEXT_DIRNAME)
-    ckpt = args.checkpoint or os.path.join(args.output, "_checkpoint")
-    # heal the commit->publish crash window BEFORE consuming: a stage-1
-    # writer killed between marker and publish may never restart, and its
-    # committed chunk's queue entry must not stay hidden as .staging-*
-    # while this run reports the queue drained. sweep_staging=False: a live
-    # stage-1 writer may be mid-window right now, and only the stream's own
-    # start (serialized by the checkpoint lock) may delete staging dirs;
-    # legacy VISIBLE unmarked dirs are still swept — they can never be a
-    # live writer's, and leaving them would feed duplicate refs
-    healed = maintain_ocr_queue(CommitLog(args.input), sweep_staging=False)
-    if healed["promoted"] or healed["removed"]:
-        ids = ",".join(str(c) for c in healed["promoted"])
-        print(f"OCR_QUEUE_HEALED promoted={ids or '-'} removed={len(healed['removed'])}")
-    with _spark(args.master) as spark:
-        t0 = time.monotonic()
-        if os.path.isdir(queue_root) and any(
-            name.startswith("chunk-") for name in os.listdir(queue_root)
-        ):
-            start_ocr_stage(spark, queue_root, out_dir, ckpt).awaitTermination()
-        # the TABLE total, not this run's delta: a wrong --input or empty
-        # queue is then visibly different from a drained pipeline
-        n = spark.read.parquet(out_dir).count() if os.path.isdir(out_dir) else 0
-        dt = time.monotonic() - t0
-    print(f"OCR_STAGE_DONE table={out_dir} total_refs={n} wall_s={dt:.2f}")
     return 0
 
 
@@ -394,9 +356,13 @@ def _gates(args):
 def _derived_stages() -> dict:
     """``{stage: (run(spark, args) -> (RunReport, wall_s), row schema)}``,
     keyed by the ``stage`` every derived commit marker records."""
-    from pdf_extractor_spark.spark import curate, materialize, neardup, pack, signals
+    from pdf_extractor_spark.spark import curate, materialize, neardup, ocr, pack, signals
 
     return {
+        "ocr": (
+            lambda s, a: ocr.run_ocr_job(s, a.input, a.output, rebuild=a.rebuild),
+            ocr.OCR_SCHEMA,
+        ),
         "signals": (
             lambda s, a: signals.run_signals_job(s, a.input, a.output, rebuild=a.rebuild),
             signals.SIGNALS_SCHEMA,
@@ -456,7 +422,7 @@ def _export(args) -> int:
         export_markdown_zip_sharded,
     )
 
-    scope = dict(ocr_text_dir=args.with_ocr_text, kept_from=args.kept_from,
+    scope = dict(ocr_from=args.with_ocr_text, kept_from=args.kept_from,
                  drop_neardups_from=args.drop_neardups_from)
     with _spark(args.master) as spark:
         if args.shards is None:

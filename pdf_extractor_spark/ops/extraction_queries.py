@@ -686,22 +686,22 @@ def _snapshot_read_oracle_sql() -> str:
 
 def q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full P6 force-OCR loop, value-hash gated end-to-end: extract the
-    PDF corpus -> select the ROUTED refs (the exact predicate of
-    streaming/ingest._ocr_queue_router: docs with text-free-but-imaged
-    pages, pdf:// refs) -> stage-2 stub OCR (same deterministic formula as
-    streaming/ocr_stage.stub_ocr, here as a JVM expression) -> stage-3
-    ``merge_ocr_text`` back into the span sequence. Output: every media
-    span with its post-merge text — routed refs must carry recovered text
-    at the RIGHT span positions, all other media spans must stay empty.
+    PDF corpus -> select the ROUTED refs (the OCR stage's own predicate and
+    projection, spark/ocr.py: docs with text-free-but-imaged pages, pdf://
+    refs) -> the stage's stub engine (``_ocr_batches``) -> ``merge_ocr_text``
+    back into the span sequence. Output: every media span with its
+    post-merge text — routed refs must carry recovered text at the RIGHT
+    span positions, all other media spans must stay empty.
     The oracle derives entirely from generator structure (expected kinds /
     media_refs / empty_pages), so a merge that drops, duplicates, or
     misplaces a span flips the hash."""
     from ..corpus import corpus_df
-    from ..streaming.ingest import needs_ocr_pred, ocr_candidate_refs
-    from ..streaming.ocr_stage import (
+    from ..spark.ocr import (
         OCR_TEXT_SCHEMA,
         _ocr_batches,
         merge_ocr_text,
+        needs_ocr_pred,
+        ocr_candidate_refs,
     )
     from .dedup import _persisted
 
@@ -709,10 +709,10 @@ def q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged (CLAUDE.md): ext feeds the routed-refs branch AND the merge —
     # un-staged, the PDF parse kernel ran twice per oracle check
     ext = _persisted(extract_documents(docs, n_parts=8, num_partitions=8))
-    # the routing predicate and ref projection are the router's OWN
-    # definitions (streaming/ingest.py), and the recovered text comes from
-    # the REAL stage-2 engine function — a format drift in stub_ocr (or a
-    # routing change) flips this oracle's hash, which is the point
+    # the routing predicate and ref projection are the OCR stage's OWN
+    # definitions (spark/ocr.py), and the recovered text comes from its
+    # REAL engine function — a format drift in stub_ocr (or a routing
+    # change) flips this oracle's hash, which is the point
     refs = ext.where(needs_ocr_pred()).select(
         "doc_id", F.explode(ocr_candidate_refs()).alias("media_ref")
     )

@@ -133,7 +133,7 @@ def _markdown_frame(
     spark: SparkSession,
     root: str,
     as_of: int | None,
-    ocr_text_dir: str | None,
+    ocr_from: str | None,
     kept_from: str | None,
     drop_neardups_from: str | None,
 ) -> DataFrame:
@@ -146,11 +146,10 @@ def _markdown_frame(
         df = _kept_filter(df, kept)
     if drop_neardups_from is not None:
         df = _neardup_filter(spark, df, drop_neardups_from, kept=kept)
-    if ocr_text_dir is not None:
-        from ..streaming.ocr_stage import OCR_TEXT_SCHEMA, merge_ocr_text
+    if ocr_from is not None:
+        from .ocr import merge_ocr_text, read_ocr_text
 
-        ocr = spark.read.schema(OCR_TEXT_SCHEMA).parquet(ocr_text_dir)
-        df = merge_ocr_text(df, ocr)
+        df = merge_ocr_text(df, read_ocr_text(spark, CommitLog(ocr_from)))
     return df
 
 
@@ -159,7 +158,7 @@ def export_markdown_zip(
     root: str,
     zip_path: str,
     as_of: int | None = None,
-    ocr_text_dir: str | None = None,
+    ocr_from: str | None = None,
     kept_from: str | None = None,
     drop_neardups_from: str | None = None,
 ) -> int:
@@ -167,15 +166,15 @@ def export_markdown_zip(
 
     Entries are sorted by doc_id and carry a fixed timestamp, so the
     archive bytes are a pure function of the committed snapshot (``as_of``
-    time-travels like every other read) — plus, when ``ocr_text_dir``
-    names a stage-2 ``ocr_text`` table, of that table: recovered OCR text
+    time-travels like every other read) — plus, when ``ocr_from`` names
+    an OCR table root (spark/ocr.py), of that table: recovered OCR text
     is folded into the spans (``merge_ocr_text``) before rendering, so
     scanned documents export with their recovered content as blockquotes
     under the media links. Returns the number of documents written.
     Streams partition-by-partition; never collects the table.
     """
     df = _markdown_frame(
-        spark, root, as_of, ocr_text_dir, kept_from, drop_neardups_from
+        spark, root, as_of, ocr_from, kept_from, drop_neardups_from
     )
     md = df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -229,7 +228,7 @@ def export_markdown_zip_sharded(
     out_dir: str,
     n_shards: int,
     as_of: int | None = None,
-    ocr_text_dir: str | None = None,
+    ocr_from: str | None = None,
     kept_from: str | None = None,
     drop_neardups_from: str | None = None,
 ) -> int:
@@ -267,7 +266,7 @@ def export_markdown_zip_sharded(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     df = _markdown_frame(
-        spark, root, as_of, ocr_text_dir, kept_from, drop_neardups_from
+        spark, root, as_of, ocr_from, kept_from, drop_neardups_from
     )
     md = (
         df.select(

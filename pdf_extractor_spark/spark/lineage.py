@@ -56,8 +56,7 @@ snapshot swap + retry; the flock is the sandbox stand-in for that CAS.
 The streaming writer reserves chunk ids like any other writer and gets
 replay idempotency from the (stream_ns, epoch) record each marker carries:
 a restarted query consults the committed epochs and skips micro-batches
-that already landed (see streaming/ingest.py). ``commit_chunk``'s
-``if_absent`` flag survives for tests exercising the no-clobber publish.
+that already landed (see streaming/ingest.py).
 """
 
 from __future__ import annotations
@@ -306,10 +305,10 @@ class CommitLog:
         until ``gc_orphans`` reclaims it; the highwater file (bumped under
         the commit lock at every reservation) then keeps the reclaimed id
         from ever being handed out again — ids are never reused even after
-        GC, exactly like Iceberg's never-reused snapshot ids, so a stale
-        artifact stamped with a dead chunk's id (a crashed side-output
-        staging dir, a stale OCR-queue dir) can never be adopted by a
-        later unrelated chunk."""
+        GC, exactly like Iceberg's never-reused snapshot ids, so anything
+        that names a chunk id (a derived stage's ``src_snapshot`` cursor, a
+        run log, a time-travel ``as_of``) names one chunk for the table's
+        whole life."""
         # the marker scan runs OUTSIDE the lock (streaming reserves once
         # per micro-batch; holding the global commit lock across O(chunks)
         # JSON parses would serialize every concurrent writer on it) — a
@@ -330,9 +329,8 @@ class CommitLog:
     def _bump_highwater(self, cid: int) -> None:
         """Monotonically raise the never-reuse floor to ``cid`` (no-op when
         already past it). Caller must hold the commit lock. fsync like the
-        marker path: the never-reuse invariant (which OCR-queue promotion
-        soundness leans on) must survive power loss, not just process
-        crash."""
+        marker path: the never-reuse invariant must survive power loss,
+        not just process crash."""
         if self._read_highwater() >= cid:
             return
         tmp = self._highwater_path() + f".tmp-{os.getpid()}"
@@ -376,10 +374,9 @@ class CommitLog:
         every id about to be reclaimed (ADVICE r03): ids reserved BEFORE the
         highwater file existed (an upgraded table) are not covered by
         ``reserve_chunk_id``'s bump, and handing such an id out again would
-        let a legacy visible ``ocr_queue/chunk-N`` be adopted by an
-        unrelated new chunk N — ``maintain_ocr_queue``'s promotion
-        soundness assumes ids are never reused. Bump-then-delete ordering
-        makes a crash mid-GC safe (the id is burned either way).
+        break the never-reuse invariant ``reserve_chunk_id`` promises.
+        Bump-then-delete ordering makes a crash mid-GC safe (the id is
+        burned either way).
 
         The delete itself runs UNDER the commit lock, after re-checking the
         marker set (review finding): a slow writer can reserve a chunk,
@@ -521,7 +518,6 @@ class CommitLog:
         replaces: list[int] | None = None,
         overwrite: bool = False,
         exclusive_parts: bool = False,
-        if_absent: bool = False,
         no_new_overwrites_since: set[int] | None = None,
         validate=None,
         expect_data: bool = False,
@@ -534,9 +530,7 @@ class CommitLog:
         this chunk's part_ids was committed by a concurrent append —
         the optimistic-concurrency check for exactly-once batch appends
         (streaming appends legitimately spread one part across markers and
-        skip it). ``if_absent``: an existing marker is a benign lost
-        replay race (identical data already committed) — return False
-        instead of raising. ``no_new_overwrites_since``: the marker-id set
+        skip it). ``no_new_overwrites_since``: the marker-id set
         the caller's data snapshot saw — a compaction must abort if any
         overwrite marker landed since, because its rewritten rows would
         resurrect the pre-overwrite content. ``validate``: called under the
@@ -634,8 +628,6 @@ class CommitLog:
                 try:
                     os.link(tmp, path)  # atomic, fails if the marker exists
                 except FileExistsError:
-                    if if_absent:
-                        return False
                     raise CommitConflict(
                         f"commit marker for chunk {chunk_id} already exists"
                     )
@@ -941,7 +933,7 @@ def compact_chunks(
     """Rewrite all currently-visible chunks into ONE new chunk that replaces
     them — the ``rewrite_data_files`` (bin-packing compaction) analogue.
 
-    ``schema`` compacts a DERIVED table (signals/curate/neardup/pack/
+    ``schema`` compacts a DERIVED table (ocr/signals/curate/neardup/pack/
     materialize — the same small-file accretion, one chunk per
     incremental window): the data is read under the stage's row shape
     and the marker records only the doc count. The stage CURSOR
@@ -1042,31 +1034,18 @@ def _write_chunk(
     overwrite: bool = False,
     exclusive_parts: bool = False,
     extra_metrics: dict | None = None,
-    side_output=None,
 ) -> dict:
     """Write one chunk's data parquet, then flip the marker. Shared by the
     append path (run_extraction), the partition-overwrite path
     (reextract_parts) and the streaming micro-batch path (which passes
-    ``extra_metrics={'epoch': ...}`` and an optional ``side_output``
-    callback). The marker's docs/pages/failures — and, for a streaming
-    batch (``chunk_parts=None``), the parts it touched — are the write's
-    own observed rollup (:func:`observed_rollup`): the parse and write run
-    as one job and nothing is read back. ``side_output`` runs on the
-    written-back chunk BEFORE the marker flips (its work is staged
-    alongside the chunk data); if it returns a callable, that publish
-    step runs AFTER the marker commits — the two-phase contract side
-    outputs need so their visible artifacts imply a committed chunk (see
-    streaming/ingest._ocr_queue_router). Returns the chunk's metrics."""
-    data_path = os.path.join(log.data_dir, _chunk_dirname(chunk_id))
-    observed = write_observed(extracted, data_path)
-    side_publish = None
-    if side_output is not None:
-        # read the written files back (no recompute of the UDF). Explicit
-        # schema: a chunk whose parts received zero docs writes only
-        # _SUCCESS, and a schema-inferring read would raise
-        from .pipeline import EXTRACTED_SCHEMA
-
-        side_publish = side_output(spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path))
+    ``extra_metrics={'epoch': ...}``). The marker's docs/pages/failures —
+    and, for a streaming batch (``chunk_parts=None``), the parts it
+    touched — are the write's own observed rollup
+    (:func:`observed_rollup`): the parse and write run as one job and
+    nothing is read back. Returns the chunk's metrics."""
+    observed = write_observed(
+        extracted, os.path.join(log.data_dir, _chunk_dirname(chunk_id))
+    )
     metrics = {k: observed[k] for k in ("docs", "pages", "failures", "error_parts")}
     if extra_metrics:
         metrics.update(extra_metrics)
@@ -1083,8 +1062,6 @@ def _write_chunk(
         exclusive_parts=exclusive_parts,
         expect_data=True,
     )
-    if callable(side_publish):
-        side_publish()  # two-phase side output: visible only once committed
     return metrics
 
 

@@ -33,3 +33,13 @@ def test_extraction_throughput_skewed_smoke():
         capture_output=True, text=True, timeout=300,
     )
     assert "THROUGHPUT_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]
+
+
+def test_scaling_report_carries_its_own_wall(monkeypatch):
+    """Each scaling report times its whole sweep, so the process wall is
+    accounted for beyond the headline ``wall_sec``."""
+    monkeypatch.setattr(bench, "extraction_throughput",
+                        lambda lvl, n_docs, profile="heavy": float(lvl))
+    r = bench.scaling_report(10, levels=(1, 4), rounds=1)
+    assert r["efficiency_1to4"] == 1.0 and r["rounds_run"] == 1
+    assert r["wall_sec"] >= 0.0

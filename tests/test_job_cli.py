@@ -49,6 +49,9 @@ REFUSALS = {
     "pack-kept-no-rebuild": (["pack", "--kept-from", "SRC", "--input", "SRC", "--output", "OUT"], "requires --rebuild"),
     "pack-neardups-no-kept": (["pack", "--drop-neardups-from", "SRC", "--rebuild", "--input", "SRC", "--output", "OUT"], "requires --kept-from"),
     "export-typo-kept-from": (["export", "SRC", "OUT", "--kept-from", "OUT"], NOT_A_TABLE),
+    "export-typo-with-ocr-text": (["export", "SRC", "OUT", "--with-ocr-text", "OUT"], NOT_A_TABLE),
+    "watch-route-needs-ocr": (["watch", "--route-needs-ocr", "--input", "SRC", "--output", "OUT"], UNRECOGNIZED),
+    "ocr-checkpoint": (["ocr", "--checkpoint", "x", "--input", "SRC", "--output", "OUT"], UNRECOGNIZED),
     "refresh-n-parts": (["refresh", "--parts", "1", "--n-parts", "4", "--input", "SRC", "--output", "OUT"], UNRECOGNIZED),
     "refresh-parts-not-int": (["refresh", "--parts", "3,x", "--input", "SRC", "--output", "OUT"], "invalid _part_ids value"),
     "n-parts-zero": (["extract", "--n-parts", "0", "--input", "SRC", "--output", "OUT"], "is not >= 1"),

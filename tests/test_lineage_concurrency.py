@@ -25,8 +25,6 @@ def test_marker_publish_never_clobbers(tmp_path):
         log.commit_chunk(0, [2, 3], {"docs": 2})
     # the loser's marker must not have replaced the winner's
     assert log.committed_chunks()[0]["part_ids"] == [0, 1]
-    # if_absent: losing a replay race is a no-op, not an error
-    assert log.commit_chunk(0, [2, 3], {"docs": 2}, if_absent=True) is False
     assert log.committed_part_ids() == {0, 1}
 
 
@@ -266,8 +264,8 @@ def test_chunk_ids_never_reused_after_gc(tmp_path):
 def test_legacy_pre_highwater_orphan_id_never_reused(tmp_path):
     """ADVICE r03: an orphan whose id was reserved BEFORE the highwater file
     existed (an upgraded table — the dir is on disk but no reservation ever
-    bumped the floor) must ALSO be retired by gc_orphans, or a legacy
-    visible ocr_queue/chunk-N could be adopted by an unrelated new chunk N."""
+    bumped the floor) must ALSO be retired by gc_orphans, or a later
+    reservation would hand the reclaimed id out again."""
     log = L.CommitLog(str(tmp_path / "t"))
     # simulate the upgraded table: chunk dirs exist, no highwater file
     old = time.time() - 7200

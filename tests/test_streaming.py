@@ -133,9 +133,9 @@ def test_streaming_idempotent_epoch_replay(spark, tmp_path):
 
 
 def test_streaming_needs_ocr_routing(spark, tmp_path):
-    """route_needs_ocr: scanned documents (text-free pages with images) land
-    in the ocr_queue side output with their pdf:// refs; clean documents do
-    not; replayed epochs stay idempotent for the queue."""
+    """watch -> ocr: scanned documents (text-free pages with images) reach
+    the OCR table with their pdf:// refs; clean documents do not; a
+    restarted stream plus a rerun of the stage add nothing."""
     import base64
 
     from pdf_extractor_spark.core.pdf_build import ImageBox, PageSpec, TextBox, build_pdf
@@ -164,7 +164,10 @@ def test_streaming_needs_ocr_routing(spark, tmp_path):
     landing.mkdir()
     _write_drop(spark, rows, str(landing / "drop-0.parquet"))
 
+    from pdf_extractor_spark.spark.ocr import read_ocr_text, run_ocr
+
     log = CommitLog(str(tmp_path / "log"))
+    ocr = CommitLog(str(tmp_path / "ocr"))
     q = start_extraction_stream(
         spark,
         str(landing),
@@ -172,15 +175,14 @@ def test_streaming_needs_ocr_routing(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_parts=8,
         num_partitions=2,
-        route_needs_ocr=True,
     )
     q.awaitTermination(300)
+    assert run_ocr(spark, log, ocr).chunks_committed == 1
 
-    queue = spark.read.parquet(str(tmp_path / "log" / "ocr_queue" / "chunk-*")).collect()
-    assert len(queue) == 1
-    [r] = queue
-    assert r["doc_id"] == "scan-1" and r["pages_needing_ocr"] == 1
-    assert r["media_refs"] == ["pdf://0/0/Im0"]
+    refs = [(r["doc_id"], r["media_ref"]) for r in read_ocr_text(spark, ocr).collect()]
+    assert refs == [("scan-1", "pdf://0/0/Im0")]
+    [scan] = log.read_extracted(spark).where("doc_id = 'scan-1'").collect()
+    assert scan["scores"]["pages_empty_with_images"] == 1
 
     # restart over the same checkpoint: replayed/empty epochs add nothing
     q2 = start_extraction_stream(
@@ -190,103 +192,10 @@ def test_streaming_needs_ocr_routing(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_parts=8,
         num_partitions=2,
-        route_needs_ocr=True,
     )
     q2.awaitTermination(120)
-    assert len(spark.read.parquet(str(tmp_path / "log" / "ocr_queue" / "chunk-*")).collect()) == 1
-
-
-def test_ocr_queue_two_phase_crash_windows(spark, tmp_path):
-    """A visible ocr_queue/chunk-* dir must imply a COMMITTED chunk.
-    maintain_ocr_queue heals both crash windows: commit-then-crash staging
-    dirs are promoted; crash-before-commit staging dirs (their epoch
-    replays under a new chunk id) are swept after the grace period."""
-    import json
-    import os
-
-    from pdf_extractor_spark.streaming.ingest import (
-        maintain_ocr_queue,
-        ocr_queue_root,
-    )
-
-    log = CommitLog(str(tmp_path / "log"))
-    qroot = ocr_queue_root(log)
-
-    # window A: marker exists, publish rename never ran
-    os.makedirs(os.path.join(qroot, ".staging-chunk-000007"))
-    with open(
-        os.path.join(str(tmp_path / "log"), "commits", "commit-000007.json"), "w"
-    ) as f:
-        json.dump(
-            {"chunk_id": 7, "part_ids": [0], "metrics": {}, "committed_at": 1.0}, f
-        )
-    # window B: no marker (writer died pre-commit), old enough to sweep
-    stale = os.path.join(qroot, ".staging-chunk-000009")
-    os.makedirs(stale)
-    os.utime(stale, (0, 0))
-    # window B': fresh unmarked staging dir — inside grace, must survive
-    live = os.path.join(qroot, ".staging-chunk-000011")
-    os.makedirs(live)
-
-    # window C: ANOTHER routed stream's stalled-but-live staging (owner
-    # token differs) — a rival stream's start sweep must never touch it
-    from pdf_extractor_spark.streaming.ingest import _ns_token
-
-    rival = os.path.join(
-        qroot, f".staging-{_ns_token('/ckpt/B')}-chunk-000013"
-    )
-    os.makedirs(rival)
-    os.utime(rival, (0, 0))
-
-    # default (maintenance-job) mode: promote, but NEVER sweep staging —
-    # an unmarked dir could be a live writer stalled past the grace window
-    out = maintain_ocr_queue(log, grace_s=3600.0)
-    assert out["promoted"] == [7]
-    assert os.path.isdir(os.path.join(qroot, "chunk-000007"))
-    assert os.path.exists(stale)
-    # stream-start mode (the only sweep_staging=True caller): sweep stale
-    # LEGACY dirs and this stream's OWN dead dirs; stream B's dir survives
-    out = maintain_ocr_queue(
-        log, grace_s=3600.0, sweep_staging=True, owner_ns="/ckpt/A"
-    )
-    assert not os.path.exists(stale)
-    assert os.path.isdir(live)  # a LIVE writer's staging is never swept
-    assert os.path.isdir(rival)  # another stream's staging is not ours
-    # B's own start MAY sweep its own stale staging
-    out = maintain_ocr_queue(
-        log, grace_s=3600.0, sweep_staging=True, owner_ns="/ckpt/B"
-    )
-    assert not os.path.exists(rival)
-
-
-def test_maintain_ocr_queue_tolerates_already_published(tmp_path):
-    """Promotion must be a no-op (staging swept, final kept, no raise) when
-    the live writer's publish() or a racing maintainer already renamed —
-    the check-then-rename race both directions."""
-    import json
-    import os
-
-    from pdf_extractor_spark.streaming.ingest import (
-        maintain_ocr_queue,
-        ocr_queue_root,
-    )
-
-    log = CommitLog(str(tmp_path / "log"))
-    qroot = ocr_queue_root(log)
-    os.makedirs(os.path.join(qroot, ".staging-chunk-000003"))
-    os.makedirs(os.path.join(qroot, "chunk-000003"))
-    with open(os.path.join(qroot, "chunk-000003", "x.parquet"), "w") as f:
-        f.write("d")  # non-empty: rename-over must fail, not clobber
-    with open(
-        os.path.join(str(tmp_path / "log"), "commits", "commit-000003.json"), "w"
-    ) as f:
-        json.dump(
-            {"chunk_id": 3, "part_ids": [0], "metrics": {}, "committed_at": 1.0}, f
-        )
-    out = maintain_ocr_queue(log, grace_s=3600.0)
-    assert out["promoted"] == []
-    assert not os.path.exists(os.path.join(qroot, ".staging-chunk-000003"))
-    assert os.path.isfile(os.path.join(qroot, "chunk-000003", "x.parquet"))
+    assert run_ocr(spark, log, ocr).chunks_committed == 0
+    assert read_ocr_text(spark, ocr).count() == 1
 
 
 def test_stream_start_rejects_mismatched_n_parts(spark, tmp_path):
@@ -300,107 +209,11 @@ def test_stream_start_rejects_mismatched_n_parts(spark, tmp_path):
         make_batch_processor(spark, log, n_parts=64)
 
 
-def test_maintain_ocr_queue_ignores_stray_entries(tmp_path):
-    """A stray non-chunk entry (editor backup, manual copy) in ocr_queue/
-    must not abort stream start."""
-    import os
-
-    from pdf_extractor_spark.streaming.ingest import (
-        maintain_ocr_queue,
-        ocr_queue_root,
-    )
-
-    log = CommitLog(str(tmp_path / "log"))
-    qroot = ocr_queue_root(log)
-    os.makedirs(os.path.join(qroot, ".staging-chunk-000003.bak"))
-    os.makedirs(os.path.join(qroot, "chunk-old"))
-    with open(os.path.join(qroot, "notes.txt"), "w") as f:
-        f.write("x")
-    out = maintain_ocr_queue(log, grace_s=0.0)
-    assert out == {"promoted": [], "removed": []}
-    assert os.path.isdir(os.path.join(qroot, "chunk-old"))
-
-
-def test_ocr_stage_consumes_queue_exactly_once(spark, tmp_path):
-    """Stage-2 consumer: drains ocr_queue/chunk-* into the ocr_text table,
-    one row per queued media ref, deterministic stub text, and a re-run
-    (no new queue chunks) adds nothing — the file sink + checkpoint give
-    exactly-once."""
-    import pandas as pd
-
-    from pdf_extractor_spark.streaming.ocr_stage import (
-        start_ocr_stage,
-        stub_ocr,
-    )
-
-    qroot = tmp_path / "ocr_queue"
-    for cid, refs in [(0, ["pdf://a/0/im1", "pdf://a/1/im2"]), (1, ["pdf://b/0/im1"])]:
-        d = qroot / f"chunk-{cid:06d}"
-        d.mkdir(parents=True)
-        pd.DataFrame(
-            {
-                "doc_id": [f"doc{cid}"],
-                "pages_needing_ocr": [len(refs)],
-                "media_refs": [refs],
-            }
-        ).to_parquet(d / "part-0.parquet")
-    out = tmp_path / "ocr_text"
-    ckpt = tmp_path / "ckpt"
-    q = start_ocr_stage(spark, str(qroot), str(out), str(ckpt))
-    q.awaitTermination(120)
-    rows = {
-        (r["doc_id"], r["media_ref"]): r["ocr_text"]
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    assert len(rows) == 3
-    assert rows[("doc0", "pdf://a/0/im1")] == stub_ocr("pdf://a/0/im1")
-    # idempotent re-run: nothing new in the queue -> nothing new in the table
-    q2 = start_ocr_stage(spark, str(qroot), str(out), str(ckpt))
-    q2.awaitTermination(120)
-    assert len(spark.read.parquet(str(out)).collect()) == 3
-    # a NEW queue chunk is picked up incrementally
-    d = qroot / "chunk-000002"
-    d.mkdir()
-    pd.DataFrame(
-        {
-            "doc_id": ["doc2"],
-            "pages_needing_ocr": [1],
-            "media_refs": [["pdf://c/0/im9"]],
-        }
-    ).to_parquet(d / "part-0.parquet")
-    q3 = start_ocr_stage(spark, str(qroot), str(out), str(ckpt))
-    q3.awaitTermination(120)
-    assert len(spark.read.parquet(str(out)).collect()) == 4
-    # a chunk arriving with ANCIENT file mtimes (a healed staging dir keeps
-    # its original timestamps) must still be consumed: the default
-    # maxFileAge=7d would silently drop it relative to the newer files the
-    # checkpoint has seen (regression for the explicit maxFileAge option)
-    import os as _os
-    import time as _time
-
-    d = qroot / "chunk-000004"
-    d.mkdir()
-    f = d / "part-0.parquet"
-    pd.DataFrame(
-        {
-            "doc_id": ["doc4"],
-            "pages_needing_ocr": [1],
-            "media_refs": [["pdf://d/0/im1"]],
-        }
-    ).to_parquet(f)
-    old = _time.time() - 10 * 86400
-    _os.utime(f, (old, old))
-    _os.utime(d, (old, old))
-    q4 = start_ocr_stage(spark, str(qroot), str(out), str(ckpt))
-    q4.awaitTermination(120)
-    assert len(spark.read.parquet(str(out)).collect()) == 5
-
-
 def test_merge_ocr_text_folds_recovered_text_into_spans(spark):
     """Stage-3: media spans with OCR rows gain the recovered text; all
     other spans — and docs with no OCR rows — pass through byte-identical
     (the span-sequence contract survives the merge)."""
-    from pdf_extractor_spark.streaming.ocr_stage import merge_ocr_text
+    from pdf_extractor_spark.spark.ocr import merge_ocr_text
 
     span = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
     ext = spark.createDataFrame(
@@ -464,10 +277,10 @@ def test_export_zip_with_ocr_text(spark, tmp_path):
     with bare links (the unmerged byte contract is unchanged)."""
     import zipfile
 
-    import pandas as pd
-
+    from pdf_extractor_spark.spark.derived import commit_derived_chunk
     from pdf_extractor_spark.spark.export import export_markdown_zip
     from pdf_extractor_spark.spark.lineage import _write_chunk
+    from pdf_extractor_spark.spark.ocr import OCR_SCHEMA
     from pdf_extractor_spark.spark.pipeline import extract_documents
 
     span_t = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -484,17 +297,13 @@ def test_export_zip_with_ocr_text(spark, tmp_path):
     export_markdown_zip(spark, str(tmp_path / "t"), str(plain))
     assert b"> [" not in zipfile.ZipFile(plain).read("d1.md")
 
-    (tmp_path / "ocr").mkdir()
-    pd.DataFrame(
-        {
-            "doc_id": ["d1"],
-            "media_ref": ["pdf://d1/0/im"],
-            "ocr_text": ["[ocr-stub feedface0000]"],
-        }
-    ).to_parquet(tmp_path / "ocr" / "p.parquet", index=False)
+    ocr_rows = spark.createDataFrame(
+        [("d1", "pdf://d1/0/im", "[ocr-stub feedface0000]", 0)], OCR_SCHEMA
+    )
+    commit_derived_chunk(CommitLog(str(tmp_path / "ocr")), ocr_rows, "ocr", None, {}, 4)
     merged = tmp_path / "merged.zip"
     export_markdown_zip(
-        spark, str(tmp_path / "t"), str(merged), ocr_text_dir=str(tmp_path / "ocr")
+        spark, str(tmp_path / "t"), str(merged), ocr_from=str(tmp_path / "ocr")
     )
     body = zipfile.ZipFile(merged).read("d1.md").decode()
     assert "![media](pdf://d1/0/im)\n\n> [ocr-stub feedface0000]" in body
