@@ -2161,30 +2161,14 @@ def parse_pdf(
         raise PdfParseError(f"malformed PDF structure: {e}") from e
 
 
-def page_to_text(page: PageOut) -> str:
-    """Assemble one page's content string with the reference's framing and
-    cleaning (pymu_tesseract_processor.py:259-274): regions merged in reading
-    order (sorted by top-y, then x), text regions framed ``\\n\\n{t}\\n\\n``,
-    tables framed ``\\n\\n{label}:\\n\\n`` + list-repr rows, then clean_text."""
-    regions: list[tuple[float, float, str]] = []
-    n_tables = len(page.tables)
-    for i, tbl in enumerate(page.tables, start=1):
-        label = f"Table{i}" if n_tables > 1 else "Table"
-        regions.append((tbl.y_top, tbl.x, frame_table(label, tbl.rows)))
-    for box in page.boxes:
-        regions.append((box.y_top, box.x, frame_region(box.text)))
-    regions.sort(key=lambda r: (r[0], r[1]))
-    return clean_text("".join(r[2] for r in regions))
-
-
 def page_to_spans(
     page: PageOut, page_idx: int, ref_prefix: str = ""
 ) -> list[tuple[str, str, str]]:
     """One page's ordered (kind, text, media_ref) span sequence.
 
-    Regions merge in reading order by (top-y, left-x) — the same key
-    ``page_to_text`` uses; consecutive TEXT regions (textboxes + framed
-    tables) collapse into one cleaned text span, and each image becomes a
+    Regions merge in reading order by (top-y, left-x); consecutive TEXT
+    regions (textboxes + framed tables) collapse into one cleaned text
+    span, and each image becomes a
     ``kind='media'`` span with a synthesized ref
     ``pdf://{ref_prefix}/{page_idx}/{name}`` at its reading-order position
     (SURVEY §2.8-K2: detected non-content regions become media spans — the
@@ -2219,12 +2203,6 @@ def page_to_spans(
     if text_parts:
         out.append(("text", clean_text("".join(text_parts)), ""))
     return out
-
-
-def extract_pdf_text(data: bytes) -> list[str]:
-    """Full pipeline: bytes -> ordered per-page cleaned content strings
-    (text only — images do not contribute; see extract_pdf_spans)."""
-    return [page_to_text(p) for p in parse_pdf(data)]
 
 
 def extract_pdf_spans(

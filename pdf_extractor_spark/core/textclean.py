@@ -14,8 +14,8 @@ import re
 
 _MULTI_BLANK = re.compile(r"\n\s*\n+")
 
-# same candidate set and head-sample bound as the manifest reader's
-# file-path sniff (sources/manifest.py; helper.py:85-94)
+# the reference's read_dataset sniff (helper.py:85-94); job.py's password
+# manifest check sniffs through the same function
 _DATA_DELIMS = ",;\t|"
 _SNIFF_CHARS = 64 * 1024
 
@@ -40,23 +40,23 @@ def frame_region(raw_text: str) -> str:
     return f"\n\n{raw_text}\n\n"
 
 
+def sniff_delimiter(text: str) -> str:
+    """``csv.Sniffer`` over the text's head, ',' fallback."""
+    try:
+        return csv.Sniffer().sniff(text[:_SNIFF_CHARS], delimiters=_DATA_DELIMS).delimiter
+    except csv.Error:
+        return ","
+
+
 def render_delimited(text: str) -> str:
     """``kind='data'`` content (csv/tsv/…) rendered through the SAME
     table framing the PDF grid path uses: sniff the delimiter
-    (``csv.Sniffer`` with the manifest reader's candidate set and ','
-    fallback, helper.py:85-94), parse rows, ``frame_table``. The
+    (``sniff_delimiter``), parse rows, ``frame_table``. The
     reference treats csv/xlsx/json files as a first-class corpus
     category (app/config.py:9-15) and previews them as tables
     (dashboard.py:864-897); this is that category as an extraction
     span path instead of a UI preview."""
-    try:
-        delim = (
-            csv.Sniffer()
-            .sniff(text[:_SNIFF_CHARS], delimiters=_DATA_DELIMS)
-            .delimiter
-        )
-    except csv.Error:
-        delim = ","
+    delim = sniff_delimiter(text)
     # newline="" as the csv module requires: csv splits records itself, so
     # an unquoted bare '\r' (old-Mac line ends) is a record break, not a
     # "new-line character seen in unquoted field" error

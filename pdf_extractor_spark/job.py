@@ -8,8 +8,9 @@ Stages: ``extract`` (resumable; rerunning with the same --output continues
 from the last committed chunk), ``refresh`` (re-extract named parts in
 place), ``watch`` (incremental drain of a drop directory — the reference's
 watch-uploads loop as a CLI), the derived stages ``ocr``/``signals``/
-``curate``/``neardup``/``pack``/``materialize``, ``export ROOT PATH`` and
-``maintain ROOT``. Each subcommand declares only the flags it reads, so a
+``curate``/``neardup``/``pack``/``materialize``, ``export ROOT PATH``,
+``maintain ROOT`` and ``show ROOT DOC_ID`` (one document's metrics and
+spans). Each subcommand declares only the flags it reads, so a
 flag that would be a no-op in a stage is an argparse error (exit 2) before
 the JVM starts.
 """
@@ -18,6 +19,8 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import csv
+import json
 import os
 import sys
 import time
@@ -39,6 +42,20 @@ def _part_ids(s: str) -> list[int]:
 
 def _passwords(s: str) -> tuple[bytes, ...]:
     return tuple(pw.encode("utf-8") for pw in s.split(",") if pw)
+
+
+def sniff_delimiter(path: str) -> str:
+    """A CSV file's delimiter, sniffed from its head by the same rule as a
+    ``kind='data'`` span's (``textclean.sniff_delimiter``)."""
+    from pdf_extractor_spark.core.textclean import sniff_delimiter as sniff
+
+    with open(path, newline="") as f:
+        return sniff(f.read(64 * 1024))
+
+
+def _header_columns(path: str, delim: str) -> list[str]:
+    with open(path, newline="") as f:
+        return next(csv.reader(f, delimiter=delim))
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -188,6 +205,14 @@ def build_parser() -> argparse.ArgumentParser:
     act.add_argument("--migrate-layout", action="store_true",
                      help="one-time upgrade of a pre-Hive-layout table "
                           "(chunk-K dirs -> chunk=K); run with no live writers")
+    sp = stage("show", "print one document's metrics row and its spans from "
+               "a committed extraction table", _show, tables=("root",))
+    sp.add_argument("root", metavar="ROOT", help="committed extraction table")
+    sp.add_argument("doc_id", metavar="DOC_ID")
+    sp.add_argument("--page", type=_positive_int, default=None, metavar="N",
+                    help="print only the document's N-th span (1-based)")
+    sp.add_argument("--as-of", type=int, default=None, metavar="K",
+                    help="read the table as of snapshot (chunk id) K")
     return p
 
 
@@ -245,8 +270,6 @@ def _extract(args) -> int:
     if args.password_manifest is not None:
         # spark.read.csv with an explicit schema names columns by POSITION,
         # so a swapped header would be silently misread: check it pre-JVM
-        from pdf_extractor_spark.sources.manifest import _header_columns, sniff_delimiter
-
         if not os.path.isfile(args.password_manifest):
             args.error(f"--password-manifest {args.password_manifest} does not exist")
         delim = sniff_delimiter(args.password_manifest)
@@ -410,7 +433,7 @@ def _run_derived(args) -> int:
         report, dt = run(spark, args)
     print(
         f"{args.stage.upper()}_DONE chunks={report.chunks_committed} "
-        f"parts={report.parts_processed} docs={report.docs_processed} "
+        f"parts={report.parts_processed} rows={report.docs_processed} "
         f"wall_s={dt:.2f}" + (" (rebuild)" if args.rebuild else "")
     )
     return 0
@@ -459,6 +482,42 @@ def _maintain(args) -> int:
             new_id = compact_chunks(spark, log, schema=schema)
         reclaimed = log.expire_replaced() if new_id is not None else []
         print(f"COMPACTION_DONE chunk={new_id} reclaimed={len(reclaimed)}")
+    return 0
+
+
+_SHOW_METRICS = ("part_id", "pages_parsed", "spans_emitted", "parse_failures",
+                 "duration_ms", "scores")
+
+
+def _show(args) -> int:
+    """``DOC {metrics}`` then one ``SPAN {kind, text, media_ref, offset}``
+    line per span (offset order) or only the ``--page`` span, as JSON;
+    exit 1 if the document or the page is not there."""
+    from pdf_extractor_spark.spark.lineage import CommitLog
+    from pdf_extractor_spark.spark.preview import doc_row, doc_spans, read_page
+
+    log = CommitLog(args.root)
+    where = args.root if args.as_of is None else f"{args.root} as of {args.as_of}"
+    with _spark(args.master) as spark:
+        rows = doc_row(spark, log, args.doc_id, args.as_of).select(*_SHOW_METRICS).collect()
+        if not rows:
+            print(f"no document {args.doc_id!r} in {where}", file=sys.stderr)
+            return 1
+        if args.page is None:
+            spans = [r.asDict() for r in
+                     doc_spans(spark, log, args.doc_id, args.as_of).drop("doc_id").collect()]
+        else:
+            page = read_page(spark, log, args.doc_id, args.page, args.as_of)
+            if page is None:
+                print(f"document {args.doc_id!r} has no page {args.page} in {where}",
+                      file=sys.stderr)
+                return 1
+            spans = [{"kind": page["kind"], "text": page["content"],
+                      "media_ref": page["media_ref"], "offset": page["offset"]}]
+    print("DOC " + json.dumps({"doc_id": args.doc_id, **rows[0].asDict()},
+                              ensure_ascii=False, sort_keys=True))
+    for s in spans:
+        print("SPAN " + json.dumps(s, ensure_ascii=False))
     return 0
 
 

@@ -1,17 +1,14 @@
-"""Advanced relational + grouped-UDF operators.
+"""Advanced relational operators.
 
 Spark capabilities the reference never had but a complete engine exposes
 "for free" once the data is a DataFrame (SURVEY.md §2.4 note): rollup
-grouping sets, gap-based sessionization windows, corpus word counts, and a
-grouped ``applyInPandas`` kernel (per-group pandas logic — the grouped
-sibling of the extraction pipeline's ``mapInPandas``). Each has an exact
-DuckDB oracle; all money/ratio outputs use the integer-exact conventions
-from analytics.py (cents / floor-micros, never raw double sums).
+grouping sets, gap-based sessionization windows, corpus word counts and a
+scale-safe per-group deviation. Each has an exact DuckDB oracle; all
+money/ratio outputs use the integer-exact conventions from analytics.py (cents / floor-micros, never raw double sums).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -255,44 +252,6 @@ ORDER BY e.event_id
 
 # --- per-language deviation: two-phase agg + broadcast join ----------------
 
-_ZSCORE_SCHEMA = (
-    "doc_id bigint, lang string, n_chars bigint, lang_mean_micros bigint, "
-    "dev_micros bigint"
-)
-
-
-def _lang_stats(pdf: pd.DataFrame) -> pd.DataFrame:
-    # exact integer sum -> one double division: bit-identical to the oracle's
-    # CAST(sum AS DOUBLE)/count, immune to accumulation-order effects
-    mean = float(pdf["n_chars"].sum()) / len(pdf)
-    import math
-
-    out = pdf[["doc_id", "lang", "n_chars"]].copy()
-    out["lang_mean_micros"] = int(math.floor(mean * 1_000_000.0))
-    out["dev_micros"] = [
-        int(math.floor((c - mean) * 1_000_000.0)) for c in pdf["n_chars"]
-    ]
-    return out
-
-
-def lang_deviation_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped ``applyInPandas`` form — BOUNDED-GROUP DEMO ONLY.
-
-    Kept as the grouped sibling of the extraction pipeline's mapInPandas
-    (one shuffle on the group key, per-group pandas on the executor), but it
-    materializes an entire language's rows in one pandas frame: at corpus
-    scale one language is most of the data -> straggler, then OOM (VERDICT
-    r01). The shipped query is :func:`q_lang_deviation` below; a pytest
-    differential pins both forms equal at test scale.
-    """
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return (
-        docs.groupBy("lang")
-        .applyInPandas(_lang_stats, schema=_ZSCORE_SCHEMA)
-        .orderBy("doc_id")
-    )
-
-
 def q_lang_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language doc-length deviation, scale-safe plan.
 
@@ -300,7 +259,8 @@ def q_lang_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages-sized stats table) + broadcast join back to the docs — no
     executor ever holds a whole language, the big side never shuffles.
     Integer sum -> one double division keeps the mean bit-identical to the
-    grouped-pandas form and the DuckDB oracle regardless of row order.
+    DuckDB oracle regardless of row order (and to the grouped
+    ``applyInPandas`` form in tests/helpers.py).
     """
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     stats = docs.groupBy("lang").agg(

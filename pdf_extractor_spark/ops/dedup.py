@@ -705,62 +705,6 @@ WHERE cos >= 0.4 ORDER BY vec1, vec2
 # --- duplicate clusters: connected components over LSH pairs ---------------
 
 MAX_CC_ITERS = 20
-_CC_CHECKPOINT_EVERY = 5
-
-
-def propagate_min_labels(edges: DataFrame, max_iters: int = MAX_CC_ITERS):
-    """Iterative min-label propagation over an undirected edge list
-    ``edges(u, v)`` (both directions present). Returns ``(labels, changed)``
-    where ``labels(doc_id, comp)`` is persisted (caller owns release) and
-    ``changed`` is the final round's changed-label count (0 at a fixpoint;
-    caller decides whether non-convergence is fatal).
-
-    Each round is one shuffle keyed on the vertex id. Every
-    ``_CC_CHECKPOINT_EVERY`` rounds the labels are ``localCheckpoint``-ed
-    (eager): persist alone caches the DATA but the logical plan still nests
-    every previous round's joins, so analysis time — and, on a real cluster,
-    the recovery lineage a lost executor would replay — grows per round;
-    the checkpoint truncates the plan to a leaf. Deep-diameter graphs
-    (long chains) are exactly the case that needs it; shallow near-dup
-    clusters converge before the first checkpoint fires.
-    """
-    labels = (
-        edges.select(F.col("u").alias("doc_id")).distinct()
-        .withColumn("comp", F.col("doc_id"))
-        .persist()
-    )
-    changed = 0
-    for it in range(max_iters):
-        neigh_min = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy("u")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neigh_min, labels.doc_id == neigh_min.u, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce("nmin", "comp")).alias("comp"),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-        if (it + 1) % _CC_CHECKPOINT_EVERY == 0:
-            # the count above already materialized the persisted cache, so
-            # this is a cheap partition copy, never a recompute
-            truncated = labels.localCheckpoint(eager=True)
-            labels.unpersist()
-            labels = truncated
-    return labels, changed
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -902,9 +846,9 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     a logarithmic round count. Deterministic under any partitioning; each
     round is a bounded number of vertex-keyed shuffles, lineage truncated
     by an eager localCheckpoint every round. The driver-side part is
-    only the convergence test (counts), never data.
-    (``propagate_min_labels`` remains as the shallow-graph reference
-    implementation the tests differential-check against.)
+    only the convergence test (counts), never data. (Plain min-label
+    propagation is kept in tests/helpers.py as the shallow-graph reference
+    the tests differential-check against.)
 
     The LSH pair stage is persisted and materialized BEFORE the loop
     (VERDICT r02 #1): ``pairs`` feeds both union branches of ``edges``, so

@@ -1,6 +1,6 @@
 """Self-shipping: make the package importable on executors, always.
 
-The Arrow kernels (mapInPandas/mapInArrow/applyInPandas) are serialized by
+The Arrow kernels (mapInPandas/mapInArrow) are serialized by
 reference, so executor Python workers must be able to ``import
 pdf_extractor_spark``. That held only while the driver's cwd was the repo
 root (workers inherit cwd -> '' on sys.path); a caller importing

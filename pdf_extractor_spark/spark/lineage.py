@@ -13,8 +13,7 @@ Layout of a CommitLog directory:
                                             the chunk is visible iff present
 
 A marker's metrics come from an ``Observation`` on the chunk's own write
-(the analogue of an Iceberg snapshot summary's added-records counts), and
-``read_lineage`` is a per-part rollup of the visible data.
+(the analogue of an Iceberg snapshot summary's added-records counts).
 
 Both path levels are key=value (Hive) form on purpose: ``chunk`` and
 ``part_id`` are DISCOVERED PARTITION COLUMNS, so every read is ONE parquet
@@ -76,17 +75,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import balance_partitions, extract_documents
-
-LINEAGE_COLS = [
-    "part_id",
-    "status",
-    "docs_done",
-    "pages_parsed",
-    "spans_emitted",
-    "parse_failures",
-    "duration_ms",
-    "committed_at",
-]
 
 
 @dataclass
@@ -214,21 +202,6 @@ class CommitLog:
             else:
                 out = [m for m in out if m["chunk_id"] <= as_of]
         return out
-
-    def snapshots(self) -> list[dict]:
-        """Snapshot metadata rows (the ``table.snapshots()`` analogue):
-        one dict per commit with id, wall-clock time, part count and the
-        writer's metrics — enough for a monitor to pick an ``as_of``."""
-        return [
-            {
-                "snapshot_id": c["chunk_id"],
-                "committed_at": c["committed_at"],
-                "n_part_ids": len(c["part_ids"]),
-                "metrics": c.get("metrics", {}),
-                "replaces": c.get("replaces"),
-            }
-            for c in self.committed_chunks()
-        ]
 
     def expire_replaced(self) -> list[int]:
         """Physically delete the data directories of chunks that a
@@ -665,7 +638,7 @@ class CommitLog:
         (the per-chunk unionByName it replaced built plans superlinearly:
         7.5 / 38 / 156 s at 200 / 1000 / 2000 chunks,
         tools/bench_commitlog.py). ``keep_chunk`` keeps the ``chunk``
-        column (read_lineage groups by it)."""
+        column."""
         # explicit schema: a committed chunk whose parts got zero docs
         # holds only _SUCCESS, and schema inference over an all-empty
         # table would raise. `chunk` is appended by partition discovery;
@@ -830,37 +803,6 @@ class CommitLog:
             for p in self._owned_parts(c, visible, shadow):
                 out["unknown" if bad is None else "error" if p in bad else "success"] += 1
         return dict(out)
-
-    def read_lineage(
-        self,
-        spark: SparkSession,
-        as_of: int | None = None,
-        markers: list[dict] | None = None,
-    ) -> DataFrame:
-        """Per-(chunk, part_id) metrics of the visible extracted rows, in
-        ``LINEAGE_COLS``: sums of the per-doc metric columns, ``status``
-        ``error`` when any doc failed, and ``committed_at`` from the
-        chunk's marker. A column-pruned rollup of the data itself, so it
-        follows the same snapshot visibility as :meth:`read_extracted`.
-        After a compaction each compacted part is ONE row stamped with the
-        compaction's time; the replaced commits' record stays in markers."""
-        from .pipeline import EXTRACTED_SCHEMA
-
-        markers = self.committed_chunks(as_of) if markers is None else markers
-        whole, partial = self._visible_split(as_of, markers)
-        stamps = spark.createDataFrame(
-            [(c["chunk_id"], c["committed_at"]) for c in markers], "chunk int, ts double"
-        )
-        sums = ("pages_parsed", "spans_emitted", "parse_failures", "duration_ms")
-        return (
-            self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial, keep_chunk=True)
-            .groupBy("chunk", "part_id")
-            .agg(F.count("*").alias("docs_done"), *(F.sum(c).alias(c) for c in sums))
-            .join(F.broadcast(stamps), "chunk")
-            .withColumn("status", F.when(F.col("parse_failures") > 0, "error").otherwise("success"))
-            .withColumn("committed_at", F.timestamp_seconds("ts"))
-            .select(LINEAGE_COLS)
-        )
 
 
 def resume_filter(

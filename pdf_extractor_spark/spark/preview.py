@@ -1,4 +1,5 @@
-"""Preview/read path: point queries over the extracted output table.
+"""Preview/read path: point queries over the extracted output table
+(``job.py show``).
 
 The reference's preview pane loads one result JSON and indexes
 ``content[page-1]`` (dashboard.py:832-1004, §3.3 of SURVEY.md). Over the
@@ -17,31 +18,27 @@ from .lineage import CommitLog
 from .pipeline import assign_part_id
 
 
-def _resolve_n_parts(log: CommitLog, n_parts: int | None) -> int | None:
-    """Use the writer-recorded n_parts; a mismatched caller value would
-    compute a different part_id and silently prune the doc away (ADVICE r01),
-    so a supplied value is validated against the log instead of trusted."""
-    recorded = log.n_parts()
-    if n_parts is None:
-        return recorded
-    if recorded is not None and recorded != n_parts:
-        raise ValueError(
-            f"n_parts={n_parts} does not match the writer's value {recorded} "
-            f"recorded in the commit log at {log.root}"
-        )
-    return n_parts
+def doc_row(spark: SparkSession, log: CommitLog, doc_id: str, as_of: int | None = None) -> DataFrame:
+    """ONE deterministic row of ``doc_id`` at snapshot ``as_of`` (None: the
+    current table); empty if the document is not there.
 
+    The lookup first computes the doc's part_id with the writer's n_parts
+    (read back from the commit log, never supplied by the caller: a
+    mismatched value would compute a different part_id and silently prune
+    the doc away, ADVICE r01) and filters on it; part_id is the partition
+    column, so this prunes to one partition before the doc_id filter
+    touches row groups.
 
-def doc_spans(spark: SparkSession, log: CommitLog, doc_id: str, n_parts: int | None = None) -> DataFrame:
-    """All extracted spans of one document, in offset order.
-
-    The lookup first computes the doc's part_id (the same pure function the
-    writer used — writer's n_parts read back from the commit log) and filters
-    on it — at scale part_id is the partition column, so this prunes to one
-    partition before the doc_id filter touches row groups.
-    """
-    ext = log.read_extracted(spark)
-    n_parts = _resolve_n_parts(log, n_parts)
+    The table may legitimately hold a doc twice (streaming appends can
+    deliver it in two epochs; spark/export.py sorts defensively for the
+    same reason). Without a canonical pick, which copy a point query
+    answered from depended on partition arrival order: ``doc_spans``
+    interleaved both copies' spans (every offset twice) and ``read_page``
+    could answer None from a shorter copy while a longer one held the page.
+    Canonical = most spans, ties broken by the spans' JSON serialization —
+    a pure function of the data."""
+    ext = log.read_extracted(spark, as_of=as_of)
+    n_parts = log.n_parts()
     if n_parts is not None:
         part = (
             assign_part_id(spark.createDataFrame([(doc_id,)], "doc_id string"), n_parts)
@@ -49,7 +46,16 @@ def doc_spans(spark: SparkSession, log: CommitLog, doc_id: str, n_parts: int | N
         )
         ext = ext.where(F.col("part_id") == part)
     return (
-        _canonical_row(ext, doc_id)
+        ext.where(F.col("doc_id") == doc_id)
+        .orderBy(F.desc(F.size("spans")), F.to_json("spans"))
+        .limit(1)
+    )
+
+
+def doc_spans(spark: SparkSession, log: CommitLog, doc_id: str, as_of: int | None = None) -> DataFrame:
+    """All extracted spans of one document, in offset order."""
+    return (
+        doc_row(spark, log, doc_id, as_of)
         .select("doc_id", F.explode("spans").alias("span"))
         .select(
             "doc_id",
@@ -62,37 +68,13 @@ def doc_spans(spark: SparkSession, log: CommitLog, doc_id: str, n_parts: int | N
     )
 
 
-def _canonical_row(ext: DataFrame, doc_id: str) -> DataFrame:
-    """ONE deterministic row for a doc_id the table may legitimately hold
-    twice (streaming appends can deliver a doc in two epochs —
-    spark/export.py sorts defensively for the same reason). Without this,
-    which copy a point query answered from depended on partition arrival
-    order: ``doc_spans`` interleaved both copies' spans (every offset
-    twice) and ``read_page`` could answer None from a shorter copy while a
-    longer one held the page. Canonical = most spans, ties broken by the
-    spans' JSON serialization — a pure function of the data."""
-    return (
-        ext.where(F.col("doc_id") == doc_id)
-        .orderBy(F.desc(F.size("spans")), F.to_json("spans"))
-        .limit(1)
-    )
-
-
 def read_page(
-    spark: SparkSession, log: CommitLog, doc_id: str, page: int, n_parts: int | None = None
+    spark: SparkSession, log: CommitLog, doc_id: str, page: int, as_of: int | None = None
 ) -> dict | None:
     """One page's entry — (text, scores) — the preview pane's
     ``content[page-1]`` lookup (dashboard.py:963-978). 1-based page index."""
-    ext = log.read_extracted(spark)
-    n_parts = _resolve_n_parts(log, n_parts)
-    if n_parts is not None:
-        part = (
-            assign_part_id(spark.createDataFrame([(doc_id,)], "doc_id string"), n_parts)
-            .collect()[0]["part_id"]
-        )
-        ext = ext.where(F.col("part_id") == part)
     rows = (
-        _canonical_row(ext, doc_id)
+        doc_row(spark, log, doc_id, as_of)
         .select(
             # try_element_at: out-of-range page -> NULL, not an ANSI error
             F.try_element_at("spans", F.lit(page)).alias("span"),
@@ -110,6 +92,7 @@ def read_page(
         "kind": r["span"]["kind"],
         "content": r["span"]["text"],
         "media_ref": r["span"]["media_ref"],
+        "offset": r["span"]["offset"],
         "scores": dict(r["scores"]) if r["scores"] is not None else {},
         "total_spans": r["spans_emitted"],
     }

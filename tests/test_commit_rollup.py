@@ -20,6 +20,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 from pdf_extractor_spark.corpus import corpus_df
 from pdf_extractor_spark.spark import lineage as L
 from pdf_extractor_spark.spark.pipeline import EXTRACTED_SCHEMA
+from tests.helpers import read_lineage
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -110,7 +111,7 @@ def test_part_status_from_markers_matches_lineage(spark, tmp_path):
     L.reextract_parts(spark, docs, log, [1])
 
     def from_data():
-        rows = log.read_lineage(spark).groupBy("status").count().collect()
+        rows = read_lineage(log, spark).groupBy("status").count().collect()
         return {r["status"]: r["count"] for r in rows}
 
     assert log.part_status() == from_data()

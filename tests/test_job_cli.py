@@ -58,6 +58,8 @@ REFUSALS = {
     "parts-per-chunk-zero": (["extract", "--parts-per-chunk", "0", "--input", "SRC", "--output", "OUT"], "is not >= 1"),
     "num-partitions-zero": (["watch", "--num-partitions", "0", "--input", "SRC", "--output", "OUT"], "is not >= 1"),
     "shards-zero": (["export", "SRC", "OUT", "--shards", "0"], "is not >= 1"),
+    "show-typo-root": (["show", "OUT", "d1"], NOT_A_TABLE),
+    "show-page-zero": (["show", "SRC", "d1", "--page", "0"], "is not >= 1"),
 }
 
 
@@ -113,16 +115,36 @@ def test_documented_invocations_parse():
         # <placeholder with spaces> -> one token
         argv = shlex.split(re.sub(r"<[^>]*>", "X", cmd))
         stages.add(parser.parse_args(argv).stage)
-    assert stages >= {"extract", "refresh", "watch", "ocr", "signals", "export", "maintain"}
+    assert stages >= {"extract", "refresh", "watch", "ocr", "signals", "export", "maintain",
+                      "show"}
+
+
+_MODULE_PATH = re.compile(r"(?<![\w/.-])(\w+/\w+\.py)\b")
+
+
+def _unresolved_module_paths(text: str) -> list[str]:
+    """The ``dir/name.py`` paths in ``text`` that resolve neither from the
+    repo root (``tools/…``, ``tests/…``) nor under the package
+    (``spark/preview.py``, ``core/…``)."""
+    root = Path(ROOT)
+    return sorted({
+        m for m in _MODULE_PATH.findall(text)
+        if not (root / m).exists() and not (root / "pdf_extractor_spark" / m).exists()
+    })
 
 
 def test_documented_scripts_exist():
     """Every bench.py / tools/<name>.py / perfbench/<name>.py path the docs
-    or a non-test module name exists — a retired script leaves no pointer
+    or a non-test module name exists, and every ``dir/name.py`` module path
+    the docs name resolves — a retired script or module leaves no pointer
     behind. History files (BENCH/, ROADMAP.md, CHANGES.md) are exempt."""
     root = Path(ROOT)
-    sources = [root / "README.md", root / "CLAUDE.md",
-               root / ".claude/skills/verify/SKILL.md"]
+    docs = [root / "README.md", root / "CLAUDE.md",
+            root / ".claude/skills/verify/SKILL.md"]
+    stale = {str(d.relative_to(root)): _unresolved_module_paths(d.read_text()) for d in docs}
+    assert not any(stale.values()), stale
+    assert _unresolved_module_paths("`sources/fetch.py` (mapInPandas)") == ["sources/fetch.py"]
+    sources = list(docs)
     sources += root.glob("*.py")
     for pkg in ("pdf_extractor_spark", "tools", "perfbench"):
         sources += (root / pkg).rglob("*.py")

@@ -408,10 +408,10 @@ def test_chaos_append_compact_expire_concurrently(spark, tmp_path):
     log.expire_replaced()
     log.gc_orphans(grace_s=0)
     assert visible_ids() == before
-    # marker history stayed coherent (snapshots listable, ids monotonic)
-    snaps = log.snapshots()
-    assert [s["snapshot_id"] for s in snaps] == sorted(
-        s["snapshot_id"] for s in snaps
+    # marker history stayed coherent (markers listable, ids monotonic)
+    snaps = log.committed_chunks()
+    assert [s["chunk_id"] for s in snaps] == sorted(
+        s["chunk_id"] for s in snaps
     )
 
 
@@ -457,7 +457,7 @@ def test_compaction_publishes_newest_beside_orphan_and_stream(spark, tmp_path):
         t.join()
     assert not errors, errors
     assert len(streamed) > landed  # the stream kept committing afterwards
-    ids = [s["snapshot_id"] for s in log.snapshots()]
+    ids = [s["chunk_id"] for s in log.committed_chunks()]
     assert ids == sorted(ids) and new_id in ids and new_id > orphan
     assert log.read_extracted(spark).count() == 24
     assert os.path.isdir(os.path.join(log.data_dir, f"chunk={orphan:06d}"))

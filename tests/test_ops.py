@@ -389,10 +389,8 @@ def test_lang_deviation_grouped_matches_scale_plan(spark):
     """The bounded-group applyInPandas demo and the shipped two-phase
     agg + broadcast-join plan must produce identical rows (VERDICT r01:
     the grouped form is the spec, the agg form is the scale path)."""
-    from pdf_extractor_spark.ops.advanced import (
-        lang_deviation_grouped,
-        q_lang_deviation,
-    )
+    from pdf_extractor_spark.ops.advanced import q_lang_deviation
+    from tests.helpers import lang_deviation_grouped
 
     a = [tuple(r) for r in q_lang_deviation(spark, SF_DIR).collect()]
     b = [tuple(r) for r in lang_deviation_grouped(spark, SF_DIR).collect()]
@@ -455,10 +453,8 @@ def test_star_contraction_matches_min_label_propagation(spark):
     """Differential check on a multi-component graph with an isolated
     vertex (self-loop) and a cycle: the star-contraction labels must equal
     the shallow-graph reference implementation's."""
-    from pdf_extractor_spark.ops.dedup import (
-        propagate_min_labels,
-        star_contract_components,
-    )
+    from pdf_extractor_spark.ops.dedup import star_contract_components
+    from tests.helpers import propagate_min_labels
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"),

@@ -23,9 +23,9 @@ from pdf_extractor_spark.core.pdf_parse import (
     Name,
     PdfParseError,
     Stream,
-    extract_pdf_text,
     parse_pdf,
 )
+from tests.helpers import extract_pdf_text
 
 BASE_LINES = ["Alpha beta gamma.", "Delta epsilon."]
 
@@ -992,7 +992,7 @@ def test_encrypted_candidate_password_list():
 
 
 def extract_pdf_text_pw(pdf: bytes, passwords: tuple) -> list[str]:
-    from pdf_extractor_spark.core.pdf_parse import page_to_text
+    from tests.helpers import page_to_text
 
     return [page_to_text(p) for p in parse_pdf(pdf, passwords=passwords)]
 

@@ -7,12 +7,9 @@ import random
 import pytest
 
 from pdf_extractor_spark.core.pdf_build import PageSpec, Table, TextBox, build_pdf
-from pdf_extractor_spark.core.pdf_parse import (
-    PdfParseError,
-    extract_pdf_text,
-    parse_pdf,
-)
+from pdf_extractor_spark.core.pdf_parse import PdfParseError, parse_pdf
 from pdf_extractor_spark.corpus import make_pdf_bytes
+from tests.helpers import extract_pdf_text
 
 
 def test_single_textbox_roundtrip():
@@ -187,10 +184,7 @@ def test_tj_kern_word_spacing():
     spaces (round 4; verified against real pdfTeX documents), while small
     typographic kerns like the builder's intra-word -20 stay fused."""
     from pdf_extractor_spark.core.pdf_build import PageSpec, TextBox, build_pdf
-    from pdf_extractor_spark.core.pdf_parse import (
-        _split_tj_array,
-        extract_pdf_text,
-    )
+    from pdf_extractor_spark.core.pdf_parse import _split_tj_array
 
     # unit semantics: threshold, no leading/trailing/empty segments; show()
     # joins the RAW segments with spaces only after per-segment font decode

@@ -1,92 +1,11 @@
-"""Sources: distributed fetcher (S2 downloader analogue) and manifest reader
-(S4) — retry/backoff, validity quarantine, delimiter sniffing, id fallback."""
+"""Sources: the JSONL documents source (corrupt-line quarantine, format
+sniffing), the password manifest's delimiter sniff and the layout
+migration CLI."""
 
-import base64
-
-from pdf_extractor_spark.corpus import gen_documents
-from pdf_extractor_spark.sources.fetch import (
-    fetch_documents,
-    local_file_transport,
-    pdf_validity_gate,
-)
-from pdf_extractor_spark.sources.manifest import read_manifest, sniff_delimiter
-
-_FAIL_COUNTS: dict[str, int] = {}
+from pdf_extractor_spark.job import sniff_delimiter
 
 
-def flaky_transport(url: str, timeout_s: float) -> bytes:
-    """Fails twice per URL, then succeeds — exercises the retry loop.
-
-    Module-level state is per Python worker; the test uses one URL per task
-    at local parallelism so each URL's counter lives in exactly one worker.
-    """
-    n = _FAIL_COUNTS.get(url, 0)
-    if n < 2:
-        _FAIL_COUNTS[url] = n + 1
-        raise OSError(f"transient #{n + 1}")
-    return local_file_transport(url, timeout_s)
-
-
-def test_fetch_ok_failed_invalid(spark, tmp_path):
-    pdf_b64 = next(
-        s["text"] for s in gen_documents(1, seed=3, profile="heavy")[0]["spans"]
-        if s["kind"] == "pdf"
-    )
-    good = tmp_path / "good.pdf"
-    good.write_bytes(base64.b64decode(pdf_b64))
-    bad = tmp_path / "bad.pdf"
-    bad.write_bytes(b"this is not a pdf at all")
-
-    manifest = spark.createDataFrame(
-        [
-            ("d1", f"file://{good}"),
-            ("d2", f"file://{bad}"),
-            ("d3", f"file://{tmp_path}/missing.pdf"),
-        ],
-        "doc_id string, url string",
-    )
-    rows = {r["doc_id"]: r for r in fetch_documents(manifest).collect()}
-
-    assert rows["d1"]["status"] == "ok"
-    assert rows["d1"]["attempts"] == 1
-    assert rows["d1"]["n_bytes"] == good.stat().st_size
-    assert pdf_validity_gate(bytes(rows["d1"]["content"]))
-
-    assert rows["d2"]["status"] == "invalid"  # gate rejected, content dropped
-    assert rows["d2"]["content"] is None
-    assert rows["d2"]["n_bytes"] == len(b"this is not a pdf at all")
-
-    assert rows["d3"]["status"] == "failed"
-    assert rows["d3"]["attempts"] == 3  # exhausted MAX_RETRIES
-    assert rows["d3"]["content"] is None and "missing.pdf" in rows["d3"]["error"]
-
-
-def test_fetch_retry_then_success(spark, tmp_path):
-    p = tmp_path / "doc.pdf"
-    p.write_bytes(b"%PDF-1.4 payload endobj")
-    manifest = spark.createDataFrame([("d1", f"file://{p}")], "doc_id string, url string")
-    [row] = fetch_documents(
-        manifest, transport=flaky_transport, backoff_range_s=(0.0, 0.001)
-    ).collect()
-    assert row["status"] == "ok"
-    assert row["attempts"] == 3  # two transient failures, third attempt wins
-
-
-def test_fetched_quarantine_antijoin(spark, tmp_path):
-    """The retry-rematch pattern (J1): failures anti-join back to the manifest."""
-    p = tmp_path / "ok.pdf"
-    p.write_bytes(b"%PDF-1.4 x endobj")
-    manifest = spark.createDataFrame(
-        [("a", f"file://{p}"), ("b", f"file://{tmp_path}/nope.pdf")],
-        "doc_id string, url string",
-    )
-    fetched = fetch_documents(manifest)
-    done = fetched.where("status = 'ok'").select("doc_id")
-    retry = manifest.join(done, "doc_id", "left_anti")
-    assert [r["doc_id"] for r in retry.collect()] == ["b"]
-
-
-def test_manifest_reader_delimiters(spark, tmp_path):
+def test_manifest_reader_delimiters(tmp_path):
     for name, delim in (("comma", ","), ("semi", ";"), ("tab", "\t")):
         p = tmp_path / f"m_{name}.csv"
         p.write_text(
@@ -95,134 +14,6 @@ def test_manifest_reader_delimiters(spark, tmp_path):
             f"x2{delim}http://h/b.pdf{delim}2\n"
         )
         assert sniff_delimiter(str(p)) == delim
-        df = read_manifest(spark, str(p), url_col="the_url", id_col="id")
-        assert df.columns == ["doc_id", "url"]
-        got = sorted(map(tuple, df.collect()))
-        assert got == [("x1", "http://h/a.pdf"), ("x2", "http://h/b.pdf")]
-
-
-def test_manifest_reader_id_fallback(spark, tmp_path):
-    p = tmp_path / "m.csv"
-    p.write_text("the_url\nhttp://h/path/report.v2.pdf?x=1\nhttp://h/plain\n")
-    df = read_manifest(spark, str(p), url_col="the_url")
-    got = sorted(map(tuple, df.collect()))
-    assert got == [
-        ("plain", "http://h/plain"),
-        ("report.v2", "http://h/path/report.v2.pdf?x=1"),
-    ]
-
-
-def _write_xlsx(path, header, rows):
-    """Minimal SpreadsheetML fixture: shared strings for text, inline
-    numbers, one deliberately sparse row (missing B cell)."""
-    import zipfile
-
-    strings = []
-
-    def sref(s):
-        if s not in strings:
-            strings.append(s)
-        return strings.index(s)
-
-    def cell(ref, v):
-        if isinstance(v, (int, float)):
-            return f'<c r="{ref}"><v>{v}</v></c>'
-        return f'<c r="{ref}" t="s"><v>{sref(v)}</v></c>'
-
-    cols = "ABCDEFG"
-    body = []
-    for rix, row in enumerate([header] + rows, start=1):
-        cells = "".join(
-            cell(f"{cols[cix]}{rix}", v)
-            for cix, v in enumerate(row)
-            if v is not None  # None = omitted cell (sparse row)
-        )
-        body.append(f'<row r="{rix}">{cells}</row>')
-    ns = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
-    sheet = f'<?xml version="1.0"?><worksheet {ns}><sheetData>{"".join(body)}</sheetData></worksheet>'
-    sst = (
-        f'<?xml version="1.0"?><sst {ns} count="{len(strings)}">'
-        + "".join(f"<si><t>{s}</t></si>" for s in strings)
-        + "</sst>"
-    )
-    with zipfile.ZipFile(path, "w") as z:
-        z.writestr("xl/workbook.xml", f'<?xml version="1.0"?><workbook {ns}/>')
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        z.writestr("xl/sharedStrings.xml", sst)
-
-
-def test_xlsx_manifest_roundtrip(spark, tmp_path):
-    """S4 Excel branch (helper.py:72-98): stdlib xlsx reader -> all-string
-    DataFrame -> P7 (id_col, url_col) projection."""
-    from pdf_extractor_spark.sources.manifest import read_manifest
-
-    path = str(tmp_path / "manifest.xlsx")
-    _write_xlsx(
-        path,
-        ["doc", "url", "priority"],
-        [
-            ["d1", "https://x.test/a/report.v2.pdf", 3],
-            ["d2", "https://x.test/b/page.html?q=1", 1.5],
-            ["d3", None, 7],  # sparse row: missing url cell -> ""
-        ],
-    )
-    df = read_manifest(spark, path, url_col="url", id_col="doc")
-    got = {r["doc_id"]: r["url"] for r in df.collect()}
-    assert got == {
-        "d1": "https://x.test/a/report.v2.pdf",
-        "d2": "https://x.test/b/page.html?q=1",
-        "d3": "",
-    }
-
-    # filename-derived ids (no id_col): basename stem of the URL path
-    df2 = read_manifest(spark, path, url_col="url")
-    ids = {r["doc_id"] for r in df2.collect()}
-    assert "report.v2" in ids and "page" in ids
-
-    # numeric cells survive as lexical strings under the all-string contract
-    from pdf_extractor_spark.sources.xlsx import read_xlsx_rows
-
-    rows = read_xlsx_rows(path)
-    assert rows[0] == ["doc", "url", "priority"]
-    assert rows[1][2] == "3" and rows[2][2] == "1.5"
-    assert rows[3] == ["d3", "", "7"]
-
-
-def test_xlsx_unknown_column_and_bad_file(spark, tmp_path):
-    import pytest as _pytest
-
-    from pdf_extractor_spark.sources.manifest import read_manifest
-    from pdf_extractor_spark.sources.xlsx import XlsxError, read_xlsx_rows
-
-    path = str(tmp_path / "m.xlsx")
-    _write_xlsx(path, ["a", "b"], [["1", "2"]])
-    with _pytest.raises(ValueError, match="url column"):
-        read_manifest(spark, path, url_col="nope")
-
-    bad = tmp_path / "bad.xlsx"
-    bad.write_bytes(b"this is not a zip")
-    with _pytest.raises(XlsxError):
-        read_xlsx_rows(str(bad))
-
-
-def test_xlsx_data_row_wider_than_header(spark, tmp_path):
-    """A data row wider than the header must not produce unaddressable ''
-    columns: overflow header cells are named _c<N> (ADVICE r03)."""
-    from pdf_extractor_spark.sources.manifest import read_manifest
-
-    path = str(tmp_path / "wide.xlsx")
-    _write_xlsx(
-        path,
-        ["doc", "url"],
-        [["d1", "http://h/a.pdf", "stray-extra-cell"]],
-    )
-    df = read_manifest(spark, path, url_col="url", id_col="doc")
-    assert [tuple(r) for r in df.collect()] == [("d1", "http://h/a.pdf")]
-    # the overflow column is present and addressable on the raw frame
-    from pdf_extractor_spark.sources.xlsx import read_xlsx_rows
-
-    rows = read_xlsx_rows(path)
-    assert rows[0] == ["doc", "url", ""] and rows[1][2] == "stray-extra-cell"
 
 
 def test_jsonl_corrupt_lines_quarantined(spark):

@@ -10,6 +10,7 @@ from pdf_extractor_spark.core.extractor import extract_document
 from pdf_extractor_spark.corpus import corpus_df, gen_documents
 from pdf_extractor_spark.spark import lineage as L
 from pdf_extractor_spark.spark.pipeline import extract_documents
+from tests.helpers import LINEAGE_COLS, read_lineage
 
 N_DOCS = 150
 
@@ -193,7 +194,7 @@ def test_kill_and_resume(spark, tmp_path):
     assert report3.chunks_committed == 0 and report3.parts_skipped == 16
 
     # lineage accounting matches data
-    lin = log.read_lineage(spark)
+    lin = read_lineage(log, spark)
     total = lin.groupBy().sum("docs_done").collect()[0][0]
     assert total == 120
 
@@ -201,15 +202,15 @@ def test_kill_and_resume(spark, tmp_path):
 def test_snapshot_time_travel(spark, tmp_path):
     """as_of reads pin the Iceberg VERSION AS OF contract against the REAL
     writer: snapshot N sees exactly chunks 0..N, later commits and
-    uncommitted data dirs stay invisible, and the snapshot list exposes one
-    metadata row per commit."""
+    uncommitted data dirs stay invisible, and the committed markers list
+    one row per commit."""
     root = str(tmp_path / "ttlog")
     docs = corpus_df(spark, 60, seed=11)
     log = L.CommitLog(root)
     L.run_extraction(spark, docs, log, n_parts=8, parts_per_chunk=3)
-    snaps = log.snapshots()
-    assert [s["snapshot_id"] for s in snaps] == [0, 1, 2]
-    assert all(s["n_part_ids"] == 3 or s["n_part_ids"] == 2 for s in snaps)
+    snaps = log.committed_chunks()
+    assert [s["chunk_id"] for s in snaps] == [0, 1, 2]
+    assert all(len(s["part_ids"]) == 3 or len(s["part_ids"]) == 2 for s in snaps)
 
     full = log.read_extracted(spark).count()
     seen = [log.read_extracted(spark, as_of=n).count() for n in range(3)]
@@ -239,7 +240,7 @@ def test_snapshot_time_travel(spark, tmp_path):
     )
     assert log.read_extracted(spark).count() == full
     # lineage time travel follows the same markers
-    assert log.read_lineage(spark, as_of=0).count() == 3
+    assert read_lineage(log, spark, as_of=0).count() == 3
 
     # incremental scan: (0, 2] is exactly the rows snapshots 1..2 added
     inc = {r["doc_id"] for r in log.read_incremental(spark, after=0).collect()}
@@ -276,7 +277,7 @@ def test_compaction_and_expiry(spark, tmp_path):
 
     before = span_map()
     files_before = n_data_files()
-    lineage_docs = log.read_lineage(spark).groupBy().sum("docs_done").collect()[0][0]
+    lineage_docs = read_lineage(log, spark).groupBy().sum("docs_done").collect()[0][0]
 
     new_id = L.compact_chunks(spark, log)
     assert new_id == 4
@@ -286,16 +287,16 @@ def test_compaction_and_expiry(spark, tmp_path):
     assert files_before > 8
     assert n_data_files(f"chunk={new_id:06d}") == 8
     # lineage equivalence (per-part totals survive the rewrite)
-    assert log.read_lineage(spark).groupBy().sum("docs_done").collect()[0][0] == lineage_docs
+    assert read_lineage(log, spark).groupBy().sum("docs_done").collect()[0][0] == lineage_docs
     # ...but not per-commit history: each compacted part reads back as one
     # row stamped with the compaction's commit time (the replaced chunks'
     # times stay in their markers)
     from pyspark.sql import functions as F
 
-    stamps = log.read_lineage(spark).select(F.col("committed_at").cast("double")).collect()
+    stamps = read_lineage(log, spark).select(F.col("committed_at").cast("double")).collect()
     assert len(stamps) == 8
-    assert all(abs(r[0] - log.snapshots()[-1]["committed_at"]) < 1e-5 for r in stamps)
-    assert len({s["committed_at"] for s in log.snapshots()}) == 5
+    assert all(abs(r[0] - log.committed_chunks()[-1]["committed_at"]) < 1e-5 for r in stamps)
+    assert len({s["committed_at"] for s in log.committed_chunks()}) == 5
     # time travel BEFORE the compaction still resolves to the originals
     assert {
         r["doc_id"] for r in log.read_extracted(spark, as_of=0).collect()
@@ -353,7 +354,7 @@ def test_expire_snapshots_ttl(spark, tmp_path):
     assert os.path.isdir(os.path.join(root, "data", "chunk=000001"))
     # current reads are byte-identical; markers remain auditable
     assert span_map() == before
-    assert [s["snapshot_id"] for s in log.snapshots()] == [0, 1, 2]
+    assert [s["chunk_id"] for s in log.committed_chunks()] == [0, 1, 2]
     # idempotent: a second sweep finds nothing to do
     assert log.expire_snapshots(older_than=time.time() + 60) == []
 
@@ -410,7 +411,7 @@ def test_reextract_parts_overwrite(spark, tmp_path):
     assert old == exp_v1
 
     # lineage rows follow the same per-part resolution (one row per part)
-    lin = log.read_lineage(spark)
+    lin = read_lineage(log, spark)
     assert lin.count() == 8
     assert lin.select("part_id").distinct().count() == 8
 
@@ -439,14 +440,15 @@ def test_lineage_schema(spark, tmp_path):
     root = str(tmp_path / "cl2")
     log = L.CommitLog(root)
     L.run_extraction(spark, corpus_df(spark, 30), log, n_parts=4, parts_per_chunk=4)
-    lin = log.read_lineage(spark)
-    assert set(lin.columns) == set(L.LINEAGE_COLS)
+    lin = read_lineage(log, spark)
+    assert set(lin.columns) == set(LINEAGE_COLS)
     assert lin.filter("status not in ('success','error','skip')").count() == 0
 
 
-def test_preview_point_lookup(spark, tmp_path):
+def test_preview_point_lookup(spark, tmp_path, capsys):
     """§3.3 preview path: point query over a committed run, with and without
-    part_id pruning; missing doc/page -> None."""
+    part_id pruning; missing doc/page -> None. ``job.py show`` prints the
+    same spans and exits 1 on a missing doc or page."""
     from pdf_extractor_spark.corpus import corpus_df
     from pdf_extractor_spark.core.extractor import extract_document
     from pdf_extractor_spark.corpus import gen_documents
@@ -463,7 +465,7 @@ def test_preview_point_lookup(spark, tmp_path):
 
     got = [
         (r["kind"], r["text"], r["media_ref"], r["offset"])
-        for r in doc_spans(spark, log, target["doc_id"], n_parts=16).collect()
+        for r in doc_spans(spark, log, target["doc_id"]).collect()
     ]
     assert got == want
 
@@ -475,11 +477,11 @@ def test_preview_point_lookup(spark, tmp_path):
     _sys.path.insert(0, str(_Path(__file__).resolve().parent.parent / "tools"))
     from plan_audit import plan_of
 
-    plan = plan_of(doc_spans(spark, log, target["doc_id"], n_parts=16))
+    plan = plan_of(doc_spans(spark, log, target["doc_id"]))
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "(part_id" in pf and "(chunk" in pf, plan
 
-    page1 = read_page(spark, log, target["doc_id"], 1, n_parts=16)
+    page1 = read_page(spark, log, target["doc_id"], 1)
     assert page1 is not None
     assert page1["content"] == want[0][1]
     assert 0.0 <= page1["scores"]["parse_score"] <= 1.0
@@ -487,6 +489,31 @@ def test_preview_point_lookup(spark, tmp_path):
 
     assert read_page(spark, log, target["doc_id"], len(want) + 5) is None
     assert read_page(spark, log, "no-such-doc", 1) is None
+
+    import json
+
+    from pdf_extractor_spark.job import main
+
+    def show(*argv):
+        code = main(["show", log.root, *argv])
+        out = capsys.readouterr().out.splitlines()
+        spans = [json.loads(l.removeprefix("SPAN ")) for l in out if l.startswith("SPAN ")]
+        return code, out, [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+
+    code, out, spans = show(target["doc_id"])
+    assert code == 0 and spans == want
+    doc = json.loads(out[0].removeprefix("DOC "))
+    res = extract_document(target["spans"])
+    assert sorted(doc) == ["doc_id", "duration_ms", "pages_parsed", "parse_failures",
+                           "part_id", "scores", "spans_emitted"]
+    assert (doc["pages_parsed"], doc["spans_emitted"], doc["parse_failures"]) == (
+        res.pages_parsed, len(want), res.parse_failures)
+    assert doc["scores"] == page1["scores"]
+    assert show(target["doc_id"], "--page", "1")[2] == want[:1]
+    assert show(target["doc_id"], "--page", str(len(want) + 5))[0] == 1
+    assert show("no-such-doc")[0] == 1
+    # before the first commit the doc does not exist yet
+    assert show(target["doc_id"], "--as-of", "-1")[0] == 1
 
 
 def test_preview_duplicate_doc_resolves_to_canonical_copy(spark, tmp_path):
@@ -546,13 +573,13 @@ def test_preview_duplicate_doc_resolves_to_canonical_copy(spark, tmp_path):
 
 
 def test_preview_n_parts_recorded_and_validated(spark, tmp_path):
-    """ADVICE r01: the writer's n_parts is recorded in the commit log, the
-    reader uses it without being told, and a mismatched caller value fails
-    loudly instead of silently pruning the doc away."""
+    """ADVICE r01: the writer's n_parts is recorded in the commit log and
+    the reader uses it without being told (no caller value exists to
+    mismatch it and silently prune the doc away)."""
     from pdf_extractor_spark.corpus import corpus_df, gen_documents
     from pdf_extractor_spark.core.extractor import extract_document
     from pdf_extractor_spark.spark.lineage import CommitLog, run_extraction
-    from pdf_extractor_spark.spark.preview import doc_spans, read_page
+    from pdf_extractor_spark.spark.preview import doc_spans
 
     log = CommitLog(str(tmp_path / "log"))
     run_extraction(spark, corpus_df(spark, 30, seed=9), log, n_parts=16,
@@ -575,11 +602,6 @@ def test_preview_n_parts_recorded_and_validated(spark, tmp_path):
     assert "(part_id" in pf
     got = [(r["kind"], r["text"], r["media_ref"], r["offset"]) for r in df.collect()]
     assert got == want
-
-    with pytest.raises(ValueError, match="does not match the writer"):
-        doc_spans(spark, log, target["doc_id"], n_parts=8)
-    with pytest.raises(ValueError, match="does not match the writer"):
-        read_page(spark, log, target["doc_id"], 1, n_parts=64)
 
 
 def test_export_markdown_zip(spark, tmp_path):

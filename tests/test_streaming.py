@@ -5,6 +5,7 @@ from pdf_extractor_spark.core.extractor import extract_document
 from pdf_extractor_spark.corpus import gen_documents
 from pdf_extractor_spark.spark.lineage import CommitLog
 from pdf_extractor_spark.streaming.ingest import start_extraction_stream
+from tests.helpers import read_lineage
 
 
 def _write_drop(spark, rows, path):
@@ -89,7 +90,7 @@ def test_streaming_matches_batch_oracle(spark, tmp_path):
     assert log.read_extracted(spark).count() == 70
 
     # the per-part lineage rollup accounts for every doc
-    lineage = log.read_lineage(spark).collect()
+    lineage = read_lineage(log, spark).collect()
     assert sum(r["docs_done"] for r in lineage) == 70
 
 
