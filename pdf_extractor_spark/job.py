@@ -78,10 +78,12 @@ def build_parser() -> argparse.ArgumentParser:
                         help="documents input format; auto sniffs the path and "
                              "REFUSES a directory mixing both kinds")
     ingest.add_argument("--num-partitions", type=_positive_int, default=None,
-                        help="parse-stage tasks per chunk (default: one per "
-                             "part, or the core count if a chunk has fewer "
-                             "parts); below the chunk's part count whole parts "
-                             "are grouped, above it each part is split")
+                        help="parse-stage tasks per chunk (default: the core "
+                             "count — whole parts packed by size when a chunk "
+                             "has more parts than cores, each part split when "
+                             "it has fewer; watch runs one task per part); "
+                             "below the chunk's part count whole parts are "
+                             "grouped, above it each part is split")
     ingest.add_argument("--passwords", type=_passwords, default=(),
                         metavar="PW[,PW...]",
                         help="candidate passwords for encrypted PDFs, tried "
@@ -119,9 +121,9 @@ def build_parser() -> argparse.ArgumentParser:
     sp = stage("extract", "resumable batch extraction into a commit-log table",
                _extract, io, ingest, batch, n_parts)
     sp.add_argument("--parts-per-chunk", type=_positive_int, default=64,
-                    help="part_ids per committed chunk; the parse stage runs "
-                         "one task per part, so set it to at least 2x the "
-                         "executor cores")
+                    help="part_ids per committed chunk: the work at risk "
+                         "between commits; the parse stage runs one wave of "
+                         "about one task per core whatever its value")
     sp = stage("refresh", "re-extract the named parts in place (dynamic-"
                "partition overwrite)", _extract, io, ingest, batch)
     sp.add_argument("--parts", type=_part_ids, required=True,

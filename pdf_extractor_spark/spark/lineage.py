@@ -74,7 +74,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import balance_partitions, extract_documents
+from .pipeline import (
+    assign_part_id,
+    balance_partitions,
+    extract_documents,
+    in_parts,
+    part_bytes,
+    sized_wave,
+)
 
 
 @dataclass
@@ -625,7 +632,6 @@ class CommitLog:
         schema,
         whole: list[int],
         partial: list[tuple[int, list[int]]],
-        keep_chunk: bool = False,
     ):
         """ONE parquet scan over ``data/`` resolving a snapshot's chunk
         set declaratively: fully-owned chunks via ``chunk IN (...)``,
@@ -637,8 +643,7 @@ class CommitLog:
         scanned-and-dropped — and plan build stays flat in chunk count
         (the per-chunk unionByName it replaced built plans superlinearly:
         7.5 / 38 / 156 s at 200 / 1000 / 2000 chunks,
-        tools/bench_commitlog.py). ``keep_chunk`` keeps the ``chunk``
-        column."""
+        tools/bench_commitlog.py)."""
         # explicit schema: a committed chunk whose parts got zero docs
         # holds only _SUCCESS, and schema inference over an all-empty
         # table would raise. `chunk` is appended by partition discovery;
@@ -646,15 +651,13 @@ class CommitLog:
         # there is nothing to read either way.
         df = spark.read.schema(schema).parquet(self.data_dir) if whole or partial else None
         if df is None or "chunk" not in df.columns:
-            df = spark.createDataFrame([], schema)
-            return df.withColumn("chunk", F.lit(None).cast("int")) if keep_chunk else df
+            return spark.createDataFrame([], schema)
         cond = F.col("chunk").isin(whole) if whole else F.lit(False)
         for cid, owned in partial:
             cond = cond | (
                 (F.col("chunk") == cid) & F.col("part_id").isin(owned)
             )
-        df = df.where(cond)
-        return df if keep_chunk else df.drop("chunk")
+        return df.where(cond).drop("chunk")
 
     def _visible_split(
         self,
@@ -813,23 +816,20 @@ def resume_filter(
 ) -> DataFrame:
     """Drop documents whose logical partition is already committed.
 
-    The left-anti join from SURVEY.md §2.2-P3 (the reference's
-    skip-if-complete check, helper.py:51-70, lifted to partition granularity).
-    The committed set is tiny (one int per partition) so Spark broadcasts it —
-    no shuffle of the 10^12-row input. ``keep_cols`` preserves extra input
-    columns through the early projection (e.g. a per-doc password column).
+    The anti-join from SURVEY.md §2.2-P3 (the reference's skip-if-complete
+    check, helper.py:51-70, lifted to partition granularity) as a
+    ``part_id NOT IN (...)`` predicate: the committed set is tiny (one int
+    per partition), so it is one SQL literal built in one py4j call — no
+    join, no broadcast and no Python-side relation (a broadcast
+    ``createDataFrame`` of the set cost a Python job on every resumed run).
+    ``keep_cols`` preserves extra input columns through the early
+    projection (e.g. a per-doc password column).
     """
-    from .pipeline import assign_part_id
-
-    spark = documents.sparkSession
     done = sorted(log.committed_part_ids())
     docs = assign_part_id(
         documents.select("doc_id", "spans", *keep_cols), n_parts
     )
-    if not done:
-        return docs
-    done_df = spark.createDataFrame([(p,) for p in done], "part_id int")
-    return docs.join(F.broadcast(done_df), "part_id", "left_anti")
+    return docs.where(~in_parts(done)) if done else docs
 
 
 def observed_rollup(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -1027,7 +1027,9 @@ def reextract_parts(
     reader ever sees a mix of old and new rows for one partition, and time
     travel to a pre-overwrite snapshot still reads the original extraction.
     Unlisted partitions are untouched; an empty ``parts`` list commits
-    nothing and launches no job.
+    nothing and launches no job. More parts than cores are sized first
+    and parsed in one wave of ``defaultParallelism`` tasks (see
+    :func:`run_extraction`); ``num_partitions`` overrides the task count.
     """
     n_parts = log.n_parts()
     if n_parts is None:
@@ -1046,18 +1048,27 @@ def reextract_parts(
     keep_cols = ("doc_id", "spans") + (
         () if password_col is None else (password_col,)
     )
-    extracted = extract_documents(
-        documents.select(*keep_cols),
-        n_parts=n_parts,
-        num_partitions=num_partitions,
-        passwords=passwords,
-        password_col=password_col,
-        parts=parts,
-    )
-    chunk_id = log.reserve_chunk_id()
-    metrics = _write_chunk(
-        spark, log, extracted, chunk_id, parts, n_parts, overwrite=True
-    )
+    docs = documents.select(*keep_cols)
+    sized = sized_wave(spark, len(parts), num_partitions)
+    if sized:
+        docs = assign_part_id(docs, n_parts).where(in_parts(parts)).persist()
+    try:
+        extracted = extract_documents(
+            docs,
+            n_parts=n_parts,
+            num_partitions=num_partitions,
+            passwords=passwords,
+            password_col=password_col,
+            parts=parts,
+            sizes=part_bytes(docs) if sized else None,
+        )
+        chunk_id = log.reserve_chunk_id()
+        metrics = _write_chunk(
+            spark, log, extracted, chunk_id, parts, n_parts, overwrite=True
+        )
+    finally:
+        if sized:
+            docs.unpersist()
     return RunReport(1, len(parts), metrics["docs"], 0)
 
 
@@ -1075,10 +1086,18 @@ def run_extraction(
     """Resumable driver: process uncommitted part_ids in chunk-sized jobs.
 
     Each chunk = one Spark job parsing and writing its spans parquet (after
-    the exchange's map stage), then an atomic commit marker. ``fail_after_chunks`` injects a crash for the
-    kill-and-resume test. A chunk's parse stage runs one Python task per
-    part (``pipeline.balance_partitions``), so ``parts_per_chunk`` is the
-    chunk's parse parallelism: set it to at least 2x the executor cores.
+    the exchange's map stage), then an atomic commit marker.
+    ``fail_after_chunks`` injects a crash for the kill-and-resume test.
+
+    Task count: a chunk with more parts than cores parses in ONE wave of
+    ``defaultParallelism`` Python tasks, whole parts packed by payload
+    bytes (``pipeline.balance_partitions``). The bytes come from one
+    JVM-only aggregation per call over the resume-filtered input
+    (``pipeline.part_bytes``), which is persisted because the sizing and
+    the chunks all read it. A chunk with no more parts than cores (the
+    10^12-doc regime, where ``parts_per_chunk`` is far below the executor
+    core count) pays no sizing pass and splits its parts over the cores.
+    So ``parts_per_chunk`` is only the commit (work-at-risk) granularity;
     ``num_partitions`` overrides the task count.
 
     Safe under CONCURRENT writers on the same table root: chunk ids are
@@ -1118,16 +1137,18 @@ def run_extraction(
         n_parts,
         keep_cols=() if password_col is None else (password_col,),
     )
-    multi_chunk = len(todo) > parts_per_chunk
-    if multi_chunk:
-        # Each chunk filters the same input; persist once instead of
-        # re-scanning the corpus per chunk (MEMORY_AND_DISK, spills).
+    sized = sized_wave(spark, min(parts_per_chunk, len(todo)), num_partitions)
+    reread = sized or len(todo) > parts_per_chunk
+    if reread:
+        # The sizing pass and every chunk read the same input; persist once
+        # instead of re-scanning the corpus (MEMORY_AND_DISK, spills).
         # At true 10^12-doc scale this trades off differently: there the
         # input is an Iceberg table and each chunk's scan is partition-pruned
         # by storing part_id as a partition column, so nothing is cached —
         # parts_per_chunk then only bounds the work at risk between commits.
         docs = docs.persist()
     try:
+        sizes = part_bytes(docs) if sized else None
         pending = list(todo)
         while pending:
             # re-read the committed set: a concurrent writer may have
@@ -1147,6 +1168,7 @@ def run_extraction(
                 passwords=passwords,
                 password_col=password_col,
                 parts=chunk_parts,
+                sizes=sizes,
             )
             chunk_id = log.reserve_chunk_id()
             try:
@@ -1169,6 +1191,6 @@ def run_extraction(
             ):
                 raise RuntimeError("injected failure for kill-and-resume test")
     finally:
-        if multi_chunk:
+        if reread:
             docs.unpersist()
     return report

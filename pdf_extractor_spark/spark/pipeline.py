@@ -3,7 +3,7 @@
 Replaces the reference's sequential driver loop (``dashboard.py:588`` — one
 file at a time, no file-level parallelism) with a declarative plan:
 
-    documents --(part-keyed exchange: one task per part)--> mapInArrow(extract)
+    documents --(part-keyed exchange: whole parts per task)--> mapInArrow(extract)
               --> extracted spans + per-doc metrics --> committed parquet +
               an observed per-chunk rollup (see lineage.py)
 
@@ -16,31 +16,33 @@ Scale notes (100 TB / 1000 executors):
 - ``part_id`` is a *logical* processing-partition id, a pure function of
   doc_id — stable across cluster sizes and reruns, so resume anti-joins are
   meaningful regardless of physical partitioning.
-- The parse exchange routes each row to the task that owns its part
-  (``balance_partitions``): a chunk of k parts, k at least the core count,
-  runs exactly k Python tasks and commits one parquet file per part.
-  Python tasks are few and large because each still has a fixed cost
-  whatever its size (~0.07 core-s once the worker wrappers pin the
-  launch archives, see ``balance_partitions``) and one file per part
-  keeps the commit and every derived scan small, so ``parts_per_chunk``
-  is a chunk's parse parallelism — set it to at least 2x the executor
-  cores. A chunk with fewer parts than cores splits each part over
-  several tasks instead of leaving cores idle; an explicit
+- The parse exchange routes each row to a task that holds its whole part
+  (``balance_partitions``), so every committed part is one parquet file.
+  A chunk with more parts than cores runs ONE wave of ``defaultParallelism``
+  Python tasks, its parts packed by measured payload bytes (largest part
+  onto the lightest task); a chunk with no more parts than cores splits
+  each part over several tasks instead of leaving cores idle; an explicit
   ``num_partitions`` sets the task count (whole parts grouped below
-  ``len(parts)``, parts split above it).
-- Skew: ``part_id`` is itself a per-document hash, so the exchange is still
-  a uniform per-document scatter that spreads the ~1% giant-PDF tail across
-  tasks instead of serializing one straggler (SURVEY.md §4 item 1; see
-  ``balance_partitions`` for why the earlier size-salted RANGE repartition
-  was measurably wrong on true byte skew). There is no join here, so AQE
-  skew-join can't help.
+  ``len(parts)``, parts split above it). Python tasks are few and large
+  because each has a fixed cost whatever its size (~0.09 core-s on a
+  4-CPU host, see ``balance_partitions``). ``parts_per_chunk`` is
+  therefore only the commit (work-at-risk) granularity, not the parse
+  parallelism.
+- Skew: ``part_id`` is itself a per-document hash, so a part is a uniform
+  sample of the corpus, and the size-balanced packing puts the parts that
+  drew the ~1% giant-PDF tail on different cores instead of serializing
+  one straggler (SURVEY.md §4 item 1; see ``balance_partitions`` for why
+  the earlier size-salted RANGE repartition was measurably wrong on true
+  byte skew). There is no join here, so AQE skew-join can't help.
 - The extraction stage has NO shuffle other than that single explicit
   exchange; parquet scan prunes to (doc_id, spans, part-key columns) only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import heapq
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -94,56 +96,123 @@ def assign_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
 
 
+def int_list(ids) -> str:
+    """``ids`` as one SQL literal list body (``3,5,7``): a literal list
+    built by ``F.expr`` costs one py4j call, where ``isin`` or
+    ``F.array(*map(F.lit, ...))`` pays one per value (16,384 part ids:
+    6-7 s of plan build through ``isin``, under 0.5 s as one literal)."""
+    return ",".join(str(int(i)) for i in ids)
+
+
+def in_parts(parts) -> Column:
+    """``part_id IN (parts)`` as one SQL literal (see :func:`int_list`)."""
+    parts = list(parts)
+    return F.expr(f"part_id IN ({int_list(parts)})") if parts else F.lit(False)
+
+
+def lpt_bins(sizes, n_bins: int) -> list[int]:
+    """Longest-processing-time packing: the bin of each item of ``sizes``.
+
+    Items go largest first (ties by position) onto the currently lightest
+    bin (ties by bin index), so the result is deterministic and the
+    heaviest bin holds at most ``sum(sizes) / n_bins + max(sizes)``."""
+    loads = [(0, b) for b in range(n_bins)]
+    out = [0] * len(sizes)
+    for i in sorted(range(len(sizes)), key=lambda i: (-sizes[i], i)):
+        load, b = heapq.heappop(loads)
+        out[i] = b
+        heapq.heappush(loads, (load + sizes[i], b))
+    return out
+
+
+def sized_wave(spark, n_chunk_parts: int, num_partitions: int | None) -> bool:
+    """Whether a chunk of ``n_chunk_parts`` parts runs as one size-balanced
+    wave (:func:`balance_partitions`): only with more parts than cores and
+    no explicit task count, so a chunk that fits the cores pays no sizing
+    pass (:func:`part_bytes`)."""
+    return num_partitions is None and n_chunk_parts > spark.sparkContext.defaultParallelism
+
+
+def part_bytes(df: DataFrame) -> dict[int, int]:
+    """Span payload bytes per ``part_id`` of ``df`` (which carries
+    ``part_id``): one JVM-only aggregation, no Python task. The payload is
+    the span struct's second field, ``text`` for ingest rows and
+    ``payload`` for the staging table."""
+    payload = df.schema["spans"].dataType.elementType.fieldNames()[1]
+    n_bytes = F.expr(
+        f"aggregate(spans, 0L, (a, s) -> a + coalesce(octet_length(s.{payload}), 0))"
+    )
+    rows = df.groupBy("part_id").agg(F.sum(n_bytes).alias("b")).collect()
+    return {r["part_id"]: r["b"] or 0 for r in rows}
+
+
 def balance_partitions(
-    df: DataFrame, parts, num_partitions: int | None = None
+    df: DataFrame,
+    parts,
+    num_partitions: int | None = None,
+    sizes: dict[int, int] | None = None,
 ) -> DataFrame:
     """Physical exchange before the parse stage: whole parts per task.
 
     ``df`` carries ``part_id`` (``assign_part_id``); ``parts`` lists the
-    part ids being extracted. Each row goes to its part's dense position in
-    that list (``array_position(array(parts), part_id) - 1``) through
-    ``repartitionById``. ``num_partitions`` is the parse task count, by
-    default ``max(len(parts), defaultParallelism)``:
+    part ids being extracted. Each row goes to a task through
+    ``repartitionById``; the task count is ``num_partitions`` if given,
+    else ``defaultParallelism`` when ``sizes`` (payload bytes by part,
+    :func:`part_bytes`) are given and there are more parts than that,
+    else ``max(len(parts), defaultParallelism)``:
 
-    - equal to ``len(parts)``: one task per part, so each task holds one
-      whole part and writes one parquet file in its part directory;
-    - below it: whole parts grouped by ``slot % num_partitions``;
-    - above it (fewer parts than cores, e.g. a one-part refresh): each part
-      is split into ``ceil(num_partitions / len(parts))`` sub-slots by a
-      second doc_id hash, so no task mixes parts and the cores stay busy.
+    - sized, more parts than cores: ONE wave of ``defaultParallelism``
+      tasks, whole parts packed by :func:`lpt_bins` over their bytes;
+    - ``len(parts)`` tasks: one task per part, at the part's dense
+      position in ``parts``;
+    - fewer tasks than parts: whole parts grouped by ``position % tasks``;
+    - more tasks than parts (fewer parts than cores, e.g. a one-part
+      refresh): each part is split into ``ceil(tasks / len(parts))``
+      sub-slots by a second doc_id hash, so no task mixes parts and the
+      cores stay busy.
 
-    Why few, large tasks: every Python task has a fixed cost whatever its
-    row count, empty partitions included. On a 4-CPU host a one-row task
-    cost ~0.28 core-s, most of it ``importlib.invalidate_caches()`` in
-    pyspark's per-task ``setup_spark_files``, which on CPython 3.11
-    re-reads the launch archives (pyspark.zip, py4j, the spark-core jar)
-    once for each of the ~16 zipimporters a worker caches. The worker
-    wrappers pin those archives (``shipping.pin_launch_archives``), which
-    cuts a task to ~0.07 core-s after a worker's first task. One task per
-    part halved the parse tasks and roughly doubled heavy-corpus docs/s;
-    the pin added ~1.5x on top (BENCH/BASELINE.md). One file per part
-    also keeps the commit and the derived scans small.
+    In every case but the split a part stays whole in one task, so it
+    commits as one parquet file. The part lists reach the plan as one SQL
+    literal each (:func:`int_list`).
 
-    Skew: this is still a uniform per-document hash scatter, because
-    ``part_id`` IS ``pmod(xxhash64(doc_id), n_parts)`` — the bin is now a
-    part. For a map-only parse stage the doc-granularity optimum is
-    exactly that: expected max-giants-per-bin is the balls-in-bins maximum
-    (~3 when giants ≈ bins), so the straggler is a small constant multiple
-    of one giant's cost, while any row-weighted scheme (the round-3 range
-    repartition over (size class, salt, doc_id): range boundaries come from
-    row-proportional sampling, so a 1%-of-rows giant class funnelled into
-    ONE partition; BENCH/BASELINE.md's "Skew A/B" section measured it worse
-    than no exchange) concentrates clustered giants. Salting-by-key remains
+    Why one wave: every Python task has a fixed cost whatever its row
+    count. Parsing and writing 200 mixed docs in 32 rather than 4 tasks
+    on a 4-CPU host cost ~0.09 core-s of executor time per extra task
+    (the Arrow/Python worker hand-off and the partitioned parquet write;
+    the worker wrappers already pin the launch archives,
+    ``shipping.pin_launch_archives``, without which a one-row task cost
+    ~0.28 core-s). A 16-part chunk on 4 cores ran its 16 tasks in 4
+    waves; see BENCH/BASELINE.md §"One parse wave per chunk" for the
+    end-to-end effect.
+
+    Skew: ``part_id`` IS ``pmod(xxhash64(doc_id), n_parts)``, so the
+    unsized paths are a uniform per-document hash scatter with the part
+    as the bin; for a map-only stage the expected max-giants-per-bin is
+    the balls-in-bins maximum, a small constant multiple of one giant's
+    cost. Packing several parts per task must not give that up: grouping
+    by position put 53.6% of an adversarial corpus's bytes (a 1% giant
+    tail with ~90% of the bytes, 32 parts) into one of 4 tasks, LPT over
+    the measured part bytes 25.0%. A row-weighted scheme is worse still
+    (the round-3 range repartition over (size class, salt, doc_id): range
+    boundaries come from row-proportional sampling, so a 1%-of-rows giant
+    class funnelled into ONE partition; BENCH/BASELINE.md's "Skew A/B"
+    section measured it worse than no exchange). Salting-by-key remains
     the right tool for skewed JOIN/AGG keys (see ops/dedup.py,
     ops/training.py) — here there is no key, and hash(doc_id) IS the salt.
     """
     parts = list(parts)
     k = max(1, len(parts))
-    n = num_partitions or max(k, df.sparkSession.sparkContext.defaultParallelism)
-    if parts == list(range(k)):
-        slot = F.col("part_id")  # the dense position of part p is p
-    else:
-        slot = F.array_position(F.array(*map(F.lit, parts)), F.col("part_id")) - 1
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    dense = parts == list(range(k))
+    # 1-based position of the row's part in ``parts``
+    pos = "part_id + 1" if dense else f"int(array_position(array({int_list(parts)}), part_id))"
+    if sizes is not None and sized_wave(df.sparkSession, k, num_partitions):
+        bins = lpt_bins([sizes.get(p, 0) for p in parts], cores)
+        return df.repartitionById(
+            cores, F.expr(f"element_at(array({int_list(bins)}), {pos})").cast("int")
+        )
+    n = num_partitions or max(k, cores)
+    slot = F.col("part_id") if dense else F.expr(f"{pos} - 1")
     if n <= k:
         return df.repartitionById(n, slot.cast("int"))
     split = -(-n // k)
@@ -314,6 +383,7 @@ def extract_documents(
     passwords: tuple[bytes, ...] = (),
     password_col: str | None = None,
     parts: list[int] | None = None,
+    sizes: dict[int, int] | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted(doc_id, spans, metrics..., part_id).
 
@@ -333,9 +403,10 @@ def extract_documents(
 
     ``parts`` lists the part ids to extract (default ``range(n_parts)``);
     rows of other parts are dropped here, so the exchange never sees a part
-    it has no slot for. The parse stage runs one Python task per part
-    unless ``num_partitions`` or the core count says otherwise (see
-    ``balance_partitions``).
+    it has no slot for. ``sizes`` (payload bytes by part,
+    :func:`part_bytes`) lets a list of more parts than cores run as one
+    wave of ``defaultParallelism`` tasks; the task count rules are
+    ``balance_partitions``'.
     """
     if password_col is not None:
         df = df.select(
@@ -347,8 +418,8 @@ def extract_documents(
     if parts is None:
         parts = range(n_parts)
     else:
-        df = df.filter(F.col("part_id").isin(list(parts)))
-    df = balance_partitions(df, parts, num_partitions)
+        df = df.filter(in_parts(parts))
+    df = balance_partitions(df, parts, num_partitions, sizes)
     return df.mapInArrow(
         _make_extract_batches_arrow(passwords), schema=EXTRACTED_SCHEMA
     )

@@ -5,6 +5,7 @@ bench reaches these, so they live here rather than in the package."""
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd
@@ -70,8 +71,14 @@ def read_lineage(
         [(c["chunk_id"], c["committed_at"]) for c in markers], "chunk int, ts double"
     )
     sums = ("pages_parsed", "spans_emitted", "parse_failures", "duration_ms")
+    # one scan per visible chunk, tagged with its id (empty when none is)
+    picks = [(c, [c], []) for c in whole] + [(c, [], [(c, owned)]) for c, owned in partial]
+    scans = [
+        log._scan_chunks(spark, EXTRACTED_SCHEMA, w, p).withColumn("chunk", F.lit(c))
+        for c, w, p in picks
+    ] or [log._scan_chunks(spark, EXTRACTED_SCHEMA, [], []).withColumn("chunk", F.lit(-1))]
     return (
-        log._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial, keep_chunk=True)
+        functools.reduce(DataFrame.unionByName, scans)
         .groupBy("chunk", "part_id")
         .agg(F.count("*").alias("docs_done"), *(F.sum(c).alias(c) for c in sums))
         .join(F.broadcast(stamps), "chunk")

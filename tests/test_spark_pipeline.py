@@ -111,12 +111,61 @@ def test_partition_balance_bytes_skewed(spark):
     assert max(sizes) / sum(sizes) < 0.35
 
 
+def test_lpt_bins_whole_deterministic_bounded():
+    """LPT packing (no Spark): every item lands in exactly one of the bins,
+    the same sizes always give the same packing, and the heaviest bin
+    holds at most total / n + the largest item."""
+    import random
+
+    from pdf_extractor_spark.spark.pipeline import lpt_bins
+
+    rng = random.Random(3)
+    for n_bins in (1, 3, 4, 7):
+        for sizes in (
+            [rng.randrange(1000) for _ in range(32)],
+            [10**6] * 3 + [1] * 29,  # a giant tail on three parts
+            [0] * 5,
+            [5, 5, 5, 5],  # ties break by position, then by bin
+        ):
+            bins = lpt_bins(sizes, n_bins)
+            assert len(bins) == len(sizes) and set(bins) <= set(range(n_bins))
+            assert bins == lpt_bins(list(sizes), n_bins)
+            loads = [sum(w for w, b in zip(sizes, bins) if b == i) for i in range(n_bins)]
+            assert max(loads) <= sum(sizes) / n_bins + max(sizes)
+    assert lpt_bins([5, 5, 5, 5], 4) == [0, 1, 2, 3]
+    assert lpt_bins([1, 9, 4], 2) == [1, 0, 1]
+
+
+def test_sized_wave_balance_bytes_skewed(spark):
+    """The sized exchange on ``test_partition_balance_bytes_skewed``'s
+    corpus (1000 docs, 32 parts, a 1% giant tail with ~90% of the bytes)
+    packs whole parts into exactly ``defaultParallelism`` tasks and still
+    keeps every task under 35% of the bytes."""
+    from pyspark.sql import functions as F
+    from pdf_extractor_spark.spark.pipeline import assign_part_id, balance_partitions, part_bytes
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = assign_part_id(_with_n_bytes(corpus_df(spark, 1000, profile="skewed")), 32)
+    df = balance_partitions(docs, range(32), sizes=part_bytes(docs))
+    assert df.rdd.getNumPartitions() == cores
+    per_task = (
+        df.withColumn("pid", F.spark_partition_id())
+        .groupBy("pid")
+        .agg(F.sum("n_bytes").alias("b"), F.countDistinct("part_id").alias("parts"))
+        .collect()
+    )
+    assert len(per_task) == cores and sum(r["parts"] for r in per_task) == 32
+    sizes = [r["b"] for r in per_task]
+    assert max(sizes) / sum(sizes) < 0.35
+
+
 def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
     """The parse exchange is part-aligned: with at least as many parts per
     chunk as cores, an interrupted and resumed run leaves exactly one
     parquet file in every committed part directory, and re-extracting a
-    non-contiguous part list runs one Python task per part (each Python
-    task has a large fixed cost, so no task is spent on less than a whole
+    non-contiguous list of more parts than cores runs one wave of one
+    Python task per core, whole parts packed by size (each Python task
+    has a large fixed cost, so no task is spent on less than a whole
     part). A refresh of fewer parts than cores splits its parts over the
     cores instead of parsing them in one task."""
     import glob
@@ -149,7 +198,7 @@ def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pipeline, "_make_extract_batches_arrow", counting)
     L.reextract_parts(spark, docs, log, [1, 2, 5, 6, 7])
-    assert tasks.value == 5
+    assert tasks.value == cores
     refresh_id = max(c["chunk_id"] for c in log.visible_chunks())
     refresh_dirs = glob.glob(os.path.join(log.data_dir, f"chunk={refresh_id:06d}", "part_id=*"))
     assert len(refresh_dirs) == 5
@@ -157,7 +206,7 @@ def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
     L.reextract_parts(spark, docs, log, [5])
-    assert tasks.value == 5 + cores
+    assert tasks.value == cores + cores
 
 
 def test_kill_and_resume(spark, tmp_path):

@@ -13,9 +13,10 @@ Measures, per chunk count C:
   owned_s          visible_chunks + per-chunk owned-part resolution (the
                    read-planning driver-side work)
   resume_s         resume_filter(...).count() on a 1k-doc frame (includes
-                   Spark plan + broadcast anti-join execution)
-  read_plan_s      read_extracted() DataFrame construction (the C-way
-                   unionByName plan build; execution excluded)
+                   the Spark plan build and running its one-literal
+                   ``part_id NOT IN (...)`` filter)
+  read_plan_s      read_extracted() DataFrame construction (one scan with
+                   a chunk PartitionFilter; execution excluded)
 
 Usage: python tools/bench_commitlog.py [--chunks 200,1000,2000] [--no-spark]
 Prints one JSON line per C; paste into BENCH/BASELINE.md.

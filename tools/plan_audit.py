@@ -81,6 +81,19 @@ def exchange_count(plan: str, n: int):
     return found == n, f"exactly {n} Exchange nodes (found {found})"
 
 
+def passthrough_partitions(plan: str, n: int):
+    """Every part-keyed exchange (``repartitionById``) has ``n`` partitions."""
+    found = re.findall(r"shufflepartitionidpassthrough\(.*, (\d+)\), REPARTITION_BY_NUM", plan)
+    ok = bool(found) and all(int(f) == n for f in found)
+    return ok, f"part-keyed exchange has {n} partitions (found {found})"
+
+
+def _cores() -> int:
+    from pyspark import SparkContext
+
+    return SparkContext._active_spark_context.defaultParallelism
+
+
 def occurs_at_most(plan: str, token: str, n_max: int):
     found = plan.count(token)
     return found <= n_max, f"<= {n_max} occurrences of {token!r} (found {found})"
@@ -156,6 +169,30 @@ def _staged_extract_stage_df(spark, sf_dir: str):
 
     staged = stage_documents(wrap_documents(spark, sf_dir))
     return extract_documents(staged, n_parts=64, num_partitions=32)
+
+
+def _sized_extract_stage_df(spark, sf_dir: str):
+    """The extraction stage of a chunk with more parts than cores and no
+    explicit task count, as run_extraction builds it: the parts' payload
+    bytes (one JVM-only aggregation, run here) pack them into one wave."""
+    from pdf_extractor_spark.ops.extraction_queries import wrap_documents
+    from pdf_extractor_spark.spark.pipeline import assign_part_id, extract_documents, part_bytes
+
+    docs = wrap_documents(spark, sf_dir)
+    return extract_documents(docs, n_parts=64, sizes=part_bytes(assign_part_id(docs, 64)))
+
+
+def _resumed_extract_input_df(spark, sf_dir: str):
+    """run_extraction's input on a resumed run: resume_filter over a table
+    with committed parts (the snapshot fixture commits 9 of its 12)."""
+    from pdf_extractor_spark.ops.extraction_queries import (
+        _snapshot_fixture_root,
+        wrap_documents,
+    )
+    from pdf_extractor_spark.spark.lineage import CommitLog, resume_filter
+
+    log = CommitLog(_snapshot_fixture_root())
+    return resume_filter(wrap_documents(spark, sf_dir), log, log.n_parts())
 
 
 def _snapshot_scan_df(spark, sf_dir: str):
@@ -1689,6 +1726,39 @@ AUDITS: list[tuple] = [
             lambda p: absent(p, "CartesianProduct"),
             lambda p: never_reads(p, "text"),
             lambda p: never_reads(p, "source"),
+        ],
+        False,
+    ),
+    (
+        "sized_extract_stage",
+        _sized_extract_stage_df,
+        [
+            # one wave: whole parts packed into defaultParallelism tasks
+            # by size (balance_partitions), still the single part-keyed
+            # exchange; the sizes are a literal in its key, so no sizing
+            # column or aggregate rides the parse plan
+            lambda p: exchange_count(p, 1),
+            lambda p: contains(p, "shufflepartitionidpassthrough"),
+            lambda p: passthrough_partitions(p, _cores()),
+            lambda p: absent(p, "HashAggregate"),
+            lambda p: absent(p, "n_bytes"),
+            lambda p: contains(p, "MapInArrow"),
+        ],
+        False,
+    ),
+    (
+        "resumed_extract_input",
+        _resumed_extract_input_df,
+        [
+            # committed parts drop by a part_id NOT IN (...) literal: no
+            # join, no broadcast, and no relation built from a Python list
+            # (a createDataFrame of the committed set ran a Python job)
+            lambda p: contains(p, "Filter"),
+            lambda p: absent(p, "Join"),
+            lambda p: absent(p, "BroadcastExchange"),
+            lambda p: absent(p, "ExistingRDD"),
+            lambda p: absent(p, "LocalTableScan"),
+            lambda p: n_scans_at_most(p, 1),
         ],
         False,
     ),
