@@ -379,41 +379,45 @@ def _gates(args):
 
 
 def _derived_stages() -> dict:
-    """``{stage: (run(spark, args) -> (RunReport, wall_s), row schema)}``,
-    keyed by the ``stage`` every derived commit marker records."""
+    """``{stage: (run(spark, args) -> RunReport, row schema)}``, keyed by
+    the ``stage`` every derived commit marker records."""
     from pdf_extractor_spark.spark import curate, materialize, neardup, ocr, pack, signals
+    from pdf_extractor_spark.spark.lineage import CommitLog
+
+    def log(root):
+        return None if root is None else CommitLog(root)
 
     return {
         "ocr": (
-            lambda s, a: ocr.run_ocr_job(s, a.input, a.output, rebuild=a.rebuild),
+            lambda s, a: ocr.run_ocr(s, log(a.input), log(a.output), rebuild=a.rebuild),
             ocr.OCR_SCHEMA,
         ),
         "signals": (
-            lambda s, a: signals.run_signals_job(s, a.input, a.output, rebuild=a.rebuild),
+            lambda s, a: signals.run_signals(s, log(a.input), log(a.output), rebuild=a.rebuild),
             signals.SIGNALS_SCHEMA,
         ),
         "curate": (
-            lambda s, a: curate.run_curate_job(
-                s, a.input, a.output, rebuild=a.rebuild, gates=_gates(a)
+            lambda s, a: curate.run_curate(
+                s, log(a.input), log(a.output), rebuild=a.rebuild, gates=_gates(a)
             ),
             curate.CURATED_SCHEMA,
         ),
         "neardup": (
-            lambda s, a: neardup.run_neardup_job(
-                s, a.input, a.output, rebuild=a.rebuild, kept_from=a.kept_from
+            lambda s, a: neardup.run_neardup(
+                s, log(a.input), log(a.output), rebuild=a.rebuild, kept_from=log(a.kept_from)
             ),
             neardup.NEARDUP_SCHEMA,
         ),
         "pack": (
-            lambda s, a: pack.run_pack_job(
-                s, a.input, a.output, rebuild=a.rebuild, kept_from=a.kept_from,
-                neardup_from=a.drop_neardups_from, cost=a.cost,
+            lambda s, a: pack.run_pack(
+                s, log(a.input), log(a.output), rebuild=a.rebuild, kept_from=log(a.kept_from),
+                neardup_from=log(a.drop_neardups_from), cost=a.cost,
             ),
             pack.PACKED_SCHEMA,
         ),
         "materialize": (
-            lambda s, a: materialize.run_materialize_job(
-                s, a.input, a.pack_table, a.output, rebuild=a.rebuild
+            lambda s, a: materialize.run_materialize(
+                s, log(a.input), log(a.pack_table), log(a.output), rebuild=a.rebuild
             ),
             materialize.MATERIALIZED_SCHEMA,
         ),
@@ -432,7 +436,9 @@ def _run_derived(args) -> int:
                    "validity rule; it requires --kept-from")
     run, _schema = _derived_stages()[args.stage]
     with _spark(args.master) as spark:
-        report, dt = run(spark, args)
+        t0 = time.monotonic()
+        report = run(spark, args)
+        dt = time.monotonic() - t0
     print(
         f"{args.stage.upper()}_DONE chunks={report.chunks_committed} "
         f"parts={report.parts_processed} rows={report.docs_processed} "

@@ -44,7 +44,6 @@ the join key is the same digest the window just shuffled on.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -352,21 +351,3 @@ def apply_kept_filters(
         )
         out = out.join(flagged, "doc_id", "left_anti")
     return out
-
-
-def run_curate_job(
-    spark: SparkSession,
-    src_root: str,
-    out_root: str,
-    rebuild: bool = False,
-    gates: GateConfig | None = None,
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_curate(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
-        gates=gates,
-    )
-    return report, time.monotonic() - t0

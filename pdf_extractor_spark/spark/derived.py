@@ -6,8 +6,9 @@ compute a per-document projection/verdict over exactly that delta, and
 commit the result as one chunk of the stage's OWN CommitLog table — with
 the consumed source snapshot recorded in the marker (``metrics.
 src_snapshot``) so the cursor survives crashes for free. This module is
-that loop, factored once; ``spark/signals.py`` and ``spark/curate.py`` are
-instances.
+that loop, factored once (:func:`run_derived_stage`); the six stage
+modules are instances, which ``job.py`` calls directly. Each chunk goes
+through ``lineage._write_chunk``, the write path of every writer.
 
 Semantics pinned here (stage modules inherit them):
 
@@ -41,7 +42,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .lineage import CommitLog, RunReport, _chunk_dirname, write_observed
+from .lineage import CommitConflict, CommitLog, RunReport, _chunk_dirname, _write_chunk
 
 
 def latest_metric(markers: list[dict], key: str):
@@ -59,11 +60,6 @@ def latest_metric(markers: list[dict], key: str):
     return out
 
 
-def _cursor_of(markers: list[dict]) -> int | None:
-    """Cursor from an already-parsed committed-marker list (commit order)."""
-    return latest_metric(markers, "src_snapshot")
-
-
 def derived_cursor(out_log: CommitLog) -> int | None:
     """Source snapshot consumed by the stage's LAST committed chunk.
 
@@ -76,39 +72,7 @@ def derived_cursor(out_log: CommitLog) -> int | None:
     last run read up to — ``incremental_window`` anchors on it in source
     commit order, so nothing before it is ever re-read and nothing after it
     is skipped."""
-    return _cursor_of(out_log.committed_chunks())
-
-
-def commit_derived_chunk(
-    out_log: CommitLog,
-    df: DataFrame,
-    stage: str,
-    part_ids: list[int] | None,
-    metrics: dict,
-    n_parts: int | None,
-    overwrite: bool = False,
-    validate=None,
-) -> tuple[int, int, list[int]]:
-    """Stage one derived chunk (an observed append-mode write into the
-    mkdir-reserved dir, exactly like lineage._write_chunk) and flip its
-    marker. The doc count and touched parts come from the write's own
-    Observation, so no job runs after the write. ``validate`` runs under
-    the commit lock (see CommitLog.commit_chunk)."""
-    chunk_id = out_log.reserve_chunk_id()
-    observed = write_observed(
-        df, os.path.join(out_log.data_dir, _chunk_dirname(chunk_id))
-    )
-    n_docs, touched = observed["docs"], observed["part_ids"]
-    out_log.commit_chunk(
-        chunk_id,
-        part_ids if part_ids is not None else touched,
-        {**metrics, "docs": n_docs, "stage": stage},
-        n_parts=n_parts,
-        overwrite=overwrite,
-        validate=validate,
-        expect_data=True,
-    )
-    return chunk_id, n_docs, touched
+    return latest_metric(out_log.committed_chunks(), "src_snapshot")
 
 
 def run_derived_stage(
@@ -125,7 +89,9 @@ def run_derived_stage(
 ) -> RunReport:
     """One incremental pass of a derived stage: consume the source
     snapshots committed since the cursor, or (``rebuild=True``) recompute
-    everything as one overwrite chunk.
+    everything as one overwrite chunk, written by ``lineage._write_chunk``:
+    its marker records ``extra_metrics``, ``stage``, ``src_snapshot``
+    (plus ``rebuild``) and the write's observed ``docs``.
 
     ``src_schema`` names the SOURCE table's row shape when the source is
     itself a derived table (materialize consumes the pack table); default
@@ -157,154 +123,123 @@ def run_derived_stage(
 
     Frames a stage's compute persists via ``ops/dedup._persisted``
     (neardup's shingle/candidate tables, pack's sharded prefix-sum frame)
-    are fully consumed by the commit write, so they are released HERE,
-    scoped to the frames THIS call staged — on the job path (``job.py
-    neardup``/``pack``, a long-lived session chaining incremental runs)
-    nothing else ever releases them, and leaking one pinned
-    InMemoryRelation per window grows executor storage without bound.
+    are fully consumed by the commit write, so this call's ``finally``
+    releases them, scoped to the frames THIS call staged — on the job
+    path (``job.py neardup``/``pack``, a long-lived session chaining
+    incremental runs) nothing else ever releases them, and leaking one
+    pinned InMemoryRelation per window grows executor storage without
+    bound.
     """
-    from ..ops.dedup import _DF_CACHE
-
-    mark = len(_DF_CACHE)
-    try:
-        return _run_derived_stage(
-            spark,
-            src_log,
-            out_log,
-            stage,
-            compute,
-            rebuild=rebuild,
-            rebuild_compute=rebuild_compute,
-            extra_metrics=extra_metrics,
-            src_schema=src_schema,
-            rebuild_all_parts=rebuild_all_parts,
-        )
-    finally:
-        while len(_DF_CACHE) > mark:
-            _DF_CACHE.pop().unpersist()
-
-
-def _run_derived_stage(
-    spark: SparkSession,
-    src_log: CommitLog,
-    out_log: CommitLog,
-    stage: str,
-    compute: Callable[[DataFrame], DataFrame],
-    rebuild: bool = False,
-    rebuild_compute: Callable[[DataFrame], DataFrame] | None = None,
-    extra_metrics: dict | None = None,
-    src_schema: StructType | None = None,
-    rebuild_all_parts: bool = False,
-) -> RunReport:
     import inspect
+
+    from ..ops.dedup import _DF_CACHE
 
     def _call(fn: Callable, df: DataFrame, horizon: int) -> DataFrame:
         if "horizon" in inspect.signature(fn).parameters:
             return fn(df, horizon=horizon)
         return fn(df)
 
-    src_chunks = src_log.committed_chunks()  # commit order; reused below
-    if not src_chunks:
-        return RunReport(0, 0, 0, 0)
-    latest = src_chunks[-1]["chunk_id"]
-    n_parts = src_log.n_parts(chunks=src_chunks)
+    mark = len(_DF_CACHE)
+    try:
+        src_chunks = src_log.committed_chunks()  # commit order; reused below
+        if not src_chunks:
+            return RunReport(0, 0, 0, 0)
+        latest = src_chunks[-1]["chunk_id"]
+        n_parts = src_log.n_parts(chunks=src_chunks)
 
-    if rebuild:
-        # markers=src_chunks pins the read to the SAME snapshot `latest`
-        # names: a source chunk committed between the listing above and the
-        # read would otherwise be folded into the rebuild output but not
-        # into the recorded cursor, so the next incremental run would
-        # consume it AGAIN — two derived rows per doc, and the earlier
-        # rebuild overwrite cannot shadow the later duplicate append
-        src_full = (
-            src_log.read_extracted(spark, markers=src_chunks)
-            if src_schema is None
-            else src_log.read_table(spark, src_schema, markers=src_chunks)
-        )
-        out = _call(rebuild_compute or compute, src_full, latest)
-        all_parts = (
-            list(range(n_parts))
-            if rebuild_all_parts and n_parts is not None
-            else sorted({p for c in src_chunks for p in c["part_ids"]})
-        )
-        _, n_docs, _ = commit_derived_chunk(
-            out_log,
-            out,
-            stage,
-            all_parts,
-            {**(extra_metrics or {}), "src_snapshot": latest, "rebuild": True},
-            n_parts,
-            overwrite=True,
-        )
-        return RunReport(1, len(all_parts), n_docs, 0)
-
-    cursor = derived_cursor(out_log)
-    if cursor == latest:
-        return RunReport(0, 0, 0, 0)
-    # THE window definition lives on CommitLog (shared with the scan that
-    # reads it, so the overwrite guard below can never drift from what
-    # read_incremental actually returns). The horizon is pinned by
-    # chunks=src_chunks — ONE marker listing feeds `latest`, the window,
-    # and the read, so a source chunk committing mid-run can appear in
-    # none of them or all of them, never a mix.
-    window = src_log.incremental_window(cursor, chunks=src_chunks)
-    if not window:
-        return RunReport(0, 0, 0, 0)
-    if any(c.get("overwrite") for c in window):
-        raise ValueError(
-            "source window contains a partition overwrite; an append-shaped "
-            "delta would strand the untouched docs of the overwritten parts "
-            f"— run with rebuild=True (job.py {stage} --rebuild)"
-        )
-    # a compaction + expire_replaced while this stage lagged deletes the
-    # window chunks' DATA while their markers survive — the chunk-pruned
-    # scan would then silently read EMPTY and the cursor would advance past
-    # the lost history (the same silent-empty class the legacy-layout guard
-    # catches); existence-check the bytes the window promises
-    reclaimed = [
-        c["chunk_id"]
-        for c in window
-        if not os.path.isdir(
-            os.path.join(src_log.data_dir, _chunk_dirname(c["chunk_id"]))
-        )
-    ]
-    if reclaimed:
-        raise ValueError(
-            f"source chunks {reclaimed} in the incremental window have no "
-            "data on disk (compacted and expired while this stage lagged); "
-            "the delta cannot be reconstructed incrementally — run with "
-            f"rebuild=True (job.py {stage} --rebuild)"
-        )
-    delta = src_log.read_incremental(
-        spark,
-        after=cursor if cursor is not None else -1,
-        window=window,
-        schema=src_schema,
-    )
-    out = _call(compute, delta, latest)
-
-    def _cursor_unmoved(committed: list[dict]) -> None:
-        # optimistic concurrency, checked under the commit lock: a rival
-        # run of this stage that committed since we read the cursor has
-        # already consumed (some prefix of) this window — publishing ours
-        # too would duplicate every doc's derived row
-        from .lineage import CommitConflict
-
-        now = _cursor_of(committed)
-        if now != cursor:
-            raise CommitConflict(
-                f"stage {stage} cursor moved {cursor} -> {now} under a "
-                "concurrent run; not publishing a duplicate window"
+        if rebuild:
+            # markers=src_chunks pins the read to the SAME snapshot `latest`
+            # names: a source chunk committed between the listing above and
+            # the read would otherwise be folded into the rebuild output but
+            # not into the recorded cursor, so the next incremental run would
+            # consume it AGAIN — two derived rows per doc, and the earlier
+            # rebuild overwrite cannot shadow the later duplicate append
+            src_full = (
+                src_log.read_extracted(spark, markers=src_chunks)
+                if src_schema is None
+                else src_log.read_table(spark, src_schema, markers=src_chunks)
             )
+            out = _call(rebuild_compute or compute, src_full, latest)
+            parts = (
+                list(range(n_parts))
+                if rebuild_all_parts and n_parts is not None
+                else sorted({p for c in src_chunks for p in c["part_ids"]})
+            )
+            validate = None
+        else:
+            cursor = derived_cursor(out_log)
+            if cursor == latest:
+                return RunReport(0, 0, 0, 0)
+            # THE window definition lives on CommitLog (shared with the scan
+            # that reads it, so the overwrite guard below can never drift
+            # from what read_incremental actually returns). The horizon is
+            # pinned by chunks=src_chunks — ONE marker listing feeds
+            # `latest`, the window, and the read, so a source chunk
+            # committing mid-run can appear in none of them or all of them,
+            # never a mix.
+            window = src_log.incremental_window(cursor, chunks=src_chunks)
+            if not window:
+                return RunReport(0, 0, 0, 0)
+            if any(c.get("overwrite") for c in window):
+                raise ValueError(
+                    "source window contains a partition overwrite; an "
+                    "append-shaped delta would strand the untouched docs of "
+                    "the overwritten parts — run with rebuild=True "
+                    f"(job.py {stage} --rebuild)"
+                )
+            # a compaction + expire_replaced while this stage lagged deletes
+            # the window chunks' DATA while their markers survive — the
+            # chunk-pruned scan would then silently read EMPTY and the
+            # cursor would advance past the lost history (the same
+            # silent-empty class the legacy-layout guard catches);
+            # existence-check the bytes the window promises
+            reclaimed = [
+                c["chunk_id"]
+                for c in window
+                if not os.path.isdir(
+                    os.path.join(src_log.data_dir, _chunk_dirname(c["chunk_id"]))
+                )
+            ]
+            if reclaimed:
+                raise ValueError(
+                    f"source chunks {reclaimed} in the incremental window "
+                    "have no data on disk (compacted and expired while this "
+                    "stage lagged); the delta cannot be reconstructed "
+                    "incrementally — run with rebuild=True "
+                    f"(job.py {stage} --rebuild)"
+                )
+            delta = src_log.read_incremental(
+                spark,
+                after=cursor if cursor is not None else -1,
+                window=window,
+                schema=src_schema,
+            )
+            out = _call(compute, delta, latest)
+            parts = None  # the parts the write touches
 
-    _, n_docs, touched = commit_derived_chunk(
-        out_log,
-        out,
-        stage,
-        None,
-        {**(extra_metrics or {}), "src_snapshot": latest},
-        n_parts,
-        validate=_cursor_unmoved,
-    )
-    return RunReport(1, len(touched), n_docs, 0)
+            def validate(committed: list[dict]) -> None:
+                # optimistic concurrency, checked under the commit lock: a
+                # rival run of this stage that committed since we read the
+                # cursor has already consumed (some prefix of) this window —
+                # publishing ours too would duplicate every doc's derived row
+                now = latest_metric(committed, "src_snapshot")
+                if now != cursor:
+                    raise CommitConflict(
+                        f"stage {stage} cursor moved {cursor} -> {now} under "
+                        "a concurrent run; not publishing a duplicate window"
+                    )
 
+        # built after compute: a stage's compute may add to extra_metrics
+        # (pack records the bpe rules its first window derives)
+        metrics = {**(extra_metrics or {}), "stage": stage, "src_snapshot": latest}
+        written = _write_chunk(
+            spark, out_log, out, out_log.reserve_chunk_id(), parts, n_parts,
+            overwrite=rebuild, validate=validate,
+            extra_metrics={**metrics, "rebuild": True} if rebuild else metrics,
+        )
+        return RunReport(
+            1, len(written["part_ids"] if parts is None else parts), written["docs"], 0
+        )
+    finally:
+        while len(_DF_CACHE) > mark:
+            _DF_CACHE.pop().unpersist()

@@ -3,8 +3,8 @@
 The sandbox has no Iceberg runtime jar, so snapshot semantics are emulated
 with parquet + an atomic JSON commit log behind one writer interface, exactly
 as scoped in SURVEY.md §7.4. On a real cluster this class is swapped for
-``df.writeTo(table).append()``; the resume logic (left-anti join on
-committed part_ids) is identical either way.
+``df.writeTo(table).append()``; the resume logic (``part_id NOT IN``
+the committed part_ids) is identical either way.
 
 Layout of a CommitLog directory:
 
@@ -75,12 +75,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
+    EXTRACTED_SCHEMA,
     assign_part_id,
     balance_partitions,
     extract_documents,
     in_parts,
+    int_list,
     part_bytes,
-    sized_wave,
 )
 
 
@@ -643,21 +644,23 @@ class CommitLog:
         scanned-and-dropped — and plan build stays flat in chunk count
         (the per-chunk unionByName it replaced built plans superlinearly:
         7.5 / 38 / 156 s at 200 / 1000 / 2000 chunks,
-        tools/bench_commitlog.py)."""
+        tools/bench_commitlog.py). Each id list is one SQL literal
+        (``pipeline.int_list``). Nothing visible reads the root under
+        ``false``: an empty ``LocalTableScan``, which broadcasts jobless."""
         # explicit schema: a committed chunk whose parts got zero docs
         # holds only _SUCCESS, and schema inference over an all-empty
         # table would raise. `chunk` is appended by partition discovery;
         # when NO data file exists anywhere it cannot be discovered, and
         # there is nothing to read either way.
-        df = spark.read.schema(schema).parquet(self.data_dir) if whole or partial else None
-        if df is None or "chunk" not in df.columns:
-            return spark.createDataFrame([], schema)
-        cond = F.col("chunk").isin(whole) if whole else F.lit(False)
-        for cid, owned in partial:
-            cond = cond | (
-                (F.col("chunk") == cid) & F.col("part_id").isin(owned)
-            )
-        return df.where(cond).drop("chunk")
+        df = spark.read.schema(schema).parquet(self.data_dir)
+        cond = [f"chunk IN ({int_list(whole)})"] if whole else []
+        cond += [
+            f"(chunk = {cid} AND part_id IN ({int_list(owned)}))"
+            for cid, owned in partial
+        ]
+        if not cond or "chunk" not in df.columns:
+            return df.where(F.lit(False)).drop("chunk")
+        return df.where(F.expr(" OR ".join(cond))).drop("chunk")
 
     def _visible_split(
         self,
@@ -697,10 +700,7 @@ class CommitLog:
         putting it in ``replaces``, duplicating its rows forever).
         Visibility is ONE PartitionFilter over one scan; see
         :meth:`_scan_chunks`."""
-        from .pipeline import EXTRACTED_SCHEMA
-
-        whole, partial = self._visible_split(as_of, markers)
-        return self._scan_chunks(spark, EXTRACTED_SCHEMA, whole, partial)
+        return self.read_table(spark, EXTRACTED_SCHEMA, as_of, markers)
 
     def read_table(
         self,
@@ -751,16 +751,12 @@ class CommitLog:
         ``schema`` overrides the row shape for DERIVED tables consumed
         incrementally by a further stage (materialize reads the pack
         table's deltas) — the ``read_table`` twin of this scan."""
-        from .pipeline import EXTRACTED_SCHEMA
-
         if window is None:
             window = self.incremental_window(after, until)
         ids = [c["chunk_id"] for c in window]
         # each marker's data is read whole here (an overwrite's parts ARE
         # its current content), so the scan needs no part_id conditions
-        return self._scan_chunks(
-            spark, EXTRACTED_SCHEMA if schema is None else schema, ids, []
-        )
+        return self._scan_chunks(spark, schema or EXTRACTED_SCHEMA, ids, [])
 
     def incremental_window(
         self,
@@ -908,6 +904,9 @@ def compact_chunks(
     orphans). A real conflict (a concurrent compaction or overwrite)
     deletes the rewrite and raises :class:`CommitConflict`.
 
+    The publish is its own loop, not :func:`_write_chunk`'s, because the
+    rewrite may move to a later chunk id after its data is written.
+
     Returns the new chunk id, or None if there is nothing to compact.
     """
     # pin the snapshot ONCE: the data read and the commit's conflict
@@ -923,11 +922,7 @@ def compact_chunks(
     part_ids = sorted({p for c in victims for p in c["part_ids"]})
     new_id = log.reserve_chunk_id()
 
-    data = (
-        log.read_extracted(spark, markers=snapshot)
-        if schema is None
-        else log.read_table(spark, schema, markers=snapshot)
-    )
+    data = log.read_table(spark, schema or EXTRACTED_SCHEMA, markers=snapshot)
     data_path = os.path.join(log.data_dir, _chunk_dirname(new_id))
     observed = write_observed(
         balance_partitions(data, part_ids, num_partitions=min(len(part_ids), 32)),
@@ -969,42 +964,86 @@ def compact_chunks(
 def _write_chunk(
     spark: SparkSession,
     log: CommitLog,
-    extracted: DataFrame,
+    df: DataFrame,
     chunk_id: int,
     chunk_parts: list[int] | None,
-    n_parts: int,
+    n_parts: int | None,
     overwrite: bool = False,
     exclusive_parts: bool = False,
     extra_metrics: dict | None = None,
+    validate=None,
 ) -> dict:
-    """Write one chunk's data parquet, then flip the marker. Shared by the
-    append path (run_extraction), the partition-overwrite path
-    (reextract_parts) and the streaming micro-batch path (which passes
-    ``extra_metrics={'epoch': ...}``). The marker's docs/pages/failures —
-    and, for a streaming batch (``chunk_parts=None``), the parts it
-    touched — are the write's own observed rollup
-    (:func:`observed_rollup`): the parse and write run as one job and
-    nothing is read back. Returns the chunk's metrics."""
-    observed = write_observed(
-        extracted, os.path.join(log.data_dir, _chunk_dirname(chunk_id))
-    )
-    metrics = {k: observed[k] for k in ("docs", "pages", "failures", "error_parts")}
-    if extra_metrics:
-        metrics.update(extra_metrics)
-    if chunk_parts is None:
-        # streaming micro-batches don't know their parts a priori — the
-        # marker records the parts the batch actually touched
-        chunk_parts = observed["part_ids"]
+    """Write one chunk's rows into its reserved directory, then flip the
+    marker: the one write-and-publish of every appending writer (extract,
+    refresh, a streaming batch, a derived stage). The marker's metrics are
+    the write's own rollup (:func:`observed_rollup`, written and counted in
+    one job) minus ``part_ids``, plus ``extra_metrics``.
+    ``chunk_parts=None`` records the parts the write touched. Returns the
+    rollup with ``extra_metrics`` merged in."""
+    observed = {
+        **write_observed(df, os.path.join(log.data_dir, _chunk_dirname(chunk_id))),
+        **(extra_metrics or {}),
+    }
     log.commit_chunk(
         chunk_id,
-        chunk_parts,
-        metrics,
+        observed["part_ids"] if chunk_parts is None else chunk_parts,
+        {k: v for k, v in observed.items() if k != "part_ids"},
         n_parts=n_parts,
         overwrite=overwrite,
         exclusive_parts=exclusive_parts,
+        validate=validate,
         expect_data=True,
     )
-    return metrics
+    return observed
+
+
+@contextlib.contextmanager
+def _parse_input(spark, documents, log, n_parts, parts, parts_per_chunk, refresh,
+                 num_partitions, passwords, password_col):
+    """The parse input of run_extraction and reextract_parts. Yields
+    ``parse(chunk_parts)``, one chunk's lazy extraction; chunks are slices
+    of ``parts`` of at most ``parts_per_chunk``.
+
+    - Filter: an append drops the committed parts (:func:`resume_filter`),
+      a refresh keeps ``parts``; ``password_col`` is kept.
+    - Sizing, decided here only: a chunk with more parts than cores and no
+      ``num_partitions`` runs one wave of ``defaultParallelism`` tasks,
+      whole parts packed by payload bytes (``pipeline.part_bytes``, one
+      JVM-only aggregation per call). Other chunks pay no sizing pass.
+    - Persist: an input read more than once (sized, or several chunks) is
+      persisted (MEMORY_AND_DISK) until exit. At 10^12-doc scale the input
+      is a table partitioned by part_id, each chunk's scan is pruned, and
+      nothing is cached."""
+    keep_cols = () if password_col is None else (password_col,)
+    if refresh:
+        docs = assign_part_id(documents.select("doc_id", "spans", *keep_cols), n_parts)
+        docs = docs.where(in_parts(parts))
+    else:
+        docs = resume_filter(documents, log, n_parts, keep_cols=keep_cols)
+    cores = spark.sparkContext.defaultParallelism
+
+    def sized(n_chunk_parts: int) -> bool:
+        return num_partitions is None and n_chunk_parts > cores
+
+    # no chunk is larger than the first
+    sized_first = sized(min(parts_per_chunk, len(parts)))
+    reread = sized_first or len(parts) > parts_per_chunk
+    if reread:
+        docs = docs.persist()
+    try:
+        sizes = part_bytes(docs) if sized_first else None
+
+        def parse(chunk_parts: list[int]) -> DataFrame:
+            return extract_documents(
+                docs, n_parts=n_parts, num_partitions=num_partitions, passwords=passwords,
+                password_col=password_col, parts=chunk_parts,
+                sizes=sizes if sized(len(chunk_parts)) else None,
+            )
+
+        yield parse
+    finally:
+        if reread:
+            docs.unpersist()
 
 
 def reextract_parts(
@@ -1021,15 +1060,15 @@ def reextract_parts(
 
     When upstream documents change (re-crawl, fixed upstream parser), the
     affected partitions are re-run through the SAME extraction stage and
-    committed as one chunk with ``overwrite=True``: per-part visibility
-    resolves to the newest marker (``part_owners``), so the stale spans
-    disappear atomically at the commit flip — no rewrite of old chunks, no
-    reader ever sees a mix of old and new rows for one partition, and time
-    travel to a pre-overwrite snapshot still reads the original extraction.
+    committed as one chunk with ``overwrite=True``: the overwrite marker
+    shadows these parts in every chunk committed before it
+    (:meth:`CommitLog._owned_parts`), so the stale spans disappear
+    atomically at the commit flip — no rewrite of old chunks, no reader
+    ever sees a mix of old and new rows for one partition, and time travel
+    to a pre-overwrite snapshot still reads the original extraction.
     Unlisted partitions are untouched; an empty ``parts`` list commits
-    nothing and launches no job. More parts than cores are sized first
-    and parsed in one wave of ``defaultParallelism`` tasks (see
-    :func:`run_extraction`); ``num_partitions`` overrides the task count.
+    nothing and launches no job. The parse input and its task count are
+    :func:`_parse_input`'s, with all of ``parts`` as one chunk.
     """
     n_parts = log.n_parts()
     if n_parts is None:
@@ -1042,33 +1081,15 @@ def reextract_parts(
     parts = sorted(set(parts))
     if not parts:
         return RunReport(0, 0, 0, 0)
-    # keep the joined manifest password column through the projection
-    # (mirrors resume_filter's keep_cols) — dropping it broke
-    # refresh --password-manifest with an unresolved column
-    keep_cols = ("doc_id", "spans") + (
-        () if password_col is None else (password_col,)
-    )
-    docs = documents.select(*keep_cols)
-    sized = sized_wave(spark, len(parts), num_partitions)
-    if sized:
-        docs = assign_part_id(docs, n_parts).where(in_parts(parts)).persist()
-    try:
-        extracted = extract_documents(
-            docs,
-            n_parts=n_parts,
-            num_partitions=num_partitions,
-            passwords=passwords,
-            password_col=password_col,
-            parts=parts,
-            sizes=part_bytes(docs) if sized else None,
-        )
+    with _parse_input(
+        spark, documents, log, n_parts, parts, len(parts), refresh=True,
+        num_partitions=num_partitions, passwords=passwords, password_col=password_col,
+    ) as parse:
+        extracted = parse(parts)
         chunk_id = log.reserve_chunk_id()
         metrics = _write_chunk(
             spark, log, extracted, chunk_id, parts, n_parts, overwrite=True
         )
-    finally:
-        if sized:
-            docs.unpersist()
     return RunReport(1, len(parts), metrics["docs"], 0)
 
 
@@ -1089,15 +1110,11 @@ def run_extraction(
     the exchange's map stage), then an atomic commit marker.
     ``fail_after_chunks`` injects a crash for the kill-and-resume test.
 
-    Task count: a chunk with more parts than cores parses in ONE wave of
-    ``defaultParallelism`` Python tasks, whole parts packed by payload
-    bytes (``pipeline.balance_partitions``). The bytes come from one
-    JVM-only aggregation per call over the resume-filtered input
-    (``pipeline.part_bytes``), which is persisted because the sizing and
-    the chunks all read it. A chunk with no more parts than cores (the
-    10^12-doc regime, where ``parts_per_chunk`` is far below the executor
-    core count) pays no sizing pass and splits its parts over the cores.
-    So ``parts_per_chunk`` is only the commit (work-at-risk) granularity;
+    Task count (:func:`_parse_input`): a chunk with more parts than cores
+    parses in ONE wave of ``defaultParallelism`` Python tasks, whole parts
+    packed by payload bytes; a chunk with no more parts than cores (the
+    10^12-doc regime) splits its parts over the cores. So
+    ``parts_per_chunk`` is only the commit (work-at-risk) granularity;
     ``num_partitions`` overrides the task count.
 
     Safe under CONCURRENT writers on the same table root: chunk ids are
@@ -1131,24 +1148,10 @@ def run_extraction(
     if not todo:
         return report
 
-    docs = resume_filter(
-        documents,
-        log,
-        n_parts,
-        keep_cols=() if password_col is None else (password_col,),
-    )
-    sized = sized_wave(spark, min(parts_per_chunk, len(todo)), num_partitions)
-    reread = sized or len(todo) > parts_per_chunk
-    if reread:
-        # The sizing pass and every chunk read the same input; persist once
-        # instead of re-scanning the corpus (MEMORY_AND_DISK, spills).
-        # At true 10^12-doc scale this trades off differently: there the
-        # input is an Iceberg table and each chunk's scan is partition-pruned
-        # by storing part_id as a partition column, so nothing is cached —
-        # parts_per_chunk then only bounds the work at risk between commits.
-        docs = docs.persist()
-    try:
-        sizes = part_bytes(docs) if sized else None
+    with _parse_input(
+        spark, documents, log, n_parts, todo, parts_per_chunk, refresh=False,
+        num_partitions=num_partitions, passwords=passwords, password_col=password_col,
+    ) as parse:
         pending = list(todo)
         while pending:
             # re-read the committed set: a concurrent writer may have
@@ -1161,15 +1164,7 @@ def run_extraction(
                 break
             chunk_parts = pending[:parts_per_chunk]
             pending = pending[parts_per_chunk:]
-            extracted = extract_documents(
-                docs,
-                n_parts=n_parts,
-                num_partitions=num_partitions,
-                passwords=passwords,
-                password_col=password_col,
-                parts=chunk_parts,
-                sizes=sizes,
-            )
+            extracted = parse(chunk_parts)
             chunk_id = log.reserve_chunk_id()
             try:
                 # empty part_ids (no docs hashed to them) still count as committed
@@ -1190,7 +1185,4 @@ def run_extraction(
                 and report.chunks_committed >= fail_after_chunks
             ):
                 raise RuntimeError("injected failure for kill-and-resume test")
-    finally:
-        if reread:
-            docs.unpersist()
     return report

@@ -49,8 +49,6 @@ placements.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -257,21 +255,3 @@ def read_materialized(
     spark: SparkSession, out_log: CommitLog, as_of: int | None = None
 ) -> DataFrame:
     return out_log.read_table(spark, MATERIALIZED_SCHEMA, as_of=as_of)
-
-
-def run_materialize_job(
-    spark: SparkSession,
-    extract_root: str,
-    pack_root: str,
-    out_root: str,
-    rebuild: bool = False,
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_materialize(
-        spark,
-        CommitLog(extract_root),
-        CommitLog(pack_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
-    )
-    return report, time.monotonic() - t0

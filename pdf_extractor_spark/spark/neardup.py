@@ -54,8 +54,6 @@ doc — the only state the stage carries forward.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -297,21 +295,3 @@ def read_neardup(
     spark: SparkSession, out_log: CommitLog, as_of: int | None = None
 ) -> DataFrame:
     return out_log.read_table(spark, NEARDUP_SCHEMA, as_of=as_of)
-
-
-def run_neardup_job(
-    spark: SparkSession,
-    src_root: str,
-    out_root: str,
-    rebuild: bool = False,
-    kept_from: str | None = None,
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_neardup(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
-        kept_from=None if kept_from is None else CommitLog(kept_from),
-    )
-    return report, time.monotonic() - t0

@@ -30,7 +30,6 @@ oracle query.
 from __future__ import annotations
 
 import hashlib
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -130,14 +129,6 @@ def read_ocr_text(
     spark: SparkSession, out_log: CommitLog, as_of: int | None = None
 ) -> DataFrame:
     return out_log.read_table(spark, OCR_SCHEMA, as_of=as_of)
-
-
-def run_ocr_job(
-    spark: SparkSession, src_root: str, out_root: str, rebuild: bool = False
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_ocr(spark, CommitLog(src_root), CommitLog(out_root), rebuild=rebuild)
-    return report, time.monotonic() - t0
 
 
 def merge_ocr_text(extracted: DataFrame, ocr_text: DataFrame) -> DataFrame:

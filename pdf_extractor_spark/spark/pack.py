@@ -52,8 +52,6 @@ framing.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
@@ -62,6 +60,7 @@ from ..ops.portable import h64, tokens
 from ..ops.training import CTX_TOKENS, PACK_SHARDS_DIV, exclusive_prefix_sum
 from .derived import run_derived_stage
 from .lineage import CommitLog, RunReport
+from .neardup import table_scope
 from .signals import signal_text
 
 # bump whenever compute_pack's semantics change (fixture caches key on it)
@@ -249,7 +248,7 @@ def run_pack(
             "table's verdicts define — always run it with rebuild=True "
             "(job.py pack --kept-from ... --rebuild)"
         )
-    prior = _table_scope(out_log)
+    prior = table_scope(out_log)
     if prior is not None and prior != scope and not rebuild:
         raise ValueError(
             f"pack table scope is '{prior}' but this run is '{scope}'; "
@@ -297,35 +296,7 @@ def run_pack(
     )
 
 
-def _table_scope(out_log: CommitLog) -> str | None:
-    from .neardup import table_scope
-
-    return table_scope(out_log)
-
-
 def read_packed(
     spark: SparkSession, out_log: CommitLog, as_of: int | None = None
 ) -> DataFrame:
     return out_log.read_table(spark, PACKED_SCHEMA, as_of=as_of)
-
-
-def run_pack_job(
-    spark: SparkSession,
-    src_root: str,
-    out_root: str,
-    rebuild: bool = False,
-    kept_from: str | None = None,
-    neardup_from: str | None = None,
-    cost: str = "ws",
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_pack(
-        spark,
-        CommitLog(src_root),
-        CommitLog(out_root),
-        rebuild=rebuild,
-        kept_from=None if kept_from is None else CommitLog(kept_from),
-        neardup_from=None if neardup_from is None else CommitLog(neardup_from),
-        cost=cost,
-    )
-    return report, time.monotonic() - t0

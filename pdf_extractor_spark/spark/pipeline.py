@@ -125,14 +125,6 @@ def lpt_bins(sizes, n_bins: int) -> list[int]:
     return out
 
 
-def sized_wave(spark, n_chunk_parts: int, num_partitions: int | None) -> bool:
-    """Whether a chunk of ``n_chunk_parts`` parts runs as one size-balanced
-    wave (:func:`balance_partitions`): only with more parts than cores and
-    no explicit task count, so a chunk that fits the cores pays no sizing
-    pass (:func:`part_bytes`)."""
-    return num_partitions is None and n_chunk_parts > spark.sparkContext.defaultParallelism
-
-
 def part_bytes(df: DataFrame) -> dict[int, int]:
     """Span payload bytes per ``part_id`` of ``df`` (which carries
     ``part_id``): one JVM-only aggregation, no Python task. The payload is
@@ -156,13 +148,14 @@ def balance_partitions(
 
     ``df`` carries ``part_id`` (``assign_part_id``); ``parts`` lists the
     part ids being extracted. Each row goes to a task through
-    ``repartitionById``; the task count is ``num_partitions`` if given,
-    else ``defaultParallelism`` when ``sizes`` (payload bytes by part,
-    :func:`part_bytes`) are given and there are more parts than that,
-    else ``max(len(parts), defaultParallelism)``:
+    ``repartitionById``; the task count is ``defaultParallelism`` when
+    ``sizes`` (payload bytes by part, :func:`part_bytes`) are given, else
+    ``num_partitions`` if given, else ``max(len(parts), defaultParallelism)``:
 
-    - sized, more parts than cores: ONE wave of ``defaultParallelism``
-      tasks, whole parts packed by :func:`lpt_bins` over their bytes;
+    - sized: ONE wave of ``defaultParallelism`` tasks, whole parts packed
+      by :func:`lpt_bins` over their bytes (the caller sizes only a chunk
+      with more parts than cores and no ``num_partitions``, see
+      ``lineage._parse_input``);
     - ``len(parts)`` tasks: one task per part, at the part's dense
       position in ``parts``;
     - fewer tasks than parts: whole parts grouped by ``position % tasks``;
@@ -206,7 +199,7 @@ def balance_partitions(
     dense = parts == list(range(k))
     # 1-based position of the row's part in ``parts``
     pos = "part_id + 1" if dense else f"int(array_position(array({int_list(parts)}), part_id))"
-    if sizes is not None and sized_wave(df.sparkSession, k, num_partitions):
+    if sizes is not None:
         bins = lpt_bins([sizes.get(p, 0) for p in parts], cores)
         return df.repartitionById(
             cores, F.expr(f"element_at(array({int_list(bins)}), {pos})").cast("int")
@@ -404,8 +397,8 @@ def extract_documents(
     ``parts`` lists the part ids to extract (default ``range(n_parts)``);
     rows of other parts are dropped here, so the exchange never sees a part
     it has no slot for. ``sizes`` (payload bytes by part,
-    :func:`part_bytes`) lets a list of more parts than cores run as one
-    wave of ``defaultParallelism`` tasks; the task count rules are
+    :func:`part_bytes`) packs the parts into one wave of
+    ``defaultParallelism`` tasks; the task count rules are
     ``balance_partitions``'.
     """
     if password_col is not None:

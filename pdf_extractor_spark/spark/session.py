@@ -14,17 +14,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_master(environ=os.environ) -> str | None:
+    """The master ``get_spark`` sets when the caller names none:
+    ``$SPARK_GRAFT_MASTER``, else none under a launcher (spark-submit hands
+    over its JVM in ``PYSPARK_GATEWAY_PORT``, and its ``--master`` must
+    stand), else ``local[$SPARK_GRAFT_CPUS]`` (32 when unset)."""
+    if environ.get("SPARK_GRAFT_MASTER"):
+        return environ["SPARK_GRAFT_MASTER"]
+    if "PYSPARK_GATEWAY_PORT" in environ:
+        return None
+    return f"local[{environ.get('SPARK_GRAFT_CPUS', '32')}]"
+
+
 def get_spark(
     app_name: str = "pdf-extractor-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     arrow_max_records: int = 64,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         # deterministic timestamp arithmetic regardless of host timezone

@@ -31,8 +31,6 @@ bounded by its delta size.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -188,13 +186,3 @@ def read_signals(
     spark: SparkSession, out_log: CommitLog, as_of: int | None = None
 ) -> DataFrame:
     return out_log.read_table(spark, SIGNALS_SCHEMA, as_of=as_of)
-
-
-def run_signals_job(
-    spark: SparkSession, src_root: str, out_root: str, rebuild: bool = False
-) -> tuple[RunReport, float]:
-    t0 = time.monotonic()
-    report = run_signals(
-        spark, CommitLog(src_root), CommitLog(out_root), rebuild=rebuild
-    )
-    return report, time.monotonic() - t0

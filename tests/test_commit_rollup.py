@@ -3,7 +3,8 @@
 Differential: the marker's docs/pages/failures and the parts each write
 observed must equal a rollup read back from the committed files, across
 every write path (kill-and-resume appends, an overwrite refresh,
-compaction, streaming micro-batches) and under a forced task retry.
+compaction, streaming micro-batches) and under a forced task retry; each
+writer's marker carries its own metric keys (a derived marker no pages).
 Job budget: an extraction chunk runs exactly the exchange's map job plus
 one parse-and-write job, and a derived commit runs no job after its write.
 """
@@ -61,6 +62,7 @@ def _assert_rollups_match(spark, log, observed):
 
 
 def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
+    from pdf_extractor_spark.spark.signals import run_signals
     from pdf_extractor_spark.streaming.ingest import make_batch_processor
 
     observed = {}
@@ -99,6 +101,19 @@ def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
     assert empty["metrics"] == {
         "docs": 0, "pages": 0, "failures": 0, "error_parts": [], "epoch": 1, "stream": "stream"
     }
+
+    # one write path, per-writer marker keys: a derived marker counts
+    # docs only (no pages/failures), incremental or rebuilt
+    extraction = {"docs", "pages", "failures", "error_parts"}
+    keys = [set(m["metrics"]) for m in log.committed_chunks()]
+    assert keys == [extraction] * 4 + [extraction | {"compacted_from"}]
+    assert all(set(m["metrics"]) == extraction | {"epoch", "stream"} for m in slog.committed_chunks())
+    dlog = L.CommitLog(str(tmp_path / "signals"))
+    run_signals(spark, slog, dlog)
+    run_signals(spark, slog, dlog, rebuild=True)
+    derived = {"docs", "stage", "src_snapshot"}
+    assert [set(m["metrics"]) for m in dlog.committed_chunks()] == [derived, derived | {"rebuild"}]
+    assert [m["metrics"]["docs"] for m in dlog.committed_chunks()] == [12, 12]
 
 
 def test_part_status_from_markers_matches_lineage(spark, tmp_path):

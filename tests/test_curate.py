@@ -432,11 +432,11 @@ def test_curate_incremental_matches_python_reference(spark, tmp_path, seed):
 
 
 def test_curate_job_and_cli_guards(spark, tmp_path):
-    """run_curate_job (the `curate` body) end-to-end against a committed
+    """run_curate (the `curate` body) end-to-end against a committed
     root, then the same stage through main() — which borrows the test
     session rather than stopping it."""
     from pdf_extractor_spark.job import main
-    from pdf_extractor_spark.spark.curate import run_curate_job
+    from pdf_extractor_spark.spark.curate import run_curate
 
     texts = {1: KEEP_TEXT, 2: KEEP_TEXT, 3: "the cat"}
     sf_dir = write_docs(tmp_path, texts)
@@ -444,7 +444,7 @@ def test_curate_job_and_cli_guards(spark, tmp_path):
     out_root = str(tmp_path / "out")
     L.run_extraction(spark, wrap_documents(spark, sf_dir),
                      L.CommitLog(src_root), n_parts=4, parts_per_chunk=4)
-    report, dt = run_curate_job(spark, src_root, out_root)
+    report = run_curate(spark, L.CommitLog(src_root), L.CommitLog(out_root))
     assert report.chunks_committed == 1 and report.docs_processed == 3
     got = _verdicts(spark, L.CommitLog(out_root))
     assert len(got) == 3

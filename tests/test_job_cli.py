@@ -157,3 +157,15 @@ def test_documented_scripts_exist():
     assert len(named) >= 10
     missing = sorted((src, m) for src, m in named if not (root / m).exists())
     assert not missing, missing
+
+
+def test_default_master_lets_a_launcher_master_stand():
+    """Under spark-submit (a gateway handed over in PYSPARK_GATEWAY_PORT)
+    get_spark sets no master, so the launcher's --master stands; a plain
+    python launch gets local[$SPARK_GRAFT_CPUS]. Starts no JVM."""
+    from pdf_extractor_spark.spark.session import default_master
+
+    assert default_master({}) == "local[32]"
+    assert default_master({"SPARK_GRAFT_CPUS": "4"}) == "local[4]"
+    assert default_master({"PYSPARK_GATEWAY_PORT": "41234", "SPARK_GRAFT_CPUS": "4"}) is None
+    assert default_master({"PYSPARK_GATEWAY_PORT": "41234", "SPARK_GRAFT_MASTER": "local[2]"}) == "local[2]"

@@ -668,7 +668,6 @@ def test_signals_cursor_collision_loses_deterministically(spark, tmp_path):
         read_signals,
         run_signals,
     )
-    from pdf_extractor_spark.spark.derived import commit_derived_chunk
     from tests.helpers import write_docs
 
     texts = {i: f"golf hotel w{i}" for i in range(12)}
@@ -689,11 +688,11 @@ def test_signals_cursor_collision_loses_deterministically(spark, tmp_path):
             # rival writer consumes the same window and commits first
             rival = L.CommitLog(out_root)
             cid = real_reserve(rival)
-            commit_derived_chunk(
-                rival,
+            L._write_chunk(
+                spark, rival,
                 compute_signals(src.read_extracted(spark)),
-                "signals", None,
-                {"src_snapshot": latest}, src.n_parts(),
+                cid, None, src.n_parts(),
+                extra_metrics={"stage": "signals", "src_snapshot": latest},
             )
         return real_reserve(self)
 

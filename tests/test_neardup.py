@@ -119,7 +119,6 @@ def test_kept_view_and_export_drop_neardups(spark, tmp_path):
         run_curate,
     )
     from pdf_extractor_spark.spark.export import export_markdown_zip
-    from pdf_extractor_spark.spark.neardup import run_neardup_job
 
     sf = write_docs(tmp_path / "kept", TEXTS)
     src = L.CommitLog(str(tmp_path / "src"))
@@ -131,8 +130,8 @@ def test_kept_view_and_export_drop_neardups(spark, tmp_path):
     # the NEAR-DUP composition
     run_curate(spark, src, cur, gates=GateConfig(
         min_stopword_micros=0, accept_langs=GateConfig.any_language()))
-    run_neardup_job(spark, str(tmp_path / "src"), str(tmp_path / "nd"))
     nd = L.CommitLog(str(tmp_path / "nd"))
+    run_neardup(spark, src, nd)
 
     kept_plain = {r["doc_id"] for r in read_kept(spark, src, cur).collect()}
     kept_nodups = {
@@ -242,7 +241,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
         read_kept,
         run_curate,
     )
-    from pdf_extractor_spark.spark.neardup import run_neardup_job, table_scope
+    from pdf_extractor_spark.spark.neardup import table_scope
 
     src = L.CommitLog(str(tmp_path / "src"))
     cur = L.CommitLog(str(tmp_path / "cur"))
@@ -268,8 +267,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
     assert kept_full == {"5", "9"}
 
     # the kept-scoped re-decision (job.py neardup --over-kept --rebuild)
-    rep = run_neardup_job(spark, str(tmp_path / "src"), str(tmp_path / "ndk"),
-                          rebuild=True, kept_from=str(tmp_path / "cur"))[0]
+    rep = run_neardup(spark, src, ndk, rebuild=True, kept_from=cur)
     assert rep.docs_processed == 2  # only the kept corpus
     got = _rows(spark, ndk)
     assert set(got) == {"5", "9"}
@@ -446,18 +444,17 @@ def test_neardup_incremental_matches_python_reference(spark, tmp_path, seed):
 
 
 def test_neardup_job_and_cli_guards(spark, tmp_path):
-    """run_neardup_job (the `neardup` body) end-to-end against a committed
+    """run_neardup (the `neardup` body) end-to-end against a committed
     root, then the same stage through main() — which borrows the test
     session rather than stopping it."""
     from pdf_extractor_spark.job import main
-    from pdf_extractor_spark.spark.neardup import run_neardup_job
 
     sf = write_docs(tmp_path / "cli", {1: BASE, 2: NEAR1})
     src_root = str(tmp_path / "cli_src")
     out_root = str(tmp_path / "cli_out")
     L.run_extraction(spark, wrap_documents(spark, sf),
                      L.CommitLog(src_root), n_parts=2, parts_per_chunk=2)
-    report, _dt = run_neardup_job(spark, src_root, out_root)
+    report = run_neardup(spark, L.CommitLog(src_root), L.CommitLog(out_root))
     assert report.chunks_committed == 1 and report.docs_processed == 2
     got = _rows(spark, L.CommitLog(out_root))
     assert got["2"]["dup_of"] == "1" and got["1"]["dup_of"] is None
@@ -481,9 +478,8 @@ def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):
     import zipfile
 
     from pdf_extractor_spark.spark.curate import CURATED_SCHEMA, read_kept
-    from pdf_extractor_spark.spark.derived import commit_derived_chunk
     from pdf_extractor_spark.spark.export import export_markdown_zip
-    from pdf_extractor_spark.spark.lineage import _chunk_dirname
+    from pdf_extractor_spark.spark.lineage import _chunk_dirname, _write_chunk
     from pdf_extractor_spark.spark.neardup import NEARDUP_SCHEMA
     from pdf_extractor_spark.spark.pipeline import EXTRACTED_SCHEMA
 
@@ -504,9 +500,10 @@ def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):
         ("B", "dB", 2, "en", "keep", None, None, 0),
         ("C", "dC", 2, "en", "keep", None, None, 0),
     ]
-    commit_derived_chunk(
-        cur, spark.createDataFrame(cur_rows, CURATED_SCHEMA),
-        "curate", None, {"src_snapshot": cid}, 2,
+    _write_chunk(
+        spark, cur, spark.createDataFrame(cur_rows, CURATED_SCHEMA),
+        cur.reserve_chunk_id(), None, 2,
+        extra_metrics={"stage": "curate", "src_snapshot": cid},
     )
 
     nd = L.CommitLog(str(tmp_path / "nd"))
@@ -515,9 +512,10 @@ def test_kept_view_survives_curate_rejected_partner(spark, tmp_path):
         ("B", None, None, None, None, "A", 700_000_000, 0),
         ("C", None, None, None, None, "B", 700_000_000, 0),
     ]
-    commit_derived_chunk(
-        nd, spark.createDataFrame(nd_rows, NEARDUP_SCHEMA),
-        "neardup", None, {"src_snapshot": cid}, 2,
+    _write_chunk(
+        spark, nd, spark.createDataFrame(nd_rows, NEARDUP_SCHEMA),
+        nd.reserve_chunk_id(), None, 2,
+        extra_metrics={"stage": "neardup", "src_snapshot": cid},
     )
 
     kept = {

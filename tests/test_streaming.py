@@ -278,7 +278,6 @@ def test_export_zip_with_ocr_text(spark, tmp_path):
     with bare links (the unmerged byte contract is unchanged)."""
     import zipfile
 
-    from pdf_extractor_spark.spark.derived import commit_derived_chunk
     from pdf_extractor_spark.spark.export import export_markdown_zip
     from pdf_extractor_spark.spark.lineage import _write_chunk
     from pdf_extractor_spark.spark.ocr import OCR_SCHEMA
@@ -301,7 +300,9 @@ def test_export_zip_with_ocr_text(spark, tmp_path):
     ocr_rows = spark.createDataFrame(
         [("d1", "pdf://d1/0/im", "[ocr-stub feedface0000]", 0)], OCR_SCHEMA
     )
-    commit_derived_chunk(CommitLog(str(tmp_path / "ocr")), ocr_rows, "ocr", None, {}, 4)
+    ocr_log = CommitLog(str(tmp_path / "ocr"))
+    _write_chunk(spark, ocr_log, ocr_rows, ocr_log.reserve_chunk_id(), None, 4,
+                 extra_metrics={"stage": "ocr"})
     merged = tmp_path / "merged.zip"
     export_markdown_zip(
         spark, str(tmp_path / "t"), str(merged), ocr_from=str(tmp_path / "ocr")

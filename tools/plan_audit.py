@@ -62,11 +62,6 @@ def never_reads(plan: str, column: str):
     return ok, f"column {column!r} pruned from every scan"
 
 
-def reads_column(plan: str, column: str):
-    ok = any(column in s for s in _read_schemas(plan))
-    return ok, f"column {column!r} read by some scan"
-
-
 def contains(plan: str, token: str, n_min: int = 1):
     ok = plan.count(token) >= n_min
     return ok, f"plan has >= {n_min} x {token!r}"
@@ -193,6 +188,18 @@ def _resumed_extract_input_df(spark, sf_dir: str):
 
     log = CommitLog(_snapshot_fixture_root())
     return resume_filter(wrap_documents(spark, sf_dir), log, log.n_parts())
+
+
+def _empty_table_read_df(spark, sf_dir: str):
+    """A derived stage's read of its own table before its first commit
+    (curate's kept-digest index, neardup's band index)."""
+    import tempfile
+
+    from pdf_extractor_spark.spark.curate import CURATED_SCHEMA
+    from pdf_extractor_spark.spark.lineage import CommitLog
+
+    root = tempfile.gettempdir() + "/plan-audit-empty-table"  # never written
+    return CommitLog(root).read_table(spark, CURATED_SCHEMA)
 
 
 def _snapshot_scan_df(spark, sf_dir: str):
@@ -1762,12 +1769,81 @@ AUDITS: list[tuple] = [
         ],
         False,
     ),
+    (
+        "empty_table_read",
+        _empty_table_read_df,
+        [
+            # an empty LocalTableScan, never a relation built from Python
+            # (a broadcast createDataFrame([]) ran a 4-task PythonRDD job)
+            lambda p: absent(p, "ExistingRDD"),
+            lambda p: contains(p, "LocalTableScan"),
+        ],
+        False,
+    ),
 ]
 
 
 
 
 
+
+
+def evidence_tree(plan: str) -> str:
+    """The formatted plan's node tree as written to BENCH/PLANS.md. A
+    broadcast side AQE picks at run time (``BroadcastQueryStage``) flips
+    between runs when both join inputs are the same size, moving wrappers,
+    operator ids and the ``== Final Plan ==`` listings Spark splices into
+    the tree. Such a tree is rebuilt from its columns and written
+    side-free: ``Build<runtime>``, no broadcast wrappers, no ids, each
+    listing after its tree. Pins read the raw plan."""
+    tree = plan.split("\n\n")[0]
+    if "BroadcastQueryStage" not in tree:
+        return tree
+    listings, ctxs = [], []  # [header, roots]; open (column, listing, path)
+    for line in tree.splitlines():
+        m = re.match(r"((?:[ :]  )*)([+:]- )?(.*)", line)
+        col = len(m.group(1)) + len(m.group(2) or "")
+        node = [re.sub(r" \(\d+\)", "", m.group(3)), []]  # [label, children]
+        if node[0].startswith("== "):  # may sit left of its tree
+            while ctxs and ctxs[-1][0] == col:  # Initial Plan closes Final
+                ctxs.pop()
+            listings.append([node[0], []])
+            ctxs.append((col, listings[-1], []))
+            continue
+        while ctxs:  # innermost open listing the line fits in
+            base, listing, path = ctxs[-1]
+            if not m.group(2) and col == base:
+                listing[1].append(node)
+                path[:] = [(col, node)]
+                break
+            while path and path[-1][0] > col - 3:
+                path.pop()
+            # a child sits 3 columns in (a cached relation's 6), and only
+            # a join or union takes a second one
+            up = path[-1] if path else (None, [""])
+            if (up[0] == col - 3 or up[0] == col - 6 and up[1][0].startswith("InMemory")) and (
+                not up[1][1] or re.search("Join|Union", up[1][0])
+            ):
+                up[1][1].append(node)
+                path.append((col, node))
+                break
+            ctxs.pop()
+        else:
+            return tree
+
+    def render(node, depth):
+        label, kids = node
+        if "BroadcastHashJoin" in label and any("BroadcastQueryStage" in k[0] for k in kids):
+            label = re.sub("Build(Left|Right)", "Build<runtime>", label)
+            for i, k in enumerate(kids):
+                while k[1] and re.search("Broadcast(QueryStage|Exchange)", k[0]):
+                    kids[i] = k = k[1][0]
+        return ["   " * depth + label] + [x for k in kids for x in render(k, depth + 1)]
+
+    out = []
+    for header, roots in listings:
+        out += [header] + [x for r in roots for x in render(r, 0)]
+    return "\n".join(out)
 
 
 def run_audit(spark, sf_dir: str):
@@ -1815,8 +1891,7 @@ def main() -> int:
             lines.append(f"- {mark} — {detail}")
             print(("PASS " if ok else "FAIL ") + f"{name}: {detail}")
         # record the compact node tree (header section of the formatted plan)
-        tree = plan.split("\n\n")[0]
-        lines += ["", "```", tree, "```", ""]
+        lines += ["", "```", evidence_tree(plan), "```", ""]
     out = REPO / "BENCH" / "PLANS.md"
     out.write_text("\n".join(lines))
     print(f"{'OK' if n_fail == 0 else f'{n_fail} FAILURES'} -> {out}")
