@@ -804,9 +804,8 @@ class _Font:
     - predefined Uni(GB|JIS|KS|CNS)-UCS2-H/V: fixed 2-byte codes that ARE
       UCS-2 values (ucs2_codes) — unicode without any ToUnicode;
     - embedded CMap stream (round 3): variable-width codes split by the
-      CMap's codespacerange (code_ranges), code -> CID via its
-      cidrange/cidchar operators (cid_ranges / cid_chars, kept for glyph
-      identity), unicode via the code-keyed /ToUnicode.
+      CMap's codespacerange (code_ranges), unicode via the code-keyed
+      /ToUnicode.
     """
 
     decode_map: dict[int, str] | None = None
@@ -819,18 +818,7 @@ class _Font:
     is_cid: bool = False
     cid_map: dict[int, str] | None = None
     code_ranges: list[tuple[int, int, int]] | None = None  # (lo, hi, nbytes)
-    cid_ranges: list[tuple[int, int, int]] | None = None  # (lo, hi, cid_base)
-    cid_chars: dict[int, int] | None = None
     ucs2_codes: bool = False
-
-    def cid_of(self, code: int) -> int | None:
-        """CID for a character code (embedded-CMap fonts); None if unmapped."""
-        if self.cid_chars and code in self.cid_chars:
-            return self.cid_chars[code]
-        for lo, hi, base in self.cid_ranges or []:
-            if lo <= code <= hi:
-                return base + (code - lo)
-        return None
 
 
 _BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.S)
@@ -883,15 +871,15 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
 
 _CODESPACE_RE = re.compile(rb"begincodespacerange(.*?)endcodespacerange", re.S)
 _CIDRANGE_RE = re.compile(rb"begincidrange(.*?)endcidrange", re.S)
-_CIDCHAR_RE = re.compile(rb"begincidchar(.*?)endcidchar", re.S)
 _CIDRANGE_TRIPLE_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s+(\d+)")
-_CIDCHAR_PAIR_RE = re.compile(rb"<([0-9A-Fa-f]+)>\s+(\d+)")
 
 
-def _parse_cid_cmap(data: bytes):
-    """Parse an embedded /Encoding CMap stream: codespacerange (the code
-    byte-width structure show strings split by) plus cidrange/cidchar
-    (code -> CID, kept for glyph identity). ISO 32000 9.7.5.3."""
+def _parse_cid_cmap(data: bytes) -> list[tuple[int, int, int]]:
+    """Parse an embedded /Encoding CMap stream's codespacerange: the code
+    byte-width structure show strings split by (ISO 32000 9.7.5.3). Text
+    decodes through the code-keyed ToUnicode, so the code -> CID tables
+    are not kept; the cidranges are only scanned to refuse an oversized
+    one, as the bfrange parse does."""
     code_ranges: list[tuple[int, int, int]] = []
     for m in _CODESPACE_RE.finditer(data):
         for p in _HEXPAIR_RE.finditer(m.group(1)):
@@ -904,18 +892,11 @@ def _parse_cid_cmap(data: bytes):
             code_ranges.append((int(lo_hex, 16), int(hi_hex, 16), nbytes))
     if not code_ranges:
         raise PdfParseError("CMap without codespacerange")
-    cid_ranges: list[tuple[int, int, int]] = []
     for m in _CIDRANGE_RE.finditer(data):
         for t in _CIDRANGE_TRIPLE_RE.finditer(m.group(1)):
-            lo, hi = int(t.group(1), 16), int(t.group(2), 16)
-            if hi - lo > 0x10000:
+            if int(t.group(2), 16) - int(t.group(1), 16) > 0x10000:
                 raise PdfParseError("oversized cidrange")
-            cid_ranges.append((lo, hi, int(t.group(3))))
-    cid_chars: dict[int, int] = {}
-    for m in _CIDCHAR_RE.finditer(data):
-        for p in _CIDCHAR_PAIR_RE.finditer(m.group(1)):
-            cid_chars[int(p.group(1), 16)] = int(p.group(2))
-    return code_ranges, cid_ranges, cid_chars
+    return code_ranges
 
 
 def _split_codes(raw: bytes, ranges: list[tuple[int, int, int]]) -> list[int]:
@@ -972,19 +953,12 @@ def _build_font(doc: PdfDoc, font_obj) -> _Font:
         if isinstance(tu, Stream):
             cid_map = _parse_tounicode(_apply_filters(tu.raw, tu.dict, doc.resolve))
         if isinstance(enc, Stream):
-            # embedded CMap: variable-width codes via its codespacerange,
-            # code -> CID via cidrange/cidchar; unicode via the code-keyed
-            # ToUnicode (round 3 — previously only Identity-H/V parsed)
-            code_ranges, cid_ranges, cid_chars = _parse_cid_cmap(
+            # embedded CMap: variable-width codes via its codespacerange;
+            # unicode via the code-keyed ToUnicode
+            code_ranges = _parse_cid_cmap(
                 _apply_filters(enc.raw, enc.dict, doc.resolve)
             )
-            return _Font(
-                is_cid=True,
-                cid_map=cid_map,
-                code_ranges=code_ranges,
-                cid_ranges=cid_ranges,
-                cid_chars=cid_chars,
-            )
+            return _Font(is_cid=True, cid_map=cid_map, code_ranges=code_ranges)
         enc_name = str(enc)
         if enc_name in ("Identity-H", "Identity-V"):
             return _Font(is_cid=True, cid_map=cid_map)

@@ -287,15 +287,9 @@ def _extract(args) -> int:
 
             docs = corpus_df(spark, int(args.input.split(":", 1)[1]), seed=args.seed)
         elif _input_format(args) == "jsonl":
-            from pdf_extractor_spark.ops.jsonl_source import read_jsonl_documents
+            from pdf_extractor_spark.ops.jsonl_source import ingest_jsonl
 
-            docs = (
-                read_jsonl_documents(spark, args.input)
-                # quarantine: structurally-broken lines (and any partial-
-                # result row a future Spark flags)
-                .where("doc_id IS NOT NULL AND _corrupt IS NULL")
-                .select("doc_id", "spans")
-            )
+            docs = ingest_jsonl(spark.read, args.input)
         else:
             docs = spark.read.parquet(args.input).select("doc_id", "spans")
         password_col = None

@@ -32,10 +32,12 @@ from .portable import (
     MINHASH_BANDS,
     NUM_MINHASH,
     SIMHASH_BITS,
+    dot_sql,
     h64,
     h64_sql,
     minhash_term,
     minhash_term_sql,
+    norm_sql,
     reduce_hash,
     reduce_hash_sql,
     tokens,
@@ -679,23 +681,13 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot_sql(a: str, b: str, dim: int = 64) -> str:
-    """Explicit left-associated sum so the IEEE add order matches Spark's
-    sequential aggregate() fold."""
-    return " + ".join(f"({a}[{i}] * {b}[{i}])" for i in range(1, dim + 1))
-
-
-def _norm_sql(a: str, dim: int = 64) -> str:
-    return "sqrt(" + " + ".join(f"({a}[{i}] * {a}[{i}])" for i in range(1, dim + 1)) + ")"
-
-
 EMBED_NEARDUP_SQL = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
            FROM embeddings),
-n AS (SELECT vec_id, label, v, {_norm_sql('v')} AS nrm FROM e)
+n AS (SELECT vec_id, label, v, {norm_sql('v')} AS nrm FROM e)
 SELECT vec1, vec2, CAST(floor(cos * 1000000.0) AS BIGINT) AS cosine_micros FROM (
   SELECT a.vec_id AS vec1, b.vec_id AS vec2,
-         ({_dot_sql('a.v', 'b.v')}) / (a.nrm * b.nrm) AS cos
+         ({dot_sql('a.v', 'b.v')}) / (a.nrm * b.nrm) AS cos
   FROM n a JOIN n b USING (label)
   WHERE a.vec_id < b.vec_id)
 WHERE cos >= 0.4 ORDER BY vec1, vec2
@@ -755,7 +747,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def star_contract_components(edges: DataFrame, max_rounds: int = MAX_CC_ITERS):
+def star_contract_components(edges: DataFrame):
     """Connected components via alternating large-star / small-star rewrites
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14): each round halves star heights roughly geometrically, so a
@@ -803,7 +795,7 @@ def star_contract_components(edges: DataFrame, max_rounds: int = MAX_CC_ITERS):
     )
     rounds = 0
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(MAX_CC_ITERS):
         big = _large_star(cur).persist()
         nxt = _small_star(big).localCheckpoint(eager=True)
         big.unpersist()
@@ -1301,12 +1293,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMANTIC_DEDUP_SQL = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, label, v, {_norm_sql('v')} AS nrm FROM e),
+n AS (SELECT vec_id, label, v, {norm_sql('v')} AS nrm FROM e),
 cand AS (
   SELECT doc1, doc2, CAST(floor(cos * 1000000.0) AS BIGINT) AS cosine_micros
   FROM (
     SELECT a.vec_id AS doc1, b.vec_id AS doc2,
-           ({_dot_sql('a.v', 'b.v')}) / (a.nrm * b.nrm) AS cos
+           ({dot_sql('a.v', 'b.v')}) / (a.nrm * b.nrm) AS cos
     FROM n a JOIN n b USING (label)
     WHERE a.vec_id < b.vec_id)
   WHERE cos >= {SEMANTIC_COS}),

@@ -247,7 +247,7 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pr_ctes(n_iters: int = PR_ITERS) -> str:
+def _pr_ctes() -> str:
     ctes = [
         """pairs AS (
   SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
@@ -262,7 +262,7 @@ def _pr_ctes(n_iters: int = PR_ITERS) -> str:
   SELECT src AS vertex, degree, {PR_ONE_PPB} // nv AS r
   FROM deg CROSS JOIN n)""",
     ]
-    for i in range(n_iters):
+    for i in range(PR_ITERS):
         ctes.append(
             f"""c{i} AS (
   SELECT e.dst AS vertex, CAST(sum(r.r // r.degree) AS BIGINT) AS ctb

@@ -173,15 +173,32 @@ def detect_input_format(path: str) -> str:
     return "jsonl" if has_jsonl else "parquet"
 
 
-def read_jsonl_documents(spark: SparkSession, path: str) -> DataFrame:
-    """documents(doc_id, spans, source) from a JSONL directory, corrupt
-    lines quarantined into the ``_corrupt`` column (all other fields
-    null)."""
+def _permissive(reader):
+    """A ``DataFrameReader`` or ``DataStreamReader`` set to the explicit
+    schema, corrupt lines captured in ``_corrupt`` (all other fields null)."""
     return (
-        spark.read.schema(JSONL_SCHEMA)
+        reader.schema(JSONL_SCHEMA)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
+    )
+
+
+def read_jsonl_documents(spark: SparkSession, path: str) -> DataFrame:
+    """documents(doc_id, spans, source, _corrupt) from a JSONL directory,
+    unquarantined: the oracle view's read."""
+    return _permissive(spark.read).json(path)
+
+
+def ingest_jsonl(reader, path: str) -> DataFrame:
+    """documents(doc_id, spans) as the ingest paths see a JSONL file or
+    directory, through ``spark.read`` (extract/refresh) or
+    ``spark.readStream`` (watch): the policy gate drops structurally
+    broken lines and any partial-result row the corrupt column flags."""
+    return (
+        _permissive(reader)
         .json(path)
+        .where(F.col("doc_id").isNotNull() & F.col("_corrupt").isNull())
+        .select("doc_id", "spans")
     )
 
 

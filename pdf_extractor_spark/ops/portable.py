@@ -86,6 +86,19 @@ def tokens_sql(expr: str) -> str:
     return rf"string_split_regex(lower(trim({expr})), '[{WS_CLASS}]+')"
 
 
+EMBED_DIM = 64  # width of every `embeddings` vector
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Explicit left-associated sum so the IEEE add order matches Spark's
+    sequential aggregate() fold."""
+    return " + ".join(f"({a}[{i}] * {b}[{i}])" for i in range(1, EMBED_DIM + 1))
+
+
+def norm_sql(a: str) -> str:
+    return f"sqrt({dot_sql(a, a)})"
+
+
 def epoch_s(col: Column | str) -> Column:
     """Whole-second epoch of a TIMESTAMP_NTZ, session-timezone-INDEPENDENT.
 

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-DIM = 64
+from .portable import EMBED_DIM as DIM, dot_sql, norm_sql
+
 N_QUERIES = 10  # vec_id < 10 are the query set
 TOP_K = 5
 LSH_BITS = 8
@@ -74,20 +75,12 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot_sql(a: str, b: str) -> str:
-    return " + ".join(f"({a}[{i}] * {b}[{i}])" for i in range(1, DIM + 1))
-
-
-def _norm_sql(a: str) -> str:
-    return "sqrt(" + " + ".join(f"({a}[{i}] * {a}[{i}])" for i in range(1, DIM + 1)) + ")"
-
-
 ANN_BRUTEFORCE_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, v, {_norm_sql('v')} AS nrm FROM e),
+n AS (SELECT vec_id, v, {norm_sql('v')} AS nrm FROM e),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ({_dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
+         ({dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
   FROM n q, n c
   WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id),
 ranked AS (
@@ -153,10 +146,10 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_LSH_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, v, {_norm_sql('v')} AS nrm, {_lsh_code_sql('v')} AS code FROM e),
+n AS (SELECT vec_id, v, {norm_sql('v')} AS nrm, {_lsh_code_sql('v')} AS code FROM e),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ({_dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
+         ({dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
   FROM n q JOIN n c USING (code)
   WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id),
 ranked AS (
@@ -250,14 +243,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_IVF_SQL = f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, label, v, {_norm_sql('v')} AS nrm FROM e),
+n AS (SELECT vec_id, label, v, {norm_sql('v')} AS nrm FROM e),
 seed_ids AS (SELECT label, min(vec_id) AS vec_id FROM embeddings GROUP BY label),
 seeds AS (
   SELECT n.label AS cell, n.v AS sv, n.nrm AS snrm
   FROM n JOIN seed_ids ON n.label = seed_ids.label AND n.vec_id = seed_ids.vec_id),
 cell_scores AS (
   SELECT n.vec_id, n.v, n.nrm, seeds.cell,
-         ({_dot_sql('n.v', 'seeds.sv')}) / (n.nrm * seeds.snrm) AS seed_cos
+         ({dot_sql('n.v', 'seeds.sv')}) / (n.nrm * seeds.snrm) AS seed_cos
   FROM n CROSS JOIN seeds),
 ranked_cells AS (
   SELECT vec_id, v, nrm, cell,
@@ -272,7 +265,7 @@ probes AS (
   FROM ranked_cells WHERE vec_id < {N_QUERIES} AND cell_rank <= {NPROBE}),
 scored AS (
   SELECT query_id, cand_id AS neighbor_id,
-         ({_dot_sql('qv', 'cv')}) / (qnrm * cnrm) AS cos
+         ({dot_sql('qv', 'cv')}) / (qnrm * cnrm) AS cos
   FROM idx JOIN probes USING (cell)
   WHERE query_id <> cand_id),
 ranked AS (
@@ -369,7 +362,7 @@ def _ann_ivf_trained_sql() -> str:
         + ",\n".join(kmeans_ctes(n))
         + f""",
 ev AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-nv AS (SELECT vec_id, v, {_norm_sql('v')} AS nrm FROM ev),
+nv AS (SELECT vec_id, v, {norm_sql('v')} AS nrm FROM ev),
 dT AS (
   SELECT p.vec_id, c.cell,
          CAST(sum((p.val - c.c) * (p.val - c.c)) AS BIGINT) AS d2
@@ -387,7 +380,7 @@ probes AS (
   WHERE r.vec_id < {N_QUERIES} AND r.cell_rank <= {NPROBE}),
 scored AS (
   SELECT query_id, cand_id AS neighbor_id,
-         ({_dot_sql('qv', 'cv')}) / (qnrm * cnrm) AS cos
+         ({dot_sql('qv', 'cv')}) / (qnrm * cnrm) AS cos
   FROM idx JOIN probes USING (cell)
   WHERE query_id <> cand_id),
 ranked AS (
@@ -611,10 +604,10 @@ WITH text_ranks AS (
            AS text_rank
   FROM ({BM25_SEARCH_SQL})),
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, v, {_norm_sql('v')} AS nrm FROM e),
+n AS (SELECT vec_id, v, {norm_sql('v')} AS nrm FROM e),
 vec_scored AS (
   SELECT c.vec_id AS id,
-         ({_dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
+         ({dot_sql('q.v', 'c.v')}) / (q.nrm * c.nrm) AS cos
   FROM n c CROSS JOIN (SELECT * FROM n WHERE vec_id = {HYBRID_QUERY_VEC}) q
   WHERE c.vec_id != {HYBRID_QUERY_VEC}),
 vec_ranks AS (

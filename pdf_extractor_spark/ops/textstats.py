@@ -13,7 +13,9 @@ means only `text` is read.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..shipping import pin_launch_archives
@@ -1024,11 +1026,9 @@ ORDER BY b.doc_id
 BPE_TOPK = 20
 
 
-def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most frequent adjacent character pairs across the corpus — the first
-    merge-candidate scan of BPE tokenizer training (count every adjacent
-    symbol pair, weighted by word frequency; the argmax becomes the first
-    merge rule).
+def _top_pairs(frame: DataFrame, text: Column | str, k: int) -> DataFrame:
+    """Top-``k`` adjacent character pairs over ``frame``'s ``text``
+    column, weighted by word frequency (ties broken by pair text).
 
     Scale shape is the actual BPE algorithm's: collapse the corpus to a
     (token, count) VOCAB first (one shuffle with map-side combine — the
@@ -1038,9 +1038,8 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens) — the reason real BPE trainers iterate on the vocab, not the
     stream. Final top-k is TakeOrderedAndProject, never a global sort.
     """
-    docs = _docs(spark, sf_dir)
     vocab = (
-        docs.select(F.explode(tokens("text")).alias("tok"))
+        frame.select(F.explode(tokens(text)).alias("tok"))
         .where(F.length("tok") >= 2)
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
@@ -1055,8 +1054,17 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.groupBy("pair")
         .agg(F.sum("n").alias("occurrences"))
         .orderBy(F.desc("occurrences"), "pair")
-        .limit(BPE_TOPK)
+        .limit(k)
     )
+
+
+def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Most frequent adjacent character pairs across the corpus — the first
+    merge-candidate scan of BPE tokenizer training (count every adjacent
+    symbol pair, weighted by word frequency; the argmax becomes the first
+    merge rule). Vocab-first, see :func:`_top_pairs`.
+    """
+    return _top_pairs(_docs(spark, sf_dir), "text", BPE_TOPK)
 
 
 BPE_PAIRS_SQL = f"""
@@ -1152,33 +1160,13 @@ _BPE_OUT_SCHEMA = (
 )
 
 
-def bpe_merge_rules(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Top-``BPE_MERGES`` adjacent character pairs by weighted corpus count
-    (ties broken by pair text) — the single-level merge table that
-    :func:`q_bpe_encode` applies. Derived with the same vocab-first shape
-    as :func:`q_bpe_pairs`; the result is <= ``BPE_MERGES`` rows, so the
-    collect is bounded (same contract as the k-means centroid collect)."""
-    docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("tok"))
-        .where(F.length("tok") >= 2)
-        .groupBy("tok")
-        .agg(F.count("*").alias("n"))
-    )
-    pairs = vocab.select(
-        F.explode(
-            F.expr("transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))")
-        ).alias("pair"),
-        "n",
-    )
-    top = (
-        pairs.groupBy("pair")
-        .agg(F.sum("n").alias("occurrences"))
-        .orderBy(F.desc("occurrences"), "pair")
-        .limit(BPE_MERGES)
-        .collect()
-    )
-    return [r["pair"] for r in top]
+def bpe_merge_rules(frame: DataFrame, text: Column | str) -> list[str]:
+    """Top-``BPE_MERGES`` adjacent character pairs over ``frame``'s
+    ``text`` column (:func:`_top_pairs`) — the single-level merge table
+    that :func:`q_bpe_encode` and the BPE-costed pack stage apply. The
+    result is <= ``BPE_MERGES`` rows, so the collect is bounded (same
+    contract as the k-means centroid collect)."""
+    return [r["pair"] for r in _top_pairs(frame, text, BPE_MERGES).collect()]
 
 
 def bpe_encode_word(tok: str, rules: list[str]) -> list[str]:
@@ -1205,120 +1193,111 @@ def bpe_encode_word(tok: str, rules: list[str]) -> list[str]:
     return syms
 
 
-def _bpe_encode_batches(rules: list[str]):
+# EXACT portable.tokens() semantics (explicit [ \t\n\v\f\r]+ class on both
+# engines — NOT \s: Java's \s includes \x0B, RE2's does not, and Python's
+# str.split()/\s are UNICODE-whitespace-aware; see portable.WS_CLASS) —
+# trim() strips SPACES only, and leading/trailing separators yield EMPTY
+# tokens (split keeps them; '' in, e.g., a whitespace-only doc is ONE empty
+# token, not zero tokens)
+_WS_RE = re.compile(r"[ \t\n\v\f\r]+")
+# bounded: a real-scale vocab (10^7+ types) must not grow a per-task dict
+# without limit — Zipf means the hot heads all fit long before the cap, so
+# evicting wholesale barely costs
+_MEMO_CAP = 1_000_000
+
+
+def _bpe_batches(rules: list[str], emit):
+    """The one word-piece tokenizer behind every BPE Arrow kernel. Per
+    task it pins the launch archives and keeps a word -> pieces memo;
+    ``emit(batch, words)`` builds each output batch, where ``words(text)``
+    is ``(n_tokens, pieces)``: the token count (empty tokens included)
+    and each NON-empty token's piece list, in token order. Each kernel
+    thus keeps its own Arrow output and ships only what it needs."""
+
     def gen(it):
-        import re
+        pin_launch_archives()
+        memo: dict[str, list[str]] = {}
 
-        import pyarrow as pa
-
-        # EXACT portable.tokens() semantics (explicit [ \t\n\v\f\r]+ class
-        # on both engines — NOT \s: Java's \s includes \x0B, RE2's does
-        # not, and Python's str.split()/\s are UNICODE-whitespace-aware;
-        # see portable.WS_CLASS) — trim() strips SPACES only, and leading/
-        # trailing separators yield EMPTY tokens (split keeps them; '' in,
-        # e.g., a whitespace-only doc is ONE empty token, not zero tokens)
-        ws = re.compile(r"[ \t\n\v\f\r]+")
-
-        # bounded: a real-scale vocab (10^7+ types) must not grow a
-        # per-task dict without limit — Zipf means the hot heads all fit
-        # long before the cap, so evicting wholesale barely costs
-        memo: dict[str, tuple[str, int]] = {}
-        MEMO_CAP = 1_000_000
-
-        def enc(tok: str) -> tuple[str, int]:
+        def pieces(tok: str) -> list[str]:
             hit = memo.get(tok)
             if hit is None:
-                syms = bpe_encode_word(tok, rules)
-                hit = ("_".join(syms), len(syms))
-                if len(memo) >= MEMO_CAP:
+                hit = bpe_encode_word(tok, rules)
+                if len(memo) >= _MEMO_CAP:
                     memo.clear()
                 memo[tok] = hit
             return hit
 
+        def words(s: str) -> tuple[int, list[list[str]]]:
+            toks = _WS_RE.split(s.strip(" ").lower())
+            return len(toks), [pieces(t) for t in toks if t]
+
         for batch in it:
-            ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_ids, n_tok, n_pieces, enc_text = [], [], [], []
-            for doc_id, s in zip(ids, texts):
-                if s is None:
-                    # oracle parity: unnest(split(NULL)) yields no token
-                    # rows, so a NULL-text doc is absent from the output
-                    continue
-                toks = ws.split(s.strip(" ").lower())
-                # empty tokens (leading/trailing separators, whitespace-only
-                # docs) count in n_tokens but carry NO pieces and are absent
-                # from the joined text (DuckDB: array_to_string([]) is NULL
-                # and string_agg skips NULLs; all-empty -> NULL text)
-                pieces = [enc(t) for t in toks if t]
-                out_ids.append(doc_id)
-                n_tok.append(len(toks))
-                n_pieces.append(sum(p[1] for p in pieces))
-                enc_text.append(
-                    " ".join(p[0] for p in pieces) if pieces else None
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.int64()),
-                    pa.array(n_tok, pa.int64()),
-                    pa.array(n_pieces, pa.int64()),
-                    pa.array(enc_text, pa.string()),
-                ],
-                names=["doc_id", "n_tokens", "n_pieces", "encoded_text"],
-            )
+            yield emit(batch, words)
 
     return gen
+
+
+def _bpe_encode_batches(rules: list[str]):
+    """Arrow kernel: (doc_id bigint, text string) -> ``_BPE_OUT_SCHEMA``."""
+
+    def emit(batch, words):
+        import pyarrow as pa
+
+        out_ids, n_tok, n_pieces, enc_text = [], [], [], []
+        for doc_id, s in zip(
+            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
+        ):
+            if s is None:
+                # oracle parity: unnest(split(NULL)) yields no token
+                # rows, so a NULL-text doc is absent from the output
+                continue
+            n, pieces = words(s)
+            # empty tokens (leading/trailing separators, whitespace-only
+            # docs) count in n_tokens but carry NO pieces and are absent
+            # from the joined text (DuckDB: array_to_string([]) is NULL
+            # and string_agg skips NULLs; all-empty -> NULL text)
+            out_ids.append(doc_id)
+            n_tok.append(n)
+            n_pieces.append(sum(len(p) for p in pieces))
+            enc_text.append(" ".join("_".join(p) for p in pieces) if pieces else None)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(out_ids, pa.int64()),
+                pa.array(n_tok, pa.int64()),
+                pa.array(n_pieces, pa.int64()),
+                pa.array(enc_text, pa.string()),
+            ],
+            names=["doc_id", "n_tokens", "n_pieces", "encoded_text"],
+        )
+
+    return _bpe_batches(rules, emit)
 
 
 def bpe_cost_batches(rules: list[str]):
     """Arrow kernel: (doc_id string, part_id int, text string) ->
-    (doc_id, part_id, n_pieces bigint) — the COUNTING-only sibling of
-    ``_bpe_encode_batches`` for the BPE-costed packing stage
-    (spark/pack.py cost="bpe"): same tokenizer semantics and per-task
-    word memo, but only the piece count crosses the boundary (the
-    encoded text stays worker-side), and doc_id/part_id pass through
+    (doc_id, part_id, n_pieces bigint) for the BPE-costed packing stage
+    (spark/pack.py cost="bpe"): only the piece count crosses the boundary
+    (the pieces stay worker-side), and doc_id/part_id pass through
     untouched so the stage keys keep their types. Whitespace-only /
     empty text costs 0 (the stage's empty-doc guard drops it)."""
 
-    def gen(it):
-        import re
-
+    def emit(batch, words):
         import pyarrow as pa
 
-        pin_launch_archives()
+        out = [
+            sum(len(p) for p in words(s)[1]) if s is not None else 0
+            for s in batch.column("text").to_pylist()
+        ]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(batch.column("doc_id").to_pylist(), pa.string()),
+                pa.array(batch.column("part_id").to_pylist(), pa.int32()),
+                pa.array(out, pa.int64()),
+            ],
+            names=["doc_id", "part_id", "n_pieces"],
+        )
 
-        ws = re.compile(r"[ \t\n\v\f\r]+")
-        memo: dict[str, int] = {}
-        MEMO_CAP = 1_000_000
-
-        def npieces(tok: str) -> int:
-            hit = memo.get(tok)
-            if hit is None:
-                hit = len(bpe_encode_word(tok, rules))
-                if len(memo) >= MEMO_CAP:
-                    memo.clear()
-                memo[tok] = hit
-            return hit
-
-        for batch in it:
-            ids = batch.column("doc_id").to_pylist()
-            parts = batch.column("part_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out = [
-                sum(npieces(t) for t in ws.split(s.strip(" ").lower()) if t)
-                if s is not None
-                else 0
-                for s in texts
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.string()),
-                    pa.array(parts, pa.int32()),
-                    pa.array(out, pa.int64()),
-                ],
-                names=["doc_id", "part_id", "n_pieces"],
-            )
-
-    return gen
+    return _bpe_batches(rules, emit)
 
 
 def bpe_pieces_batches(rules: list[str]):
@@ -1327,51 +1306,25 @@ def bpe_pieces_batches(rules: list[str]):
     each document under the merge-rule table, for the piece-costed
     materialize gather (spark/materialize.py on a cost='bpe' pack table):
     empty tokens contribute nothing, order is token order then intra-word
-    merge order, per-task word memo as in the other BPE kernels."""
+    merge order."""
 
-    def gen(it):
-        import re
-
+    def emit(batch, words):
         import pyarrow as pa
 
-        pin_launch_archives()
+        out = [
+            [p for ps in words(s)[1] for p in ps] if s is not None else []
+            for s in batch.column("text").to_pylist()
+        ]
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column("pack_epoch"),
+                batch.column("doc_id"),
+                pa.array(out, pa.list_(pa.string())),
+            ],
+            names=["pack_epoch", "doc_id", "_tok"],
+        )
 
-        ws = re.compile(r"[ \t\n\v\f\r]+")
-        memo: dict[str, list[str]] = {}
-        MEMO_CAP = 1_000_000
-
-        def pieces(tok: str) -> list[str]:
-            hit = memo.get(tok)
-            if hit is None:
-                hit = bpe_encode_word(tok, rules)
-                if len(memo) >= MEMO_CAP:
-                    memo.clear()
-                memo[tok] = hit
-            return hit
-
-        for batch in it:
-            texts = batch.column("text").to_pylist()
-            out = [
-                [
-                    p
-                    for t in ws.split(s.strip(" ").lower())
-                    if t
-                    for p in pieces(t)
-                ]
-                if s is not None
-                else []
-                for s in texts
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("pack_epoch"),
-                    batch.column("doc_id"),
-                    pa.array(out, pa.list_(pa.string())),
-                ],
-                names=["pack_epoch", "doc_id", "_tok"],
-            )
-
-    return gen
+    return _bpe_batches(rules, emit)
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1397,8 +1350,8 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-hot token distribution never touches a join or shuffle — at 10^12
     docs the encode is embarrassingly parallel. `documents` is read twice
     per run (rule derivation at build, encode at execute), never more."""
-    rules = bpe_merge_rules(spark, sf_dir)
     docs = _docs(spark, sf_dir)
+    rules = bpe_merge_rules(docs, "text")
     raw = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"), "text")
     return raw.mapInArrow(
         _bpe_encode_batches(rules), schema=_BPE_OUT_SCHEMA

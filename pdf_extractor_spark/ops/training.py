@@ -486,8 +486,8 @@ def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_merge_rules,
     )
 
-    rules = bpe_merge_rules(spark, sf_dir)
     docs = _docs(spark, sf_dir)
+    rules = bpe_merge_rules(docs, "text")
     cost = (
         docs.select(F.col("doc_id").cast("bigint").alias("doc_id"), "text")
         .mapInArrow(_bpe_encode_batches(rules), schema=_BPE_OUT_SCHEMA)
@@ -1005,11 +1005,11 @@ def kmeans_ctes(n_iters: int = KMEANS_ITERS) -> list[str]:
     return ctes
 
 
-def _kmeans_train_sql(n_iters: int = KMEANS_ITERS) -> str:
-    last_m, last_c = f"m{n_iters - 1}", f"cent{n_iters}"
+def _kmeans_train_sql() -> str:
+    last_m, last_c = f"m{KMEANS_ITERS - 1}", f"cent{KMEANS_ITERS}"
     return (
         "WITH "
-        + ",\n".join(kmeans_ctes(n_iters))
+        + ",\n".join(kmeans_ctes(KMEANS_ITERS))
         + f""",
 stats_m AS (
   SELECT cell, count(*) AS n_members, CAST(sum(d2) AS BIGINT) AS wcss

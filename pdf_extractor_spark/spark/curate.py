@@ -272,26 +272,21 @@ def run_curate(
     )
 
 
-def read_curated(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, CURATED_SCHEMA, as_of=as_of)
+def read_curated(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, CURATED_SCHEMA)
 
 
 def read_kept(
     spark: SparkSession,
     src_log: CommitLog,
     curate_log: CommitLog,
-    as_of: int | None = None,
-    curate_as_of: int | None = None,
     neardup_log: CommitLog | None = None,
 ) -> DataFrame:
     """The training-ready corpus VIEW: extraction rows whose curation
     verdict is ``keep``. Publish-as-view, not rewrite — at 100 TB the kept
     corpus is most of the table and rewriting its bytes to drop the losers
     costs a full write pass; a LEFT SEMI join against the doc_id-narrow
-    keep set costs one shuffled column (or a broadcast, AQE's call) and
-    time-travels on BOTH tables independently.
+    keep set costs one shuffled column (or a broadcast, AQE's call).
 
     ``neardup_log`` (optional) additionally excludes docs the near-dup
     stage flagged — but a flag only counts when its ``dup_of`` partner is
@@ -310,44 +305,43 @@ def read_kept(
     inputs are doc_id-narrow: one semi join (flag validity) plus one anti
     join (the exclusion)."""
     return apply_kept_filters(
-        spark,
-        src_log.read_extracted(spark, as_of=as_of),
-        curate_log,
-        curate_as_of=curate_as_of,
-        neardup_log=neardup_log,
+        spark, src_log.read_extracted(spark), curate_log, neardup_log
     )
 
 
 def apply_kept_filters(
     spark: SparkSession,
     docs: DataFrame,
-    curate_log: CommitLog,
-    curate_as_of: int | None = None,
+    curate_log: CommitLog | None = None,
     neardup_log: CommitLog | None = None,
 ) -> DataFrame:
-    """The kept-view filter chain over an ARBITRARY docs DataFrame (the
+    """The kept-view filter over an ARBITRARY docs DataFrame (the
     read_kept semantics — semi join on curate-keeps, anti join on
-    validly-flagged near-dups — factored out so stages that must pin their
-    source read to a captured marker set, e.g. pack's kept-scoped rebuild,
-    compose the same rule instead of re-deriving it)."""
-    kept = (
-        read_curated(spark, curate_log, as_of=curate_as_of)
-        .where(F.col("verdict") == "keep")
-        .select("doc_id")
-    )
-    out = docs.join(kept, "doc_id", "left_semi")
+    validly-flagged near-dups), the one rule every kept consumer composes:
+    read_kept, pack's and neardup's kept rebuilds (which must pin their
+    source read to a captured marker set) and the export's filters.
+    Without ``curate_log`` every near-dup partner counts as kept, so the
+    ``neardup_log`` exclusion is a plain anti join on the flagged docs."""
+    out = docs
+    kept = None
+    if curate_log is not None:
+        kept = (
+            read_curated(spark, curate_log)
+            .where(F.col("verdict") == "keep")
+            .select("doc_id")
+        )
+        out = out.join(kept, "doc_id", "left_semi")
     if neardup_log is not None:
         from .neardup import read_neardup
 
-        flagged = (
-            read_neardup(spark, neardup_log)
-            .where(F.col("dup_of").isNotNull())
-            .join(
+        flagged = read_neardup(spark, neardup_log).where(
+            F.col("dup_of").isNotNull()
+        )
+        if kept is not None:
+            flagged = flagged.join(
                 kept.select(F.col("doc_id").alias("dup_of")),
                 "dup_of",
                 "left_semi",
             )
-            .select("doc_id")
-        )
-        out = out.join(flagged, "doc_id", "left_anti")
+        out = out.join(flagged.select("doc_id"), "doc_id", "left_anti")
     return out

@@ -20,8 +20,14 @@ Semantics pinned here (stage modules inherit them):
 - **Append-only windows.** A source partition-overwrite changes history in
   place; folding it into an append-shaped delta would strand the untouched
   docs of the overwritten parts. The loop refuses (``ValueError``) and the
-  operator reruns with ``rebuild=True`` — one full recompute committed as
-  an overwrite chunk owning every part, atomically shadowing prior output.
+  operator reruns with ``rebuild=True``.
+- **A rebuild owns every part.** It is one full recompute committed as an
+  overwrite chunk whose marker lists ``range(n_parts)``. It replaces the
+  whole table, and an overwrite shadows prior chunks only in the parts it
+  lists; owning fewer (the source chunks' parts, or the parts its own rows
+  land in) would leave stale rows visible after a rebuild over a source
+  that no longer covers a part, a shrunken kept scope, or materialize's
+  ``ctx % n_parts`` rows.
 - **Commit-order horizon.** The window is markers strictly after the
   cursor's marker in COMMIT order (not chunk-id order): under concurrent
   source writers a low chunk id can commit late and an id-cursor would
@@ -85,27 +91,18 @@ def run_derived_stage(
     rebuild_compute: Callable[[DataFrame], DataFrame] | None = None,
     extra_metrics: dict | None = None,
     src_schema: StructType | None = None,
-    rebuild_all_parts: bool = False,
 ) -> RunReport:
     """One incremental pass of a derived stage: consume the source
     snapshots committed since the cursor, or (``rebuild=True``) recompute
     everything as one overwrite chunk, written by ``lineage._write_chunk``:
     its marker records ``extra_metrics``, ``stage``, ``src_snapshot``
-    (plus ``rebuild``) and the write's observed ``docs``.
+    (plus ``rebuild``) and the write's observed ``docs``, and a rebuild's
+    marker owns every part (module docstring).
 
     ``src_schema`` names the SOURCE table's row shape when the source is
     itself a derived table (materialize consumes the pack table); default
     is the extraction schema. The cursor/window/overwrite semantics are
     schema-independent — derived-on-derived chains inherit them whole.
-
-    ``rebuild_all_parts``: a rebuild's overwrite marker normally owns the
-    union of the SOURCE chunks' part_ids — correct when output rows keep
-    their source doc's part_id (signals/curate/neardup/pack). A stage
-    whose output is keyed on something ELSE (materialize's contexts land
-    on ``ctx % n_parts``) must own the FULL part range instead: an
-    overwrite shadows prior chunks only for the parts it lists, and a
-    shrunken rebuild (kept scope) could otherwise leave stale context
-    rows visible in parts its own output no longer touches.
 
     ``compute`` maps the DELTA extraction rows to the stage's schema;
     ``rebuild_compute`` (default: ``compute``) maps the FULL table — a
@@ -160,9 +157,11 @@ def run_derived_stage(
                 else src_log.read_table(spark, src_schema, markers=src_chunks)
             )
             out = _call(rebuild_compute or compute, src_full, latest)
+            # a source whose markers record no n_parts (legacy layout)
+            # can only name the parts its chunks cover
             parts = (
                 list(range(n_parts))
-                if rebuild_all_parts and n_parts is not None
+                if n_parts is not None
                 else sorted({p for c in src_chunks for p in c["part_ids"]})
             )
             validate = None

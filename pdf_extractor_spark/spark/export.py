@@ -32,6 +32,7 @@ import zipfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .curate import apply_kept_filters
 from .lineage import CommitLog
 
 # fixed timestamp so export bytes depend only on the data (zip stores no
@@ -83,52 +84,6 @@ def markdown_expr(spans: Column | str) -> Column:
     )
 
 
-def _kept_ids(spark: SparkSession, kept_from: str) -> DataFrame:
-    """The doc_id-narrow curate-keep set of the verdict table at
-    ``kept_from``."""
-    from .curate import read_curated
-
-    return (
-        read_curated(spark, CommitLog(kept_from))
-        .where(F.col("verdict") == "keep")
-        .select("doc_id")
-    )
-
-
-def _kept_filter(df: DataFrame, kept: DataFrame) -> DataFrame:
-    """Restrict an extraction read to documents the curation stage KEPT:
-    left-semi join against the doc_id-narrow keep set. Applied BEFORE any
-    OCR merge — recovering text for a doc the export is about to drop is
-    wasted work."""
-    return df.join(kept, "doc_id", "left_semi")
-
-
-def _neardup_filter(
-    spark: SparkSession,
-    df: DataFrame,
-    neardup_from: str,
-    kept: DataFrame | None = None,
-) -> DataFrame:
-    """Drop documents the near-dup stage flagged (``dup_of`` non-null):
-    anti join against the flagged set of the band-index table at
-    ``neardup_from``. When composed with ``_kept_filter`` (``kept`` given),
-    a flag only counts if its ``dup_of`` partner is itself curate-kept —
-    otherwise a cluster whose partner was curate-rejected would lose every
-    member from the shipped corpus (see spark/curate.read_kept, the same
-    rule). Without curation every partner survives by construction, so the
-    plain anti join is already safe."""
-    from .neardup import read_neardup
-
-    flagged = read_neardup(spark, CommitLog(neardup_from)).where(
-        F.col("dup_of").isNotNull()
-    )
-    if kept is not None:
-        flagged = flagged.join(
-            kept.select(F.col("doc_id").alias("dup_of")), "dup_of", "left_semi"
-        )
-    return df.join(flagged.select("doc_id"), "doc_id", "left_anti")
-
-
 def _markdown_frame(
     spark: SparkSession,
     root: str,
@@ -137,15 +92,17 @@ def _markdown_frame(
     kept_from: str | None,
     drop_neardups_from: str | None,
 ) -> DataFrame:
-    """The committed documents an export renders: read at ``as_of``, kept
-    and near-dup filtered, then OCR text merged (filters first, so no text
-    is recovered for a dropped doc)."""
-    df: DataFrame = CommitLog(root).read_extracted(spark, as_of=as_of)
-    kept = _kept_ids(spark, kept_from) if kept_from is not None else None
-    if kept is not None:
-        df = _kept_filter(df, kept)
-    if drop_neardups_from is not None:
-        df = _neardup_filter(spark, df, drop_neardups_from, kept=kept)
+    """The committed documents an export renders: read at ``as_of``,
+    filtered by the kept view (spark/curate.apply_kept_filters) of the
+    curate table at ``kept_from`` and the near-dup table at
+    ``drop_neardups_from``, either or both, then OCR text merged (filters
+    first, so no text is recovered for a dropped doc)."""
+    df = apply_kept_filters(
+        spark,
+        CommitLog(root).read_extracted(spark, as_of=as_of),
+        CommitLog(kept_from) if kept_from is not None else None,
+        CommitLog(drop_neardups_from) if drop_neardups_from is not None else None,
+    )
     if ocr_from is not None:
         from .ocr import merge_ocr_text, read_ocr_text
 
@@ -309,7 +266,10 @@ def export_markdown_zip_sharded(
     return counts.value
 
 
-def _publish_dir(stage: str, out_dir: str, attempts: int = 20) -> None:
+_PUBLISH_ATTEMPTS = 20
+
+
+def _publish_dir(stage: str, out_dir: str) -> None:
     """Atomically move a fully-staged export directory into place. When
     ``out_dir`` is absent (or an empty dir) one rename publishes; when a
     previous export occupies it, retire-then-republish — two renames with
@@ -325,7 +285,7 @@ def _publish_dir(stage: str, out_dir: str, attempts: int = 20) -> None:
     import time as _time
     from contextlib import suppress as contextlib_suppress
 
-    for attempt in range(attempts):
+    for attempt in range(_PUBLISH_ATTEMPTS):
         try:
             os.rename(stage, out_dir)
             return
@@ -361,7 +321,7 @@ def _publish_dir(stage: str, out_dir: str, attempts: int = 20) -> None:
         if attempt:
             _time.sleep(random.uniform(0, 0.01 * attempt))
     raise RuntimeError(
-        f"could not publish export to {out_dir!r} after {attempts} attempts "
+        f"could not publish export to {out_dir!r} after {_PUBLISH_ATTEMPTS} attempts "
         f"(concurrent exporters thrashing?)"
     )
 

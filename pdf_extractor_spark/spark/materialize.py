@@ -28,10 +28,8 @@ epochs of a window are a bounded driver-side collect (one per consumed
 pack chunk — the per-chunk lineage-rollup precedent).
 
 Output ``part_id`` is ``ctx % n_parts`` (contexts belong to no source
-document part), which is why the rebuild path passes
-``rebuild_all_parts=True``: the overwrite must own the full part range,
-not the source chunks' part union, or a shrunken kept-scope rebuild
-would leave stale context rows visible in parts it no longer touches.
+document part); like every derived rebuild, a materialize rebuild's
+overwrite owns every part (spark/derived.py).
 
 Scale shape: placements are window-bounded; the text join is one
 doc_id-keyed shuffle against a snapshot-pinned pruned scan (doc_id +
@@ -245,13 +243,10 @@ def run_materialize(
         _compute,
         rebuild=rebuild,
         src_schema=PACKED_SCHEMA,
-        rebuild_all_parts=True,
         extra_metrics={"materialize_version": MATERIALIZE_COMPUTE_VERSION,
                        "cost": pack_cost},
     )
 
 
-def read_materialized(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, MATERIALIZED_SCHEMA, as_of=as_of)
+def read_materialized(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, MATERIALIZED_SCHEMA)

@@ -92,8 +92,8 @@ NEARDUP_SCHEMA = StructType(
 )
 
 
-def _band_table(wide: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band_id, band_hash) from a row with bh0..bh3 columns (null
+def _band_table(wide: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash) from a row with bh0..bh3 columns (null
     band hashes — shingle-less docs — drop out: they can't match)."""
     bands = F.array(
         *[
@@ -102,7 +102,7 @@ def _band_table(wide: DataFrame, id_col: str = "doc_id") -> DataFrame:
         ]
     )
     return (
-        wide.select(F.col(id_col).alias("doc_id"), F.explode(bands).alias("b"))
+        wide.select("doc_id", F.explode(bands).alias("b"))
         .select("doc_id", "b.band_id", "b.band_hash")
         .where(F.col("band_hash").isNotNull())
     )
@@ -266,14 +266,9 @@ def run_neardup(
 
     def _rebuild(full: DataFrame) -> DataFrame:
         if kept_from is not None:
-            from .curate import read_curated
+            from .curate import apply_kept_filters
 
-            keep = (
-                read_curated(spark, kept_from)
-                .where(F.col("verdict") == "keep")
-                .select("doc_id")
-            )
-            full = full.join(keep, "doc_id", "left_semi")
+            full = apply_kept_filters(spark, full, kept_from)
         return compute_neardup(spark, full, None, None)
 
     return run_derived_stage(
@@ -291,7 +286,5 @@ def run_neardup(
     )
 
 
-def read_neardup(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, NEARDUP_SCHEMA, as_of=as_of)
+def read_neardup(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, NEARDUP_SCHEMA)

@@ -125,10 +125,8 @@ def run_ocr(
     )
 
 
-def read_ocr_text(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, OCR_SCHEMA, as_of=as_of)
+def read_ocr_text(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, OCR_SCHEMA)
 
 
 def merge_ocr_text(extracted: DataFrame, ocr_text: DataFrame) -> DataFrame:

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from ..ops.portable import h64, tokens
+from ..ops.textstats import bpe_cost_batches, bpe_merge_rules
 from ..ops.training import CTX_TOKENS, PACK_SHARDS_DIV, exclusive_prefix_sum
 from .derived import run_derived_stage
 from .lineage import CommitLog, RunReport
@@ -93,11 +94,12 @@ def compute_pack(
 
     ``cost="ws"`` (default) counts whitespace tokens (JVM-side, map-only);
     ``cost="bpe"`` counts TOKENIZER pieces under the given merge-rule
-    table via the map-only Arrow kernel (``textstats.bpe_cost_batches``,
-    per-task word memo — no join or shuffle on the vocabulary). In both
-    modes the committed column is named ``n_tokens``: it is the stage's
-    cost unit, and the marker records which model produced it (``cost`` +
-    ``bpe_rules`` metrics; see run_pack)."""
+    table via the map-only Arrow kernel ``textstats.bpe_cost_batches``
+    (per-task word memo, no join or shuffle on the vocabulary; only the
+    counts cross the boundary). In both modes the committed column is
+    named ``n_tokens``: it is the stage's cost unit, and the marker
+    records which model produced it (``cost`` + ``bpe_rules`` metrics;
+    see run_pack)."""
     if cost == "bpe":
         if rules is None:
             raise ValueError("cost='bpe' needs a merge-rule table")
@@ -106,7 +108,7 @@ def compute_pack(
                 "doc_id", "part_id", signal_text().alias("text")
             )
             .mapInArrow(
-                _bpe_cost_batches_import()(rules),
+                bpe_cost_batches(rules),
                 schema="doc_id string, part_id int, n_pieces bigint",
             )
             .select(
@@ -149,45 +151,6 @@ def compute_pack(
         ).alias("n_chunks"),
         "part_id",
     )
-
-
-def _bpe_cost_batches_import():
-    from ..ops.textstats import bpe_cost_batches
-
-    return bpe_cost_batches
-
-
-def derive_pack_bpe_rules(extracted: DataFrame) -> list[str]:
-    """Top-BPE_MERGES adjacent character pairs over the extracted corpus
-    (vocab-first, same shape as textstats.bpe_merge_rules but over
-    ``signal_text`` instead of the flat documents table). <= 12 rows —
-    a bounded collect, closure-shipped to the costing kernel."""
-    from ..ops.textstats import BPE_MERGES
-
-    txt = extracted.select(signal_text().alias("_text"))
-    vocab = (
-        txt.select(F.explode(tokens(F.col("_text"))).alias("tok"))
-        .where(F.length("tok") >= 2)
-        .groupBy("tok")
-        .agg(F.count("*").alias("n"))
-    )
-    pairs = vocab.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(tok) - 1),"
-                " i -> substring(tok, i, 2))"
-            )
-        ).alias("pair"),
-        "n",
-    )
-    top = (
-        pairs.groupBy("pair")
-        .agg(F.sum("n").alias("occurrences"))
-        .orderBy(F.desc("occurrences"), "pair")
-        .limit(BPE_MERGES)
-        .collect()
-    )
-    return [r["pair"] for r in top]
 
 
 def table_cost(out_log: CommitLog) -> tuple[str | None, list[str] | None]:
@@ -270,7 +233,7 @@ def run_pack(
         nonlocal rules
         if cost == "bpe":
             if rules is None:  # first window of the table, or a rebuild
-                rules = derive_pack_bpe_rules(frame)
+                rules = bpe_merge_rules(frame, signal_text())
             extra["bpe_rules"] = rules
         return compute_pack(frame, horizon, cost=cost, rules=rules)
 
@@ -296,7 +259,5 @@ def run_pack(
     )
 
 
-def read_packed(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, PACKED_SCHEMA, as_of=as_of)
+def read_packed(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, PACKED_SCHEMA)

@@ -182,7 +182,5 @@ def run_signals(
     )
 
 
-def read_signals(
-    spark: SparkSession, out_log: CommitLog, as_of: int | None = None
-) -> DataFrame:
-    return out_log.read_table(spark, SIGNALS_SCHEMA, as_of=as_of)
+def read_signals(spark: SparkSession, out_log: CommitLog) -> DataFrame:
+    return out_log.read_table(spark, SIGNALS_SCHEMA)

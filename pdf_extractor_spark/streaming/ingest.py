@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..spark.lineage import CommitLog, _write_chunk
@@ -43,18 +42,9 @@ def stream_documents(
     (ops/jsonl_source.py)."""
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
     if fmt == "jsonl":
-        from ..ops.jsonl_source import JSONL_SCHEMA
+        from ..ops.jsonl_source import ingest_jsonl
 
-        return (
-            reader.schema(JSONL_SCHEMA)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt")
-            .json(input_dir)
-            # quarantine: structurally-broken lines (and any partial-result
-            # row a future Spark flags via the corrupt column)
-            .where(F.col("doc_id").isNotNull() & F.col("_corrupt").isNull())
-            .select("doc_id", "spans")
-        )
+        return ingest_jsonl(reader, input_dir)
     if fmt != "parquet":
         raise ValueError(f"unknown stream format {fmt!r}")
     return reader.schema(DOCUMENTS_SCHEMA).parquet(input_dir)

@@ -157,7 +157,7 @@ def test_materialize_rebuild_owns_full_part_range(spark, tmp_path):
     """Contexts land on ``ctx % n_parts``, so a SHRUNKEN rebuild (the
     corpus contracted to a single context) must still shadow every part
     the larger prior output touched — the overwrite owns the full part
-    range (rebuild_all_parts), or stale context rows in higher parts
+    range (as every derived rebuild does), or stale context rows in higher parts
     would stay visible beside the fresh output."""
     texts = {i: " ".join(f"e{i}f{j}" for j in range(200)) for i in range(20)}
     sf_dir = write_docs(tmp_path / "v1", texts)

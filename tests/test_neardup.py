@@ -153,6 +153,19 @@ def test_kept_view_and_export_drop_neardups(spark, tmp_path):
         names = {m.rsplit(".", 1)[0] for m in z.namelist()}
     assert n == len(kept_nodups) and names == kept_nodups
 
+    # without a curate table every partner counts as kept: the near-dup
+    # filter alone drops exactly the flagged docs
+    flagged = {d for d, r in _rows(spark, nd).items() if r["dup_of"] is not None}
+    assert flagged == {"5", "9"}
+    zp = str(tmp_path / "nodups.zip")
+    n = export_markdown_zip(
+        spark, str(tmp_path / "src"), zp,
+        drop_neardups_from=str(tmp_path / "nd"),
+    )
+    with zipfile.ZipFile(zp) as z:
+        names = {m.rsplit(".", 1)[0] for m in z.namelist()}
+    assert n == len(TEXTS) - 2 and names == {str(i) for i in TEXTS} - flagged
+
 
 def _write_text_chunk(spark, src, chunk_id: int, texts: dict[str, str],
                       part_id: int) -> None:

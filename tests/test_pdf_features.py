@@ -1141,8 +1141,8 @@ def test_cid_encoding_variants_roundtrip(enc):
 
 
 def test_embedded_cmap_cidrange_operators():
-    """The /Encoding CMap's codespacerange + cidrange/cidchar operators are
-    parsed: code widths split correctly and code -> CID resolves."""
+    """The /Encoding CMap's codespacerange is parsed next to its
+    cidrange/cidchar operators: code widths split correctly."""
     from pdf_extractor_spark.core.pdf_parse import PdfDoc, _page_fonts, _page_list
 
     page = PageSpec(boxes=[TextBox(x=72, y_top=100, lines=["x"], font="F3")])
@@ -1150,9 +1150,22 @@ def test_embedded_cmap_cidrange_operators():
     pg, inh = _page_list(doc)[0]
     f3 = _page_fonts(doc, pg.get("Resources", inh.get("Resources")))["F3"]
     assert f3.code_ranges == [(0x20, 0x7E, 1), (0x8000, 0x80FF, 2)]
-    assert f3.cid_of(0x20) == 100 and f3.cid_of(0x7E) == 100 + 0x5E
-    assert f3.cid_of(0x8001) == 501 and f3.cid_of(0x8002) == 502
-    assert f3.cid_of(0x9999) is None
+
+
+def test_embedded_cmap_oversized_cidrange_refused():
+    """A cidrange spanning more than 0x10000 codes is refused, like an
+    oversized bfrange; one just inside the bound parses."""
+    from pdf_extractor_spark.core.pdf_parse import PdfParseError, _parse_cid_cmap
+
+    def cmap(hi: str) -> bytes:
+        return (
+            b"1 begincodespacerange\n<000000> <FFFFFF>\nendcodespacerange\n"
+            b"1 begincidrange\n<000000> <" + hi.encode() + b"> 1\nendcidrange\n"
+        )
+
+    assert _parse_cid_cmap(cmap("010000")) == [(0, 0xFFFFFF, 3)]
+    with pytest.raises(PdfParseError, match="oversized cidrange"):
+        _parse_cid_cmap(cmap("010001"))
 
 
 def test_embedded_cmap_out_of_codespace_bytes():

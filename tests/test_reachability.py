@@ -33,14 +33,7 @@ ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = "pdf_extractor_spark"
 
 # def -> why it stays although only tests call it
-ALLOWLIST = {
-    f"{PACKAGE}/core/pdf_parse.py:_Font.cid_of": (
-        "the code -> CID lookup of an embedded CMap's cidrange/cidchar "
-        "tables; _parse_cid_cmap parses those tables only for it, and that "
-        "parse raises PdfParseError('oversized cidrange'), so retiring the "
-        "lookup with its tables would change which hostile documents fail"
-    ),
-}
+ALLOWLIST: dict[str, str] = {}
 
 _FuncDef = (ast.FunctionDef, ast.AsyncFunctionDef)
 

@@ -239,6 +239,9 @@ def test_signals_rebuild_pins_its_marker_snapshot(spark, tmp_path):
         run_signals(spark, src, out, rebuild=True)
     finally:
         LL.CommitLog.read_extracted = orig
+    # a rebuild replaces the whole table: its marker owns every part, not
+    # only part 0, the one the source's chunks cover
+    assert out.committed_chunks()[-1]["part_ids"] == list(range(4))
 
     # the rebuild shipped only the pinned snapshot; the racing chunk is
     # consumed exactly once by the NEXT incremental run
