@@ -81,9 +81,9 @@ def build_parser() -> argparse.ArgumentParser:
                         help="parse-stage tasks per chunk (default: the core "
                              "count — whole parts packed by size when a chunk "
                              "has more parts than cores, each part split when "
-                             "it has fewer; watch runs one task per part); "
-                             "below the chunk's part count whole parts are "
-                             "grouped, above it each part is split")
+                             "it has fewer; a watch batch is one chunk of "
+                             "every part); below the chunk's part count whole "
+                             "parts are grouped, above it each part is split")
     ingest.add_argument("--passwords", type=_passwords, default=(),
                         metavar="PW[,PW...]",
                         help="candidate passwords for encrypted PDFs, tried "
@@ -128,12 +128,10 @@ def build_parser() -> argparse.ArgumentParser:
                "partition overwrite)", _extract, io, ingest, batch)
     sp.add_argument("--parts", type=_part_ids, required=True,
                     help="comma-separated part_ids")
-    sp = stage("watch", "drain a drop directory of documents files "
-               "incrementally (availableNow): each micro-batch commits one "
-               "chunk, re-running resumes from the stream checkpoint",
-               _watch, io, ingest, n_parts)
-    sp.add_argument("--checkpoint", default=None,
-                    help="stream checkpoint dir (default: <output>/_checkpoint)")
+    stage("watch", "drain a drop directory of documents files: each batch "
+          "of up to 4 files commits one chunk whose marker names its files, "
+          "and re-running reads only the files no marker names",
+          _watch, io, ingest, n_parts)
     stage("ocr", "OCR pass over a committed extraction table: the pdf:// "
           "refs of scanned pages (text-free pages with images) through the "
           "OCR engine (a deterministic stub)", _run_derived, io, derived,
@@ -289,7 +287,7 @@ def _extract(args) -> int:
         elif _input_format(args) == "jsonl":
             from pdf_extractor_spark.ops.jsonl_source import ingest_jsonl
 
-            docs = ingest_jsonl(spark.read, args.input)
+            docs = ingest_jsonl(spark, args.input)
         else:
             docs = spark.read.parquet(args.input).select("doc_id", "spans")
         password_col = None
@@ -318,36 +316,13 @@ def _extract(args) -> int:
 def _watch(args) -> int:
     if not os.path.isdir(args.input):
         args.error(f"--input {args.input} is not a drop directory")
-    from pdf_extractor_spark.spark.lineage import CommitLog, RunReport
-    from pdf_extractor_spark.streaming.ingest import start_extraction_stream
+    from pdf_extractor_spark.spark.lineage import CommitLog, run_watch
 
     log = CommitLog(args.output)
-    ckpt = args.checkpoint or os.path.join(args.output, "_checkpoint")
-    before = {c["chunk_id"] for c in log.committed_chunks()}
     with _spark(args.master) as spark:
         t0 = time.monotonic()
-        start_extraction_stream(
-            spark, args.input, log, checkpoint_dir=ckpt, n_parts=args.n_parts,
-            num_partitions=args.num_partitions or 32,
-            fmt=_input_format(args), passwords=args.passwords,
-        ).awaitTermination()
-        # attribute only THIS stream's chunks (metrics.stream carries the
-        # checkpoint realpath): a concurrent writer appending to the same
-        # table root during the drain must not inflate the report
-        ns = os.path.realpath(ckpt)
-        new = [
-            c for c in log.committed_chunks()
-            if c["chunk_id"] not in before
-            and (c.get("metrics") or {}).get("stream") == ns
-        ]
-        report = RunReport(
-            chunks_committed=len(new),
-            # DISTINCT parts: one part legitimately spans many micro-batch
-            # chunks, and scripts compare this to EXTRACTION_DONE's
-            parts_processed=len({p for c in new for p in c["part_ids"]}),
-            docs_processed=int(sum((c.get("metrics") or {}).get("docs", 0) for c in new)),
-            parts_skipped=0,
-        )
+        report = run_watch(spark, args.input, log, args.n_parts, _input_format(args),
+                           args.num_partitions, args.passwords)
         _report_extraction("STREAM_DONE", report, time.monotonic() - t0, log)
     return 0
 

@@ -159,13 +159,12 @@ def detect_input_format(path: str) -> str:
     if has_jsonl and has_parquet:
         raise ValueError(
             f"{path!r} mixes *.jsonl and *.parquet drops; pass an explicit "
-            f"--input-format (a per-stream format is pinned by the "
-            f"checkpoint — one landing dir cannot serve both)"
+            f"--input-format (a run reads every file of its input in one "
+            f"format — one landing dir cannot serve both)"
         )
     if not has_jsonl and not has_parquet:
         # an empty landing dir is normal for a watcher started ahead of its
-        # producer — but guessing 'parquet' here would pin the stream to
-        # that guess and misparse every jsonl drop that lands later
+        # producer, but a guess would misparse the drops of the other kind
         raise ValueError(
             f"{path!r} holds neither *.jsonl nor *.parquet files; pass an "
             f"explicit --input-format to start on an empty landing dir"
@@ -173,30 +172,25 @@ def detect_input_format(path: str) -> str:
     return "jsonl" if has_jsonl else "parquet"
 
 
-def _permissive(reader):
-    """A ``DataFrameReader`` or ``DataStreamReader`` set to the explicit
-    schema, corrupt lines captured in ``_corrupt`` (all other fields null)."""
+def read_jsonl_documents(spark: SparkSession, path) -> DataFrame:
+    """documents(doc_id, spans, source, _corrupt) from JSONL under the
+    explicit schema, unquarantined (the oracle view's read): a corrupt
+    line is captured in ``_corrupt`` with every other field null."""
     return (
-        reader.schema(JSONL_SCHEMA)
+        spark.read.schema(JSONL_SCHEMA)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
+        .json(path)
     )
 
 
-def read_jsonl_documents(spark: SparkSession, path: str) -> DataFrame:
-    """documents(doc_id, spans, source, _corrupt) from a JSONL directory,
-    unquarantined: the oracle view's read."""
-    return _permissive(spark.read).json(path)
-
-
-def ingest_jsonl(reader, path: str) -> DataFrame:
-    """documents(doc_id, spans) as the ingest paths see a JSONL file or
-    directory, through ``spark.read`` (extract/refresh) or
-    ``spark.readStream`` (watch): the policy gate drops structurally
-    broken lines and any partial-result row the corrupt column flags."""
+def ingest_jsonl(spark: SparkSession, path) -> DataFrame:
+    """documents(doc_id, spans) as the ingest paths see a JSONL file,
+    directory or list of files (a watch batch): the policy gate drops
+    structurally broken lines and any partial-result row the corrupt
+    column flags."""
     return (
-        _permissive(reader)
-        .json(path)
+        read_jsonl_documents(spark, path)
         .where(F.col("doc_id").isNotNull() & F.col("_corrupt").isNull())
         .select("doc_id", "spans")
     )

@@ -138,8 +138,8 @@ def export_markdown_zip(
         markdown_expr("spans").alias("markdown"),
     ).orderBy("doc_id", "markdown")
     # the secondary key keeps the archive deterministic even when the table
-    # holds duplicate doc_ids (streaming appends can legitimately deliver a
-    # doc in two epochs): which duplicate gets 'X.md' vs 'X~1.md' must not
+    # holds duplicate doc_ids (watch appends deliver a doc that is in two
+    # drop files twice): which duplicate gets 'X.md' vs 'X~1.md' must not
     # depend on partition arrival order
     # unique temp name: two concurrent exports to the same path must each
     # build their own archive and race only on the final atomic rename

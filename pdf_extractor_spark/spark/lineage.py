@@ -52,10 +52,10 @@ each other's chunks. Three mechanisms, all filesystem-atomic:
 
 On a real cluster all three collapse into the Iceberg catalog's atomic
 snapshot swap + retry; the flock is the sandbox stand-in for that CAS.
-The streaming writer reserves chunk ids like any other writer and gets
-replay idempotency from the (stream_ns, epoch) record each marker carries:
-a restarted query consults the committed epochs and skips micro-batches
-that already landed (see streaming/ingest.py).
+The watch writer (:func:`run_watch`) reserves chunk ids like any other
+writer; its cursor is the drop files each marker names, so a rerun reads
+only the files no marker names, and a batch whose file a rival committed
+first loses its publish.
 """
 
 from __future__ import annotations
@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
+    DOCUMENTS_SCHEMA,
     EXTRACTED_SCHEMA,
     assign_part_id,
     balance_partitions,
@@ -290,8 +291,8 @@ class CommitLog:
         that names a chunk id (a derived stage's ``src_snapshot`` cursor, a
         run log, a time-travel ``as_of``) names one chunk for the table's
         whole life."""
-        # the marker scan runs OUTSIDE the lock (streaming reserves once
-        # per micro-batch; holding the global commit lock across O(chunks)
+        # the marker scan runs OUTSIDE the lock (watch reserves once
+        # per file batch; holding the global commit lock across O(chunks)
         # JSON parses would serialize every concurrent writer on it) — a
         # stale floor is harmless because the mkdir EEXIST loop and the
         # monotonic highwater both only ever push cid FORWARD
@@ -469,8 +470,8 @@ class CommitLog:
         """The subset of ``chunk``'s part_ids whose rows are current, given
         the pre-computed ``visible`` marker list for the read's snapshot.
 
-        Append markers ACCUMULATE — the streaming ingest commits one marker
-        per micro-batch and a part legitimately spans many of them, so an
+        Append markers ACCUMULATE — watch commits one marker per file
+        batch and a part legitimately spans many of them, so an
         append never shadows anything. Only an ``overwrite`` marker
         (dynamic-partition re-extraction) shadows: its parts' rows in every
         chunk committed EARLIER (commit order, not chunk-id order — ids are
@@ -510,7 +511,7 @@ class CommitLog:
         ``exclusive_parts``: validate under the commit lock that none of
         this chunk's part_ids was committed by a concurrent append —
         the optimistic-concurrency check for exactly-once batch appends
-        (streaming appends legitimately spread one part across markers and
+        (watch appends legitimately spread one part across markers and
         skip it). ``no_new_overwrites_since``: the marker-id set
         the caller's data snapshot saw — a compaction must abort if any
         overwrite marker landed since, because its rewritten rows would
@@ -543,7 +544,7 @@ class CommitLog:
                 committed = self.committed_chunks()
                 if n_parts is not None:
                     # enforced at the commit layer, not just run_extraction:
-                    # ANY writer (streaming appends included) publishing a
+                    # ANY writer (watch appends included) publishing a
                     # marker with a different n_parts would flip the value
                     # n_parts() reports and silently break part-pruned
                     # point lookups for every doc hashed under the old one
@@ -975,7 +976,7 @@ def _write_chunk(
 ) -> dict:
     """Write one chunk's rows into its reserved directory, then flip the
     marker: the one write-and-publish of every appending writer (extract,
-    refresh, a streaming batch, a derived stage). The marker's metrics are
+    refresh, a watch batch, a derived stage). The marker's metrics are
     the write's own rollup (:func:`observed_rollup`, written and counted in
     one job) minus ``part_ids``, plus ``extra_metrics``.
     ``chunk_parts=None`` records the parts the write touched. Returns the
@@ -998,14 +999,15 @@ def _write_chunk(
 
 
 @contextlib.contextmanager
-def _parse_input(spark, documents, log, n_parts, parts, parts_per_chunk, refresh,
-                 num_partitions, passwords, password_col):
-    """The parse input of run_extraction and reextract_parts. Yields
-    ``parse(chunk_parts)``, one chunk's lazy extraction; chunks are slices
-    of ``parts`` of at most ``parts_per_chunk``.
+def _parse_input(spark, docs, n_parts, parts, parts_per_chunk, num_partitions, passwords,
+                 password_col):
+    """The parse input of run_extraction, reextract_parts and run_watch.
+    ``docs`` carries ``part_id`` and the caller's filter: an append drops
+    the committed parts (:func:`resume_filter`), a refresh keeps ``parts``,
+    a watch batch keeps every row. Yields ``parse(chunk_parts)``, one
+    chunk's lazy extraction; chunks are slices of ``parts`` of at most
+    ``parts_per_chunk``.
 
-    - Filter: an append drops the committed parts (:func:`resume_filter`),
-      a refresh keeps ``parts``; ``password_col`` is kept.
     - Sizing, decided here only: a chunk with more parts than cores and no
       ``num_partitions`` runs one wave of ``defaultParallelism`` tasks,
       whole parts packed by payload bytes (``pipeline.part_bytes``, one
@@ -1014,12 +1016,6 @@ def _parse_input(spark, documents, log, n_parts, parts, parts_per_chunk, refresh
       persisted (MEMORY_AND_DISK) until exit. At 10^12-doc scale the input
       is a table partitioned by part_id, each chunk's scan is pruned, and
       nothing is cached."""
-    keep_cols = () if password_col is None else (password_col,)
-    if refresh:
-        docs = assign_part_id(documents.select("doc_id", "spans", *keep_cols), n_parts)
-        docs = docs.where(in_parts(parts))
-    else:
-        docs = resume_filter(documents, log, n_parts, keep_cols=keep_cols)
     cores = spark.sparkContext.defaultParallelism
 
     def sized(n_chunk_parts: int) -> bool:
@@ -1081,9 +1077,11 @@ def reextract_parts(
     parts = sorted(set(parts))
     if not parts:
         return RunReport(0, 0, 0, 0)
+    keep_cols = () if password_col is None else (password_col,)
+    docs = assign_part_id(documents.select("doc_id", "spans", *keep_cols), n_parts)
     with _parse_input(
-        spark, documents, log, n_parts, parts, len(parts), refresh=True,
-        num_partitions=num_partitions, passwords=passwords, password_col=password_col,
+        spark, docs.where(in_parts(parts)), n_parts, parts, len(parts), num_partitions,
+        passwords, password_col,
     ) as parse:
         extracted = parse(parts)
         chunk_id = log.reserve_chunk_id()
@@ -1091,6 +1089,18 @@ def reextract_parts(
             spark, log, extracted, chunk_id, parts, n_parts, overwrite=True
         )
     return RunReport(1, len(parts), metrics["docs"], 0)
+
+
+def _check_n_parts(log: CommitLog, n_parts: int) -> None:
+    existing = log.n_parts()
+    if existing is not None and existing != n_parts:
+        # resuming with a different n_parts re-hashes every doc to a new
+        # part_id, so "uncommitted" parts would re-extract docs that are
+        # already in the table — refuse instead of silently duplicating
+        raise TableContractError(
+            f"table at {log.root} was written with n_parts={existing}; "
+            f"refusing to append with n_parts={n_parts}"
+        )
 
 
 def run_extraction(
@@ -1133,24 +1143,17 @@ def run_extraction(
         raise ValueError(
             f"n_parts={n_parts} and parts_per_chunk={parts_per_chunk} must be >= 1"
         )
-    existing = log.n_parts()
-    if existing is not None and existing != n_parts:
-        # resuming with a different n_parts re-hashes every doc to a new
-        # part_id, so "uncommitted" parts would re-extract docs that are
-        # already in the table — refuse instead of silently duplicating
-        raise TableContractError(
-            f"table at {log.root} was written with n_parts={existing}; "
-            f"refusing to append with n_parts={n_parts}"
-        )
+    _check_n_parts(log, n_parts)
     done = log.committed_part_ids()
     todo = [p for p in range(n_parts) if p not in done]
     report = RunReport(0, 0, 0, len(done))
     if not todo:
         return report
 
+    keep_cols = () if password_col is None else (password_col,)
     with _parse_input(
-        spark, documents, log, n_parts, todo, parts_per_chunk, refresh=False,
-        num_partitions=num_partitions, passwords=passwords, password_col=password_col,
+        spark, resume_filter(documents, log, n_parts, keep_cols=keep_cols), n_parts, todo,
+        parts_per_chunk, num_partitions, passwords, password_col,
     ) as parse:
         pending = list(todo)
         while pending:
@@ -1185,4 +1188,86 @@ def run_extraction(
                 and report.chunks_committed >= fail_after_chunks
             ):
                 raise RuntimeError("injected failure for kill-and-resume test")
+    return report
+
+
+# drop files per watch batch, one committed chunk each
+WATCH_BATCH_FILES = 4
+
+
+def _drop_files(drop_dir: str) -> list[str]:
+    """A drop directory's files in ingest order, from one listing: the
+    regular files directly in it, any extension, but no name starting with
+    ``_`` or ``.`` (a producer's temporaries); oldest mtime first, ties by
+    name. Each is named by the directory's realpath and its own name."""
+    base = os.path.realpath(drop_dir)
+    with os.scandir(base) as entries:
+        found = [(e.stat().st_mtime, e.name) for e in entries
+                 if e.name[0] not in "_." and e.is_file()]
+    return [os.path.join(base, name) for _, name in sorted(found)]
+
+
+def _unnamed(files: list[str], markers: list[dict]) -> list[str]:
+    """``files`` less those the markers name (the watch cursor), in order."""
+    named = {f for c in markers for f in (c.get("metrics") or {}).get("files", ())}
+    return [f for f in files if f not in named]
+
+
+def run_watch(
+    spark: SparkSession,
+    drop_dir: str,
+    log: CommitLog,
+    n_parts: int,
+    fmt: str,
+    num_partitions: int | None = None,
+    passwords: tuple[bytes, ...] = (),
+) -> RunReport:
+    """Drain a drop directory of documents files (``fmt`` is ``"parquet"``
+    or ``"jsonl"``) into the table, one committed chunk per batch of
+    ``WATCH_BATCH_FILES`` files.
+
+    The cursor is the markers: each names its batch's files
+    (``metrics.files``), and a run reads the files of one listing
+    (:func:`_drop_files`) that no marker names, so a rerun after a crash
+    re-reads exactly the batches that never committed, and a zero-row file
+    is not re-read. A batch whose files a rival watch committed first
+    fails its publish (checked under the commit lock), its data is
+    deleted, and the run goes on with the files still unnamed: each file
+    lands exactly once. Parts are not exclusive; a part spans many batches.
+    Each batch parses through :func:`_parse_input` as one chunk of every
+    part."""
+    from ..ops.jsonl_source import ingest_jsonl
+
+    _check_n_parts(log, n_parts)
+    pending = _drop_files(drop_dir)
+    parts = list(range(n_parts))
+    report = RunReport(0, 0, 0, 0)
+    touched: set[int] = set()
+    while pending := _unnamed(pending, log.committed_chunks()):
+        batch = pending[:WATCH_BATCH_FILES]
+
+        def unclaimed(committed: list[dict], batch=batch) -> None:
+            if _unnamed(batch, committed) != batch:
+                raise CommitConflict(f"a concurrent watch committed some of {batch}")
+
+        # names are literal: escape what the reader would expand as a glob
+        paths = [re.sub(r"([\\[\]{}*?\\])", r"\\\1", f) for f in batch]
+        docs = (ingest_jsonl(spark, paths) if fmt == "jsonl"
+                else spark.read.schema(DOCUMENTS_SCHEMA).parquet(*paths))
+        with _parse_input(
+            spark, assign_part_id(docs, n_parts), n_parts, parts, n_parts, num_partitions,
+            passwords, None,
+        ) as parse:
+            extracted = parse(parts)
+            try:
+                agg = _write_chunk(
+                    spark, log, extracted, log.reserve_chunk_id(), None, n_parts,
+                    extra_metrics={"files": batch}, validate=unclaimed,
+                )
+            except CommitConflict:
+                continue  # the next pass drops the files the rival named
+        report.chunks_committed += 1
+        report.docs_processed += agg["docs"]
+        touched.update(agg["part_ids"])
+    report.parts_processed = len(touched)
     return report

@@ -29,8 +29,8 @@ def doc_row(spark: SparkSession, log: CommitLog, doc_id: str, as_of: int | None 
     column, so this prunes to one partition before the doc_id filter
     touches row groups.
 
-    The table may legitimately hold a doc twice (streaming appends can
-    deliver it in two epochs; spark/export.py sorts defensively for the
+    The table may legitimately hold a doc twice (watch appends deliver a
+    doc that is in two drop files twice; spark/export.py sorts defensively for the
     same reason). Without a canonical pick, which copy a point query
     answered from depended on partition arrival order: ``doc_spans``
     interleaved both copies' spans (every offset twice) and ``read_page``

@@ -52,6 +52,27 @@ LINEAGE_COLS = [
 ]
 
 
+def count_parse_tasks(spark: SparkSession, monkeypatch):
+    """An accumulator of the parse stage's Python tasks: each task builds
+    one extraction generator over its Arrow batches."""
+    from pdf_extractor_spark.spark import pipeline
+
+    tasks = spark.sparkContext.accumulator(0)
+    make = pipeline._make_extract_batches_arrow
+
+    def counting(*a, **k):
+        gen = make(*a, **k)
+
+        def _gen(batches):
+            tasks.add(1)
+            yield from gen(batches)
+
+        return _gen
+
+    monkeypatch.setattr(pipeline, "_make_extract_batches_arrow", counting)
+    return tasks
+
+
 def read_lineage(
     log: CommitLog,
     spark: SparkSession,

@@ -3,7 +3,7 @@
 Differential: the marker's docs/pages/failures and the parts each write
 observed must equal a rollup read back from the committed files, across
 every write path (kill-and-resume appends, an overwrite refresh,
-compaction, streaming micro-batches) and under a forced task retry; each
+compaction, watch batches) and under a forced task retry; each
 writer's marker carries its own metric keys (a derived marker no pages).
 Job budget: an extraction chunk runs exactly the exchange's map job plus
 one parse-and-write job, and a derived commit runs no job after its write.
@@ -55,15 +55,16 @@ def _assert_rollups_match(spark, log, observed):
         assert seen == back, (cid, seen, back)
         got = {k: marker["metrics"][k] for k in ("docs", "pages", "failures", "error_parts")}
         assert got == {k: back[k] for k in got}, (cid, marker, back)
-        if "epoch" in marker["metrics"]:  # streaming: parts are observed
+        if "files" in marker["metrics"]:  # watch: parts are observed
             assert marker["part_ids"] == back["part_ids"], (cid, marker)
         else:
             assert set(back["part_ids"]) <= set(marker["part_ids"]), (cid, marker)
 
 
 def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
+    import pyarrow.parquet as pq
+
     from pdf_extractor_spark.spark.signals import run_signals
-    from pdf_extractor_spark.streaming.ingest import make_batch_processor
 
     observed = {}
     real = L.write_observed
@@ -90,16 +91,19 @@ def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
     compacted = next(c for c in log.committed_chunks() if c["chunk_id"] == new_id)
     assert compacted["metrics"]["docs"] == log.read_extracted(spark).count() == 40
 
-    # streaming micro-batches, one of them with no docs at all
-    slog = L.CommitLog(str(tmp_path / "stream"))
-    process = make_batch_processor(spark, slog, n_parts=8, num_partitions=2)
-    process(docs.limit(12), 0)
-    process(docs.limit(0), 1)
+    # watch batches, one of them a file with no docs at all
+    slog = L.CommitLog(str(tmp_path / "watch"))
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    for name, n in (("a.parquet", 12), ("b.parquet", 0)):
+        pq.write_table(docs.select("doc_id", "spans").limit(n).toArrow(), drop / name)
+        L.run_watch(spark, str(drop), slog, 8, "parquet", num_partitions=2)
     _assert_rollups_match(spark, slog, observed)
     empty = slog.committed_chunks()[-1]
     assert empty["part_ids"] == []
     assert empty["metrics"] == {
-        "docs": 0, "pages": 0, "failures": 0, "error_parts": [], "epoch": 1, "stream": "stream"
+        "docs": 0, "pages": 0, "failures": 0, "error_parts": [],
+        "files": [os.path.join(os.path.realpath(drop), "b.parquet")],
     }
 
     # one write path, per-writer marker keys: a derived marker counts
@@ -107,7 +111,7 @@ def test_observed_rollup_matches_committed_files(spark, tmp_path, monkeypatch):
     extraction = {"docs", "pages", "failures", "error_parts"}
     keys = [set(m["metrics"]) for m in log.committed_chunks()]
     assert keys == [extraction] * 4 + [extraction | {"compacted_from"}]
-    assert all(set(m["metrics"]) == extraction | {"epoch", "stream"} for m in slog.committed_chunks())
+    assert all(set(m["metrics"]) == extraction | {"files"} for m in slog.committed_chunks())
     dlog = L.CommitLog(str(tmp_path / "signals"))
     run_signals(spark, slog, dlog)
     run_signals(spark, slog, dlog, rebuild=True)

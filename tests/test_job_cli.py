@@ -39,6 +39,7 @@ REFUSALS = {
     "maintain-typo-root": (["maintain", "OUT", "--compact"], NOT_A_TABLE),
     "watch-password-manifest": (["watch", "--input", "SRC", "--output", "OUT", "--password-manifest", "BADPW"], UNRECOGNIZED),
     "watch-synthetic": (["watch", "--input", "synthetic:10", "--output", "OUT"], "is not a drop directory"),
+    "watch-checkpoint": (["watch", "--checkpoint", "x", "--input", "SRC", "--output", "OUT"], UNRECOGNIZED),
     "manifest-bad-header": (["extract", "--input", "SRC", "--output", "OUT", "--password-manifest", "BADPW"], "needs header columns doc_id,password"),
     "manifest-missing": (["extract", "--input", "SRC", "--output", "OUT", "--password-manifest", "OUT"], "does not exist"),
     "materialize-no-pack-table": (["materialize", "--input", "SRC", "--output", "OUT"], "--pack-table"),

@@ -10,7 +10,7 @@ from pdf_extractor_spark.core.extractor import extract_document
 from pdf_extractor_spark.corpus import corpus_df, gen_documents
 from pdf_extractor_spark.spark import lineage as L
 from pdf_extractor_spark.spark.pipeline import extract_documents
-from tests.helpers import LINEAGE_COLS, read_lineage
+from tests.helpers import LINEAGE_COLS, count_parse_tasks, read_lineage
 
 N_DOCS = 150
 
@@ -170,8 +170,6 @@ def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
     cores instead of parsing them in one task."""
     import glob
 
-    from pdf_extractor_spark.spark import pipeline
-
     cores = spark.sparkContext.defaultParallelism
     assert cores == 4  # the session fixture's local[4]
     docs = corpus_df(spark, 60)
@@ -184,19 +182,7 @@ def test_one_parse_task_and_one_file_per_part(spark, tmp_path, monkeypatch):
     for d in part_dirs:
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
-    tasks = spark.sparkContext.accumulator(0)
-    make = pipeline._make_extract_batches_arrow
-
-    def counting(*a, **k):
-        gen = make(*a, **k)
-
-        def _gen(batches):
-            tasks.add(1)
-            yield from gen(batches)
-
-        return _gen
-
-    monkeypatch.setattr(pipeline, "_make_extract_batches_arrow", counting)
+    tasks = count_parse_tasks(spark, monkeypatch)
     L.reextract_parts(spark, docs, log, [1, 2, 5, 6, 7])
     assert tasks.value == cores
     refresh_id = max(c["chunk_id"] for c in log.visible_chunks())

@@ -16,7 +16,9 @@ Measures, per chunk count C:
                    the Spark plan build and running its one-literal
                    ``part_id NOT IN (...)`` filter)
   read_plan_s      read_extracted() DataFrame construction (one scan with
-                   a chunk PartitionFilter; execution excluded)
+                   a chunk PartitionFilter; execution excluded). Every
+                   committed part holds one 1-row parquet file, so this
+                   includes partition discovery's listing of data/
 
 Usage: python tools/bench_commitlog.py [--chunks 200,1000,2000] [--no-spark]
 Prints one JSON line per C; paste into BENCH/BASELINE.md.
@@ -26,6 +28,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -36,7 +39,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def probe(n_chunks: int, n_parts: int, spark) -> dict:
-    from pdf_extractor_spark.spark.lineage import CommitLog, resume_filter
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.spark.lineage import CommitLog, _chunk_dirname, resume_filter
 
     root = tempfile.mkdtemp(prefix=f"pes-commitprobe-{n_chunks}-")
     try:
@@ -49,6 +55,10 @@ def probe(n_chunks: int, n_parts: int, spark) -> dict:
                 n_parts=n_parts,
             )
         commit_total = time.monotonic() - t0
+        for c in log.committed_chunks():  # one 1-row file per committed part
+            part = os.path.join(log.data_dir, _chunk_dirname(c["chunk_id"]), f"part_id={c['part_ids'][0]}")
+            os.mkdir(part)
+            pq.write_table(pa.table({"doc_id": [str(c["chunk_id"])]}), os.path.join(part, "0.parquet"))
 
         # cold reader: a fresh CommitLog instance (no warm in-process state)
         log = CommitLog(root)
