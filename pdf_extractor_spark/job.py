@@ -102,7 +102,9 @@ def build_parser() -> argparse.ArgumentParser:
     derived = parent()
     derived.add_argument("--rebuild", action="store_true",
                          help="full recompute committed as one overwrite chunk "
-                              "(required after a source partition overwrite)")
+                              "(required after a source partition overwrite, "
+                              "and to change a table's gates, scope, cost or "
+                              "compute version)")
     kept = parent()
     kept.add_argument("--kept-from", default=None, metavar="CURATE_ROOT",
                       help="scope to documents whose curation verdict at this "
@@ -316,12 +318,16 @@ def _extract(args) -> int:
 def _watch(args) -> int:
     if not os.path.isdir(args.input):
         args.error(f"--input {args.input} is not a drop directory")
-    from pdf_extractor_spark.spark.lineage import CommitLog, run_watch
+    from pdf_extractor_spark.ops.jsonl_source import files_format
+    from pdf_extractor_spark.spark.lineage import CommitLog, _drop_files, run_watch
 
+    fmt = args.input_format
+    if fmt == "auto":  # from the files watch reads: its drop dir's own
+        fmt = files_format(args.input, _drop_files(args.input))
     log = CommitLog(args.output)
     with _spark(args.master) as spark:
         t0 = time.monotonic()
-        report = run_watch(spark, args.input, log, args.n_parts, _input_format(args),
+        report = run_watch(spark, args.input, log, args.n_parts, fmt,
                            args.num_partitions, args.passwords)
         _report_extraction("STREAM_DONE", report, time.monotonic() - t0, log)
     return 0
@@ -394,15 +400,13 @@ def _derived_stages() -> dict:
 
 
 def _run_derived(args) -> int:
+    from pdf_extractor_spark.spark.derived import check_kept_scope
+
     scope = vars(args)
-    if scope.get("kept_from") and not args.rebuild:
-        # the accumulated state (band index, pack windows) does not
-        # describe the kept subset
-        args.error("a kept scope (--kept-from / --over-kept) re-decides a "
-                   "filtered corpus; it requires --rebuild")
-    if scope.get("drop_neardups_from") and not args.kept_from:
-        args.error("--drop-neardups-from composes the kept view's flag-"
-                   "validity rule; it requires --kept-from")
+    try:
+        check_kept_scope(args.rebuild, scope.get("kept_from"), scope.get("drop_neardups_from"))
+    except ValueError as e:
+        args.error(str(e))
     run, _schema = _derived_stages()[args.stage]
     with _spark(args.master) as spark:
         t0 = time.monotonic()

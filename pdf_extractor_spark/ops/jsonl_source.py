@@ -121,15 +121,13 @@ def jsonl_fixture_root() -> str:
 
 
 def detect_input_format(path: str) -> str:
-    """Resolve a documents input path to ``"jsonl"`` or ``"parquet"`` —
-    the ONE sniffing rule shared by the batch driver and watch mode (they
-    previously each had their own, and disagreed on single files). A
-    single ``*.jsonl``/``*.parquet`` FILE resolves by its own extension
-    (a directory merely NAMED ``x.jsonl`` is still scanned by contents);
-    a directory holding only jsonl drops is jsonl; a directory holding
-    BOTH jsonl and parquet is ambiguous and fails loudly — sniffing a
-    whole stream's format from whichever file landed first would silently
-    misparse every drop of the other kind."""
+    """Resolve a batch documents input path to ``"jsonl"`` or
+    ``"parquet"``. A single ``*.jsonl``/``*.parquet`` FILE resolves by its
+    own extension (a directory merely NAMED ``x.jsonl`` is still scanned
+    by contents); a directory by :func:`files_format` over the files at
+    any depth under it — sniffing a whole stream's format from whichever
+    file landed first would silently misparse every drop of the other
+    kind."""
     import glob as _glob
 
     if os.path.isfile(path):
@@ -142,20 +140,25 @@ def detect_input_format(path: str) -> str:
             f"an explicit --input-format"
         )
 
-    def _has(ext: str) -> bool:
+    def _first(ext: str) -> list[str]:
         # flat first (the landing-dir layout), then recursive for nested
         # parquet tables (Hive partition dirs); iglob short-circuits on the
         # first hit so populated dirs never pay for the deep walk. The base
         # path is escaped — a landing dir named 'drops[1]' must not glob.
         flat = os.path.join(_glob.escape(path), f"*.{ext}")
         deep = os.path.join(_glob.escape(path), "**", f"*.{ext}")
-        return (
-            next(_glob.iglob(flat), None) is not None
-            or next(_glob.iglob(deep, recursive=True), None) is not None
-        )
+        hit = next(_glob.iglob(flat), None) or next(_glob.iglob(deep, recursive=True), None)
+        return [hit] if hit else []
 
-    has_jsonl = _has("jsonl")
-    has_parquet = _has("parquet")
+    return files_format(path, _first("jsonl") + _first("parquet"))
+
+
+def files_format(path: str, files: list[str]) -> str:
+    """The format of a directory's input from the files a run reads of it
+    (``detect_input_format``'s sniff, or watch's own drop listing, which
+    never descends): jsonl or parquet by extension; both is ambiguous."""
+    has_jsonl = any(f.endswith(".jsonl") for f in files)
+    has_parquet = any(f.endswith(".parquet") for f in files)
     if has_jsonl and has_parquet:
         raise ValueError(
             f"{path!r} mixes *.jsonl and *.parquet drops; pass an explicit "

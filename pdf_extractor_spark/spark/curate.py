@@ -228,14 +228,6 @@ def compute_verdicts(
     )
 
 
-def table_gates(out_log: CommitLog) -> dict | None:
-    """Gate config the table's verdicts were decided under (latest
-    committed chunk's record — rebuilds may legitimately change it)."""
-    from .derived import latest_metric
-
-    return latest_metric(out_log.committed_chunks(), "gates")
-
-
 def run_curate(
     spark: SparkSession,
     src_log: CommitLog,
@@ -245,19 +237,11 @@ def run_curate(
 ) -> RunReport:
     """One incremental curation pass (or a global-dedup rebuild)."""
     g = gates or GateConfig()
-    prior = table_gates(out_log)
-    if prior is not None and prior != g.as_metrics() and not rebuild:
-        raise ValueError(
-            f"gate config changed (table: {prior}, run: {g.as_metrics()}); "
-            "mixing verdicts decided under different gates would make the "
-            "kept set config-order-dependent — run with rebuild=True "
-            "(job.py curate --rebuild) to re-verdict everything"
-        )
 
-    def _incremental(delta: DataFrame) -> DataFrame:
+    def _incremental(delta: DataFrame, _horizon: int) -> DataFrame:
         return compute_verdicts(delta, kept_digest_index(spark, out_log), g)
 
-    def _rebuild(full: DataFrame) -> DataFrame:
+    def _rebuild(full: DataFrame, _horizon: int) -> DataFrame:
         return compute_verdicts(full, None, g)
 
     return run_derived_stage(

@@ -28,6 +28,13 @@ Semantics pinned here (stage modules inherit them):
   land in) would leave stale rows visible after a rebuild over a source
   that no longer covers a part, a shrunken kept scope, or materialize's
   ``ctx % n_parts`` rows.
+- **Table properties.** Every key of the ``extra_metrics`` a stage passes
+  (curate's ``gates``, neardup/pack's ``scope``, pack/materialize's
+  ``cost``, each ``*_version``) is a property of the whole table: a run
+  whose value differs from the table's latest record is refused before
+  anything is read, since one table must not mix verdicts decided under
+  two configurations; ``rebuild=True`` re-decides the table under the new
+  value.
 - **Commit-order horizon.** The window is markers strictly after the
   cursor's marker in COMMIT order (not chunk-id order): under concurrent
   source writers a low chunk id can commit late and an id-cursor would
@@ -81,14 +88,32 @@ def derived_cursor(out_log: CommitLog) -> int | None:
     return latest_metric(out_log.committed_chunks(), "src_snapshot")
 
 
+def check_kept_scope(rebuild: bool, kept_from=None, neardup_from=None) -> None:
+    """The kept-scope rule of neardup and pack, checked by the stages and
+    by ``job.py`` before the JVM starts: a kept scope is rebuild-only (the
+    kept set is decided by another table whose verdicts lag and change,
+    and the accumulated state does not describe it), and ``neardup_from``
+    composes the kept view's flag-validity rule, so it needs ``kept_from``."""
+    if kept_from is not None and not rebuild:
+        raise ValueError(
+            "a kept scope (kept_from, --kept-from / --over-kept) re-decides "
+            "a filtered corpus; it requires --rebuild (rebuild=True)"
+        )
+    if neardup_from is not None and kept_from is None:
+        raise ValueError(
+            "neardup_from (--drop-neardups-from) composes the kept view's "
+            "flag-validity rule; it requires --kept-from (kept_from)"
+        )
+
+
 def run_derived_stage(
     spark: SparkSession,
     src_log: CommitLog,
     out_log: CommitLog,
     stage: str,
-    compute: Callable[[DataFrame], DataFrame],
+    compute: Callable[[DataFrame, int], DataFrame],
     rebuild: bool = False,
-    rebuild_compute: Callable[[DataFrame], DataFrame] | None = None,
+    rebuild_compute: Callable[[DataFrame, int], DataFrame] | None = None,
     extra_metrics: dict | None = None,
     src_schema: StructType | None = None,
 ) -> RunReport:
@@ -97,7 +122,8 @@ def run_derived_stage(
     everything as one overwrite chunk, written by ``lineage._write_chunk``:
     its marker records ``extra_metrics``, ``stage``, ``src_snapshot``
     (plus ``rebuild``) and the write's observed ``docs``, and a rebuild's
-    marker owns every part (module docstring).
+    marker owns every part (module docstring). The keys ``extra_metrics``
+    holds at the call are the table's properties (module docstring).
 
     ``src_schema`` names the SOURCE table's row shape when the source is
     itself a derived table (materialize consumes the pack table); default
@@ -108,15 +134,11 @@ def run_derived_stage(
     ``rebuild_compute`` (default: ``compute``) maps the FULL table — a
     stage whose incremental path consults its own prior output (e.g.
     curate's kept-digest index) passes a self-contained variant here.
-
-    Either callable may declare a parameter NAMED ``horizon`` to receive
-    the window horizon (the source snapshot id this run consumes up to —
-    the same value the marker records as ``src_snapshot``): a stage whose
-    output rows must carry a window tag (e.g. pack's ``pack_epoch``)
-    takes it here rather than re-listing the source itself, which would
-    race a concurrent source commit and tag rows with a horizon the
-    marker does not record. Opt-in is BY NAME, not arity — stage computes
-    may carry unrelated optional parameters (signals' ``extra``).
+    Both are called with the frame and the window horizon (the source
+    snapshot id this run consumes up to, which the marker records as
+    ``src_snapshot``): a stage whose rows carry a window tag (pack's
+    ``pack_epoch``) takes it from here rather than re-listing the source,
+    which would race a concurrent source commit.
 
     Frames a stage's compute persists via ``ops/dedup._persisted``
     (neardup's shingle/candidate tables, pack's sharded prefix-sum frame)
@@ -127,15 +149,19 @@ def run_derived_stage(
     pinned InMemoryRelation per window grows executor storage without
     bound.
     """
-    import inspect
-
     from ..ops.dedup import _DF_CACHE
 
-    def _call(fn: Callable, df: DataFrame, horizon: int) -> DataFrame:
-        if "horizon" in inspect.signature(fn).parameters:
-            return fn(df, horizon=horizon)
-        return fn(df)
-
+    out_chunks = out_log.committed_chunks()
+    # first, so a no-op window is guarded too; keys a compute adds later
+    # (pack's bpe_rules) are records, not properties
+    for key, value in (extra_metrics or {}).items():
+        table = latest_metric(out_chunks, key)
+        if table is not None and table != value and not rebuild:
+            raise ValueError(
+                f"{stage} table's {key!r} is {table!r} but this run's is "
+                f"{value!r}; one table must not mix windows decided under "
+                f"both — run with rebuild=True (job.py {stage} --rebuild)"
+            )
     mark = len(_DF_CACHE)
     try:
         src_chunks = src_log.committed_chunks()  # commit order; reused below
@@ -156,7 +182,7 @@ def run_derived_stage(
                 if src_schema is None
                 else src_log.read_table(spark, src_schema, markers=src_chunks)
             )
-            out = _call(rebuild_compute or compute, src_full, latest)
+            out = (rebuild_compute or compute)(src_full, latest)
             # a source whose markers record no n_parts (legacy layout)
             # can only name the parts its chunks cover
             parts = (
@@ -166,7 +192,7 @@ def run_derived_stage(
             )
             validate = None
         else:
-            cursor = derived_cursor(out_log)
+            cursor = latest_metric(out_chunks, "src_snapshot")
             if cursor == latest:
                 return RunReport(0, 0, 0, 0)
             # THE window definition lives on CommitLog (shared with the scan
@@ -213,7 +239,7 @@ def run_derived_stage(
                 window=window,
                 schema=src_schema,
             )
-            out = _call(compute, delta, latest)
+            out = compute(delta, latest)
             parts = None  # the parts the write touches
 
             def validate(committed: list[dict]) -> None:

@@ -543,18 +543,9 @@ class CommitLog:
             with self._commit_lock():
                 committed = self.committed_chunks()
                 if n_parts is not None:
-                    # enforced at the commit layer, not just run_extraction:
-                    # ANY writer (watch appends included) publishing a
-                    # marker with a different n_parts would flip the value
-                    # n_parts() reports and silently break part-pruned
-                    # point lookups for every doc hashed under the old one
-                    existing = self.n_parts(chunks=committed)
-                    if existing is not None and existing != n_parts:
-                        raise TableContractError(
-                            f"table at {self.root} was written with "
-                            f"n_parts={existing}; refusing to commit chunk "
-                            f"{chunk_id} with n_parts={n_parts}"
-                        )
+                    # ANY writer's marker with another n_parts would flip
+                    # what n_parts() reports and break part-pruned lookups
+                    _check_n_parts(self, n_parts, chunks=committed)
                 if exclusive_parts:
                     taken = set(part_ids) & {
                         p for c in committed for p in c["part_ids"]
@@ -1091,15 +1082,17 @@ def reextract_parts(
     return RunReport(1, len(parts), metrics["docs"], 0)
 
 
-def _check_n_parts(log: CommitLog, n_parts: int) -> None:
-    existing = log.n_parts()
+def _check_n_parts(log: CommitLog, n_parts: int, chunks: list[dict] | None = None) -> None:
+    """The one n_parts rule: a table keeps the n_parts it was written with.
+    Writing with another re-hashes every doc to a new part_id, so
+    "uncommitted" parts would re-extract docs already in the table. Called
+    before any Spark job (extract, watch) and under the commit lock
+    (``commit_chunk``, with the locked listing as ``chunks``)."""
+    existing = log.n_parts(chunks=chunks)
     if existing is not None and existing != n_parts:
-        # resuming with a different n_parts re-hashes every doc to a new
-        # part_id, so "uncommitted" parts would re-extract docs that are
-        # already in the table — refuse instead of silently duplicating
         raise TableContractError(
             f"table at {log.root} was written with n_parts={existing}; "
-            f"refusing to append with n_parts={n_parts}"
+            f"refusing to write with n_parts={n_parts}"
         )
 
 
@@ -1235,11 +1228,14 @@ def run_watch(
     deleted, and the run goes on with the files still unnamed: each file
     lands exactly once. Parts are not exclusive; a part spans many batches.
     Each batch parses through :func:`_parse_input` as one chunk of every
-    part."""
+    part. No reader opens a file whose name holds ``:`` (not a Hadoop
+    path): every other file commits, then the run raises ``ValueError``."""
     from ..ops.jsonl_source import ingest_jsonl
 
     _check_n_parts(log, n_parts)
     pending = _drop_files(drop_dir)
+    unreadable = [f for f in pending if ":" in os.path.basename(f)]
+    pending = [f for f in pending if f not in unreadable]
     parts = list(range(n_parts))
     report = RunReport(0, 0, 0, 0)
     touched: set[int] = set()
@@ -1269,5 +1265,10 @@ def run_watch(
         report.chunks_committed += 1
         report.docs_processed += agg["docs"]
         touched.update(agg["part_ids"])
+    if unreadable:
+        raise ValueError(
+            f"cannot read {unreadable}: a ':' in a file name is not a valid "
+            "Hadoop path; rename them (every other file is committed)"
+        )
     report.parts_processed = len(touched)
     return report

@@ -213,7 +213,6 @@ def run_materialize(
     from .pack import table_cost
 
     pack_cost, pack_rules = table_cost(pack_log)
-    pack_cost = pack_cost or "ws"
     if pack_cost not in ("ws", "bpe"):
         raise ValueError(
             f"unknown pack-table cost model {pack_cost!r}; this "
@@ -226,7 +225,7 @@ def run_materialize(
             "cannot reconstruct the piece stream its offsets index"
         )
 
-    def _compute(placements: DataFrame) -> DataFrame:
+    def _compute(placements: DataFrame, _horizon: int) -> DataFrame:
         # the gather slices the SAME stream the placements were costed
         # against: word arrays for 'ws', the recorded-rules piece stream
         # for 'bpe' — a mismatched gather would assemble wrong slices

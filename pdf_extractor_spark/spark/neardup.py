@@ -73,7 +73,7 @@ from ..ops.dedup import (
     jaccard_ppb_for_pairs,
     shingles,
 )
-from .derived import run_derived_stage
+from .derived import check_kept_scope, derived_cursor, run_derived_stage
 from .lineage import CommitLog, RunReport
 from .signals import signal_text
 
@@ -218,15 +218,6 @@ def compute_neardup(
     )
 
 
-def table_scope(out_log: CommitLog) -> str | None:
-    """Corpus scope this table's verdicts were decided over ('full' |
-    'kept'; latest committed chunk's record — rebuilds may change it).
-    None on an empty or pre-scope table (implicitly 'full')."""
-    from .derived import latest_metric
-
-    return latest_metric(out_log.committed_chunks(), "scope")
-
-
 def run_neardup(
     spark: SparkSession,
     src_log: CommitLog,
@@ -234,25 +225,9 @@ def run_neardup(
     rebuild: bool = False,
     kept_from: CommitLog | None = None,
 ) -> RunReport:
-    scope = "kept" if kept_from is not None else "full"
-    if kept_from is not None and not rebuild:
-        raise ValueError(
-            "kept-scoped near-dup is a re-decision over a FILTERED corpus "
-            "the accumulated band index does not describe — always run it "
-            "with rebuild=True (job.py neardup --over-kept ... --rebuild)"
-        )
-    prior = table_scope(out_log)
-    if prior is not None and prior != scope and not rebuild:
-        raise ValueError(
-            f"near-dup table scope is '{prior}' but this run is '{scope}'; "
-            "an incremental delta matched against the other scope's band "
-            "index would be meaningless — run with rebuild=True to "
-            "re-decide the table under the new scope"
-        )
+    check_kept_scope(rebuild, kept_from)
 
-    def _incremental(delta: DataFrame) -> DataFrame:
-        from .derived import derived_cursor
-
+    def _incremental(delta: DataFrame, _horizon: int) -> DataFrame:
         # cursor re-read here can only differ from the stage's own if a
         # rival run committed in between — whose publish-time validate
         # hook (CommitConflict) then aborts ours anyway
@@ -264,7 +239,7 @@ def run_neardup(
             src_as_of=derived_cursor(out_log),
         )
 
-    def _rebuild(full: DataFrame) -> DataFrame:
+    def _rebuild(full: DataFrame, _horizon: int) -> DataFrame:
         if kept_from is not None:
             from .curate import apply_kept_filters
 
@@ -281,7 +256,7 @@ def run_neardup(
         rebuild_compute=_rebuild,
         extra_metrics={
             "neardup_version": NEARDUP_COMPUTE_VERSION,
-            "scope": scope,
+            "scope": "full" if kept_from is None else "kept",
         },
     )
 

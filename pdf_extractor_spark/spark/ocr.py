@@ -121,7 +121,8 @@ def run_ocr(
     the cursor, or (``rebuild=True``) over the whole table as one
     overwrite chunk. ``docs_processed`` counts committed refs."""
     return run_derived_stage(
-        spark, src_log, out_log, "ocr", compute_ocr, rebuild=rebuild
+        spark, src_log, out_log, "ocr", lambda delta, _horizon: compute_ocr(delta),
+        rebuild=rebuild,
     )
 
 

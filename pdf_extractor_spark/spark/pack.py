@@ -59,9 +59,8 @@ from pyspark.sql.types import IntegerType, LongType, StringType, StructField, St
 from ..ops.portable import h64, tokens
 from ..ops.textstats import bpe_cost_batches, bpe_merge_rules
 from ..ops.training import CTX_TOKENS, PACK_SHARDS_DIV, exclusive_prefix_sum
-from .derived import run_derived_stage
+from .derived import check_kept_scope, latest_metric, run_derived_stage
 from .lineage import CommitLog, RunReport
-from .neardup import table_scope
 from .signals import signal_text
 
 # bump whenever compute_pack's semantics change (fixture caches key on it)
@@ -153,16 +152,12 @@ def compute_pack(
     )
 
 
-def table_cost(out_log: CommitLog) -> tuple[str | None, list[str] | None]:
-    """(cost model, recorded BPE rules) of this pack table — last
-    committed chunk's record, like neardup's table_scope. (None, None)
-    on an empty table; a pre-cost-feature table reads as 'ws' (the only
-    model that existed when it was written)."""
-    from .derived import latest_metric
-
+def table_cost(out_log: CommitLog) -> tuple[str, list[str] | None]:
+    """(cost model, recorded BPE rules) of this pack table — the last
+    committed chunk's record; a table that records no cost (empty, or
+    written before the cost feature) reads as 'ws', the only model that
+    existed then."""
     chunks = out_log.committed_chunks()
-    if not chunks:
-        return None, None
     cost = latest_metric(chunks, "cost") or "ws"
     # rules only belong to the CURRENT model: after a ws rebuild an older
     # bpe epoch's recorded rules must not leak back out (every bpe commit
@@ -186,45 +181,20 @@ def run_pack(
     corpus and records them in the marker (``bpe_rules``); every later
     incremental window REUSES the recorded rules — a tokenizer is a
     fixed artifact, and re-deriving per window would make identical text
-    cost different amounts in different windows. Mixing cost models in
-    one table is refused (mirrors the scope guard); rebuild re-derives.
+    cost different amounts in different windows. ``cost`` and ``scope``
+    are table properties (spark/derived.py): mixing them in one table is
+    refused; rebuild re-derives.
     """
-    scope = "kept" if kept_from is not None else "full"
     if cost not in ("ws", "bpe"):
         raise ValueError(f"unknown pack cost model {cost!r}")
-    prior_cost, stored_rules = table_cost(out_log)
-    if prior_cost is not None and prior_cost != cost and not rebuild:
-        raise ValueError(
-            f"pack table cost model is '{prior_cost}' but this run is "
-            f"'{cost}'; mixing windows costed under different models "
-            "would make the context stream model-dependent — run with "
-            "rebuild=True to repack under the new model"
-        )
-    if kept_from is None and neardup_from is not None:
-        raise ValueError(
-            "neardup_from composes the kept view's flag-validity rule and "
-            "needs the curate log — pass kept_from with it"
-        )
-    if kept_from is not None and not rebuild:
-        raise ValueError(
-            "kept-scoped packing re-decides placement over a corpus another "
-            "table's verdicts define — always run it with rebuild=True "
-            "(job.py pack --kept-from ... --rebuild)"
-        )
-    prior = table_scope(out_log)
-    if prior is not None and prior != scope and not rebuild:
-        raise ValueError(
-            f"pack table scope is '{prior}' but this run is '{scope}'; "
-            "mixing windows packed over different corpus scopes would make "
-            "the context stream scope-order-dependent — run with "
-            "rebuild=True to repack under the new scope"
-        )
+    check_kept_scope(rebuild, kept_from, neardup_from)
+    _, stored_rules = table_cost(out_log)
 
     # mutated by the closures below BEFORE the marker is built (the
     # commit spreads this dict after compute returns): the first bpe
     # window records the rules it derived, freezing the cost model
-    extra = {"pack_version": PACK_COMPUTE_VERSION, "scope": scope,
-             "cost": cost}
+    extra = {"pack_version": PACK_COMPUTE_VERSION,
+             "scope": "full" if kept_from is None else "kept", "cost": cost}
     rules: list[str] | None = (
         None if (rebuild or stored_rules is None) else list(stored_rules)
     )

@@ -177,7 +177,7 @@ def run_signals(
         src_log,
         out_log,
         "signals",
-        compute_signals,
+        lambda delta, _horizon: compute_signals(delta),
         rebuild=rebuild,
     )
 

@@ -92,10 +92,10 @@ def test_classifier_gate_opt_in(spark, tmp_path):
     for d in ("1", "7"):
         assert (on[d]["verdict"], on[d]["reason"]) == ("reject", "classifier")
     # the threshold is recorded in the table's gate config
-    from pdf_extractor_spark.spark.curate import table_gates
+    from pdf_extractor_spark.spark.derived import latest_metric
 
-    assert table_gates(out_on)["min_logit_micros"] == 10_000_000
-    assert "min_logit_micros" not in table_gates(out_off)
+    assert latest_metric(out_on.committed_chunks(), "gates")["min_logit_micros"] == 10_000_000
+    assert "min_logit_micros" not in latest_metric(out_off.committed_chunks(), "gates")
 
 
 def test_cross_run_dedup_is_exactly_once(spark, tmp_path):
@@ -199,11 +199,8 @@ def test_gate_config_recorded_and_pinned(spark, tmp_path):
     """Custom gates change verdicts; the config is recorded in the marker;
     an incremental run under a DIFFERENT config refuses (verdict
     consistency) and --rebuild re-verdicts everything under the new one."""
-    from pdf_extractor_spark.spark.curate import (
-        GateConfig,
-        run_curate,
-        table_gates,
-    )
+    from pdf_extractor_spark.spark.curate import GateConfig, run_curate
+    from pdf_extractor_spark.spark.derived import latest_metric
 
     # markerless (pred_lang unknown) but long: rejected by defaults,
     # kept once the language gate is open and the quality gate is off
@@ -221,11 +218,11 @@ def test_gate_config_recorded_and_pinned(spark, tmp_path):
     run_curate(spark, src, out, gates=open_gates)
     got = _verdicts(spark, out)
     assert got and all(r["verdict"] == "keep" for r in got.values())
-    assert table_gates(out) == open_gates.as_metrics()
+    assert latest_metric(out.committed_chunks(), "gates") == open_gates.as_metrics()
 
     # same config: incremental continues; different config: refuses
     L.run_extraction(spark, docs, src, n_parts=4, parts_per_chunk=2)
-    with pytest.raises(ValueError, match="gate config changed"):
+    with pytest.raises(ValueError, match="'gates' is "):
         run_curate(spark, src, out)  # defaults != open_gates
     run_curate(spark, src, out, gates=open_gates)
     assert len(_verdicts(spark, out)) == 6
@@ -235,7 +232,7 @@ def test_gate_config_recorded_and_pinned(spark, tmp_path):
     got = _verdicts(spark, out)
     assert len(got) == 6
     assert all(r["reason"] == "language" for r in got.values())
-    assert table_gates(out) == GateConfig().as_metrics()
+    assert latest_metric(out.committed_chunks(), "gates") == GateConfig().as_metrics()
 
 
 def test_read_kept_and_kept_export(spark, tmp_path):

@@ -186,3 +186,41 @@ def test_materialize_rebuild_owns_full_part_range(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["ctx"] == 0
     assert rows[0]["text"] == "only surviving doc"
     assert rows[0]["n_tokens"] == 3 and rows[0]["n_docs"] == 1
+
+
+def test_stale_table_property_refused_before_any_job(spark, tmp_path):
+    """A table whose markers record another compute version (neardup) or
+    cost model (materialize) than the run's is refused before any Spark
+    job and commits no marker, even when its window is a no-op."""
+    import uuid
+
+    from pdf_extractor_spark.spark.materialize import MATERIALIZE_COMPUTE_VERSION
+    from pdf_extractor_spark.spark.neardup import NEARDUP_COMPUTE_VERSION, run_neardup
+
+    src, pk, nd, mat = (L.CommitLog(str(tmp_path / n)) for n in ("src", "pk", "nd", "mat"))
+    src.commit_chunk(src.reserve_chunk_id(), [0], {"docs": 0}, n_parts=2)
+    pk.commit_chunk(pk.reserve_chunk_id(), [0], {"stage": "pack", "src_snapshot": 0, "cost": "ws"},
+                    n_parts=2)
+    # each cursor is its source's latest snapshot: the window is a no-op
+    nd.commit_chunk(nd.reserve_chunk_id(), [0], {
+        "stage": "neardup", "src_snapshot": 0, "scope": "full",
+        "neardup_version": NEARDUP_COMPUTE_VERSION - 1}, n_parts=2)
+    mat.commit_chunk(mat.reserve_chunk_id(), [0], {
+        "stage": "materialize", "src_snapshot": 0, "cost": "bpe",
+        "materialize_version": MATERIALIZE_COMPUTE_VERSION}, n_parts=2)
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    sc.setJobGroup(tag, "refused")
+    try:
+        with pytest.raises(ValueError, match=(
+                f"'neardup_version' is {NEARDUP_COMPUTE_VERSION - 1} but this run's "
+                f"is {NEARDUP_COMPUTE_VERSION}.*job.py neardup --rebuild")):
+            run_neardup(spark, src, nd)
+        with pytest.raises(ValueError, match="'cost' is 'bpe' but this run's is 'ws'"):
+            run_materialize(spark, src, pk, mat)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
+    assert [len(t.committed_chunks()) for t in (nd, mat)] == [1, 1]

@@ -254,7 +254,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
         read_kept,
         run_curate,
     )
-    from pdf_extractor_spark.spark.neardup import table_scope
+    from pdf_extractor_spark.spark.derived import latest_metric
 
     src = L.CommitLog(str(tmp_path / "src"))
     cur = L.CommitLog(str(tmp_path / "cur"))
@@ -273,7 +273,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
     run_neardup(spark, src, nd)
     got = _rows(spark, nd)
     assert got["5"]["dup_of"] == "1" and got["9"]["dup_of"] == "1"
-    assert table_scope(nd) == "full"
+    assert latest_metric(nd.committed_chunks(), "scope") == "full"
     # both survivors ship: their flags name the REJECTED doc 1
     kept_full = {r["doc_id"]
                  for r in read_kept(spark, src, cur, neardup_log=nd).collect()}
@@ -285,7 +285,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
     got = _rows(spark, ndk)
     assert set(got) == {"5", "9"}
     assert got["5"]["dup_of"] is None and got["9"]["dup_of"] == "5"
-    assert table_scope(ndk) == "kept"
+    assert latest_metric(ndk.committed_chunks(), "scope") == "kept"
     kept_collapsed = {
         r["doc_id"]
         for r in read_kept(spark, src, cur, neardup_log=ndk).collect()
@@ -299,7 +299,7 @@ def test_neardup_over_kept_collapses_residual_clusters(spark, tmp_path):
         run_neardup(spark, src, ndk)  # full-scope incremental on kept table
     # a full-scope REBUILD legitimately re-scopes the table
     run_neardup(spark, src, ndk, rebuild=True)
-    assert table_scope(ndk) == "full" and len(_rows(spark, ndk)) == 3
+    assert latest_metric(ndk.committed_chunks(), "scope") == "full" and len(_rows(spark, ndk)) == 3
 
 
 def _ref_doc(text: str):

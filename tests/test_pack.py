@@ -261,7 +261,7 @@ def test_pack_bpe_cost_rules_frozen_at_table_creation(spark, tmp_path):
         assert rows[str(d)]["n_tokens"] == want, d
 
     # mixing cost models in one table is refused without rebuild
-    with pytest.raises(ValueError, match="cost model"):
+    with pytest.raises(ValueError, match="'cost' is 'bpe'"):
         run_pack(spark, src, out, cost="ws")
     # rebuild under the new model is the sanctioned path
     r3 = run_pack(spark, src, out, rebuild=True)

@@ -96,6 +96,16 @@ def test_detect_input_format_refuses_mixed_dirs(tmp_path):
     dg.mkdir()
     (dg / "a.jsonl").write_text("{}\n")
     assert detect_input_format(str(dg)) == "jsonl"
+    # watch resolves from the files it reads, its drop dir's own: a nested
+    # parquet it never reads does not make the dir mixed, a flat one does
+    from pdf_extractor_spark.ops.jsonl_source import files_format
+    from pdf_extractor_spark.spark.lineage import _drop_files
+
+    (dg / "sub").mkdir()
+    (dg / "sub" / "b.parquet").write_bytes(b"PAR1")
+    assert files_format(str(dg), _drop_files(str(dg))) == "jsonl"
+    with pytest.raises(ValueError, match="mixes"):
+        files_format(str(d), _drop_files(str(d)))
 
 
 def test_migrate_layout_cli_runs_without_input(tmp_path):

@@ -345,7 +345,8 @@ def test_export_zip_with_ocr_text(spark, tmp_path):
 def test_streaming_jsonl_drops_exactly_once(spark, tmp_path, monkeypatch):
     """JSONL drop directory drained by the file cursor: corrupt lines are
     dropped at the source, hidden, ``_``-prefixed and nested files are
-    never read, and a re-run after a new drop reads ONLY the new file. A
+    never read, a file whose name holds ``:`` is refused only after the
+    rest commit, and a re-run after a new drop reads ONLY the new files. A
     rival watch that commits that file between this run's listing and its
     publish wins: this run's chunk is never visible, every file lands once
     and every valid doc exactly once."""
@@ -374,11 +375,13 @@ def test_streaming_jsonl_drops_exactly_once(spark, tmp_path, monkeypatch):
         (landing / name).write_text("\n".join(lines) + "\n")
 
     drop("a.jsonl", 0, 30)
+    drop("f:1.jsonl", 65, 70)  # no reader opens it, so it is refused
     drop("b.jsonl", 30, 50)
     for name in (".x.jsonl", "_y.jsonl", "sub/z.jsonl"):
         drop(name, 900, 905, corrupt=False)
     now = time.time()
     os.utime(landing / "a.jsonl", (now - 20, now - 20))
+    os.utime(landing / "f:1.jsonl", (now - 15, now - 15))
     os.utime(landing / "b.jsonl", (now - 10, now - 10))
 
     def drain(log):
@@ -387,9 +390,14 @@ def test_streaming_jsonl_drops_exactly_once(spark, tmp_path, monkeypatch):
     def ids():
         return sorted(r["doc_id"] for r in log.read_extracted(spark).select("doc_id").collect())
 
-    assert drain(log).chunks_committed == 1  # one batch of up to 4 files
+    # the readable files commit first (one batch of up to 4), then the run
+    # names the unreadable one and the fix
+    with pytest.raises(ValueError, match=r"f:1\.jsonl.*rename them"):
+        drain(log)
+    assert len(log.committed_chunks()) == 1
     assert ids() == [f"d{i:04d}" for i in range(50)]  # no dupes, no 'broken'
 
+    os.rename(landing / "f:1.jsonl", landing / "f1.jsonl")
     drop("c.jsonl", 50, 65)
     write = L.write_observed
     rival = []
@@ -408,5 +416,6 @@ def test_streaming_jsonl_drops_exactly_once(spark, tmp_path, monkeypatch):
     committed = log.committed_chunks()
     assert sorted(os.listdir(log.data_dir)) == [L._chunk_dirname(c["chunk_id"]) for c in committed]
     base = os.path.realpath(landing)
-    assert _named(log) == [[f"{base}/a.jsonl", f"{base}/b.jsonl"], [f"{base}/c.jsonl"]]
-    assert ids() == [f"d{i:04d}" for i in range(65)]
+    assert _named(log) == [[f"{base}/a.jsonl", f"{base}/b.jsonl"],
+                           [f"{base}/f1.jsonl", f"{base}/c.jsonl"]]
+    assert ids() == [f"d{i:04d}" for i in range(70)]
