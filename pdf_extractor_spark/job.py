@@ -70,7 +70,11 @@ def build_parser() -> argparse.ArgumentParser:
     master = parent()
     master.add_argument("--master", default=None)
     io = parent()
-    io.add_argument("--input", required=True)
+    io.add_argument("--input", required=True,
+                    help="extract/refresh: documents(doc_id, spans) as parquet "
+                         "(span fields read by name; not the internal staging "
+                         "table) or JSONL, or synthetic:N; watch: a drop dir "
+                         "of such files; other stages: the source table root")
     io.add_argument("--output", required=True, help="output table root")
     ingest = parent()
     ingest.add_argument("--input-format", choices=["auto", "parquet", "jsonl"],
@@ -286,12 +290,10 @@ def _extract(args) -> int:
             from pdf_extractor_spark.corpus import corpus_df
 
             docs = corpus_df(spark, int(args.input.split(":", 1)[1]), seed=args.seed)
-        elif _input_format(args) == "jsonl":
-            from pdf_extractor_spark.ops.jsonl_source import ingest_jsonl
-
-            docs = ingest_jsonl(spark, args.input)
         else:
-            docs = spark.read.parquet(args.input).select("doc_id", "spans")
+            from pdf_extractor_spark.ops.jsonl_source import read_documents
+
+            docs = read_documents(spark, args.input, _input_format(args))
         password_col = None
         if delim is not None:
             from pyspark.sql import functions as F

@@ -22,7 +22,18 @@ from pyspark.sql import functions as F
 
 from ..spark.lineage import _chunk_dirname
 from ..spark.pipeline import extract_documents
-from .portable import h64_sql, tokens_sql
+from .portable import tokens, tokens_sql
+from .training import (
+    CTX_TOKENS,
+    PACK_CONTEXTS_SELECT,
+    exclusive_prefix_sum,
+    pack_bpe_sql,
+    pack_ctx_range,
+    pack_materialize_bpe_sql,
+    pack_materialize_sql,
+    pack_placement_ctes,
+    pack_slices,
+)
 
 # HTML wrapper: nav/script/footer are boilerplate the DOM-density stripper
 # must drop; <article><p>text</p></article> is the main content it must keep.
@@ -265,8 +276,6 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side, and the oracle predicts the whole chain in closed form.
     """
     from pyspark.sql import Window
-
-    from .portable import tokens
 
     ext = extract_wrapped(spark, sf_dir)
     txt = ext.select(
@@ -765,7 +774,6 @@ ORDER BY m.doc_id, span_idx
 # --- interleaved multimodal sequence packing ---------------------------------
 
 MEDIA_PATCH_TOKENS = 64  # fixed token budget a media span occupies
-PACK_CTX = 512
 
 
 def _interleaved_placements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -774,9 +782,6 @@ def _interleaved_placements(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared prelude of q_pack_interleaved and q_pack_interleaved_slices
     (text span = token count, media span = the fixed 64-token patch
     budget, prefix sum via the sampled-range distributed scan)."""
-    from .portable import tokens
-    from .training import exclusive_prefix_sum
-
     ext = extract_wrapped(spark, sf_dir)
     sp = ext.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -804,7 +809,7 @@ def q_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is `pack_contexts`' interleaved sibling and the bridge between the
     engine's two halves: the cost stream comes out of the actual
-    ``mapInPandas`` pipeline (clean_text, DOM strip, failure placeholders),
+    ``mapInArrow`` pipeline (clean_text, DOM strip, failure placeholders),
     and the oracle predicts every cost in closed form from the wrap rules —
     so span ordering, media passthrough, AND the packing arithmetic are all
     value-hash gated together.
@@ -816,10 +821,11 @@ def q_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     would funnel a value-proportional bucketing into one hot shard), so
     the helper derives order-respecting shards from a SAMPLED range
     partitioning and persists the ranged frame (which also means the
-    mapInPandas extraction runs exactly once). Boundary sampling never
+    mapInArrow extraction runs exactly once). Boundary sampling never
     reaches the values: any order-respecting split yields the same
     exclusive prefix.
     """
+    first, last, _ = pack_ctx_range("start_tok", "greatest(cost, 1)")
     placed = _interleaved_placements(spark, sf_dir)
     return placed.select(
         "doc_id",
@@ -827,10 +833,8 @@ def q_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kind",
         "cost",
         "start_tok",
-        F.expr(f"start_tok DIV {PACK_CTX}").alias("ctx_first"),
-        F.expr(
-            f"(start_tok + greatest(cost, 1) - 1) DIV {PACK_CTX}"
-        ).alias("ctx_last"),
+        first.alias("ctx_first"),
+        last.alias("ctx_last"),
     ).orderBy("doc_id", "span_idx")
 
 
@@ -856,8 +860,8 @@ p AS (
               AS BIGINT) AS start_tok
   FROM spans)
 SELECT doc_id, span_idx, kind, cost, start_tok,
-       start_tok // {PACK_CTX} AS ctx_first,
-       (start_tok + greatest(cost, 1) - 1) // {PACK_CTX} AS ctx_last
+       start_tok // {CTX_TOKENS} AS ctx_first,
+       (start_tok + greatest(cost, 1) - 1) // {CTX_TOKENS} AS ctx_last
 FROM p ORDER BY doc_id, span_idx
 """
 
@@ -875,37 +879,15 @@ def q_pack_interleaved_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     placement subtree plus a map-only explode; no extra shuffle."""
     placed = _interleaved_placements(spark, sf_dir)
     return (
-        placed.select(
-            "doc_id",
-            "span_idx",
-            "kind",
-            "cost",
-            "start_tok",
-            F.explode(
-                F.sequence(
-                    F.expr(f"start_tok div {PACK_CTX}"),
-                    F.expr(
-                        f"(start_tok + greatest(cost, 1) - 1) div {PACK_CTX}"
-                    ),
-                )
-            ).alias("ctx"),
-        )
+        pack_slices(placed, "start_tok", "cost", range_extent="greatest(cost, 1)")
         .select(
             "ctx",
             "doc_id",
             "span_idx",
             "kind",
-            (
-                F.expr(f"greatest(start_tok, ctx * {PACK_CTX})")
-                - F.col("start_tok")
-            ).alias("off_in_span"),
-            F.expr(
-                f"greatest(start_tok, ctx * {PACK_CTX}) - ctx * {PACK_CTX}"
-            ).alias("off_in_ctx"),
-            F.expr(
-                f"least(start_tok + cost, (ctx + 1) * {PACK_CTX})"
-                f" - greatest(start_tok, ctx * {PACK_CTX})"
-            ).alias("n_toks"),
+            F.col("off_in").alias("off_in_span"),
+            "off_in_ctx",
+            "n_toks",
         )
         .orderBy("ctx", "off_in_ctx", "doc_id", "span_idx")
     )
@@ -933,14 +915,14 @@ p AS (
   FROM spans),
 r AS (
   SELECT doc_id, span_idx, kind, cost, start_tok,
-         unnest(generate_series(start_tok // {PACK_CTX},
-                (start_tok + greatest(cost, 1) - 1) // {PACK_CTX})) AS ctx
+         unnest(generate_series(start_tok // {CTX_TOKENS},
+                (start_tok + greatest(cost, 1) - 1) // {CTX_TOKENS})) AS ctx
   FROM p)
 SELECT ctx, doc_id, span_idx, kind,
-       greatest(start_tok, ctx * {PACK_CTX}) - start_tok AS off_in_span,
-       greatest(start_tok, ctx * {PACK_CTX}) - ctx * {PACK_CTX} AS off_in_ctx,
-       least(start_tok + cost, (ctx + 1) * {PACK_CTX})
-         - greatest(start_tok, ctx * {PACK_CTX}) AS n_toks
+       greatest(start_tok, ctx * {CTX_TOKENS}) - start_tok AS off_in_span,
+       greatest(start_tok, ctx * {CTX_TOKENS}) - ctx * {CTX_TOKENS} AS off_in_ctx,
+       least(start_tok + cost, (ctx + 1) * {CTX_TOKENS})
+         - greatest(start_tok, ctx * {CTX_TOKENS}) AS n_toks
 FROM r ORDER BY ctx, off_in_ctx, doc_id, span_idx
 """
 
@@ -1132,8 +1114,6 @@ def q_packed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _packed_oracle_sql() -> str:
-    from .training import PACK_CONTEXTS_SELECT, pack_placement_ctes
-
     return (
         f"\nWITH {pack_placement_ctes(empty_guard=True, varchar_tiebreak=True)}"
         f"\n{PACK_CONTEXTS_SELECT}\n"
@@ -1173,8 +1153,6 @@ def q_packed_bpe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _packed_bpe_oracle_sql() -> str:
-    from .training import pack_bpe_sql
-
     return pack_bpe_sql(empty_guard=True, varchar_tiebreak=True)
 
 
@@ -1241,8 +1219,6 @@ def q_materialized_bpe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _materialized_bpe_oracle_sql() -> str:
-    from .training import pack_materialize_bpe_sql
-
     return pack_materialize_bpe_sql(empty_guard=True, varchar_tiebreak=True)
 
 
@@ -1266,8 +1242,6 @@ def q_materialized_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _materialized_oracle_sql() -> str:
-    from .training import pack_materialize_sql
-
     return pack_materialize_sql(empty_guard=True, varchar_tiebreak=True)
 
 

@@ -41,6 +41,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..spark.pipeline import DOCUMENTS_SCHEMA
+
 _JSONL_DOCS = 120  # per file
 _JSONL_FILES = 3
 
@@ -197,6 +199,19 @@ def ingest_jsonl(spark: SparkSession, path) -> DataFrame:
         .where(F.col("doc_id").isNotNull() & F.col("_corrupt").isNull())
         .select("doc_id", "spans")
     )
+
+
+def read_documents(spark: SparkSession, paths, fmt: str) -> DataFrame:
+    """documents(doc_id, spans) from a path or list of paths in ``fmt``
+    ('parquet' or 'jsonl'): the one ingest read of extract, refresh and
+    watch. Parquet reads through ``DOCUMENTS_SCHEMA``, so span fields
+    resolve by NAME whatever order the file's struct lists them in (the
+    parse wrapper takes them by position); JSONL goes through
+    :func:`ingest_jsonl`'s quarantine gate."""
+    if fmt == "jsonl":
+        return ingest_jsonl(spark, paths)
+    paths = [paths] if isinstance(paths, str) else paths
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(*paths)
 
 
 def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -125,6 +125,83 @@ def exclusive_prefix_sum(
 
 
 # --- sequence packing -------------------------------------------------------
+# The Spark-side packing arithmetic of both stages and every pack query
+# (the DuckDB twins: pack_placement_ctes / pack_materialize_sql).
+
+
+def pack_place(d: DataFrame, cost_col: str) -> DataFrame:
+    """``d`` (doc_id, h = h64(doc_id), ``cost_col``) plus ``start_off``:
+    the exclusive prefix sum of the cost in (h, doc_id) order, sharded by
+    the hash's top bits."""
+    return exclusive_prefix_sum(
+        d, ["h", "doc_id"], cost_col, "start_off",
+        shard_col=F.expr(f"h div {PACK_SHARDS_DIV}"),
+    )
+
+
+def pack_ctx_range(start: str = "start_off", extent: str = "n_tokens"):
+    """(first context, last context, chunk count) of the stream range
+    ``[start, start + extent)``. The interleaved queries pass
+    ``greatest(cost, 1)`` as the extent: a zero-cost span keeps its
+    position."""
+    first = F.expr(f"{start} div {CTX_TOKENS}")
+    last = F.expr(f"({start} + {extent} - 1) div {CTX_TOKENS}")
+    return first, last, last - first + F.lit(1)
+
+
+def pack_slices(
+    placed: DataFrame,
+    start: str = "start_off",
+    extent: str = "n_tokens",
+    range_extent: str | None = None,
+    tokens_col: str | None = None,
+) -> DataFrame:
+    """One row per (placement, context it touches): ``placed``'s columns
+    plus ``ctx``, ``off_in`` (offset into the placed item), ``off_in_ctx``
+    and ``n_toks``; with ``tokens_col``, also ``_piece``, that slice of
+    the cost-unit array. ``range_extent`` (default ``extent``) sizes only
+    the context range. One map-only Generate."""
+    first, last, _ = pack_ctx_range(start, range_extent or extent)
+    lo = f"greatest({start}, ctx * {CTX_TOKENS})"
+    n = f"least({start} + {extent}, (ctx + 1) * {CTX_TOKENS}) - {lo}"
+    cols = [
+        "ctx",
+        (F.expr(lo) - F.col(start)).alias("off_in"),
+        F.expr(f"{lo} - ctx * {CTX_TOKENS}").alias("off_in_ctx"),
+        F.expr(n).alias("n_toks"),
+    ]
+    if tokens_col is not None:
+        cols.append(
+            F.expr(
+                f"slice({tokens_col}, int({lo} - {start}) + 1, int({n}))"
+            ).alias("_piece")
+        )
+    return placed.select(
+        "*", F.explode(F.sequence(first, last)).alias("ctx")
+    ).select(*placed.columns, *cols)
+
+
+def pack_gather(slices: DataFrame, keys: list[str]) -> DataFrame:
+    """``n_docs, n_tokens, text`` per ``keys`` group of ``pack_slices``
+    rows with ``_piece``: the pieces space-joined in off_in_ctx order
+    (the ordered-collect convention, CLAUDE.md; the oracle's
+    ``string_agg(... ORDER BY off_in_ctx)``)."""
+    return slices.groupBy(*keys).agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("n_toks").cast("bigint").alias("n_tokens"),
+        F.array_join(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("off_in_ctx", "_piece"))
+                    ),
+                    lambda s: s["_piece"],
+                )
+            ),
+            " ",
+        ).alias("text"),
+    )
+
 
 def q_pack_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk packing: where each document lands in the stream of
@@ -147,15 +224,18 @@ def q_pack_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is still 4096 rows; recurse the same trick if shards
     themselves grow too large.
     """
-    placed = _pack_placements(spark, sf_dir)
+    first, last, _ = pack_ctx_range()
     return (
-        placed.select(
+        _pack_placements(spark, sf_dir)
+        .select(
             "doc_id",
             "n_tokens",
             "start_off",
-            F.expr(f"start_off div {CTX_TOKENS}").alias("first_chunk"),
-            F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}").alias("last_chunk"),
+            first.alias("first_chunk"),
+            last.alias("last_chunk"),
         )
+        # a second projection, not the helper's inline count: inlining
+        # drops a Project node from this query's pinned plan
         .withColumn("n_chunks", F.col("last_chunk") - F.col("first_chunk") + F.lit(1))
         .orderBy("doc_id")
     )
@@ -169,13 +249,7 @@ def _pack_placements(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens("text")).cast("bigint").alias("n_tokens"),
         h64(F.col("doc_id").cast("string")).alias("h"),
     )
-    return exclusive_prefix_sum(
-        d,
-        ["h", "doc_id"],
-        "n_tokens",
-        "start_off",
-        shard_col=F.expr(f"h div {PACK_SHARDS_DIV}"),
-    )
+    return pack_place(d, "n_tokens")
 
 
 def q_pack_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,30 +266,14 @@ def q_pack_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last sums to exactly CTX_TOKENS, slices within a context are
     contiguous from offset 0, and each doc's slices partition its tokens.
     """
-    placed = _pack_placements(spark, sf_dir)
     return (
-        placed.select(
-            "doc_id",
-            "n_tokens",
-            "start_off",
-            F.explode(
-                F.sequence(
-                    F.expr(f"start_off div {CTX_TOKENS}"),
-                    F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}"),
-                )
-            ).alias("ctx"),
-        )
+        pack_slices(_pack_placements(spark, sf_dir))
         .select(
             "ctx",
             "doc_id",
-            (F.expr(f"greatest(start_off, ctx * {CTX_TOKENS})") - F.col("start_off"))
-            .alias("off_in_doc"),
-            F.expr(f"greatest(start_off, ctx * {CTX_TOKENS}) - ctx * {CTX_TOKENS}")
-            .alias("off_in_ctx"),
-            F.expr(
-                f"least(start_off + n_tokens, (ctx + 1) * {CTX_TOKENS})"
-                f" - greatest(start_off, ctx * {CTX_TOKENS})"
-            ).alias("n_toks"),
+            F.col("off_in").alias("off_in_doc"),
+            "off_in_ctx",
+            "n_toks",
         )
         .orderBy("ctx", "off_in_ctx")
     )
@@ -305,56 +363,8 @@ def q_pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs(spark, sf_dir).select(
         "doc_id", tokens("text").alias("_tok")
     )
-    sl = (
-        placed.join(toks, "doc_id")
-        .select(
-            "doc_id",
-            "_tok",
-            "n_tokens",
-            "start_off",
-            F.explode(
-                F.sequence(
-                    F.expr(f"start_off div {CTX_TOKENS}"),
-                    F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}"),
-                )
-            ).alias("ctx"),
-        )
-        .select(
-            "ctx",
-            F.expr(
-                f"greatest(start_off, ctx * {CTX_TOKENS}) - ctx * {CTX_TOKENS}"
-            ).alias("off_in_ctx"),
-            F.expr(
-                f"least(start_off + n_tokens, (ctx + 1) * {CTX_TOKENS})"
-                f" - greatest(start_off, ctx * {CTX_TOKENS})"
-            ).alias("n_toks"),
-            F.expr(
-                f"slice(_tok, int(greatest(start_off, ctx * {CTX_TOKENS})"
-                f" - start_off) + 1, int(least(start_off + n_tokens,"
-                f" (ctx + 1) * {CTX_TOKENS})"
-                f" - greatest(start_off, ctx * {CTX_TOKENS})))"
-            ).alias("_piece"),
-        )
-    )
-    return (
-        sl.groupBy("ctx")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("n_tokens"),
-            F.array_join(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("off_in_ctx", "_piece"))
-                        ),
-                        lambda s: s["_piece"],
-                    )
-                ),
-                " ",
-            ).alias("text"),
-        )
-        .orderBy("ctx")
-    )
+    sl = pack_slices(placed.join(toks, "doc_id"), tokens_col="_tok")
+    return pack_gather(sl, ["ctx"]).orderBy("ctx")
 
 
 def pack_materialize_sql(*, empty_guard: bool = False,
@@ -406,12 +416,9 @@ def q_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic over the placement table; the only addition to the
     placement DAG is one singleton aggregate, so the scale shape is
     pack_contexts' plus a broadcastable 1-row reduce."""
+    first, last, _ = pack_ctx_range()
     placed = _pack_placements(spark, sf_dir).select(
-        "n_tokens",
-        (
-            F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}")
-            - F.expr(f"start_off div {CTX_TOKENS}")
-        ).alias("crossings"),
+        "n_tokens", (last - first).alias("crossings")
     )
     return placed.agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -497,22 +504,15 @@ def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
             h64(F.col("doc_id").cast("string")).alias("h"),
         )
     )
-    placed = exclusive_prefix_sum(
-        cost,
-        ["h", "doc_id"],
-        "n_pieces",
-        "start_off",
-        shard_col=F.expr(f"h div {PACK_SHARDS_DIV}"),
-    )
+    first, last, _ = pack_ctx_range(extent="n_pieces")
     return (
-        placed.select(
+        pack_place(cost, "n_pieces")
+        .select(
             "doc_id",
             "n_pieces",
             "start_off",
-            F.expr(f"start_off div {CTX_TOKENS}").alias("first_chunk"),
-            F.expr(
-                f"(start_off + n_pieces - 1) div {CTX_TOKENS}"
-            ).alias("last_chunk"),
+            first.alias("first_chunk"),
+            last.alias("last_chunk"),
         )
         .withColumn(
             "n_chunks", F.col("last_chunk") - F.col("first_chunk") + F.lit(1)
@@ -521,13 +521,10 @@ def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pack_bpe_sql(*, empty_guard: bool = False,
-                 varchar_tiebreak: bool = False) -> str:
-    """BPE-costed packing oracle: the recursive-CTE tokenizer's per-doc
-    piece counts fed through the placement prefix sum. Knobs as in
-    :func:`pack_placement_ctes` — the staged ``packed_bpe_table`` oracle
-    drops zero-cost (whitespace-only) docs and breaks prefix-sum ties on
-    the stringified doc_id; the flat ``pack_bpe`` query uses neither."""
+def _bpe_placement_ctes(empty_guard: bool, varchar_tiebreak: bool) -> str:
+    """The recursive-CTE tokenizer, its per-doc piece counts ``cost`` and
+    their placement ``p(doc_id, n_pieces, start_off)``: the prelude of
+    both BPE oracles (knobs as in :func:`pack_placement_ctes`)."""
     from .textstats import bpe_encode_ctes
 
     tiebreak = "CAST(doc_id AS VARCHAR)" if varchar_tiebreak else "doc_id"
@@ -546,7 +543,17 @@ p AS (
                 ORDER BY h, {tiebreak}
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
               AS BIGINT) AS start_off
-  FROM cost{where})
+  FROM cost{where})"""
+
+
+def pack_bpe_sql(*, empty_guard: bool = False,
+                 varchar_tiebreak: bool = False) -> str:
+    """BPE-costed packing oracle: the recursive-CTE tokenizer's per-doc
+    piece counts fed through the placement prefix sum. Knobs as in
+    :func:`pack_placement_ctes` — the staged ``packed_bpe_table`` oracle
+    drops zero-cost (whitespace-only) docs and breaks prefix-sum ties on
+    the stringified doc_id; the flat ``pack_bpe`` query uses neither."""
+    return _bpe_placement_ctes(empty_guard, varchar_tiebreak) + f"""
 SELECT doc_id, n_pieces, start_off,
        start_off // {CTX_TOKENS} AS first_chunk,
        (start_off + n_pieces - 1) // {CTX_TOKENS} AS last_chunk,
@@ -554,10 +561,6 @@ SELECT doc_id, n_pieces, start_off,
          - (start_off // {CTX_TOKENS}) + 1 AS n_chunks
 FROM p ORDER BY doc_id
 """
-
-
-def _pack_bpe_sql() -> str:
-    return pack_bpe_sql()
 
 
 def pack_materialize_bpe_sql(*, empty_guard: bool = False,
@@ -568,25 +571,7 @@ def pack_materialize_bpe_sql(*, empty_guard: bool = False,
     exploded to per-(ctx, doc) slices of that stream, assembled per
     context. The closed form of spark/materialize.py over a cost='bpe'
     pack table (fixture: ``materialized_bpe_table``)."""
-    from .textstats import bpe_encode_ctes
-
-    tiebreak = "CAST(doc_id AS VARCHAR)" if varchar_tiebreak else "doc_id"
-    where = "\n  WHERE n_pieces > 0" if empty_guard else ""
-    return f"""
-WITH RECURSIVE
-{bpe_encode_ctes()},
-cost AS (
-  SELECT t.doc_id, CAST(sum(e.n_pieces) AS BIGINT) AS n_pieces,
-         {h64_sql("CAST(t.doc_id AS VARCHAR)")} AS h
-  FROM toks t JOIN encoded e USING (tok)
-  GROUP BY t.doc_id),
-p AS (
-  SELECT doc_id, n_pieces,
-         CAST(COALESCE(SUM(n_pieces) OVER (
-                ORDER BY h, {tiebreak}
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS start_off
-  FROM cost{where}),
+    return _bpe_placement_ctes(empty_guard, varchar_tiebreak) + f""",
 stream AS (
   SELECT t.doc_id, flatten(list(e.syms ORDER BY t.pos)) AS tk
   FROM toks t JOIN encoded e USING (tok)
@@ -1273,7 +1258,7 @@ QUERIES: dict[str, tuple] = {
     "pack_contexts": (q_pack_contexts, PACK_CONTEXTS_SQL),
     "pack_slices": (q_pack_slices, PACK_SLICES_SQL),
     "pack_materialize": (q_pack_materialize, PACK_MATERIALIZE_SQL),
-    "pack_bpe": (q_pack_bpe, _pack_bpe_sql),
+    "pack_bpe": (q_pack_bpe, pack_bpe_sql),
     "pack_stats": (q_pack_stats, PACK_STATS_SQL),
     "lm_score": (q_lm_score, LM_SCORE_SQL),
     "kmeans_step": (q_kmeans_step, _kmeans_step_sql()),

@@ -75,7 +75,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
-    DOCUMENTS_SCHEMA,
     EXTRACTED_SCHEMA,
     assign_part_id,
     balance_partitions,
@@ -1230,7 +1229,7 @@ def run_watch(
     Each batch parses through :func:`_parse_input` as one chunk of every
     part. No reader opens a file whose name holds ``:`` (not a Hadoop
     path): every other file commits, then the run raises ``ValueError``."""
-    from ..ops.jsonl_source import ingest_jsonl
+    from ..ops.jsonl_source import read_documents
 
     _check_n_parts(log, n_parts)
     pending = _drop_files(drop_dir)
@@ -1248,8 +1247,7 @@ def run_watch(
 
         # names are literal: escape what the reader would expand as a glob
         paths = [re.sub(r"([\\[\]{}*?\\])", r"\\\1", f) for f in batch]
-        docs = (ingest_jsonl(spark, paths) if fmt == "jsonl"
-                else spark.read.schema(DOCUMENTS_SCHEMA).parquet(*paths))
+        docs = read_documents(spark, paths, fmt)
         with _parse_input(
             spark, assign_part_id(docs, n_parts), n_parts, parts, n_parts, num_partitions,
             passwords, None,

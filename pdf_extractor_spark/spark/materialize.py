@@ -5,8 +5,8 @@ neardup -> pack chain with the artifact a trainer actually reads: for
 every 512-token context the pack stage placed, the assembled context
 text (space-joined tokens drawn across its contributing documents in
 stream order). ``spark/pack.py`` commits each document's PLACEMENT; this
-stage runs the per-context GATHER join (the ``ops/training.q_pack_slices``
-explode + a doc_id-keyed text join + ONE ctx-keyed exchange) and commits
+stage runs the per-context GATHER join (a doc_id-keyed text join + the
+``ops/training.pack_slices`` explode + ONE ctx-keyed exchange) and commits
 (pack_epoch, ctx, n_docs, n_tokens, text) rows through the same
 commit-marker protocol — snapshot-visible, crash-resumable, exactly-once.
 
@@ -23,7 +23,9 @@ marker recorded (``pack_epoch`` = the pack run's ``src_snapshot``);
 reading "latest" text instead would silently assemble shifted slices if
 an extraction partition-overwrite landed between the pack run and this
 one. Time travel pins the exact bytes the placement arithmetic saw, so
-``sum(slice lengths) == n_tokens`` holds by construction. The distinct
+``sum(slice lengths) == n_tokens`` holds PROVIDED a doc_id is unique in
+the extraction table as of the epoch: a doc_id held twice joins both
+copies to both of its placements, gathering its slices twice. The distinct
 epochs of a window are a bounded driver-side collect (one per consumed
 pack chunk — the per-chunk lineage-rollup precedent).
 
@@ -58,7 +60,7 @@ from pyspark.sql.types import (
 )
 
 from ..ops.portable import tokens
-from ..ops.training import CTX_TOKENS
+from ..ops.training import pack_gather, pack_slices
 from .derived import run_derived_stage
 from .lineage import CommitLog, RunReport
 from .pack import PACKED_SCHEMA
@@ -83,8 +85,8 @@ def _epoch_texts(
     spark: SparkSession,
     extract_log: CommitLog,
     epochs: list[int],
-    cost: str = "ws",
-    rules: list[str] | None = None,
+    cost: str,
+    rules: list[str] | None,
 ) -> DataFrame:
     """(pack_epoch, doc_id, _tok) cost-unit arrays, each epoch's text
     read AS OF that extraction snapshot (see module docstring).
@@ -123,72 +125,27 @@ def compute_materialize(
     extract_log: CommitLog,
     placements: DataFrame,
     n_parts: int,
-    cost: str = "ws",
-    rules: list[str] | None = None,
+    cost: str,
+    rules: list[str] | None,
 ) -> DataFrame:
-    """Gather join over a set of placement rows: explode each placement to
-    its (ctx, slice) contributions (the pack_slices arithmetic), slice the
-    doc's token array, and assemble each context ordered by off_in_ctx.
-    Exact-output convention (CLAUDE.md): ordered concat via
-    ``array_sort(collect_list(struct(...)))``, mirrored by the oracle's
-    ``string_agg(... ORDER BY off_in_ctx)``."""
+    """Gather join over a set of placement rows: join each placement to
+    its doc's cost-unit array, cut it into per-context slices
+    (``training.pack_slices``) and assemble each (pack_epoch, ctx) in
+    off_in_ctx order (``training.pack_gather``)."""
     epochs = [
         r["pack_epoch"]
         for r in placements.select("pack_epoch").distinct().collect()
     ]
     if not epochs:
         return spark.createDataFrame([], MATERIALIZED_SCHEMA)
-    toks = _epoch_texts(spark, extract_log, epochs, cost=cost, rules=rules)
-    sl = (
+    toks = _epoch_texts(spark, extract_log, epochs, cost, rules)
+    sl = pack_slices(
         placements.select("pack_epoch", "doc_id", "n_tokens", "start_off")
-        .join(toks, ["pack_epoch", "doc_id"])
-        .select(
-            "pack_epoch",
-            "_tok",
-            "start_off",
-            "n_tokens",
-            F.explode(
-                F.sequence(
-                    F.expr(f"start_off div {CTX_TOKENS}"),
-                    F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}"),
-                )
-            ).alias("ctx"),
-        )
-        .select(
-            "pack_epoch",
-            "ctx",
-            F.expr(
-                f"greatest(start_off, ctx * {CTX_TOKENS}) - ctx * {CTX_TOKENS}"
-            ).alias("off_in_ctx"),
-            F.expr(
-                f"least(start_off + n_tokens, (ctx + 1) * {CTX_TOKENS})"
-                f" - greatest(start_off, ctx * {CTX_TOKENS})"
-            ).alias("n_toks"),
-            F.expr(
-                f"slice(_tok, int(greatest(start_off, ctx * {CTX_TOKENS})"
-                f" - start_off) + 1, int(least(start_off + n_tokens,"
-                f" (ctx + 1) * {CTX_TOKENS})"
-                f" - greatest(start_off, ctx * {CTX_TOKENS})))"
-            ).alias("_piece"),
-        )
+        .join(toks, ["pack_epoch", "doc_id"]),
+        tokens_col="_tok",
     )
     return (
-        sl.groupBy("pack_epoch", "ctx")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("n_tokens"),
-            F.array_join(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("off_in_ctx", "_piece"))
-                        ),
-                        lambda s: s["_piece"],
-                    )
-                ),
-                " ",
-            ).alias("text"),
-        )
+        pack_gather(sl, ["pack_epoch", "ctx"])
         .select(
             "pack_epoch",
             "ctx",
@@ -230,8 +187,7 @@ def run_materialize(
         # against: word arrays for 'ws', the recorded-rules piece stream
         # for 'bpe' — a mismatched gather would assemble wrong slices
         return compute_materialize(
-            spark, extract_log, placements, n_parts,
-            cost=pack_cost, rules=pack_rules,
+            spark, extract_log, placements, n_parts, pack_cost, pack_rules
         )
 
     return run_derived_stage(

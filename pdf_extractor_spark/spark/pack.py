@@ -58,7 +58,7 @@ from pyspark.sql.types import IntegerType, LongType, StringType, StructField, St
 
 from ..ops.portable import h64, tokens
 from ..ops.textstats import bpe_cost_batches, bpe_merge_rules
-from ..ops.training import CTX_TOKENS, PACK_SHARDS_DIV, exclusive_prefix_sum
+from ..ops.training import pack_ctx_range, pack_place
 from .derived import check_kept_scope, latest_metric, run_derived_stage
 from .lineage import CommitLog, RunReport
 from .signals import signal_text
@@ -81,17 +81,14 @@ PACKED_SCHEMA = StructType(
 
 
 def compute_pack(
-    extracted: DataFrame,
-    horizon: int,
-    cost: str = "ws",
-    rules: list[str] | None = None,
+    extracted: DataFrame, horizon: int, cost: str, rules: list[str] | None
 ) -> DataFrame:
     """Window-local placement of ``extracted`` rows into the context
     stream: deterministic md5 shuffle order, exclusive prefix sum of the
     per-doc COST, context range by integer division. ``horizon`` becomes
     every row's ``pack_epoch``.
 
-    ``cost="ws"`` (default) counts whitespace tokens (JVM-side, map-only);
+    ``cost="ws"`` counts whitespace tokens (JVM-side, map-only);
     ``cost="bpe"`` counts TOKENIZER pieces under the given merge-rule
     table via the map-only Arrow kernel ``textstats.bpe_cost_batches``
     (per-task word memo, no join or shuffle on the vocabulary; only the
@@ -100,8 +97,6 @@ def compute_pack(
     records which model produced it (``cost`` + ``bpe_rules`` metrics;
     see run_pack)."""
     if cost == "bpe":
-        if rules is None:
-            raise ValueError("cost='bpe' needs a merge-rule table")
         d = (
             extracted.select(
                 "doc_id", "part_id", signal_text().alias("text")
@@ -129,25 +124,15 @@ def compute_pack(
             .alias("n_tokens"),
             h64(F.col("doc_id")).alias("h"),
         )
-    placed = exclusive_prefix_sum(
-        d.where(F.col("n_tokens") > 0),
-        ["h", "doc_id"],
-        "n_tokens",
-        "start_off",
-        shard_col=F.expr(f"h div {PACK_SHARDS_DIV}"),
-    )
-    return placed.select(
+    first, last, n_chunks = pack_ctx_range()
+    return pack_place(d.where(F.col("n_tokens") > 0), "n_tokens").select(
         "doc_id",
         F.lit(horizon).cast("bigint").alias("pack_epoch"),
         "n_tokens",
         "start_off",
-        F.expr(f"start_off div {CTX_TOKENS}").alias("first_chunk"),
-        F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}").alias("last_chunk"),
-        (
-            F.expr(f"(start_off + n_tokens - 1) div {CTX_TOKENS}")
-            - F.expr(f"start_off div {CTX_TOKENS}")
-            + F.lit(1)
-        ).alias("n_chunks"),
+        first.alias("first_chunk"),
+        last.alias("last_chunk"),
+        n_chunks.alias("n_chunks"),
         "part_id",
     )
 

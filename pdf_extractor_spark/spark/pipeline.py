@@ -273,8 +273,7 @@ def _extract_record_batches(pa, extract_fn, span_type, batches):
         names = rb.schema.names
         doc_ids = rb.column(names.index("doc_id")).to_pylist()
         spans_col = rb.column(names.index("spans"))
-        has_part = "part_id" in names
-        parts = rb.column(names.index("part_id")).to_pylist() if has_part else None
+        parts = rb.column(names.index("part_id"))
         pw_col = (
             rb.column(names.index("_password")).to_pylist()
             if "_password" in names
@@ -354,7 +353,7 @@ def _extract_record_batches(pa, extract_fn, span_type, batches):
                 pa.array(failures_l, pa.int32()),
                 pa.array(duration_l, pa.int64()),
                 scores_out,
-                pa.array(parts if has_part else [-1] * n, pa.int32()),
+                parts,
             ],
             names=[
                 "doc_id",

@@ -224,3 +224,33 @@ def test_stale_table_property_refused_before_any_job(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getJobIdsForGroup(tag)) == []
     assert [len(t.committed_chunks()) for t in (nd, mat)] == [1, 1]
+
+
+def _jobs_in_group(spark, tag: str, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted by a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_pack_and_materialize_job_counts(spark, tmp_path):
+    """The chain's last two stages keep their Spark job budget on a
+    small fixed corpus: a changed count means an added (or lost)
+    collect, broadcast or staged frame somewhere in the packing path."""
+    import uuid
+
+    texts = {i: " ".join(f"w{i}x{j}" for j in range(40 * (i % 5 + 1)))
+             for i in range(24)}
+    src, pk, mat = (L.CommitLog(str(tmp_path / n)) for n in ("src", "pk", "mat"))
+    L.run_extraction(spark, wrap_documents(spark, write_docs(tmp_path, texts)),
+                     src, n_parts=4, parts_per_chunk=4)
+    tag = uuid.uuid4().hex
+    n_pack = _jobs_in_group(spark, tag + "-pack", lambda: run_pack(spark, src, pk))
+    n_mat = _jobs_in_group(spark, tag + "-mat",
+                           lambda: run_materialize(spark, src, pk, mat))
+    assert (n_pack, n_mat) == (7, 5)

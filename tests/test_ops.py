@@ -663,9 +663,9 @@ def test_pack_interleaved_sparse_ids(spark, tmp_path):
 
     from pdf_extractor_spark.ops.extraction_queries import (
         MEDIA_PATCH_TOKENS,
-        PACK_CTX,
         q_pack_interleaved,
     )
+    from pdf_extractor_spark.ops.training import CTX_TOKENS
 
     ids = [0, 3, 17, 18, 22, 25, 51, 999_999_983, 1_000_000_002, 1_000_000_017]
     texts = {
@@ -698,8 +698,8 @@ def test_pack_interleaved_sparse_ids(spark, tmp_path):
                 kind,
                 cost,
                 cum,
-                cum // PACK_CTX,
-                (cum + max(cost, 1) - 1) // PACK_CTX,
+                cum // CTX_TOKENS,
+                (cum + max(cost, 1) - 1) // CTX_TOKENS,
             )
             cum += cost
 

@@ -1,6 +1,6 @@
-"""Sources: the JSONL documents source (corrupt-line quarantine, format
-sniffing), the password manifest's delimiter sniff and the layout
-migration CLI."""
+"""Sources: the documents parquet and JSONL sources (span fields by name,
+corrupt-line quarantine, format sniffing), the password manifest's
+delimiter sniff and the layout migration CLI."""
 
 from pdf_extractor_spark.job import sniff_delimiter
 
@@ -122,3 +122,40 @@ def test_migrate_layout_cli_runs_without_input(tmp_path):
     assert main(["maintain", str(root), "--migrate-layout"]) == 0
     assert sorted(os.listdir(root / "data")) == ["chunk=000000", "chunk=1000000"]
     assert main(["maintain", str(root), "--migrate-layout"]) == 0  # idempotent
+
+
+def test_extract_reads_parquet_span_fields_by_name(spark, tmp_path):
+    """``job.py extract`` over a documents parquet whose span struct lists
+    its fields in another order commits the same spans as the canonical
+    file: the ingest read resolves span fields by name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.job import main
+    from pdf_extractor_spark.spark.lineage import CommitLog
+
+    spans = [
+        [{"kind": "text", "text": "hello world", "media_ref": None, "offset": 0}],
+        [{"kind": "media", "text": None, "media_ref": "m://1", "offset": 0}],
+    ]
+    committed = {}
+    for name, order in (("canon", ["kind", "text", "media_ref", "offset"]),
+                        ("reordered", ["kind", "media_ref", "offset", "text"])):
+        typ = pa.struct([(f, pa.int32() if f == "offset" else pa.string())
+                         for f in order])
+        (tmp_path / name).mkdir()
+        pq.write_table(pa.table({
+            "doc_id": pa.array(["d1", "d2"]),
+            "spans": pa.array([[{f: s[f] for f in order} for s in doc]
+                               for doc in spans], pa.list_(typ)),
+        }), tmp_path / name / "docs.parquet")
+        out = str(tmp_path / f"out-{name}")
+        assert main(["extract", "--input", str(tmp_path / name), "--output", out,
+                     "--n-parts", "2", "--parts-per-chunk", "2"]) == 0
+        committed[name] = {
+            r["doc_id"]: [tuple(s) for s in r["spans"]]
+            for r in CommitLog(out).read_extracted(spark).collect()
+        }
+    assert committed["reordered"] == committed["canon"]
+    assert any("hello world" in (s[1] or "") for s in committed["canon"]["d1"])
+    assert any(s[2] == "m://1" for s in committed["canon"]["d2"])

@@ -86,12 +86,13 @@ def test_pack_interleaved_slices_tile_and_partition(spark):
     zero-length markers at their stream position."""
     from collections import defaultdict
 
+    from pdf_extractor_spark.ops.training import CTX_TOKENS
+
     rows = _rows(spark, "pack_interleaved_slices")
     spans = {
         (r["doc_id"], r["span_idx"]): r
         for r in _rows(spark, "pack_interleaved")
     }
-    from pdf_extractor_spark.ops.extraction_queries import PACK_CTX
 
     total = sum(r["cost"] for r in spans.values())
     by_ctx = defaultdict(list)
@@ -111,7 +112,7 @@ def test_pack_interleaved_slices_tile_and_partition(spark):
             assert s["off_in_ctx"] == off, "gap inside a context"
             off += s["n_toks"]
         assert off == (
-            PACK_CTX if ctx < last_ctx else total - last_ctx * PACK_CTX
+            CTX_TOKENS if ctx < last_ctx else total - last_ctx * CTX_TOKENS
         )
     for key, slices in by_span.items():
         slices.sort(key=lambda r: r["off_in_span"])
